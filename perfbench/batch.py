@@ -19,6 +19,7 @@ from common import (
     RUN_DIR,
     StageMeter,
     Tracer,
+    busy_cpu_s,
     geomean,
     heap_gb,
     host_cpus,
@@ -47,10 +48,9 @@ MIX = [
     "part_abc_classes",
 ]
 SF, TOY_SF = 0.01, 0.001
-# Nominal warm pass length. A run times round(seconds / PASS_S) whole
-# passes: stopping on the clock instead would let JIT warm-up decide
-# whether a run gets one pass more, and later passes are faster.
-PASS_S = 5.0
+# Nominal length of a warm pass on a 4-vCPU host; a run times
+# round(seconds / PASS_S) passes.
+PASS_S = 8.0
 # a query that raises counts as this latency, beyond every limit
 FAILED_LATENCY_S = 60.0
 
@@ -162,8 +162,11 @@ def run(seed: int, seconds: float, trace: bool, toy: bool = False,
     attempted = verified = 0
     pass_walls = {False: [], True: []}
     traced_ops = []
-    start = time.perf_counter()
+    start, cpu0 = time.perf_counter(), busy_cpu_s()
     n_pass = 0
+    # A fixed number of whole passes: stopping on the clock instead would
+    # let the host's speed decide how far the last pass gets, and which
+    # queries, warmer by then, are counted twice.
     passes = max(2 if trace else 1, round(seconds / PASS_S))
     while n_pass < passes:
         traced = trace and n_pass % 2 == 1
@@ -186,7 +189,7 @@ def run(seed: int, seconds: float, trace: bool, toy: bool = False,
                 verified += 1
         pass_walls[traced].append(time.perf_counter() - p0)
         n_pass += 1
-    wall = time.perf_counter() - start
+    wall, cpu_s = time.perf_counter() - start, busy_cpu_s() - cpu0
 
     bad = {k: v for k, v in failures.items() if v}
     for name, why in bad.items():
@@ -195,16 +198,17 @@ def run(seed: int, seconds: float, trace: bool, toy: bool = False,
     all_lat = [v for vs in lat.values() for v in vs]
     per_query = [statistics.median(vs) for vs in lat.values()]
     rss = vm_hwm_mb(jvm_pid()) + vm_hwm_mb(os.getpid())
-    info = {"data": os.path.basename(sf_dir), "passes": n_pass,
-            "query_median_s": dict(zip(lat, per_query))}
+    info = {"data": os.path.basename(sf_dir), "passes": n_pass, "queries": attempted,
+            "query_median_s": dict(zip(lat, per_query)),
+            "wall": {"window_s": wall, "ops_per_s": verified / wall,
+                     "query_geomean_s": geomean(per_query),
+                     "latency_p50_ms": 1e3 * percentile(all_lat, 50),
+                     "latency_p90_ms": 1e3 * percentile(all_lat, 90)}}
 
     if not trace:
         metrics = {
             "setup_s": metric(setup_s, "s"),
-            "ops_per_s": metric(verified / wall, "1/s"),
-            "query_geomean_s": metric(geomean(per_query), "s"),
-            "latency_p50_ms": metric(1e3 * percentile(all_lat, 50), "ms"),
-            "latency_p99_ms": metric(1e3 * percentile(all_lat, 99), "ms"),
+            "cpu_ms_per_op": metric(1e3 * cpu_s / max(verified, 1), "ms"),
             "peak_rss_mb": metric(rss, "MB"),
         }
     else:

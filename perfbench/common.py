@@ -76,15 +76,35 @@ def refuse_if_contended(wait_s: float = 20.0) -> None:
         time.sleep(0.5)
 
 
-def host_info(n: int) -> dict:
+def cpu_ticks() -> list[int]:
+    """The aggregate ``cpu`` line of /proc/stat: user, nice, system, idle,
+    iowait, irq, softirq, steal, ..."""
+    with open("/proc/stat") as f:
+        return [int(v) for v in f.readline().split()[1:]]
+
+
+def busy_cpu_s() -> float:
+    """CPU seconds the host has been busy so far (user, nice, system, irq
+    and softirq time of every CPU). Time the hypervisor stole is not in it:
+    this counts the work done, not the wait for a CPU."""
+    t = cpu_ticks()
+    return (t[0] + t[1] + t[2] + t[5] + t[6]) / os.sysconf("SC_CLK_TCK")
+
+
+def host_info(n: int, since: list[int]) -> dict:
+    """Host sizing plus the share of CPU time the hypervisor stole since
+    ``since`` (a ``cpu_ticks()`` reading): on a shared host it explains
+    most of the spread between runs."""
     import pyspark
 
+    d = [b - a for a, b in zip(since, cpu_ticks())]
     return {
         "nproc": host_cpus(),
         "local_n": n,
         "batch_heap_gb": heap_gb(),
         "spark": pyspark.__version__,
         "loadavg_1m": os.getloadavg()[0],
+        "steal_share": d[7] / max(sum(d), 1),
     }
 
 

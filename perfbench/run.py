@@ -23,7 +23,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from common import LIBRARY, REPO, RUN_DIR, host_cpus, host_info, prepare_process, refuse_if_contended  # noqa: E402
+from common import (  # noqa: E402
+    LIBRARY, REPO, RUN_DIR, cpu_ticks, host_cpus, host_info, prepare_process, refuse_if_contended)
 
 WORKLOADS = ("batch_small", "predict_rpc")
 # layers a workload never enters; their per-layer metrics read 0 there
@@ -51,7 +52,7 @@ def main() -> int:
         declared = json.load(f)["per_layer" if args.trace else "end_to_end"]
     refuse_if_contended()
     prepare_process(os.path.join(RUN_DIR, "tmp"))
-    host = host_info(host_cpus())
+    ticks = cpu_ticks()
 
     if args.workload == "predict_rpc":
         import predict
@@ -73,7 +74,7 @@ def main() -> int:
         print(f"perfbench: metrics {sorted(set(got) ^ set(want))} differ from "
               f"BENCHMARK.json", file=sys.stderr)
         return 3
-    print(json.dumps({"host": host, "workload": args.workload,
+    print(json.dumps({"host": host_info(host_cpus(), ticks), "workload": args.workload,
                       "seed": args.seed, "info": info}), flush=True)
     print(json.dumps({"correct": correct, "attempted": attempted, "failed": failed,
                       "metrics": metrics}), flush=True)
