@@ -85,18 +85,18 @@ def grouped_percentiles(
     return out.select(*sel)
 
 
-# Routing-bounds sampling modulus: the percentile-bounds passes below
-# sketch only rows whose deterministic hash lands on residue 0, cutting
-# the Greenwald-Khanna insert cost (the dominant CPU of the bounds pass —
-# round-10 measurement: acc-1000 sketching the full 14.5M-row Theil-Sen
-# slope stream cost ~an order of magnitude more than a plain count agg
-# over the same rows) by ~the modulus. Bounds affect ROUTING ONLY — the
+# Routing-bounds sampling modulus: the percentile-bounds sketch below
+# runs only over rows whose deterministic hash lands on residue 0,
+# cutting the Greenwald-Khanna insert cost (the dominant CPU of the
+# bounds pass — acc-1000 sketching the full 14.5M-row Theil-Sen slope
+# stream cost ~an order of magnitude more than a plain count agg over
+# the same rows) by ~the modulus. Bounds affect ROUTING ONLY — the
 # selection/prefix math downstream is exact against real ranks — so a
 # sampled sketch changes balance at most, never values. Groups too small
 # (or too duplicate-heavy) to land a sampled row fall back to ONE bucket
-# via the null-safe left join + `_bounds_bucket`-on-NULL-bounds path —
-# the same single-bucket routing a constant-valued group already gets
-# from duplicate percentile bounds today.
+# via the left join + `_bounds_bucket`-on-NULL-bounds path — the same
+# single-bucket routing a constant-valued group gets from duplicate
+# percentile bounds.
 BOUNDS_SAMPLE_MOD = 16
 
 
@@ -108,26 +108,171 @@ def _bounds_sample(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.filter(F.pmod(h, F.lit(BOUNDS_SAMPLE_MOD)) == 0)
 
 
-def _bounds_bucket(value_col: str, n_buckets: int) -> Column:
+def _bounds_bucket(key: Column, n_buckets: int) -> Column:
     """Bucket index 0..n_buckets-1 by BINARY SEARCH over a sorted
     ``__bnds`` percentile-bounds array column (log2 comparisons per row
     instead of a linear n_buckets-1 fold — at 14.5M rows x 31 bounds the
     linear fold alone cost ~5 s). With duplicate bounds the search may
     land in a different (empty-ranged) bucket than a linear count would —
-    harmless wherever the SAME expression routes every pass, which is the
-    contract for grouped_exact_median and grouped_cumsum below.
-    ``n_buckets`` must be a power of two (validated by callers)."""
-    steps, acc = [], n_buckets
-    while acc > 1:
-        acc //= 2
-        steps.append(acc)
-    idx = F.lit(0)
-    for step in steps:
+    harmless because the SAME pinned bounds route every consumer (see
+    :func:`_route_by_bounds`). ``n_buckets`` must be a power of two."""
+    idx, step = F.lit(0), n_buckets // 2
+    while step:
         probe = F.element_at("__bnds", (idx + F.lit(step)).cast("int"))
-        idx = idx + F.when(F.col(value_col) > probe, F.lit(step)).otherwise(
-            F.lit(0)
-        )
+        idx = idx + F.when(key > probe, F.lit(step)).otherwise(F.lit(0))
+        step //= 2
     return idx
+
+
+def _route_by_bounds(
+    df: DataFrame,
+    groups: list[str],
+    key: str,
+    n_buckets: int,
+    bounds_src: DataFrame | None = None,
+) -> DataFrame:
+    """``df`` plus an int ``__bkt``: the row's rank range of ``key``
+    within its ``groups`` (``[]`` = one global range). Buckets follow key
+    order, so an exact rank or prefix is per-bucket work plus a per-bucket
+    offset (:func:`_exclusive_offsets`).
+
+    Per-group ``percentile_approx`` bounds split the key into
+    ``n_buckets`` ranges (a power of two, for the binary search). They
+    are sketched over ``bounds_src`` as-is when given, else over the
+    1/``BOUNDS_SAMPLE_MOD`` hash sample of ``df``; a group absent from
+    the sketch gets NULL bounds via the LEFT join and routes whole into
+    bucket 0 (exact, single-window).
+
+    The |groups|-row bounds frame is pinned once with
+    ``checkpoint_for_reuse``. ``percentile_approx``'s sketch merge depends
+    on arrival order, so two consumers that each re-derived the bounds
+    could route one row into different buckets whenever Spark does not
+    dedup their broadcasts (``spark.sql.exchange.reuse=false``, or a
+    canonicalization change) — silently wrong ranks. With the pin every
+    consumer reads the identical bounds.
+
+    A NULL or NaN key fails the query (``raise_error``): NULL has no rank
+    position and engines disagree on its sort order, and NaN routes to
+    bucket 0 (``NaN > probe`` is false) while ``orderBy`` sorts it LAST,
+    which would silently shift every later rank.
+    """
+    from .partitioning import checkpoint_for_reuse
+
+    if n_buckets < 2 or n_buckets & (n_buckets - 1):
+        raise ValueError(
+            f"n_buckets must be a power of two >= 2 (binary-search bucket "
+            f"assignment), got {n_buckets}"
+        )
+    probs = [i / n_buckets for i in range(1, n_buckets)]
+    # routed as a double: the cast is monotone, so bucket order still
+    # follows key order for any numeric key type
+    kd = F.col(key).cast("double")
+    src = bounds_src if bounds_src is not None else _bounds_sample(df, [*groups, key])
+    bounds = checkpoint_for_reuse(
+        src.groupBy(*groups).agg(
+            F.sort_array(F.percentile_approx(kd, probs, 1_000)).alias("__bnds")
+        )
+    )
+    routed = (
+        df.join(F.broadcast(bounds), groups, "left")
+        if groups
+        else df.crossJoin(F.broadcast(bounds))
+    )
+    bkt = F.when(
+        kd.isNull() | F.isnan(kd),
+        F.raise_error(F.lit(f"rank key `{key}` must be non-null and non-NaN")),
+    ).otherwise(_bounds_bucket(kd, n_buckets))
+    return routed.withColumn("__bkt", bkt).drop("__bnds")
+
+
+def _exclusive_offsets(
+    sizes: DataFrame, groups: list[str], bucket: str, size: str
+) -> DataFrame:
+    """Add ``__off`` (the sum of ``size`` over the EARLIER buckets of the
+    same group, 0 for the first) and ``__n`` (the group's total) to a
+    |groups·buckets|-row ``sizes`` frame — tiny, so callers broadcast it
+    back onto the rows."""
+    w = Window.partitionBy(*groups)
+    before = w.orderBy(bucket).rowsBetween(Window.unboundedPreceding, -1)
+    return sizes.withColumn(
+        "__off", F.coalesce(F.sum(size).over(before), F.lit(0))
+    ).withColumn("__n", F.sum(size).over(w))
+
+
+def _range_partitions(df: DataFrame, order_by: list) -> DataFrame:
+    """``df`` range-repartitioned on ``order_by`` (the partition index
+    then follows the global order), sorted within partitions, with each
+    row stamped ``__pid`` (its partition) and ``__pos`` (its 0-based
+    position inside it), pinned eagerly.
+
+    ``__pos`` is the low 33 bits of ``monotonically_increasing_id`` =
+    (partition_id << 33) | record_number, so no ``Window.partitionBy``
+    over the partition id is needed — that window would force a SECOND
+    full-data exchange right after the range exchange, reshuffling data
+    the range partitioner already co-located. Caps partitions at 2^33
+    rows (the same practical bound as row_number's int).
+
+    The eager ``localCheckpoint`` pins the ranged layout BEFORE callers
+    branch: their sizes aggregate re-reads the same materialized RDD, so
+    ``__pid`` means the same partition in both branches. Without it AQE
+    may coalesce the tiny aggregate branch's read of the range shuffle
+    differently from the main branch — the branches then disagree on
+    partition ids and the join on ``__pid`` silently drops rows. The
+    tradeoff: a full job at DataFrame-construction time (laziness is
+    lost), data pinned UNREPLICATED on executors (an executor loss
+    mid-pipeline fails the query unrecoverably — acceptable for the short
+    window between checkpoint and consumption; rerun on failure), and
+    ``explain``/plan metrics see only the post-checkpoint fragment.
+    Value-bounds buckets (:func:`_route_by_bounds`) would stay lazy and
+    AQE-stable; adopt them if executor loss during numbering ever becomes
+    a real operational concern.
+    """
+    parted = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
+    return (
+        parted.withColumn(
+            "__pos", F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
+        )
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+
+
+def _prefix_sums(
+    local: DataFrame,
+    groups: list[str],
+    bucket: str,
+    order_by: list,
+    weight: Column | None,
+) -> DataFrame:
+    """Add ``__pre``, the INCLUSIVE running sum of ``weight`` in
+    ``order_by`` order within ``groups``, and ``__n``, the group total,
+    to ``local`` whose ``bucket`` column holds ordered key ranges. Each
+    (group, bucket) prefix-sums in parallel; each bucket's exclusive
+    offset comes from a |groups·buckets|-row window broadcast back.
+
+    ``weight=None`` numbers rows (a running count) from the
+    within-partition ``__pos`` of :func:`_range_partitions`, with no
+    window and so no exchange. The sizes aggregate reads the windowed
+    frame; column pruning drops the window there, so the aggregate
+    shares whatever exchange ``local`` brings (or, without one, runs as
+    a map-side partial aggregate)."""
+    if weight is None:
+        loc, size = F.col("__pos") + 1, F.count(F.lit(1))
+    else:
+        w = (
+            Window.partitionBy(*groups, bucket)
+            .orderBy(*order_by)
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        loc, size = F.sum(weight).over(w), F.sum(weight)
+    summed = local.withColumn("__loc", loc)
+    sizes = summed.groupBy(*groups, bucket).agg(size.alias("__s"))
+    offsets = _exclusive_offsets(sizes, groups, bucket, "__s").drop("__s")
+    return (
+        summed.join(F.broadcast(offsets), [*groups, bucket])
+        .withColumn("__pre", F.col("__loc") + F.col("__off"))
+        .drop(bucket, "__loc", "__off", "__pos")
+    )
 
 
 def grouped_exact_median(
@@ -135,8 +280,6 @@ def grouped_exact_median(
     group_col: str,
     value_col: str,
     n_buckets: int = 32,
-    checkpoint_input: bool = False,
-    spread: bool = True,
     bounds_src: DataFrame | None = None,
 ) -> DataFrame:
     """Exact per-group median of a numeric column WITHOUT a per-group
@@ -145,20 +288,18 @@ def grouped_exact_median(
     where ``row_number().over(partitionBy(group).orderBy(value))``
     funnels each group through one task).
 
-    Single-shuffle bucketed order-statistic selection (round-11 fusion;
-    previously the counts pass and the candidates pass each re-executed
-    the input lineage — 3 passes over the value space counting bounds):
+    Single-shuffle bucketed order-statistic selection:
 
     1. ``percentile_approx`` bounds per group split values into
-       ``n_buckets`` rank ranges (the approximation affects ROUTING
-       only, never the result).
+       ``n_buckets`` rank ranges (:func:`_route_by_bounds`; the
+       approximation affects ROUTING only, never the result).
     2. The bucketed rows are hash-exchanged ONCE on (group, bucket).
        The count-per-(group, bucket) aggregate and the candidate-bucket
        sort BOTH require exactly that distribution, so they ride the
        same materialized exchange (AQE stage reuse) — the input lineage
        executes once, the counts come for free off the shuffle files,
        and only the bucket(s) holding the two middle order statistics
-       (located by a tiny |groups·buckets|-row cumulative window) are
+       (located by the tiny |groups·buckets|-row offsets window) are
        sorted, bucket-locally, with exact global ranks picked via
        bucket-offset + local row_number.
 
@@ -166,12 +307,13 @@ def grouped_exact_median(
     engine-portable, unlike interpolated ``quantile_cont`` whose
     ``lo + p·(hi−lo)`` can differ from ``(lo+hi)/2`` in the last ulp.
 
-    Contract: ``value_col`` must be non-null AND non-NaN (drop both
-    upstream — NULL has no rank position and engines disagree on NULL
-    sort order; NaN routes to bucket 0 in ``_bounds_bucket`` while
-    ``orderBy`` sorts it LAST, so a NaN silently shifts the global rank
-    of every later bucket and selects the wrong order statistic —
-    round-8 advice). Returns ``group_col, n (BIGINT), median (double)``.
+    Contract: ``value_col`` must be non-null AND non-NaN — either fails
+    the query (see :func:`_route_by_bounds`); drop both upstream. The
+    input is used as given: callers with a few-partition input spread it
+    first (every pass over it runs at its partition count), and callers
+    with an expensive lineage pin it (it is read twice: bounds sample
+    and bucketed exchange). Returns ``group_col, n (BIGINT), median
+    (double)``.
 
     ``bounds_src``: optional cheap routing-only proxy frame carrying the
     same ``(group_col, value_col)`` columns. When given, the percentile
@@ -181,63 +323,10 @@ def grouped_exact_median(
     subsampled BEFORE the fan-out (Theil-Sen samples days, making the
     bounds join ~mod² cheaper than filtering fanned-out pairs). Bounds
     affect routing only, so any distribution-shaped proxy is correct; a
-    group absent from the proxy routes whole into bucket 0 (exact,
-    single-window) via the null-safe LEFT join.
+    group absent from the proxy routes whole into bucket 0.
     """
-    from .partitioning import checkpoint_for_reuse, repartition_for_compute
-
-    if n_buckets < 2 or n_buckets & (n_buckets - 1):
-        raise ValueError(
-            f"n_buckets must be a power of two >= 2 (binary-search bucket "
-            f"assignment), got {n_buckets}"
-        )
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    # spread first: the value frame often arrives in 1-5 partitions (e.g.
-    # a broadcast-join fan-out keyed by the GROUP — 5 keys = 5 tasks),
-    # which would single-task every pass. The input is NOT checkpointed
-    # by default: the two reads (bounds sample, bucketed exchange)
-    # recompute it, which for the typical cheap fan-out lineage
-    # (Theil-Sen's pair join) costs ~1 s/pass — whereas PINNING it is
-    # ~300 MB of unreplicated storage at day-grain (scale-INVARIANT, so
-    # it hits sf0.01 driver sessions at 1 GiB heap just as hard as
-    # sf0.1; the round-7 fuzz OOMed exactly there). Callers with an
-    # expensive lineage pass checkpoint_input=True (or bounds_src).
-    # ``spread=False`` lets a caller that ALREADY spread its input (e.g.
-    # Theil-Sen repartitions the pair-join probe side) skip the
-    # repartition_for_compute partition probe: under AQE, ``df.rdd``
-    # finalizes the adaptive plan, which MATERIALIZES every broadcast/
-    # shuffle stage in the input lineage — a whole extra action per call
-    # just to learn the partition count (round-10 job-trace: the probe
-    # alone re-built the pair join's broadcast and ran its exchange map
-    # stage). The guard itself stays the default for un-spread inputs.
-    src = df.select(group_col, value_col)
-    if spread:
-        src = repartition_for_compute(src)
-    if checkpoint_input:
-        src = checkpoint_for_reuse(src)
-    # Bounds are LAZY since the round-11 fusion: they feed exactly ONE
-    # subtree (the bucketing below the shared exchange), whose broadcast
-    # materializes once per action and is reused across task retries, so
-    # every row of every consumer routes with identical bounds without
-    # an eager pin (the pre-fusion shape needed a checkpoint because two
-    # separately-planned passes each re-derived the arrival-order-
-    # dependent sketch). Sketched over the deterministic hash SAMPLE
-    # (round-10): routing-only, see BOUNDS_SAMPLE_MOD; the LEFT join
-    # below keeps unsampled groups (bucket 0 — exact, single-window).
-    bsrc = (
-        bounds_src.select(group_col, value_col)
-        if bounds_src is not None
-        else _bounds_sample(src, [group_col, value_col])
-    )
-    bounds = bsrc.groupBy(group_col).agg(
-        F.percentile_approx(
-            value_col, F.array(*[F.lit(p) for p in probs]), 1_000
-        ).alias("__bnds")
-    )
-    bucketed = src.join(F.broadcast(bounds), group_col, "left").select(
-        group_col,
-        value_col,
-        _bounds_bucket(value_col, n_buckets).alias("__bkt"),
+    bucketed = _route_by_bounds(
+        df.select(group_col, value_col), [group_col], value_col, n_buckets, bounds_src
     )
     # ONE full-data exchange, shared: both the counts aggregate and the
     # candidate window need hash(group, bucket) distribution, so they
@@ -254,26 +343,10 @@ def grouped_exact_median(
     counts = shuffled.groupBy(group_col, "__bkt").agg(
         F.count(F.col(value_col)).cast("long").alias("__c")
     )
-    wb = (
-        Window.partitionBy(group_col)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wn = Window.partitionBy(group_col)
-    info = counts.select(
-        group_col,
-        "__bkt",
-        "__c",
-        F.coalesce(F.sum("__c").over(wb), F.lit(0).cast("long")).alias(
-            "__off"
-        ),
-        F.sum("__c").over(wn).cast("long").alias("__n"),
-    )
+    info = _exclusive_offsets(counts, [group_col], "__bkt", "__c")
     k1 = F.expr("(__n + 1) DIV 2")
     k2 = F.expr("(__n + 2) DIV 2")
-    in_bucket = lambda k: (k > F.col("__off")) & (
-        k <= F.col("__off") + F.col("__c")
-    )
+    in_bucket = lambda k: (k > F.col("__off")) & (k <= F.col("__off") + F.col("__c"))
     sel = info.filter(in_bucket(k1) | in_bucket(k2)).select(
         group_col, "__bkt", "__off", "__n"
     )
@@ -281,9 +354,7 @@ def grouped_exact_median(
     ranked = shuffled.join(F.broadcast(sel), [group_col, "__bkt"]).withColumn(
         "__rank", F.row_number().over(wl).cast("long") + F.col("__off")
     )
-    mid = ranked.filter(
-        (F.col("__rank") == k1) | (F.col("__rank") == k2)
-    )
+    mid = ranked.filter((F.col("__rank") == k1) | (F.col("__rank") == k2))
     return mid.groupBy(group_col).agg(
         F.max("__n").alias("n"),
         F.avg(value_col).alias("median"),
@@ -317,61 +388,17 @@ def global_row_number(
     through ONE task. Here: range-repartition on the order keys (so the
     partition index itself follows the global order), number rows within
     each partition in parallel, then add per-partition offsets computed
-    from a tiny (num_partitions-row) aggregate via broadcast join.
+    from a tiny (num_partitions-row) aggregate via broadcast join
+    (:func:`_range_partitions`, whose docstring carries the eager-pin
+    tradeoff).
 
     Requires ``order_cols`` to be a unique key for a fully deterministic
     assignment (same contract as the reference's 7-column sort,
     ``eda/merge_datasets.py:65-69``).
-
-    Tradeoff of the eager ``localCheckpoint`` below: it runs a full job at
-    DataFrame-construction time (laziness is lost), pins the data
-    UNREPLICATED on executors (an executor loss mid-pipeline fails the
-    query unrecoverably — acceptable for the short window between
-    checkpoint and consumption; rerun on failure), and downstream
-    ``explain``/plan-metrics see only the post-checkpoint plan fragment.
-    The alternative — deriving bucket ids from value-based range bounds
-    (percentile sampling) instead of ``spark_partition_id`` — would stay
-    lazy and AQE-stable; adopt it if executor loss during numbering ever
-    becomes a real operational concern.
     """
-    order_exprs = [F.col(c) for c in order_cols]
-    parted = df.repartitionByRange(*order_exprs).sortWithinPartitions(*order_exprs)
-    # monotonically_increasing_id = (partition_id << 33) | record_number:
-    # its low 33 bits ARE the 0-based within-partition position in sorted
-    # order, so no Window.partitionBy(__pid) is needed — which matters
-    # because that window would force a SECOND full-data exchange
-    # (hashpartitioning(__pid)) right after the range exchange, reshuffling
-    # data the range partitioner already co-located. Caps partitions at
-    # 2^33 rows (the same practical bound as row_number's int).
-    # Eagerly pin the ranged partitioning BEFORE branching: the sizes
-    # aggregate below re-reads this same materialized RDD, so __pid means
-    # the same partition in both branches. Without the pin, AQE may
-    # coalesce the tiny aggregate branch's read of the range shuffle
-    # differently from the main branch — the two branches then disagree
-    # on partition ids and the inner join on __pid silently drops rows.
-    local = (
-        parted.withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    sizes = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = Window.partitionBy().orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = sizes.withColumn(
-        "__offset", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0))
-    ).select("__pid", "__offset")
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            id_col,
-            (
-                F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
-                + F.col("__offset")
-                + 1
-            ).cast("long"),
-        )
-        .drop("__pid", "__mid", "__offset")
+    numbered = _prefix_sums(_range_partitions(df, order_cols), [], "__pid", [], None)
+    return numbered.withColumn(id_col, F.col("__pre").cast("long")).drop(
+        "__pre", "__n"
     )
 
 
@@ -387,63 +414,28 @@ def global_ntile(
     The naive ``ntile(n).over(Window.orderBy(...))`` plans an
     ``Exchange SinglePartition`` and sorts every row in one task — at
     entity grain on a real warehouse that is billions of rows through
-    one core. Here: range-repartition on the order expressions (the
-    partition index then follows the global order), number rows within
-    each partition in parallel via ``monotonically_increasing_id``'s
-    low 33 bits, broadcast-join per-partition offsets plus the global
-    row count from one tiny (num_partitions-row) aggregate, and map the
-    1-based global position to its tile with ntile's exact quota
-    arithmetic: with N rows the first ``N % n`` tiles hold
-    ``N div n + 1`` rows, the rest ``N div n`` — bit-identical to the
-    window form for any N.
+    one core. Here: the 1-based global position from the same scalable
+    range-partition numbering as :func:`global_row_number`, mapped to its
+    tile with ntile's exact quota arithmetic: with N rows the first
+    ``N % n`` tiles hold ``N div n + 1`` rows, the rest ``N div n`` —
+    bit-identical to the window form for any N.
 
     ``order_by`` may carry ``.desc()`` / ``.asc()`` sort orders and must
     form a unique key (same determinism contract as
-    :func:`global_row_number`). The eager ``localCheckpoint`` pins the
-    ranged layout before the sizes branch re-reads it — the same
-    AQE-branch-consistency requirement documented in
-    :func:`global_row_number`.
+    :func:`global_row_number`).
     """
-    parted = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
-    local = (
-        parted.withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    sizes = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = Window.partitionBy().orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        sizes.withColumn(
-            "__offset", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0))
-        )
-        .withColumn("__n", F.sum("__cnt").over(Window.partitionBy()))
-        .select("__pid", "__offset", "__n")
-    )
+    numbered = _prefix_sums(_range_partitions(df, order_by), [], "__pid", [], None)
     k = int(n_tiles)
-    # __rn ∈ [1, N]; quota split: big = __n DIV k + 1 rows for the first
+    # __pre ∈ [1, N]; quota split: big = __n DIV k + 1 rows for the first
     # __n % k tiles, small = __n DIV k for the rest. All-integer — no
     # doubles anywhere, so the assignment is exact at any N.
     tile_expr = F.expr(
-        f"CAST(IF(__rn <= (__n % {k}) * (__n DIV {k} + 1), "
-        f"(__rn - 1) DIV (__n DIV {k} + 1) + 1, "
-        f"(__n % {k}) + (__rn - (__n % {k}) * (__n DIV {k} + 1) - 1) "
+        f"CAST(IF(__pre <= (__n % {k}) * (__n DIV {k} + 1), "
+        f"(__pre - 1) DIV (__n DIV {k} + 1) + 1, "
+        f"(__n % {k}) + (__pre - (__n % {k}) * (__n DIV {k} + 1) - 1) "
         f"DIV (__n DIV {k}) + 1) AS INT)"
     )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            "__rn",
-            (
-                F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
-                + F.col("__offset")
-                + 1
-            ).cast("long"),
-        )
-        .withColumn(out_col, tile_expr)
-        .drop("__pid", "__mid", "__offset", "__n", "__rn")
-    )
+    return numbered.withColumn(out_col, tile_expr).drop("__pre", "__n")
 
 
 def grouped_cumsum(
@@ -453,7 +445,6 @@ def grouped_cumsum(
     value_col: str,
     out_col: str = "cumsum",
     n_buckets: int = 32,
-    checkpoint_input: bool = False,
 ) -> DataFrame:
     """INCLUSIVE running per-group sum of ``value_col`` in ``order_col``
     order WITHOUT the per-group single-task window — the grouped sibling
@@ -463,104 +454,35 @@ def grouped_cumsum(
     value-grain rows through 3 tasks).
 
     Mechanics: per-group ``percentile_approx`` bounds split the order
-    key into ``n_buckets`` ordered ranges (binary-search assignment —
+    key into ``n_buckets`` ordered ranges (:func:`_route_by_bounds` —
     the bounds affect ROUTING only); the prefix window partitions by
     (group, bucket), so its own hashpartitioning exchange is the ONLY
     full-data shuffle and every bucket prefix-sums in parallel; each
-    bucket's exclusive offset (sum of earlier buckets' totals within the
-    group) comes from a |groups·buckets|-row window broadcast back. A
-    first-cut design used repartitionByRange + partition-id offsets
-    instead and was 2x SLOWER than the naive window at the 100x smoke:
-    the range sampler re-executes the (unmaterialized) input for
-    sampling, and the window's hash exchange re-shuffled what the range
-    exchange had just placed.
+    bucket's exclusive offset comes from a |groups·buckets|-row window
+    broadcast back. repartitionByRange + partition-id offsets was 2x
+    SLOWER than the naive window at the 100x smoke: the range sampler
+    re-executes the (unmaterialized) input for sampling, and the
+    window's hash exchange re-shuffles what the range exchange had just
+    placed.
 
-    Contract: ``(group_col, order_col)`` must be jointly non-null,
-    non-NaN and unique (value-grain frames satisfy this by
-    construction) — with ties the ROWS-frame prefix inside a bucket
-    would be order-dependent, and a NaN order key routes to bucket 0 in
-    ``_bounds_bucket`` (NaN > probe is false) while ``orderBy`` sorts
-    NaN LAST, shifting every later row's prefix by one (round-8
-    advice). ``order_col`` must be numeric (percentile bounds).
+    The sizes pass is a map-side partial aggregate over the un-shuffled
+    lineage, not a second reader of the window's exchange: the window
+    side carries every caller payload column (the operator returns all
+    input columns) while the sizes side prunes to (group, order, value),
+    so the two exchange subtrees could never canonicalize equal and a
+    "shared" repartition would really run the full-data shuffle twice.
 
-    The input is NOT checkpointed by default — same reasoning as
-    :func:`grouped_exact_median` (round-8 advice: the Spearman caller
-    feeds a ~20M-row-per-flag price grain, a scale-DEPENDENT block whose
-    unconditional pin is exactly the pattern that OOMed the 1 GiB fuzz
-    sessions); the two reads (bounds sample, bucketed exchange)
-    recompute the lineage instead. Callers with an expensive input
-    lineage pass ``checkpoint_input=True``.
+    Contract: ``(group_col, order_col)`` must be jointly unique
+    (value-grain frames satisfy this by construction) — with ties the
+    ROWS-frame prefix inside a bucket would be order-dependent — and
+    ``order_col`` must be numeric (percentile bounds), non-null and
+    non-NaN (either fails the query, see :func:`_route_by_bounds`). The
+    input is read twice (bounds sample, bucketed window): callers with
+    an expensive lineage pin it first.
     """
-    from .partitioning import checkpoint_for_reuse
-
-    if n_buckets < 2 or n_buckets & (n_buckets - 1):
-        raise ValueError(
-            f"n_buckets must be a power of two >= 2 (binary-search bucket "
-            f"assignment), got {n_buckets}"
-        )
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    src = checkpoint_for_reuse(df) if checkpoint_input else df
-    # bounds LAZY since the round-11 fusion (same reasoning as
-    # grouped_exact_median: one consuming subtree below one shared
-    # exchange, broadcast materialized once per action — identical
-    # routing for every consumer without an eager pin). Sketched over
-    # the deterministic hash sample (routing-only, see
-    # BOUNDS_SAMPLE_MOD); LEFT join keeps unsampled groups (bucket 0).
-    bounds = (
-        _bounds_sample(src, [group_col, order_col])
-        .groupBy(group_col)
-        .agg(
-            F.percentile_approx(
-                order_col, F.array(*[F.lit(p) for p in probs]), 1_000
-            ).alias("__bnds")
-        )
-    )
-    # __bnds dropped right after bucketing: the 31-double bounds array
-    # must not ride the full-data window shuffle (the final select used
-    # to drop it, relying on column pruning; the explicit projection
-    # makes the exchanged row exactly input-width + one int).
-    #
-    # NOTE on the round-11 single-shuffle fusion: grouped_exact_median
-    # and global_cumsum share their one (group, bucket) exchange between
-    # the counts/sizes aggregate and the window via AQE stage reuse —
-    # possible there because both consumers project the IDENTICAL
-    # narrow column set below the exchange. Here the window side must
-    # carry every caller payload column (the operator returns all input
-    # columns) while the sizes side prunes to (group, order, value), so
-    # the two exchange subtrees can never canonicalize equal and a
-    # "shared" repartition would really run the full-data shuffle twice
-    # (measured on the median before its count(value) fix). The sizes
-    # pass therefore stays a map-side partial aggregate over the
-    # un-shuffled lineage (tiny exchange of partial rows), and the
-    # window keeps its own single full-data exchange — same two-read
-    # shape as round 10, minus the eager bounds action.
-    bucketed = (
-        src.join(F.broadcast(bounds), group_col, "left")
-        .withColumn("__bkt", _bounds_bucket(order_col, n_buckets))
-        .drop("__bnds")
-    )
-    sizes = bucketed.groupBy(group_col, "__bkt").agg(
-        F.sum(value_col).alias("__tot")
-    )
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sizes.withColumn(
-        "__goff", F.coalesce(F.sum("__tot").over(w_off), F.lit(0))
-    ).select(group_col, "__bkt", "__goff")
-    w_local = (
-        Window.partitionBy(group_col, "__bkt")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        bucketed.withColumn("__loc", F.sum(value_col).over(w_local))
-        .join(F.broadcast(offsets), [group_col, "__bkt"])
-        .withColumn(out_col, F.col("__loc") + F.col("__goff"))
-        .drop("__bkt", "__loc", "__goff")
-    )
+    bucketed = _route_by_bounds(df, [group_col], order_col, n_buckets)
+    out = _prefix_sums(bucketed, [group_col], "__bkt", [order_col], F.col(value_col))
+    return out.withColumnRenamed("__pre", out_col).drop("__n")
 
 
 def global_cumsum(
@@ -577,113 +499,50 @@ def global_cumsum(
     one-task ``Window.orderBy`` running sum would serialize the corpus.
 
     With a single numeric order key (the common case) the buckets come
-    from an ``approx_percentile`` pass, so the prefix window's own
-    exchange is the ONLY full-data shuffle; otherwise falls back to
-    ``repartitionByRange`` + partition-id buckets (two narrow shuffles).
-    Order keys must be non-null and jointly unique."""
+    from value bounds (:func:`_route_by_bounds`), and ONE
+    hashpartitioning(__bkt) exchange is the only full-data shuffle —
+    shared by the prefix window AND the sizes aggregate (AQE stage
+    reuse). repartitionByRange + Window.partitionBy(pid) would shuffle
+    everything twice: the window's required distribution can't see that
+    the range partitioner already co-located the rows. Otherwise falls
+    back to range-partition buckets (:func:`_range_partitions`).
+
+    Order keys must be non-null (a null fails the query) and jointly
+    unique; a single numeric key must also be non-NaN. Callers with
+    extra payload columns should project before calling: the window
+    side must carry every input column, so a wider frame breaks the
+    canonical match with the sizes side and duplicates the shuffle."""
+    from functools import reduce
+
     from pyspark.sql import types as T
 
-    order_exprs = [F.col(c) for c in order_cols]
-    numeric_key = len(order_cols) == 1 and isinstance(
+    # The null guard lives INSIDE the summed weight so it references
+    # every order column on both the window and the sizes side: for the
+    # narrow (order, value) frames every current caller passes, the sizes
+    # subtree below the shared exchange then canonicalizes EQUAL to the
+    # window subtree and AQE reuses the one materialized shuffle instead
+    # of running a second (pruned) full-data exchange.
+    weight = F.when(
+        reduce(lambda a, b: a | b, [F.col(c).isNull() for c in order_cols]),
+        F.raise_error(
+            F.lit(f"global_cumsum: order keys {order_cols} must be non-null")
+        ),
+    ).otherwise(F.col(value_col))
+    if len(order_cols) == 1 and isinstance(
         df.schema[order_cols[0]].dataType, T.NumericType
-    )
-    if numeric_key:
-        # Single order key: bucket on percentile boundaries so ONE
-        # hashpartitioning(__bkt) exchange is the only full-data
-        # shuffle — shared by the prefix window AND the sizes aggregate
-        # below (both need clustering on __bkt; AQE stage reuse,
-        # round-11 fusion: previously sizes re-read the input lineage
-        # separately AND the bounds came from a blocking ``.first()``
-        # driver action — now they ride in lazily as a broadcast 1-row
-        # frame, one fewer serial job per call). repartitionByRange +
-        # Window.partitionBy(pid) would shuffle everything twice — the
-        # window's required distribution can't see that the range
-        # partitioner already co-located the rows. Boundary quality
-        # only affects balance, never values.
-        key = order_cols[0]
-        n_bkt = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        # round UP to a power of two for the binary-search bucket
-        # assignment (log2 comparisons/row vs the linear fold this
-        # replaced), capped so the probs array stays sketch-sized:
-        # past ~4k probs an accuracy-1000 GK sketch emits mostly
-        # duplicate bounds anyway (routing-only, balance unaffected
-        # by the cap in practice)
-        n_bkt = max(int(n_bkt), 2)
-        p2 = 2
-        while p2 < n_bkt and p2 < 4096:
-            p2 *= 2
-        n_bkt = p2
-        qs = [i / n_bkt for i in range(1, n_bkt)]
-        # bounds sketched over the deterministic hash sample (routing-
-        # only, see BOUNDS_SAMPLE_MOD); an empty sample yields a NULL
-        # bounds array -> element_at probes are NULL -> every row lands
-        # in bucket 0, which is exact (single prefix window)
-        bounds = _bounds_sample(df, [key]).select(
-            F.sort_array(
-                F.percentile_approx(F.col(key).cast("double"), qs, 1000)
-            ).alias("__bnds")
-        )
-        bucketed = (
-            df.withColumn("__key_d", F.col(key).cast("double"))
-            .crossJoin(F.broadcast(bounds))
-            .withColumn("__bkt", _bounds_bucket("__key_d", n_bkt))
-            .drop("__key_d", "__bnds")
-        )
-        shuffled = bucketed.repartition("__bkt")
-        w_local = (
-            Window.partitionBy("__bkt")
-            .orderBy(*order_exprs)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        local = shuffled.withColumn(
-            "__local_sum", F.sum(value_col).over(w_local)
-        )
-        part_key = "__bkt"
+    ):
+        # shuffle partitions rounded UP to a power of two for the
+        # binary-search bucket assignment, capped at 4096 so the probs
+        # array stays sketch-sized: past ~4k probs an accuracy-1000 GK
+        # sketch emits mostly duplicate bounds anyway
+        n_bkt = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+        n_bkt = 1 << max(1, min(12, (n_bkt - 1).bit_length()))
+        local = _route_by_bounds(df, [], order_cols[0], n_bkt).repartition("__bkt")
+        bucket = "__bkt"
     else:
-        parted = df.repartitionByRange(*order_exprs).sortWithinPartitions(
-            *order_exprs
-        )
-        # Same branch-consistency pin as global_row_number: __bkt is a
-        # runtime partition id, so materialize before the sizes branch
-        # re-reads it (AQE must not re-coalesce the two reads differently).
-        with_pid = parted.withColumn(
-            "__bkt", F.spark_partition_id()
-        ).localCheckpoint(eager=True)
-        w_local = (
-            Window.partitionBy("__bkt")
-            .orderBy(*order_exprs)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        local = with_pid.withColumn("__local_sum", F.sum(value_col).over(w_local))
-        part_key = "__bkt"
-    # sum(when(order IS NOT NULL, value)), not plain sum(value):
-    # identical under the non-null order-key contract, but it keeps the
-    # order key referenced INSIDE the used aggregate (an unused extra
-    # aggregate would just be pruned away), so that — for the narrow
-    # (order, value) frames every current caller passes — the sizes
-    # subtree below the numeric branch's repartition exchange
-    # canonicalizes EQUAL to the window subtree and AQE reuses the one
-    # materialized shuffle instead of running a second (pruned)
-    # full-data exchange. Callers with extra payload columns should
-    # project before calling: the window side must carry every input
-    # column, so a wider frame breaks the canonical match and
-    # duplicates the shuffle.
-    sizes = local.groupBy(part_key).agg(
-        F.sum(
-            F.when(F.col(order_cols[0]).isNotNull(), F.col(value_col))
-        ).alias("__tot")
-    )
-    w_off = Window.partitionBy().orderBy(part_key).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = sizes.withColumn(
-        "__offset", F.coalesce(F.sum("__tot").over(w_off), F.lit(0))
-    ).select(part_key, "__offset")
-    return (
-        local.join(F.broadcast(offsets), part_key)
-        .withColumn(out_col, (F.col("__local_sum") + F.col("__offset")).cast("long"))
-        .drop(part_key, "__local_sum", "__offset")
-    )
+        local, bucket = _range_partitions(df, order_cols), "__pid"
+    out = _prefix_sums(local, [], bucket, order_cols, weight)
+    return out.withColumn(out_col, F.col("__pre").cast("long")).drop("__pre", "__n")
 
 
 def weighted_percentiles(
@@ -706,8 +565,10 @@ def weighted_percentiles(
     engines can never disagree on a boundary the way a float
     ``p * total`` could. ``pct_points`` must be integers in 1..100
     (validated). Null values/weights are dropped (SQL aggregate
-    semantics). Bound: the running weight itself accumulates in BIGINT,
-    so sum(weight) must stay below 2^63 (~9.2e18 — a quintillion cents).
+    semantics); a NaN numeric value fails the query (see
+    :func:`global_cumsum`). Bound: the running weight itself accumulates
+    in BIGINT, so sum(weight) must stay below 2^63 (~9.2e18 — a
+    quintillion cents).
 
     Scale: the input reduces to distinct-value grain first (one
     map-side-combined agg); the running weight comes from
@@ -721,7 +582,7 @@ def weighted_percentiles(
             k
             for k in pct_points
             # bool first: True == int(True) == 1 would pass the range check
-            # and silently compute the 1st percentile (round-6 advice)
+            # and silently compute the 1st percentile
             if isinstance(k, bool) or k != int(k) or not (1 <= int(k) <= 100)
         ]
     except (TypeError, ValueError):
@@ -742,18 +603,13 @@ def weighted_percentiles(
     )
     c = global_cumsum(g, [value_col], "__w", out_col="__cumw")
     tot = g.agg(F.sum("__w").alias("__tot"))
-    ks = (
-        df.sparkSession.range(1)
-        .select(
-            F.explode(
-                F.array(*[F.lit(int(k)) for k in pct_points])
-            ).alias("pct")
-        )
+    ks = df.sparkSession.range(1).select(
+        F.explode(F.array(*[F.lit(int(k)) for k in pct_points])).alias("pct")
     )
     # threshold compare in decimal(38,0): long arithmetic would overflow
     # silently past sum(weight) ~9.2e16 cents and flip the comparison at
-    # exactly the 100 TB scale this operator is for (r5 advice). DECIMAL
-    # keeps the compare exact to 1e38 and DuckDB's HUGEINT oracle agrees.
+    # exactly the 100 TB scale this operator is for. DECIMAL keeps the
+    # compare exact to 1e38 and DuckDB's HUGEINT oracle agrees.
     dec = "decimal(38,0)"
     return (
         c.crossJoin(F.broadcast(tot))

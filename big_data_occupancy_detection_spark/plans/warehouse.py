@@ -2203,17 +2203,21 @@ def priority_theilsen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = daily.select(
         "priority", F.col("day").alias("db"), F.col("cents").alias("cb")
     )
-    slopes = (
-        a.join(F.broadcast(b), "priority")
-        .filter(F.col("db") > F.col("da"))
-        .select(
-            "priority",
-            (
-                (F.col("cb") - F.col("ca")).cast("double")
-                / F.datediff("db", "da").cast("double")
-            ).alias("slope"),
+
+    def pair_slopes(a: DataFrame, b: DataFrame) -> DataFrame:
+        return (
+            a.join(F.broadcast(b), "priority")
+            .filter(F.col("db") > F.col("da"))
+            .select(
+                "priority",
+                (
+                    (F.col("cb") - F.col("ca")).cast("double")
+                    / F.datediff("db", "da").cast("double")
+                ).alias("slope"),
+            )
         )
-    )
+
+    slopes = pair_slopes(a, b)
     # the median pass is the scale knob: a row_number window partitioned
     # by priority funnels ~3M slopes/priority through 5 tasks (~17 s at
     # sf0.1); grouped_exact_median's bucketed order-statistic selection
@@ -2230,25 +2234,10 @@ def priority_theilsen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     # proxy; a priority losing every sampled pair would route whole
     # into one bucket — still exact.
     day_keep = lambda c: F.pmod(F.xxhash64(F.col(c)), F.lit(4)) == 0
-    slope_proxy = (
-        a.filter(day_keep("da"))
-        .join(F.broadcast(b.filter(day_keep("db"))), "priority")
-        .filter(F.col("db") > F.col("da"))
-        .select(
-            "priority",
-            (
-                (F.col("cb") - F.col("ca")).cast("double")
-                / F.datediff("db", "da").cast("double")
-            ).alias("slope"),
-        )
-    )
-    # spread=False: `a` above is already repartitioned to full
-    # parallelism, so every pass over the fan-out runs wide; skipping
-    # the median's own partition probe avoids an extra AQE
-    # stage-materialization action (round-10 job trace)
-    med = grouped_exact_median(
-        slopes, "priority", "slope", spread=False, bounds_src=slope_proxy
-    )
+    slope_proxy = pair_slopes(a.filter(day_keep("da")), b.filter(day_keep("db")))
+    # `a` above is already repartitioned to full parallelism, so every
+    # pass of the median over the fan-out runs wide
+    med = grouped_exact_median(slopes, "priority", "slope", bounds_src=slope_proxy)
     return med.select(
         "priority",
         F.col("n").alias("n_pairs"),
@@ -2516,20 +2505,21 @@ def flag_spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = base.join(F.broadcast(qg.drop("__c")), ["flag", "q"]).select(
         "flag", "p", "r2x"
     )
-    pg = rows.groupBy("flag", "p").agg(
-        F.count(F.lit(1)).cast("long").alias("c"),
-        F.sum("r2x").cast("long").alias("sxp"),
+    # pinned: pg feeds grouped_cumsum's two reads (bounds sample and
+    # bucketed window), and its lineage is the expensive part of the
+    # whole query (fact scan + broadcast rank join + groupBy), so
+    # recomputing it per pass cost 3.0 → 19.5 s at sf0.01; the pinned
+    # block is bounded by the DISTINCT CENTS domain (|prices|·|flags|
+    # rows, ~20 MB at sf0.01, plateauing ~100s of MB at any SF), and
+    # sessions that run this query at the 100x grain are 8-16g JVMs
+    # (bench/fuzz/smoke config).
+    pg = checkpoint_for_reuse(
+        rows.groupBy("flag", "p").agg(
+            F.count(F.lit(1)).cast("long").alias("c"),
+            F.sum("r2x").cast("long").alias("sxp"),
+        )
     )
-    # checkpoint_input=True (round 8 — now opt-in in grouped_cumsum):
-    # pg's lineage is the expensive part of the whole query (fact scan +
-    # broadcast rank join + groupBy), so recomputing it per pass cost
-    # 3.0 → 19.5 s at sf0.01; the pinned block is bounded by the DISTINCT
-    # CENTS domain (|prices|·|flags| rows, ~20 MB at sf0.01, plateauing
-    # ~100s of MB at any SF), and sessions that run this query at the
-    # 100x grain are 8-16g JVMs (bench/fuzz/smoke config).
-    pgc = grouped_cumsum(
-        pg, "flag", "p", "c", out_col="__cum", checkpoint_input=True
-    )
+    pgc = grouped_cumsum(pg, "flag", "p", "c", out_col="__cum")
     dec = lambda e: e.cast("decimal(38,0)")
     r2y = 2 * (F.col("__cum") - F.col("c")) + F.col("c") + 1
     mp = (

@@ -28,3 +28,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def no_exchange_reuse(spark):
+    """Run with ``spark.sql.exchange.reuse=false``: exact results must not
+    depend on Spark deduplicating identical exchanges or broadcasts."""
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    yield spark
+    spark.conf.unset("spark.sql.exchange.reuse")

@@ -9,11 +9,15 @@ on hand-built inputs where the expected values are human-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import Row
+import pytest
+from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
 from big_data_occupancy_detection_spark.ext import curation as C
-from big_data_occupancy_detection_spark.operators.relational import global_cumsum
+from big_data_occupancy_detection_spark.operators.relational import (
+    global_cumsum,
+    weighted_percentiles,
+)
 
 
 def test_global_cumsum_matches_serial_prefix_sum(spark):
@@ -27,6 +31,38 @@ def test_global_cumsum_matches_serial_prefix_sum(spark):
     for r in rows:
         acc += r.v
         assert out[r.k] == acc
+
+
+@pytest.mark.parametrize("keys", [["k"], ["neg", "k"]], ids=["numeric", "composite"])
+def test_global_cumsum_matches_naive_window_without_exchange_reuse(
+    spark, no_exchange_reuse, keys
+):
+    rows = [(i, -(i % 7), (i * 11) % 17 - 5) for i in range(600)]
+    df = spark.createDataFrame(rows, "k long, neg long, v long").repartition(7)
+    got = {r.k: r.cs for r in global_cumsum(df, keys, "v", out_col="cs").collect()}
+    w = Window.orderBy(*keys).rowsBetween(Window.unboundedPreceding, 0)
+    want = {r.k: r.cs for r in df.withColumn("cs", F.sum("v").over(w)).collect()}
+    assert got == want
+
+
+def test_weighted_percentiles_match_naive_window_without_exchange_reuse(
+    spark, no_exchange_reuse
+):
+    rows = [(float((i * 37) % 101), i % 5) for i in range(400)]
+    df = spark.createDataFrame(rows, "v double, w long")
+    pcts = [1, 25, 50, 75, 99, 100]
+    got = {r.pct: r.value for r in weighted_percentiles(df, "v", "w", pcts).collect()}
+    g = df.groupBy("v").agg(F.sum("w").alias("w"))
+    c = g.select(
+        "v",
+        F.sum("w").over(Window.orderBy("v")).alias("cumw"),
+        F.sum("w").over(Window.partitionBy()).alias("tot"),
+    )
+    want = {
+        k: c.filter(F.col("cumw") * 100 >= k * F.col("tot")).agg(F.min("v")).first()[0]
+        for k in pcts
+    }
+    assert got == want
 
 
 def test_redact_pii_masks_all_classes(spark):

@@ -13,7 +13,7 @@ from big_data_occupancy_detection_spark.operators.relational import (
 )
 
 
-def test_matches_naive_window(spark):
+def _check(spark):
     rng = random.Random(3)
     rows = []
     for g in range(7):
@@ -39,3 +39,13 @@ def test_matches_naive_window(spark):
     }
     assert got == want
     assert len(got) == len(rows)
+
+
+def test_matches_naive_window(spark):
+    _check(spark)
+
+
+def test_matches_naive_window_without_exchange_reuse(spark, no_exchange_reuse):
+    # the sizes aggregate and the prefix window each read the bounds;
+    # without broadcast reuse they must still route identically
+    _check(spark)

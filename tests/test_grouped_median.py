@@ -65,6 +65,22 @@ def test_small_bucket_counts(spark):
     _check(spark, groups, n_buckets=4)
 
 
+def test_matches_naive_without_exchange_reuse(spark, no_exchange_reuse):
+    # both consumers of the bucketed exchange (counts, candidate window)
+    # re-run it separately here, so they must route with the same bounds
+    rng = random.Random(17)
+    groups = {
+        f"g{i}": [rng.uniform(-9, 9) for _ in range(300 + 7 * i)] for i in range(4)
+    }
+    _check(spark, groups)
+    df = spark.createDataFrame(
+        [(g, v) for g, vs in groups.items() for v in vs], "g string, v double"
+    )
+    out = grouped_exact_median(df, "g", "v")
+    out.collect()
+    assert "ReusedExchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+
 def test_rejects_non_power_of_two(spark):
     df = spark.createDataFrame([("a", 1.0)], "g string, v double")
     with pytest.raises(ValueError, match="power of two"):

@@ -8,9 +8,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from big_data_occupancy_detection_spark.operators.relational import (
+    global_cumsum,
     global_ntile,
     global_row_number,
+    grouped_cumsum,
+    grouped_exact_median,
     null_census,
+    weighted_percentiles,
 )
 from big_data_occupancy_detection_spark.sources.readers import (
     read_csv_declared,
@@ -924,6 +928,41 @@ def test_weighted_percentiles_huge_weights_and_pct_validation(spark):
         # before the r6-advice fix and silently computed the 1st pctile
         with _pytest.raises(ValueError):
             weighted_percentiles(df, "v", "wt", bad)
+
+
+def _rank_frame(spark, bad):
+    rows = [("a", float(i), i % 3, 1) for i in range(40)] + [("a", bad, 0, 1)]
+    return spark.createDataFrame(rows, "g string, v double, k long, w long")
+
+
+_BOUNDS_ROUTED = {
+    "grouped_exact_median": lambda df: grouped_exact_median(df, "g", "v"),
+    "grouped_cumsum": lambda df: grouped_cumsum(df, "g", "v", "w"),
+    "global_cumsum": lambda df: global_cumsum(df.select("v", "w"), ["v"], "w"),
+}
+
+
+@pytest.mark.parametrize("bad", [None, float("nan")], ids=["null", "nan"])
+@pytest.mark.parametrize("op", sorted(_BOUNDS_ROUTED))
+def test_value_bounds_routing_rejects_null_and_nan_keys(spark, op, bad):
+    """A NULL key has no rank position and a NaN key routes to bucket 0
+    while ``orderBy`` sorts it last: either would silently corrupt every
+    later rank, so value-bounds routing fails the query instead."""
+    with pytest.raises(Exception, match="must be non-null"):
+        _BOUNDS_ROUTED[op](_rank_frame(spark, bad)).collect()
+
+
+def test_weighted_percentiles_rejects_nan_value(spark):
+    # NULL values are dropped by contract; a NaN value reaches the
+    # bounds-routed global_cumsum and must fail, not mis-rank
+    with pytest.raises(Exception, match="must be non-null"):
+        weighted_percentiles(_rank_frame(spark, float("nan")), "v", "w", [50]).collect()
+
+
+def test_global_cumsum_composite_key_rejects_null(spark):
+    df = _rank_frame(spark, None).select("v", "k", "w")
+    with pytest.raises(Exception, match="must be non-null"):
+        global_cumsum(df, ["k", "v"], "w").collect()
 
 
 def test_duckdb_list_reduce_struct_quirk():

@@ -1,13 +1,13 @@
-"""Round-11 optimization plan gates: the single-shuffle fusion in
-grouped_exact_median / global_cumsum must keep its ONE materialized
-(group, bucket) exchange SHARED between the counts/sizes aggregate and
-the window consumer. The share rests on both consumer subtrees
-canonicalizing equal below the exchange (the counts side must keep
-value_col / the order key in its projection — see the count(value) and
-sum(when(order IS NOT NULL, value)) notes in operators/relational.py);
-a well-meaning "simplification" back to count(1)/sum(value) silently
-duplicates the full-data shuffle instead (measured in round 11:
-no ReusedExchange, two REPARTITION_BY_COL subtrees)."""
+"""Plan gates for the single-shuffle fusion in grouped_exact_median /
+global_cumsum: the ONE materialized (group, bucket) exchange must stay
+SHARED between the counts/sizes aggregate and the window consumer. The
+share rests on both consumer subtrees canonicalizing equal below the
+exchange (the counts side must keep value_col / the order key in its
+projection — see the count(value) note and global_cumsum's null-key
+guard, which references every order column, in
+operators/relational.py); a well-meaning "simplification" back to
+count(1)/sum(value) silently duplicates the full-data shuffle instead
+(measured: no ReusedExchange, two REPARTITION_BY_COL subtrees)."""
 
 from __future__ import annotations
 
@@ -34,7 +34,7 @@ def test_median_counts_ride_the_one_exchange(spark):
     rng = random.Random(5)
     rows = [(f"g{i % 3}", rng.uniform(-100, 100)) for i in range(3000)]
     df = spark.createDataFrame(rows, "g string, v double").repartition(8)
-    out = grouped_exact_median(df, "g", "v", spread=False)
+    out = grouped_exact_median(df, "g", "v")
     plan = _final_plan(out)
     assert "ReusedExchange" in plan, (
         "median counts no longer reuse the bucketed exchange — did the "
@@ -43,8 +43,6 @@ def test_median_counts_ride_the_one_exchange(spark):
     # exactly ONE materialized full-data repartition: the reused read
     # references it instead of re-running it
     assert len(re.findall(r"REPARTITION_BY_COL", plan)) >= 1
-    stage_ids = re.findall(r"ShuffleQueryStage (\d+)", plan)
-    assert len(stage_ids) > len(set(stage_ids)) or "ReusedExchange" in plan
 
 
 def test_global_cumsum_sizes_ride_the_one_exchange(spark):
@@ -56,8 +54,8 @@ def test_global_cumsum_sizes_ride_the_one_exchange(spark):
     plan = _final_plan(out)
     assert "ReusedExchange" in plan, (
         "global_cumsum sizes no longer reuse the bucketed exchange — did "
-        "the sizes aggregate stop referencing the order key "
-        "(sum(when(order IS NOT NULL, value)))?"
+        "the sizes aggregate stop referencing the order key (the null-key "
+        "guard inside the summed weight)?"
     )
 
 
