@@ -17,6 +17,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import SparkSession
+
 from big_data_occupancy_detection_spark.plans import REGISTRY
 from big_data_occupancy_detection_spark.session import cpu_count, get_session
 
@@ -139,10 +141,10 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
+def bench_session(app_name: str = "bdo-spark-bench") -> SparkSession:
+    """local[$SPARK_GRAFT_CPUS] session with the bench's driver heap."""
     spark = get_session(
-        app_name="bdo-spark-bench",
+        app_name=app_name,
         master=f"local[{cpu_count()}]",
         # size the single local JVM explicitly: at Spark's 1 GiB default
         # the 82-query suite's accumulated localCheckpoint blocks OOM
@@ -151,9 +153,12 @@ def main() -> None:
         extra_conf={"spark.driver.memory": "16g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
-    # untimed warmup: JVM/codegen/parquet-footer costs are session constants,
-    # not per-query costs
+
+def warm_up(spark: SparkSession, sf_dir: str) -> None:
+    """Untimed warmup: JVM/codegen/parquet-footer costs are session
+    constants, not per-query costs."""
     spark.range(1000).selectExpr("sum(id) AS s").write.format("noop").mode(
         "overwrite"
     ).save()
@@ -162,25 +167,34 @@ def main() -> None:
     from big_data_occupancy_detection_spark.sources.readers import TABLE_NAMES, table
 
     for t in TABLE_NAMES:
-        table(spark, SF_DIR, t).write.format("noop").mode("overwrite").save()
+        table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
     # spin up the Python/Arrow worker pool (session constant, like JVM codegen)
     spark.range(100).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
 
-    # Transparency for the persisted-index serve entries (round-10
-    # VERDICT): report, per *_index_topk query, whether its on-disk index
-    # for THIS data dir already existed when the bench started ("hit" =
-    # the timed runs serve from cache; "miss" = the first timed run paid
-    # the build). Read-only probe — timing methodology is unchanged.
+
+def index_cache(sf_dir: str) -> dict[str, str]:
+    """Transparency for the persisted-index serve entries (round-10
+    VERDICT): per *_index_topk query, whether its on-disk index for THIS
+    data dir already existed before the timed runs ("hit" = the timed runs
+    serve from cache; "miss" = the first timed run paid the build).
+    Read-only probe — timing methodology is unchanged."""
     from big_data_occupancy_detection_spark.plans.textops import (
         persisted_index_status,
     )
 
-    index_cache = {
+    return {
         name: ("hit" if built else "miss")
-        for name, built in persisted_index_status(SF_DIR).items()
+        for name, built in persisted_index_status(sf_dir).items()
     }
+
+
+def main() -> None:
+    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
+    spark = bench_session()
+    warm_up(spark, SF_DIR)
+    cache = index_cache(SF_DIR)
 
     timings: dict[str, float] = {}
     for name in HEADLINE:
@@ -202,7 +216,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
-                "index_cache": index_cache,
+                "index_cache": cache,
             }
         )
     )

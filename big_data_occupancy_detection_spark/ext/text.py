@@ -69,11 +69,6 @@ def lang_id(text_col: Column | str) -> Column:
     return expr
 
 
-def token_count_ws(text_col: Column | str) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(text_col))
-
-
 def token_count_bpe(text_col: Column | str) -> Column:
     """BPE-ish regex token count (letters / digits / single symbols)."""
     return F.size(F.regexp_extract_all(norm_text(text_col), F.lit(BPE_REGEX), 0))

@@ -509,8 +509,8 @@ def sessionize_intervals(
     the key, two per-key window passes (lag flag, running sum) and a
     grouped aggregate — per-row cost is FLAT in per-key event density,
     where the native SessionWindow merging aggregate was measured
-    superlinear (scripts/scale_smoke_events.py: 66 s native vs 8.6 s
-    for this form at 100x replicated events).
+    superlinear (PERF.md "100× window/sessionization scale smoke":
+    66 s native vs 8.6 s for this form at 100x replicated events).
 
     Returns (key, __sid, session_start, session_end) plus the input
     columns, one row per EVENT (callers aggregate per session on
@@ -554,8 +554,8 @@ def session_windows_auto(
 
     The native ``session_window`` merging aggregate has a measured
     per-key DENSITY cliff (superlinear in events-per-key: 29x slower
-    than the lag-gap form at 100x replicated events,
-    scripts/scale_smoke_events.py) — but is marginally cheaper at low
+    than the lag-gap form at 100x replicated events, PERF.md "100×
+    window/sessionization scale smoke") — but is marginally cheaper at low
     density (single window pass, no lag stage). This operator probes
     the max per-key event count with one map-side-combined aggregate
     (two-level: count per key, then one max — never a collect of the

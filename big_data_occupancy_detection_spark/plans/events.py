@@ -764,13 +764,14 @@ def zorder_events_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def user_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Density-guarded dispatch (operators.temporal.session_windows_auto):
     # the native session_window MERGING aggregate has a measured per-key
-    # DENSITY cliff (scripts/scale_smoke_events.py: 66 s at 100×
-    # replicated events vs 8.6 s for the lag-gap twin — the in-memory
-    # window-merge cost grows superlinearly as sessions chain). The
-    # dispatcher probes max events-per-key with one map-side-combined
-    # aggregate and picks: native below the threshold (cheaper single
-    # pass), lag/running-sum sessionization above it. Both forms produce
-    # identical rows (property-tested), so the oracle is unchanged.
+    # DENSITY cliff (PERF.md "100× window/sessionization scale smoke":
+    # 66 s at 100× replicated events vs 8.6 s for the lag-gap twin —
+    # the in-memory window-merge cost grows superlinearly as sessions
+    # chain). The dispatcher probes max events-per-key with one
+    # map-side-combined aggregate and picks: native below the threshold
+    # (cheaper single pass), lag/running-sum sessionization above it.
+    # Both forms produce identical rows (property-tested), so the oracle
+    # is unchanged.
     from ..operators.temporal import session_windows_auto
 
     # null-ts exclusion pinned EXPLICITLY on both sides (r7 null fuzz):

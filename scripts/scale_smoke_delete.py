@@ -18,29 +18,24 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools"))
 
-from big_data_occupancy_detection_spark.session import get_session
-from big_data_occupancy_detection_spark.sources.readers import table
-from big_data_occupancy_detection_spark.sources.sinks import (
+from measure import bench_session, timed  # noqa: E402
+
+from big_data_occupancy_detection_spark.session import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
+from big_data_occupancy_detection_spark.sources.readers import table  # noqa: E402
+from big_data_occupancy_detection_spark.sources.sinks import (  # noqa: E402
     delete_keys_parquet,
     write_range_sorted_parquet,
 )
 
-SF_DIR = "/root/testdata/sf0.1"
-
 
 def main() -> None:
     r = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    spark = get_session(
-        app_name=f"delete_smoke_{r}x",
-        master="local[32]",
-        extra_conf={"spark.driver.memory": "16g"},
-    )
+    spark = bench_session(f"delete_smoke_{r}x")
     orders = table(spark, SF_DIR, "orders")
     big = orders.select(
         "o_orderkey",
@@ -65,9 +60,9 @@ def main() -> None:
         )
         keys = [row.o_custkey for row in mids[len(mids) // 2 : len(mids) // 2 + 50]]
         sizes_before = {f: os.path.getsize(f) for f in files}
-        t0 = time.perf_counter()
-        rep = delete_keys_parquet(spark, out, "o_custkey", keys)
-        wall = time.perf_counter() - t0
+        rep, stats = timed(
+            spark, lambda: delete_keys_parquet(spark, out, "o_custkey", keys)
+        )
         rewritten_bytes = sum(
             sz for f, sz in sizes_before.items()
             if not os.path.exists(f) or os.path.getsize(f) != sz
@@ -78,14 +73,15 @@ def main() -> None:
             "keys": len(keys), "rows_deleted": rep["rows_deleted"],
             "files_rewritten": rep["files_rewritten"],
             "rewritten_mb": round(rewritten_bytes / 1e6, 2),
-            "wall_s": round(wall, 2),
+            **stats,
         }), flush=True)
-        t0 = time.perf_counter()
-        rep2 = delete_keys_parquet(spark, out, "o_custkey", keys)
+        rep2, stats2 = timed(
+            spark, lambda: delete_keys_parquet(spark, out, "o_custkey", keys)
+        )
         print(json.dumps({
             "rerun_rows_deleted": rep2["rows_deleted"],
             "rerun_files_rewritten": rep2["files_rewritten"],
-            "rerun_wall_s": round(time.perf_counter() - t0, 2),
+            **{f"rerun_{k}": v for k, v in stats2.items()},
         }), flush=True)
     finally:
         shutil.rmtree(os.path.dirname(out), ignore_errors=True)

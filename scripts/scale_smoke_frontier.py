@@ -15,28 +15,22 @@ asserted, wall + shuffle bytes printed.)
 from __future__ import annotations
 
 import json
+import os
 import sys
-import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, ".")
-sys.path.insert(0, "scripts")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools"))
 
-from scale_smoke import shuffle_totals  # noqa: E402
+from measure import bench_session, timed  # noqa: E402
 
-from big_data_occupancy_detection_spark.ext import domains as DOM
-from big_data_occupancy_detection_spark.session import get_session
+from big_data_occupancy_detection_spark.ext import domains as DOM  # noqa: E402
 
 
 def main() -> None:
     n_seen = int(sys.argv[1]) if len(sys.argv) > 1 else 5_000_000
     n_batch = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000
-    spark = get_session(
-        app_name=f"scale_smoke_frontier_{n_seen}",
-        master="local[32]",
-        extra_conf={"spark.driver.memory": "16g", "spark.ui.enabled": "true"},
-    )
+    spark = bench_session(f"scale_smoke_frontier_{n_seen}")
     sid = F.col("id")
     canon = F.concat(
         F.lit("https://site"), (sid % 50_000).cast("string"),
@@ -66,14 +60,14 @@ def main() -> None:
     )
     # batch-sized filter: 10k keys / 3 words-per-key at ~1% FP, k=5
     n_words = 1 << 13
-    r0, w0 = shuffle_totals(spark)
-    t0 = time.perf_counter()
-    novel = DOM.frontier_novel_urls(
-        batch, seen, "url", "doc_id", n_words=n_words
-    ).localCheckpoint(eager=True)
-    n_novel = novel.count()
-    wall = time.perf_counter() - t0
-    r1, w1 = shuffle_totals(spark)
+    n_novel, stats = timed(
+        spark,
+        lambda: DOM.frontier_novel_urls(
+            batch, seen, "url", "doc_id", n_words=n_words
+        )
+        .localCheckpoint(eager=True)
+        .count(),
+    )
     # exact arithmetic: every even doc_id collapses into a seen URL,
     # every odd one is novel
     expect = n_batch // 2
@@ -84,9 +78,7 @@ def main() -> None:
                 "n_seen": n_seen,
                 "n_batch": n_batch,
                 "novel": n_novel,
-                "wall_s": round(wall, 1),
-                "shuffle_read_mb": round((r1 - r0) / 1e6, 2),
-                "shuffle_write_mb": round((w1 - w0) / 1e6, 2),
+                **stats,
             }
         ),
         flush=True,

@@ -18,47 +18,25 @@ asserted identical, wall + input bytes printed for both.)
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
-import time
-import urllib.request
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, ".")
-sys.path.insert(0, "scripts")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools"))
 
-from big_data_occupancy_detection_spark.ext import domains as DOM
-from big_data_occupancy_detection_spark.session import get_session
+from measure import bench_session, timed  # noqa: E402
 
-
-def io_totals(spark) -> tuple[int, float]:
-    """(input_bytes, input_records) summed over all completed stages."""
-    base = spark.sparkContext.uiWebUrl
-    if base is None:
-        return (0, 0)
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app}/stages"
-    ) as f:
-        stages = json.load(f)
-    done = [s for s in stages if s["status"] == "COMPLETE"]
-    return (
-        sum(s["inputBytes"] for s in done),
-        sum(s["inputRecords"] for s in done),
-    )
+from big_data_occupancy_detection_spark.ext import domains as DOM  # noqa: E402
 
 
 def main() -> None:
     n_seen = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000_000
     n_batch = int(sys.argv[2]) if len(sys.argv) > 2 else 100
     n_buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 1024
-    spark = get_session(
-        app_name=f"scale_smoke_frontier_bucketed_{n_seen}",
-        master="local[32]",
-        extra_conf={"spark.driver.memory": "16g", "spark.ui.enabled": "true"},
-    )
+    spark = bench_session(f"scale_smoke_frontier_bucketed_{n_seen}")
     root = tempfile.mkdtemp(prefix="frontier_bucketed_smoke_")
     try:
         sid = F.col("id")
@@ -69,28 +47,30 @@ def main() -> None:
         seen_src = spark.range(n_seen).select(canon.alias("canonical_url"))
         # FLAT layout (the r9 state of the art) vs BUCKET layout: one
         # file per bucket via a pre-write repartition on the bucket key
-        t0 = time.perf_counter()
-        seen_src.repartition(64).write.mode("overwrite").parquet(
-            f"{root}/flat"
+        _, flat_write = timed(
+            spark,
+            lambda: seen_src.repartition(64)
+            .write.mode("overwrite")
+            .parquet(f"{root}/flat"),
         )
-        t_flat_write = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        DOM.frontier_seen_write(
-            seen_src.repartition(
-                64, DOM.frontier_seen_bucket("canonical_url", n_buckets)
+        _, bucket_write = timed(
+            spark,
+            lambda: DOM.frontier_seen_write(
+                seen_src.repartition(
+                    64, DOM.frontier_seen_bucket("canonical_url", n_buckets)
+                ),
+                f"{root}/bucketed",
+                n_buckets=n_buckets,
             ),
-            f"{root}/bucketed",
-            n_buckets=n_buckets,
         )
-        t_bucket_write = time.perf_counter() - t0
         print(
             json.dumps(
                 {
                     "n_seen": n_seen,
                     "n_batch": n_batch,
                     "n_buckets": n_buckets,
-                    "flat_write_s": round(t_flat_write, 1),
-                    "bucketed_write_s": round(t_bucket_write, 1),
+                    "flat_write_s": flat_write["wall_s"],
+                    "bucketed_write_s": bucket_write["wall_s"],
                 }
             ),
             flush=True,
@@ -120,26 +100,20 @@ def main() -> None:
                 {"seen_bucket_col": "bucket", "n_buckets": n_buckets},
             ),
         ]:
-            i0, _ = io_totals(spark)
-            t0 = time.perf_counter()
-            novel = DOM.frontier_novel_urls(
-                batch, seen, "url", "doc_id", n_words=n_words, **kw
-            ).localCheckpoint(eager=True)
-            got = sorted(
-                (r["doc_id"], r["canonical_url"]) for r in novel.collect()
+            got, stats = timed(
+                spark,
+                lambda: sorted(
+                    (r["doc_id"], r["canonical_url"])
+                    for r in DOM.frontier_novel_urls(
+                        batch, seen, "url", "doc_id", n_words=n_words, **kw
+                    )
+                    .localCheckpoint(eager=True)
+                    .collect()
+                ),
             )
-            wall = time.perf_counter() - t0
-            i1, _ = io_totals(spark)
             results[name] = got
             print(
-                json.dumps(
-                    {
-                        "layout": name,
-                        "novel": len(got),
-                        "wall_s": round(wall, 1),
-                        "input_mb": round((i1 - i0) / 1e6, 1),
-                    }
-                ),
+                json.dumps({"layout": name, "novel": len(got), **stats}),
                 flush=True,
             )
         assert results["flat"] == results["bucketed"], "layouts disagree"

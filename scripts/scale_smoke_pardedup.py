@@ -9,9 +9,8 @@ window task; the r9 form's first-owner is a map-side-combined
 emits ONE candidate row for the hot hash and the hot reducer sees
 <= n_map_partitions rows.
 
-Usage: python scripts/scale_smoke_pardedup.py [R] [new|window|struct|both|ab] [dup|uniq]
-(R=1000 -> 5M docs at sf0.1; `window`/`struct` replay the pre-r9/r9
-plans for A/B. `dup` replicates whole docs verbatim — the
+Usage: python scripts/scale_smoke_pardedup.py [R] [dup|uniq]
+(R=1000 -> 5M docs at sf0.1. `dup` replicates whole docs verbatim — the
 extreme-duplication regime where distinct content collapses to the base
 corpus; `uniq` salts every paragraph per copy so the corpus is
 mostly-UNIQUE + one universal boilerplate — the realistic crawl shape,
@@ -21,98 +20,26 @@ where aggregate shuffle volume scales with corpus text.)
 from __future__ import annotations
 
 import json
+import os
 import sys
-import time
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, ".")
-sys.path.insert(0, "scripts")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools"))
 
-from scale_smoke import shuffle_totals  # noqa: E402
+from measure import bench_session, noop, timed  # noqa: E402
 
-from big_data_occupancy_detection_spark.ext.curation import paragraph_dedup
-from big_data_occupancy_detection_spark.session import get_session
-from big_data_occupancy_detection_spark.sources.readers import table
+from big_data_occupancy_detection_spark.ext.curation import paragraph_dedup  # noqa: E402
+from big_data_occupancy_detection_spark.session import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
+from big_data_occupancy_detection_spark.sources.readers import table  # noqa: E402
 
-SF_DIR = "/root/testdata/sf0.1"
 HOT = "subscribe to our newsletter today"
-
-
-def paragraph_dedup_window_form(docs):
-    """The pre-r9 plan, kept here ONLY as the A/B strawman: row_number
-    over a window partitioned by the raw paragraph string."""
-    pars = F.split(F.col("text"), r"\n+")
-    ex = docs.select(
-        F.col("doc_id").alias("doc"), F.posexplode(pars).alias("pos0", "par")
-    ).select("doc", (F.col("pos0") + 1).alias("pos"), "par")
-    w = Window.partitionBy("par").orderBy("doc", "pos")
-    ranked = ex.withColumn("__rn", F.row_number().over(w))
-    return ranked.groupBy("doc").agg(
-        F.count(F.lit(1)).alias("n_par"),
-        F.sum((F.col("__rn") == 1).cast("int")).cast("long").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("__rn") == 1, F.struct("pos", "par"))
-                    )
-                ),
-                lambda s: s.getField("par"),
-            ),
-            " ",
-        ).alias("clean_text"),
-    )
-
-
-def paragraph_dedup_struct_form(docs):
-    """The r9 plan, kept ONLY as the A/B strawman: first owner as
-    ``min(struct(doc, pos, par))`` — map-side-combined (hot-key safe)
-    but SortAggregate on both sides (struct-min has no mutable
-    fixed-width buffer), so the full exploded paragraph stream is
-    sorted per partition, raw string bytes included."""
-    pars = F.split(F.col("text"), r"\n+")
-    ex = docs.select(
-        F.col("doc_id").alias("doc"), F.posexplode(pars).alias("pos0", "par")
-    ).select("doc", (F.col("pos0") + 1).alias("pos"), "par")
-    winners = (
-        ex.groupBy(F.md5("par").alias("__h"))
-        .agg(F.min(F.struct("doc", "pos", "par")).alias("__f"))
-        .select(
-            F.col("__f.doc").alias("doc"),
-            F.col("__f.pos").alias("pos"),
-            F.col("__f.par").alias("par"),
-        )
-    )
-    kept = winners.groupBy("doc").agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "par"))),
-                lambda s: s.getField("par"),
-            ),
-            " ",
-        ).alias("clean_text"),
-    )
-    n_par = ex.groupBy("doc").agg(F.count(F.lit(1)).alias("n_par"))
-    return n_par.join(kept, "doc", "left").select(
-        "doc",
-        "n_par",
-        F.coalesce(F.col("n_kept"), F.lit(0).cast("long")).alias("n_kept"),
-        F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
-    )
 
 
 def main() -> None:
     r = int(sys.argv[1]) if len(sys.argv) > 1 else 1000
-    which = sys.argv[2] if len(sys.argv) > 2 else "new"
-    spark = get_session(
-        app_name=f"scale_smoke_pardedup_{r}x",
-        master="local[32]",
-        extra_conf={"spark.driver.memory": "16g", "spark.ui.enabled": "true"},
-    )
-    shape = sys.argv[3] if len(sys.argv) > 3 else "dup"
+    shape = sys.argv[2] if len(sys.argv) > 2 else "dup"
+    spark = bench_session(f"scale_smoke_pardedup_{r}x")
     docs = table(spark, SF_DIR, "documents")
     # rekeyed replication; every even doc_id gets the hot paragraph
     # prepended -> the hot key holds >=50% of all paragraph occurrences
@@ -153,34 +80,8 @@ def main() -> None:
         ),
         flush=True,
     )
-    forms = {
-        "new": paragraph_dedup,
-        "window": paragraph_dedup_window_form,
-        "struct": paragraph_dedup_struct_form,
-    }
-    if which == "both":
-        run = ["new", "window"]
-    elif which == "ab":
-        run = ["new", "struct"]
-    else:
-        run = [which]
-    for name in run:
-        r0, w0 = shuffle_totals(spark)
-        t0 = time.perf_counter()
-        forms[name](docs_rep).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        r1, w1 = shuffle_totals(spark)
-        print(
-            json.dumps(
-                {
-                    "form": name,
-                    "wall_s": round(wall, 1),
-                    "shuffle_read_mb": round((r1 - r0) / 1e6, 1),
-                    "shuffle_write_mb": round((w1 - w0) / 1e6, 1),
-                }
-            ),
-            flush=True,
-        )
+    _, stats = timed(spark, lambda: noop(paragraph_dedup(docs_rep)))
+    print(json.dumps({"op": "paragraph_dedup", **stats}), flush=True)
     spark.stop()
 
 

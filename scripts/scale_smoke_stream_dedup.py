@@ -19,32 +19,28 @@ Usage: python scripts/scale_smoke_stream_dedup.py [R] [n_batches]
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
-import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools"))
 
-from big_data_occupancy_detection_spark.session import get_session
-from big_data_occupancy_detection_spark.sources.readers import table
-from big_data_occupancy_detection_spark.streaming.dedup_ingest import (
+from measure import bench_session, timed  # noqa: E402
+
+from big_data_occupancy_detection_spark.session import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
+from big_data_occupancy_detection_spark.sources.readers import table  # noqa: E402
+from big_data_occupancy_detection_spark.streaming.dedup_ingest import (  # noqa: E402
     apply_near_dedup_batch,
 )
-
-SF_DIR = "/root/testdata/sf0.1"
 
 
 def main() -> None:
     r = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    spark = get_session(
-        app_name=f"stream_dedup_smoke_{r}x",
-        master="local[32]",
-        extra_conf={"spark.driver.memory": "16g"},
-    )
+    spark = bench_session(f"stream_dedup_smoke_{r}x")
     docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
     corpus = (
         docs.select(
@@ -59,10 +55,8 @@ def main() -> None:
     batch_n = max(n0 // 10, 1000)
     index_dir = tempfile.mkdtemp(prefix="smoke_dedup_idx_")
     try:
-        t0 = time.perf_counter()
-        apply_near_dedup_batch(corpus, 0, index_dir)
-        seed_wall = time.perf_counter() - t0
-        print(json.dumps({"seed_docs": n0, "seed_wall_s": round(seed_wall, 2)}),
+        _, seed = timed(spark, lambda: apply_near_dedup_batch(corpus, 0, index_dir))
+        print(json.dumps({"seed_docs": n0, "seed_wall_s": seed["wall_s"]}),
               flush=True)
         base = corpus.limit(batch_n).localCheckpoint(eager=True)
         for b in range(1, n_batches + 1):
@@ -85,17 +79,17 @@ def main() -> None:
             )
             batch = dups.unionByName(fresh).localCheckpoint(eager=True)
             nb = batch.count()
-            t0 = time.perf_counter()
-            apply_near_dedup_batch(batch, b, index_dir)
-            wall = time.perf_counter() - t0
+            _, stats = timed(
+                spark, lambda: apply_near_dedup_batch(batch, b, index_dir)
+            )
             print(
                 json.dumps(
                     {
                         "batch": b,
                         "batch_docs": nb,
                         "corpus_docs_before": n0 + (b - 1) * (nb - nb // 2),
-                        "wall_s": round(wall, 2),
-                        "docs_per_s": round(nb / wall, 0),
+                        "docs_per_s": round(nb / stats["wall_s"], 0),
+                        **stats,
                     }
                 ),
                 flush=True,

@@ -9,60 +9,64 @@ anti-join branch: O(K*|items|) rows hash-partitioned across the cluster.
 
 Usage: python scripts/smoke_neg_power_user.py [power_items] [mode]
   mode: hybrid (default threshold) | array (threshold=10**9) | both
-Prints one wall-time line per mode.
+Prints one JSON line per mode.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import sys
-import time
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools"))
+
+from measure import bench_session, timed  # noqa: E402
+
 from big_data_occupancy_detection_spark.plans.mlplans import (  # noqa: E402
     negative_samples_by_user,
 )
 
-POWER_ITEMS = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
-MODE = sys.argv[2] if len(sys.argv) > 2 else "both"
 CATALOG = 100_000
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "16")
-    .config("spark.driver.memory", "8g")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
 
-normal = (
-    spark.range(30_000)
-    .select(
-        (F.col("id") % 1000 + 10).cast("long").alias("user_id"),
-        F.pmod(F.xxhash64("id"), F.lit(CATALOG)).cast("long").alias("item"),
-    )
-)
-power = spark.range(1, POWER_ITEMS + 1).select(
-    F.lit(7).cast("long").alias("user_id"), F.col("id").alias("item")
-)
-pairs = normal.unionByName(power).localCheckpoint(eager=True)
-np_ = spark.range(1).select(F.lit(CATALOG).cast("long").alias("n"))
+def main() -> None:
+    power_items = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
+    which = sys.argv[2] if len(sys.argv) > 2 else "both"
+    spark = bench_session("smoke_neg_power_user")
 
-runs = {"hybrid": None, "array": 10**9}
-for mode, thr in runs.items():
-    if MODE not in ("both", mode):
-        continue
-    t0 = time.time()
-    out = (
-        negative_samples_by_user(pairs, np_)
-        if thr is None
-        else negative_samples_by_user(pairs, np_, power_user_threshold=thr)
+    normal = (
+        spark.range(30_000)
+        .select(
+            (F.col("id") % 1000 + 10).cast("long").alias("user_id"),
+            F.pmod(F.xxhash64("id"), F.lit(CATALOG)).cast("long").alias("item"),
+        )
     )
-    n = out.select(F.sum(F.size("kept_negs"))).first()[0]
-    print(
-        f"mode={mode} power_items={POWER_ITEMS} kept_total={n} "
-        f"wall={time.time() - t0:.1f}s",
-        flush=True,
+    power = spark.range(1, power_items + 1).select(
+        F.lit(7).cast("long").alias("user_id"), F.col("id").alias("item")
     )
+    pairs = normal.unionByName(power).localCheckpoint(eager=True)
+    np_ = spark.range(1).select(F.lit(CATALOG).cast("long").alias("n"))
+
+    runs = {"hybrid": {}, "array": {"power_user_threshold": 10**9}}
+    for mode, kw in runs.items():
+        if which not in ("both", mode):
+            continue
+        n, stats = timed(
+            spark,
+            lambda: negative_samples_by_user(pairs, np_, **kw)
+            .select(F.sum(F.size("kept_negs")))
+            .first()[0],
+        )
+        print(
+            json.dumps(
+                {"mode": mode, "power_items": power_items, "kept_total": n, **stats}
+            ),
+            flush=True,
+        )
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()

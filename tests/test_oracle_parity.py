@@ -17,6 +17,23 @@ from conftest import SF_DIR
 ORACLE_SPECS = sorted(
     (name, spec) for name, spec in REGISTRY.items() if spec.oracle is not None
 )
+# registry queries that reach a rank operator (operators/relational.py's
+# bounds-routed or range-partitioned passes): their exact results must
+# not depend on Spark deduplicating identical exchanges, so they run a
+# second time with exchange reuse off
+RANK_QUERIES = [
+    "customer_rfm_segments",
+    "dedup_rekey_pairs",
+    "doc_perplexity_buckets",
+    "flag_spearman_qty_price",
+    "lineitem_weighted_price_percentiles",
+    "part_abc_classes",
+    "part_sorted_neighborhood_pairs",
+    "priority_theilsen_slope",
+]
+PARITY_CASES = [pytest.param(n, s, False, id=n) for n, s in ORACLE_SPECS] + [
+    pytest.param(n, REGISTRY[n], True, id=f"{n}-reuse_off") for n in RANK_QUERIES
+]
 
 
 def _duck(sf_dir: str):
@@ -51,8 +68,10 @@ def _values_match(a, b) -> bool:
     return a == b
 
 
-@pytest.mark.parametrize("name,spec", ORACLE_SPECS, ids=[n for n, _ in ORACLE_SPECS])
-def test_oracle_parity(spark, name, spec, monkeypatch):
+@pytest.mark.parametrize("name,spec,reuse_off", PARITY_CASES)
+def test_oracle_parity(spark, name, spec, reuse_off, monkeypatch, request):
+    if reuse_off:
+        request.getfixturevalue("no_exchange_reuse")
     oracle = spec.oracle
     if callable(oracle):
         # lazy oracle (r10): bake against the SAME sf dir this test runs

@@ -12,11 +12,11 @@ Regenerate after an INTENTIONAL plan change:
 from __future__ import annotations
 
 import json
-import re
 from pathlib import Path
 
 import pytest
 
+from bench import HEADLINE
 from big_data_occupancy_detection_spark.planaudit import plan_metrics
 from big_data_occupancy_detection_spark.plans import REGISTRY
 
@@ -61,18 +61,8 @@ EXTRA_PLAN_PINNED = [
 ]
 
 
-def _headline_names() -> list[str]:
-    src = (Path(__file__).parent.parent / "bench.py").read_text()
-    block = re.search(r"HEADLINE = \[(.*?)\]", src, re.S).group(1)
-    return [
-        line.strip().split('"')[1]
-        for line in block.splitlines()
-        if line.strip().startswith('"')
-    ]
-
-
 def test_baseline_covers_headline():
-    assert sorted(set(_headline_names()) | set(EXTRA_PLAN_PINNED)) == sorted(
+    assert sorted(set(HEADLINE) | set(EXTRA_PLAN_PINNED)) == sorted(
         BASELINE
     )
 

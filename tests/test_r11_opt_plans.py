@@ -59,6 +59,32 @@ def test_global_cumsum_sizes_ride_the_one_exchange(spark):
     )
 
 
+def test_bounds_are_read_from_the_pin(spark, monkeypatch):
+    # _route_by_bounds sketches the percentile bounds once and pins them
+    # (checkpoint_for_reuse): every consumer must scan that checkpointed
+    # frame, never re-run percentile_approx, whose result depends on row
+    # arrival order
+    monkeypatch.delenv("SPARK_GRAFT_PLAN_AUDIT", raising=False)
+    rng = random.Random(21)
+    med_df = spark.createDataFrame(
+        [(f"g{i % 3}", rng.uniform(-100, 100)) for i in range(3000)],
+        "g string, v double",
+    ).repartition(8)
+    cum_df = spark.createDataFrame(
+        [(i, rng.randint(-5, 50)) for i in range(4000)], "k long, v long"
+    ).repartition(8)
+    for out in (
+        grouped_exact_median(med_df, "g", "v"),
+        global_cumsum(cum_df, ["k"], "v", out_col="cs"),
+    ):
+        plan = _final_plan(out)
+        assert "percentile_approx" not in plan, (
+            "the bounds sketch runs inside the query plan — is the "
+            "checkpoint_for_reuse pin in _route_by_bounds gone?"
+        )
+        assert re.search(r"Scan ExistingRDD\[[^\]]*__bnds", plan), plan
+
+
 def test_median_bounds_src_proxy_same_result(spark):
     # bounds are routing-only: a subsampled proxy (even a skewed one)
     # must produce the identical median

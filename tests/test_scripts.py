@@ -3,9 +3,12 @@ eda/main.py + eda_analysis.py, ml/train_model.py)."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
+
+from conftest import SF_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -57,40 +60,28 @@ def test_train_script_lr(tmp_path):
     assert "accuracy=" in out.stdout
 
 
-def _run_smoke(script, args):
-    env = {**os.environ, "SPARK_GRAFT_CPUS": "4"}
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "scripts", script), *args],
-        capture_output=True, text=True, timeout=420, env=env, cwd=REPO,
+def _run(path, args):
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "4", "SPARK_GRAFT_BENCH_RUNS": "1"}
+    return subprocess.run(
+        [sys.executable, os.path.join(REPO, path), *args],
+        capture_output=True, text=True, timeout=420, env=env,
     )
+
+
+def test_measure_on_scaled_dir(tmp_path):
+    data = str(tmp_path / "sf_r2")
+    made = _run("scripts/make_sf_scaled.py", [data, "2", SF_DIR])
+    assert made.returncode == 0, made.stderr[-2000:]
+    out = _run("tools/measure.py", [data, "pricing_summary,part_abc_classes"])
     assert out.returncode == 0, out.stderr[-2000:]
-    import json as _json
-
-    lines = [
-        _json.loads(l)
-        for l in out.stdout.splitlines()
-        if l.startswith("{")
-    ]
-    assert lines, out.stdout[-2000:]
-    return lines
-
-
-def test_scale_smoke_text_runs_tiny():
-    lines = _run_smoke("scale_smoke_text.py", ["2", "pmi"])
-    assert lines[0]["replication"] == 2
-    assert any(l.get("op") == "pmi_top_cooccurrence" for l in lines)
-
-
-def test_scale_smoke_events_runs_tiny():
-    lines = _run_smoke("scale_smoke_events.py", ["2", "sliding"])
-    assert any(l.get("op") == "sliding_hour_activity" for l in lines)
-
-
-def test_scale_smoke_tpch_runs_tiny():
-    lines = _run_smoke("scale_smoke_tpch.py", ["2", "pricing_summary"])
-    assert any(l.get("op") == "pricing_summary" for l in lines)
-
-
-def test_scale_smoke_ann_vec_runs_tiny():
-    lines = _run_smoke("scale_smoke_ann.py", ["2", "brute_vec"])
-    assert any(l.get("op") == "brute_force_topk_vectorized" for l in lines)
+    lines = [json.loads(l) for l in out.stdout.splitlines() if l.startswith("{")]
+    per_query = [l for l in lines if "query" in l]
+    assert [l["query"] for l in per_query] == ["pricing_summary", "part_abc_classes"]
+    for rec in per_query:
+        for key in ("wall_s", "jobs", "stages", "shuffle_read_mb", "shuffle_write_mb"):
+            assert key in rec, (key, rec)
+        assert rec["jobs"] >= 1, rec
+    assert lines[-1]["queries"] == 2
+    bad = _run("tools/measure.py", [data, "no_such_query"])
+    assert bad.returncode != 0
+    assert "no_such_query" in bad.stderr

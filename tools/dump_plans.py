@@ -14,12 +14,12 @@ baseline does.
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ["SPARK_GRAFT_PLAN_AUDIT"] = "1"
 
+from bench import HEADLINE
 from big_data_occupancy_detection_spark.plans import REGISTRY
 from big_data_occupancy_detection_spark.session import get_session
 
@@ -29,22 +29,12 @@ OUT = os.path.join(
 )
 
 
-def headline_names() -> list[str]:
-    src = open(os.path.join(REPO, "bench.py")).read()
-    block = re.search(r"HEADLINE = \[(.*?)\]", src, re.S).group(1)
-    return [
-        line.strip().split('"')[1]
-        for line in block.splitlines()
-        if line.strip().startswith('"')
-    ]
-
-
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = (
         [n.strip() for n in sys.argv[2].split(",") if n.strip()]
         if len(sys.argv) > 2
-        else headline_names()
+        else HEADLINE
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     os.makedirs(OUT, exist_ok=True)

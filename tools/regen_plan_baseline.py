@@ -7,26 +7,16 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE
 from big_data_occupancy_detection_spark.planaudit import plan_metrics
 from big_data_occupancy_detection_spark.plans import REGISTRY
 from big_data_occupancy_detection_spark.session import get_session
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def headline_names() -> list[str]:
-    src = open(os.path.join(REPO, "bench.py")).read()
-    block = re.search(r"HEADLINE = \[(.*?)\]", src, re.S).group(1)
-    return [
-        line.strip().split('"')[1]
-        for line in block.splitlines()
-        if line.strip().startswith('"')
-    ]
 
 
 def main() -> None:
@@ -44,7 +34,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     out = {
         n: plan_metrics(REGISTRY[n].fn(spark, "/root/testdata/sf0.001"))
-        for n in sorted(set(headline_names()) | set(EXTRA_PLAN_PINNED))
+        for n in sorted(set(HEADLINE) | set(EXTRA_PLAN_PINNED))
     }
     path = os.path.join(REPO, "tests", "plan_baseline.json")
     json.dump(out, open(path, "w"), indent=1, sort_keys=True)
