@@ -8,6 +8,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from conftest import SF_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -68,13 +70,21 @@ def _run(path, args):
     )
 
 
-def test_measure_on_scaled_dir(tmp_path):
-    data = str(tmp_path / "sf_r2")
+@pytest.fixture(scope="module")
+def scaled_dir(tmp_path_factory):
+    data = str(tmp_path_factory.mktemp("scaled") / "sf_r2")
     made = _run("scripts/make_sf_scaled.py", [data, "2", SF_DIR])
     assert made.returncode == 0, made.stderr[-2000:]
-    out = _run("tools/measure.py", [data, "pricing_summary,part_abc_classes"])
+    return data
+
+
+def _records(out):
     assert out.returncode == 0, out.stderr[-2000:]
-    lines = [json.loads(l) for l in out.stdout.splitlines() if l.startswith("{")]
+    return [json.loads(l) for l in out.stdout.splitlines() if l.startswith("{")]
+
+
+def test_measure_on_scaled_dir(scaled_dir):
+    lines = _records(_run("tools/measure.py", [scaled_dir, "pricing_summary,part_abc_classes"]))
     per_query = [l for l in lines if "query" in l]
     assert [l["query"] for l in per_query] == ["pricing_summary", "part_abc_classes"]
     for rec in per_query:
@@ -82,6 +92,46 @@ def test_measure_on_scaled_dir(tmp_path):
             assert key in rec, (key, rec)
         assert rec["jobs"] >= 1, rec
     assert lines[-1]["queries"] == 2
-    bad = _run("tools/measure.py", [data, "no_such_query"])
+    bad = _run("tools/measure.py", [scaled_dir, "no_such_query"])
     assert bad.returncode != 0
     assert "no_such_query" in bad.stderr
+
+
+# One query per family at 2x replication: text, events, TPC-H and
+# brute-force embedding top-k. One measure.py run serves all four tests.
+SCALE_QUERIES = {
+    "text": "pmi_top_cooccurrence",
+    "events": "sliding_hour_activity",
+    "tpch": "pricing_summary",
+    "ann_vec": "embedding_topk",
+}
+
+
+@pytest.fixture(scope="module")
+def scale_records(scaled_dir):
+    lines = _records(_run("tools/measure.py", [scaled_dir, ",".join(SCALE_QUERIES.values())]))
+    assert lines[-1]["data_dir"] == scaled_dir
+    return {l["query"]: l for l in lines if "query" in l}
+
+
+def _assert_ran(records, family):
+    rec = records.get(SCALE_QUERIES[family])
+    assert rec is not None, records
+    assert rec["jobs"] >= 1 and rec["stages"] >= 1, rec
+    assert rec["wall_s"] > 0, rec
+
+
+def test_scale_smoke_text_runs_tiny(scale_records):
+    _assert_ran(scale_records, "text")
+
+
+def test_scale_smoke_events_runs_tiny(scale_records):
+    _assert_ran(scale_records, "events")
+
+
+def test_scale_smoke_tpch_runs_tiny(scale_records):
+    _assert_ran(scale_records, "tpch")
+
+
+def test_scale_smoke_ann_vec_runs_tiny(scale_records):
+    _assert_ran(scale_records, "ann_vec")
