@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import portable_round
 from ..functions.text_fns import hash64, md5_hash64, norm_text, tokens
 from ..operators.generate import explode_fused
-from ..operators.partitioning import repartition_for_compute
+from ..operators.partitioning import checkpoint_for_reuse, repartition_for_compute
 from ..operators.relational import global_cumsum, global_row_number
 from .dedup import first_owner_encode
 
@@ -610,10 +610,10 @@ def dsir_log_weights(
     )
     # ONE pass over the token stream; everything below reads this
     # compact (≤ dim rows per doc, all longs) frame.
-    dc = (
-        bucketed.groupBy(id_col, "__is_target", "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
+    dc = checkpoint_for_reuse(
+        bucketed.groupBy(id_col, "__is_target", "bucket").agg(
+            F.count(F.lit(1)).alias("c")
+        )
     )
     bc = dc.groupBy("bucket").agg(
         F.sum(F.when(F.col("__is_target"), F.col("c")).otherwise(0)).alias("ct"),
@@ -693,7 +693,7 @@ def temperature_shares_from_partials(
     mirroring DuckDB ``list_reduce ... ORDER BY``) lives in one place.
     The partials are eagerly checkpointed here (|strata| rows) because
     the denominator fold and the output both read them."""
-    per = per.localCheckpoint(eager=True)
+    per = checkpoint_for_reuse(per)
     sq = F.sqrt(F.col("n_tokens").cast("double"))
     denom = per.agg(
         F.sum("n_tokens").cast("double").alias("tot"),
@@ -728,15 +728,13 @@ def datacard_from_docs(docs: DataFrame) -> DataFrame:
     """
     if "n_docs" not in docs.columns:
         docs = docs.withColumn("n_docs", F.lit(1))
-    rolled = (
-        docs.rollup("lang", "source")
-        .agg(
+    rolled = checkpoint_for_reuse(
+        docs.rollup("lang", "source").agg(
             F.grouping_id().alias("gid"),
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("n_tok").alias("n_tokens"),
             F.sum("n_chars").alias("n_chars"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = rolled.filter(F.col("gid") == 3).select(
         F.col("n_tokens").cast("double").alias("tot")

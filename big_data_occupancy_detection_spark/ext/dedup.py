@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import portable_round
 from ..functions.text_fns import hash64, tokens, word_ngrams
 from ..operators.generate import explode_fused
-from ..operators.partitioning import repartition_for_compute
+from ..operators.partitioning import checkpoint_for_reuse, repartition_for_compute
 
 DEFAULT_NUM_HASHES = 12
 DEFAULT_BANDS = 4  # rows per band r = num_hashes // bands = 3
@@ -185,7 +185,7 @@ def ngram_jaccard_pairs_prefix(
             F.array_distinct(F.transform("shingles", lambda s: hash64(s)))
         ).alias("hs"),
     )
-    sh = sh.withColumn("n_sh", F.size("hs")).localCheckpoint(eager=True)
+    sh = checkpoint_for_reuse(sh.withColumn("n_sh", F.size("hs")))
     prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
     inv = sh.select(
         "doc",
@@ -324,8 +324,8 @@ def connected_components(
     Algorithm: iterative min-label propagation over the undirected edge
     list — label(n) ← min(label(n), min label of n's neighbors) until
     fixpoint. Each round is one shuffle-join + aggregate, with an eager
-    ``localCheckpoint`` breaking the lineage so Catalyst's analysis cost
-    stays O(1) per round (the plan-depth blowup documented in PERF.md).
+    ``checkpoint_for_reuse`` pin breaking the lineage so Catalyst's
+    analysis cost stays O(1) per round (the plan-depth blowup documented in PERF.md).
     Near-dup components are overwhelmingly tiny cliques, so convergence is
     1-2 rounds; ``max_iter`` bounds pathological chains (a path graph of
     diameter d needs ~d rounds — at true web scale swap in
@@ -339,16 +339,14 @@ def connected_components(
     ``strict=False`` only if approximate labels are genuinely acceptable.
     """
     e = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    edges = (
+    edges = checkpoint_for_reuse(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .dropDuplicates()
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = checkpoint_for_reuse(
         edges.groupBy(F.col("a").alias("node"))
         .agg(F.min("b").alias("nb_min"))
         .select("node", F.least("node", "nb_min").alias("lbl"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iter):
         prop = (
@@ -360,10 +358,9 @@ def connected_components(
         # labels only decrease, so "changed" is newl < lbl — computed in
         # the SAME update join (no separate new⋈old convergence join,
         # which would cost one more full-|V| shuffle per round)
-        new_labels = (
+        new_labels = checkpoint_for_reuse(
             labels.join(prop, "node", "left_outer")
             .select("node", newl.alias("lbl"), (newl < F.col("lbl")).alias("chg"))
-            .localCheckpoint(eager=True)
         )
         changed = new_labels.filter("chg").limit(1).count()
         labels = new_labels.drop("chg")
@@ -397,9 +394,9 @@ def connected_components_star(
     converges in O(log d) rounds because every round re-points whole
     subtrees at their local minimum, halving component height. Each round
     is two groupBy-min + join stages over a canonical (hi, lo) edge list
-    that monotonically contracts toward stars, with eager
-    ``localCheckpoint`` per phase keeping Catalyst analysis O(1) per round
-    (PERF.md plan-depth note).
+    that monotonically contracts toward stars, with an eager
+    ``checkpoint_for_reuse`` pin per phase keeping Catalyst analysis O(1)
+    per round (PERF.md plan-depth note).
 
     - large-star: for each node u, point every LARGER neighbor v at
       m = min(N(u) ∪ {u})  (v > u ≥ m keeps edges canonical hi→lo);
@@ -409,14 +406,13 @@ def connected_components_star(
     Fixpoints of the alternation are exactly min-rooted stars; the round
     loop stops when a full round leaves the edge set unchanged.
     """
-    edges = (
+    edges = checkpoint_for_reuse(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         .dropDuplicates()
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_rounds):
         sym = edges.unionByName(
@@ -427,21 +423,19 @@ def connected_components_star(
             .agg(F.min("v").alias("mn"))
             .select("u", F.least("u", "mn").alias("m"))
         )
-        ls = (
+        ls = checkpoint_for_reuse(
             sym.join(large_min, "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .dropDuplicates()
-            .localCheckpoint(eager=True)
         )
         small_min = ls.groupBy("u").agg(F.min("v").alias("m"))
         joined = ls.join(small_min, "u")
-        ss = (
+        ss = checkpoint_for_reuse(
             joined.filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(joined.select("u", F.col("m").alias("v")))
             .dropDuplicates()
-            .localCheckpoint(eager=True)
         )
         changed = (
             ss.exceptAll(edges)
@@ -476,7 +470,7 @@ def exact_tagged(
     from .text import fingerprint_md5
 
     grp_w = Window.partitionBy("fp")
-    return (
+    return checkpoint_for_reuse(
         docs.select(
             F.col(id_col).alias("doc"),
             F.col(text_col).alias("__text"),
@@ -484,7 +478,6 @@ def exact_tagged(
         )
         .withColumn("rep", F.min("doc").over(grp_w))
         .withColumn("gsz", F.count(F.lit(1)).over(grp_w))
-        .localCheckpoint(eager=True)
     )
 
 
@@ -1101,9 +1094,9 @@ def shingle_novelty(
     sh = with_shingles(df, text_col, n).select(
         F.col(id_col).alias("doc"), "shingles"
     )
-    hashed = sh.select(
-        "doc", F.transform("shingles", lambda s: hash64(s)).alias("hs")
-    ).localCheckpoint(eager=True)
+    hashed = checkpoint_for_reuse(
+        sh.select("doc", F.transform("shingles", lambda s: hash64(s)).alias("hs"))
+    )
     sizes = hashed.select("doc", F.size("hs").cast("long").alias("n_shingles"))
     e = explode_fused(hashed, "hs", "h", keep=["doc"])
     census = e.groupBy("h").agg(

@@ -694,11 +694,7 @@ def _novel_canonicals(
     the scan), counted, and BROADCAST only under
     ``broadcast_budget_rows``; past it the anti-join falls back to
     shuffle_hash, which repartitions only reps + survivors (both ≪
-    seen), never the driver. Under ``SPARK_GRAFT_PLAN_AUDIT`` (where
-    ``checkpoint_for_reuse`` is a no-op so pins see the full lineage)
-    the count is SKIPPED and the broadcast shape is pinned — counting
-    there would execute the un-checkpointed seen scan as a side effect
-    of merely building the plan (r10 review)."""
+    seen), never the driver."""
     from ..operators.partitioning import checkpoint_for_reuse
     from .sketches import BLOOM_HASHES, BLOOM_WORDS, bloom_build, bloom_filter_expr
 
@@ -733,16 +729,12 @@ def _novel_canonicals(
             .collect()
         ]
         seen = seen.filter(F.col(seen_bucket_col).isin(cand_buckets))
-    import os
-
     survivors = checkpoint_for_reuse(
         seen.select(F.col(seen_col).alias("canonical_url")).filter(
             bloom_filter_expr(words, "canonical_url", nw, kk)
         )
     )
-    if os.environ.get("SPARK_GRAFT_PLAN_AUDIT") == "1":
-        right = F.broadcast(survivors)  # pin the small-survivor shape
-    elif survivors.count() <= broadcast_budget_rows:
+    if survivors.count() <= broadcast_budget_rows:
         right = F.broadcast(survivors)
     else:
         right = survivors.hint("shuffle_hash")

@@ -9,10 +9,11 @@ curriculum sampling.
 Scale notes (100 TB): each iteration is one shuffle (contributions
 grouped by destination) plus a broadcast-joined damping term; the rank
 frame is O(|V|) rows of (node, double). Iterations are separated by tiny
-eager ``localCheckpoint``s so Catalyst analysis cost stays constant per
-round instead of re-optimizing an ever-deeper lineage (the same pattern
-as ``ext.similarity._fit_centroids``). Dangling mass is redistributed
-uniformly each round, so ranks sum to 1 regardless of graph shape.
+eager ``checkpoint_for_reuse`` pins so Catalyst analysis cost stays
+constant per round instead of re-optimizing an ever-deeper lineage (the
+same pattern as ``ext.similarity._fit_centroids``). Dangling mass is
+redistributed uniformly each round, so ranks sum to 1 regardless of
+graph shape.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round
+from ..operators.partitioning import checkpoint_for_reuse
 
 
 def pagerank(
@@ -45,9 +47,9 @@ def pagerank(
     # The edge list feeds every iteration; without materializing it, each
     # round re-executes the caller's (possibly expensive) edge-discovery
     # plan — e.g. a Jaccard self-join — from scratch. O(|E|) id pairs.
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
+    e = checkpoint_for_reuse(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
@@ -56,10 +58,9 @@ def pagerank(
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # (node, outdeg) with 0 for dangling nodes; this frame is reused every
     # iteration, so materialize it once and cut its lineage.
-    base = (
+    base = checkpoint_for_reuse(
         nodes.join(outdeg, nodes.node == outdeg.src, "left_outer")
         .select("node", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        .localCheckpoint(eager=True)
     )
     n = base.count()
     # portable rounding: 1/n and the damped update are exact rationals,
@@ -98,7 +99,7 @@ def pagerank(
         )
         if i < n_iters - 1:
             # O(|V|) rows; keeps per-round plan size constant.
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = checkpoint_for_reuse(ranks)
     return ranks.select("node", F.col("pr").alias("pagerank"))
 
 
@@ -122,19 +123,18 @@ def bfs_levels(
     frontier against the edge list plus an anti-join against the visited
     set — both O(|frontier| + |E_touched|), never O(|V|²). The frontier
     and visited frames are node-grain; per-round eager
-    ``localCheckpoint``s keep plan depth constant (the pagerank pattern
-    above) and stop each round's join from re-executing the caller's
-    edge-discovery plan. Early exit on an empty frontier, so the bound
-    is a cap, not a fixed cost.
+    ``checkpoint_for_reuse`` pins keep plan depth constant (the pagerank
+    pattern above) and stop each round's join from re-executing the
+    caller's edge-discovery plan. Early exit on an empty frontier, so the
+    bound is a cap, not a fixed cost.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    visited = (
+    e = checkpoint_for_reuse(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    )
+    visited = checkpoint_for_reuse(
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
         .withColumn("depth", F.lit(0))
-        .localCheckpoint(eager=True)
     )
     frontier = visited
     for d in range(1, max_depth + 1):
@@ -143,14 +143,12 @@ def bfs_levels(
             .select(F.col("dst").alias("node"))
             .distinct()
         )
-        fresh = (
-            nbrs.join(visited, "node", "left_anti")
-            .withColumn("depth", F.lit(d))
-            .localCheckpoint(eager=True)
+        fresh = checkpoint_for_reuse(
+            nbrs.join(visited, "node", "left_anti").withColumn("depth", F.lit(d))
         )
         if fresh.isEmpty():
             break
-        visited = visited.unionByName(fresh).localCheckpoint(eager=True)
+        visited = checkpoint_for_reuse(visited.unionByName(fresh))
         frontier = fresh
     return visited
 
@@ -189,9 +187,9 @@ def kcore(
     recursion step — see ``plans/warehouse._KCORE_ORACLE``); the pytest
     peeling-reference property test gates the operator directly.
     """
-    cur = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).localCheckpoint(eager=True)
+    cur = checkpoint_for_reuse(
+        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+    )
     for _ in range(max_iters):
         deg = (
             cur.select(F.col("u").alias("node"))
@@ -199,19 +197,14 @@ def kcore(
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        low = deg.filter(F.col("deg") < k).select("node").localCheckpoint(
-            eager=True
-        )
+        low = checkpoint_for_reuse(deg.filter(F.col("deg") < k).select("node"))
         if low.isEmpty():
             return deg.select(
                 "node", F.col("deg").cast("long").alias("core_degree")
             )
-        cur = (
-            cur.join(
-                F.broadcast(low), cur.u == low.node, "left_anti"
-            )
+        cur = checkpoint_for_reuse(
+            cur.join(F.broadcast(low), cur.u == low.node, "left_anti")
             .join(F.broadcast(low), F.col("v") == low.node, "left_anti")
-            .localCheckpoint(eager=True)
         )
     raise RuntimeError(
         f"kcore did not converge in {max_iters} rounds — raise max_iters"

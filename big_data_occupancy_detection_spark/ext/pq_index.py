@@ -45,6 +45,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.partitioning import checkpoint_for_reuse, repartition_for_compute
 from .similarity import (
     PQ_CODEBOOK,
     PQ_SHORTLIST,
@@ -216,7 +217,7 @@ def _capped_qn(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     qn = _normalized(queries, id_col, vec_col).select(
         F.col("vid").alias("qid"), F.col("nvec").alias("qnv")
     )
-    qn = qn.limit(MAX_QUERY_BATCH + 1).localCheckpoint(eager=True)
+    qn = checkpoint_for_reuse(qn.limit(MAX_QUERY_BATCH + 1))
     if qn.count() > MAX_QUERY_BATCH:
         raise ValueError(
             f"query batch exceeds MAX_QUERY_BATCH={MAX_QUERY_BATCH}; "
@@ -406,16 +407,16 @@ def _rerank_from_vectors(
     spark: SparkSession, path: str, short: DataFrame, qn: DataFrame, k: int
 ) -> DataFrame:
     """Shared serve tail (PQ / IVF-PQ / SQ8): materialize the shortlist
-    EXECUTOR-side once (eager localCheckpoint — the ADC job runs exactly
-    once and both consumers reuse the blocks; the shortlist is bounded at
-    |queries| × shortlist rows but is still the largest driver-adjacent
-    set), collect only the DISTINCT candidate ids (corpus-bounded,
-    typically far smaller) to push INTO the range-sorted vectors scan as
+    EXECUTOR-side once (eager ``checkpoint_for_reuse`` — the ADC job runs
+    exactly once and both consumers reuse the blocks; the shortlist is
+    bounded at |queries| × shortlist rows but is still the largest
+    driver-adjacent set), collect only the DISTINCT candidate ids
+    (corpus-bounded, typically far smaller) to push INTO the range-sorted vectors scan as
     a parquet IN filter — falling back to a broadcast semi-join past
     ``_MAX_IN_FILTER_IDS`` where a megabyte IN literal stops pruning —
     then exact-cosine re-rank (round-7 review: previously copy-pasted
     per serve)."""
-    short_df = short.localCheckpoint(eager=True)
+    short_df = checkpoint_for_reuse(short)
     ids = sorted(
         r["vec_id"] for r in short_df.select("vec_id").distinct().collect()
     )
@@ -479,7 +480,7 @@ def build_ivfpq_index(
     spark = emb.sparkSession
     dim = len(emb.select(vec_col).first()[0])
     d_sub = dim // n_sub
-    normed = _normalized_long_ids(emb, id_col, vec_col).localCheckpoint(eager=True)
+    normed = checkpoint_for_reuse(_normalized_long_ids(emb, id_col, vec_col))
     coarse_rows = fit_centroids_vectorized(
         emb, n_coarse, IVF_ITERS, id_col, vec_col
     )
@@ -495,7 +496,7 @@ def build_ivfpq_index(
             [(int(c), [float(x) for x in v]) for c, v in coarse_rows],
             schema="cluster int, __coarse array<double>",
         )
-        fit_input = (
+        fit_input = checkpoint_for_reuse(
             normed.join(
                 assigned.withColumnRenamed("vec_id", "vid"), "vid"
             )
@@ -506,7 +507,6 @@ def build_ivfpq_index(
                     "nvec", "__coarse", lambda x, c: x - c
                 ).alias("nvec"),
             )
-            .localCheckpoint(eager=True)
         )
     else:
         fit_input = normed
@@ -580,7 +580,7 @@ def ivfpq_topk_from_index(
         probe_df = probe_df.drop("bias")
     # two consumers (the distinct-cluster collect below and the broadcast
     # join inside _serve_codes): materialize the probe job exactly once
-    probe_df = probe_df.localCheckpoint(eager=True)
+    probe_df = checkpoint_for_reuse(probe_df)
     all_probed = sorted(
         r["cluster"]
         for r in probe_df.select("cluster").distinct().collect()
@@ -651,7 +651,7 @@ def append_to_pq_index(
         )
         for s in range(n_sub)
     ]
-    normed = _normalized_long_ids(new_emb, id_col, vec_col).localCheckpoint(eager=True)
+    normed = checkpoint_for_reuse(_normalized_long_ids(new_emb, id_col, vec_col))
     codes = _assign_codes(normed, cent_dfs, n_sub, d_sub)
     codes.select(
         "vec_id", *[F.col(f"c{s}").cast("tinyint") for s in range(n_sub)]
@@ -693,9 +693,7 @@ def build_sq8_index(
     layout. One corpus pass per dataset; the bounds aggregation is
     map-side-combined over dim keys (collected rows are O(dim))."""
     spark = emb.sparkSession
-    normed = _normalized_long_ids(emb, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
+    normed = checkpoint_for_reuse(_normalized_long_ids(emb, id_col, vec_col))
     bounds = sorted(
         (int(r["i"]), float(r["lo"]), float(r["hi"]))
         for r in normed.select(F.posexplode("nvec").alias("i", "v"))
@@ -775,7 +773,6 @@ def sq8_topk_from_index(
         / F.lit(float(SQ8_LEVELS)),
     )
     from ..functions.vector_fns import dot
-    from ..operators.partitioning import repartition_for_compute
 
     # repartition_for_compute: codes/ is typically ONE parquet file, and
     # the per-(row, query) decode+fold below is the expensive stage — on

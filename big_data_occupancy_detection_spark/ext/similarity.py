@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators.generate import explode_fused
 from ..functions.vector_fns import cosine_similarity, dot, l2_norm
-from ..operators.partitioning import repartition_for_compute
+from ..operators.partitioning import checkpoint_for_reuse, repartition_for_compute
 
 LSH_PLANES = 4   # 2^4 = 16 buckets
 LSH_PROBE_HAMMING = 1  # multiprobe: also search buckets within this Hamming distance
@@ -378,7 +378,8 @@ def _fit_centroids(
     With the default single round the whole fit is one unbroken DataFrame
     lineage — the caller's single action executes seeding + refinement +
     its own query in one job. Extra rounds are separated by tiny eager
-    localCheckpoints (k rows each) so plan size stays constant per round."""
+    ``checkpoint_for_reuse`` pins (k rows each) so plan size stays
+    constant per round."""
     cent = _seed_centroids(normed, n_centroids)
     for i in range(n_iters):
         assigned = _assign_nearest(normed, cent, "vid", "nvec")
@@ -388,7 +389,7 @@ def _fit_centroids(
             # round re-embeds (and Catalyst re-optimizes) the whole prior
             # fit, and plan cost grows superlinearly with n_iters. The
             # checkpoint materializes only k rows of k·dim doubles.
-            cent = cent.localCheckpoint(eager=True)
+            cent = checkpoint_for_reuse(cent)
     return cent
 
 
@@ -637,12 +638,10 @@ def semantic_dedup(
     # at corpus scale — so the k-means fit and argmax assignment execute
     # exactly once; the vector payloads are re-read from the (column-
     # pruned) source scan rather than materialized three times.
-    assigned = (
+    assigned = checkpoint_for_reuse(
         _assign_nearest(
             emb.select(F.col(id_col).alias("vid"), vec_col), cent, "vid", vec_col
-        )
-        .select("vid", "cluster")
-        .localCheckpoint(eager=True)
+        ).select("vid", "cluster")
     )
     if max_cluster_size is not None:
         # Skew guard: split oversized clusters on LSH sign-bit sub-buckets.
@@ -660,7 +659,7 @@ def semantic_dedup(
             vec_col,
             plane_dim,
         ).select("vid", F.col("bucket").alias("__sub"))
-        assigned = (
+        assigned = checkpoint_for_reuse(
             assigned.join(F.broadcast(depths), "cluster")
             .join(sub, "vid")
             .select(
@@ -675,7 +674,6 @@ def semantic_dedup(
                     )
                 ).alias("__jkey"),
             )
-            .localCheckpoint(eager=True)
         )
     else:
         assigned = assigned.withColumn("__jkey", F.col("cluster"))
@@ -939,12 +937,10 @@ def cluster_outliers(
 
     normed = _normalized(emb, id_col, vec_col)
     cent = _fit_centroids(normed, n_centroids, n_iters)
-    assigned = (
+    assigned = checkpoint_for_reuse(
         _assign_nearest(
             emb.select(F.col(id_col).alias("vid"), vec_col), cent, "vid", vec_col
-        )
-        .select("vid", "cluster")
-        .localCheckpoint(eager=True)
+        ).select("vid", "cluster")
     )
     vecs = emb.select(F.col(id_col).alias("vid"), vec_col)
     cos9 = F.round(
@@ -997,8 +993,6 @@ def sq8_topk(
     → per-query top-k window. One broadcast of the capped query batch;
     the corpus is scanned once.
     """
-    from ..operators.partitioning import checkpoint_for_reuse
-
     qid_type = queries.schema[id_col].dataType
     normed = checkpoint_for_reuse(_normalized(corpus, id_col, vec_col))
     bounds = sorted(

@@ -49,7 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.partitioning import repartition_for_compute
+from ..operators.partitioning import checkpoint_for_reuse, repartition_for_compute
 from .similarity import (
     IVF_CENTROIDS,
     IVF_ITERS,
@@ -339,10 +339,9 @@ def semantic_dedup_vectorized(
     cent_rows = fit_centroids_vectorized(
         emb, n_centroids, n_iters, id_col, vec_col
     )
-    assigned = (
+    assigned = checkpoint_for_reuse(
         assign_nearest_vectorized(emb, cent_rows, id_col, vec_col)
         .withColumnRenamed(id_col, "vid")
-        .localCheckpoint(eager=True)
     )
     sizes = assigned.groupBy("cluster").agg(F.count("*").alias("__csz"))
     depths = sizes.select(

@@ -25,8 +25,13 @@ def repartition_for_compute(df: DataFrame) -> DataFrame:
 
 
 def checkpoint_for_reuse(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint for a frame consumed 2+ times downstream —
-    the standing rule that stops multi-consumer lineages re-executing.
+    """Eager localCheckpoint — the library's only eager pin. Two uses:
+
+    - a frame consumed 2+ times downstream, so its lineage runs once
+      instead of once per consumer (the standing multi-consumer rule);
+    - a per-round lineage cut in an iterative loop (pagerank, BFS,
+      k-core, connected components, k-means), so Catalyst analysis cost
+      stays constant per round instead of growing with the loop.
 
     Honors ``SPARK_GRAFT_PLAN_AUDIT=1``: plan-regression tooling sets it
     to SKIP the checkpoint so ``explain``/plan pins see the FULL lineage
@@ -34,7 +39,11 @@ def checkpoint_for_reuse(df: DataFrame) -> DataFrame:
     after it — the round-6 review found part_negative_samples' pin had
     degenerated to "0 exchanges / 0 joins" and asserted nothing). Runtime
     behavior is unchanged: the flag is only set while BUILDING plans for
-    inspection, never while executing them.
+    inspection, never while executing them. Because every pin goes
+    through here, this is the only module that reads the flag. Loop cuts
+    are skipped too, so an audited loop's plan is every round inlined: a
+    round that reads its predecessor r times grows the plan r-fold per
+    round (``connected_components_star`` is the known case).
     """
     import os
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .partitioning import checkpoint_for_reuse
+
 
 def null_census(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """One row; one column per input column holding its null count.
@@ -156,8 +158,6 @@ def _route_by_bounds(
     bucket 0 (``NaN > probe`` is false) while ``orderBy`` sorts it LAST,
     which would silently shift every later rank.
     """
-    from .partitioning import checkpoint_for_reuse
-
     if n_buckets < 2 or n_buckets & (n_buckets - 1):
         raise ValueError(
             f"n_buckets must be a power of two >= 2 (binary-search bucket "
@@ -212,28 +212,28 @@ def _range_partitions(df: DataFrame, order_by: list) -> DataFrame:
     the range partitioner already co-located. Caps partitions at 2^33
     rows (the same practical bound as row_number's int).
 
-    The eager ``localCheckpoint`` pins the ranged layout BEFORE callers
-    branch: their sizes aggregate re-reads the same materialized RDD, so
-    ``__pid`` means the same partition in both branches. Without it AQE
-    may coalesce the tiny aggregate branch's read of the range shuffle
-    differently from the main branch — the branches then disagree on
-    partition ids and the join on ``__pid`` silently drops rows. The
+    The eager ``checkpoint_for_reuse`` pin fixes the ranged layout BEFORE
+    callers branch: their sizes aggregate re-reads the same materialized
+    RDD, so ``__pid`` means the same partition in both branches. Without
+    it AQE may coalesce the tiny aggregate branch's read of the range
+    shuffle differently from the main branch — the branches then disagree
+    on partition ids and the join on ``__pid`` silently drops rows. The
     tradeoff: a full job at DataFrame-construction time (laziness is
-    lost), data pinned UNREPLICATED on executors (an executor loss
+    lost), and data pinned UNREPLICATED on executors (an executor loss
     mid-pipeline fails the query unrecoverably — acceptable for the short
-    window between checkpoint and consumption; rerun on failure), and
-    ``explain``/plan metrics see only the post-checkpoint fragment.
+    window between checkpoint and consumption; rerun on failure). Plan
+    audits skip the pin to measure the whole lineage (see
+    ``checkpoint_for_reuse``), so a plan built for one is for inspection,
+    not for results.
     Value-bounds buckets (:func:`_route_by_bounds`) would stay lazy and
     AQE-stable; adopt them if executor loss during numbering ever becomes
     a real operational concern.
     """
     parted = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
-    return (
+    return checkpoint_for_reuse(
         parted.withColumn(
             "__pos", F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
-        )
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        ).withColumn("__pid", F.spark_partition_id())
     )
 
 
@@ -595,11 +595,10 @@ def weighted_percentiles(
     # eager checkpoint: the reduced frame feeds global_cumsum (data +
     # its bucket-boundary probe) AND the total — without it the source
     # aggregation executes three times. O(|distinct values|) rows.
-    g = (
+    g = checkpoint_for_reuse(
         df.filter(F.col(value_col).isNotNull() & F.col(weight_col).isNotNull())
         .groupBy(value_col)
         .agg(F.sum(weight_col).cast("long").alias("__w"))
-        .localCheckpoint(eager=True)
     )
     c = global_cumsum(g, [value_col], "__w", out_col="__cumw")
     tot = g.agg(F.sum("__w").alias("__tot"))

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round, portable_round_sql
+from ..operators.partitioning import checkpoint_for_reuse
 from ..sources.readers import table
 from .registry import register
 
@@ -357,11 +358,9 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext.text_vec import hashed_bigram_pairs
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    big = hashed_bigram_pairs(docs).localCheckpoint(eager=True)
-    bstats = (
-        big.groupBy("h1", "h2")
-        .agg(F.count(F.lit(1)).alias("cb"))
-        .localCheckpoint(eager=True)
+    big = checkpoint_for_reuse(hashed_bigram_pairs(docs))
+    bstats = checkpoint_for_reuse(
+        big.groupBy("h1", "h2").agg(F.count(F.lit(1)).alias("cb"))
     )
     fstats = bstats.groupBy("h1").agg(F.sum("cb").cast("double").alias("cf"))
     # vocab from the DISTINCT-bigram table (h1 covers every token but

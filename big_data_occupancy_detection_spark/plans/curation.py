@@ -546,7 +546,7 @@ def _pagerank_oracle() -> str:
 def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the Jaccard>=0.5 near-duplicate graph
     (both orientations of every pair): one shuffle per iteration, rank
-    frame O(|V|), lineage cut per round with localCheckpoint."""
+    frame O(|V|), lineage cut per round by an eager pin."""
     from ..ext import dedup as D
     from ..ext import graph as G
     from ..operators.partitioning import checkpoint_for_reuse

@@ -22,6 +22,7 @@ from ..ext import multimodal as MM
 from ..ext import similarity as SIM
 from ..ext import text as TX
 from ..functions.rounding import portable_round, portable_round_sql
+from ..operators.partitioning import checkpoint_for_reuse, repartition_for_compute
 from ..sources.readers import table
 from .registry import register
 
@@ -298,23 +299,20 @@ def _bloom_prescreen_oracle() -> str:
 @register("bloom_delta_prescreen", oracle=_bloom_prescreen_oracle())
 def bloom_delta_prescreen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext import sketches as SK
-    from ..operators.partitioning import repartition_for_compute
 
     docs = table(spark, sf_dir, "documents")
     # The winnowing fingerprint hashes EVERY char 5-gram (~|text| md5s
     # per doc) and feeds three consumers (bloom build, delta probe,
     # exact join): repartition off the single input file and checkpoint
     # so the expensive pass runs once, parallel — not 3x single-threaded.
-    keyed = (
-        repartition_for_compute(docs)
-        .select(
+    keyed = checkpoint_for_reuse(
+        repartition_for_compute(docs).select(
             "doc_id",
             F.coalesce(TX.fingerprint_rolling_min("text", 5), F.lit(-1))
             .cast("string")
             .alias("fp"),
             (F.col("doc_id") % 10 == 0).alias("__is_delta"),
         )
-        .localCheckpoint(eager=True)
     )
     corpus = keyed.filter(~F.col("__is_delta")).select("fp").distinct()
     delta = keyed.filter(F.col("__is_delta")).select("doc_id", "fp")
@@ -1097,7 +1095,7 @@ def embedding_near_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q80 — near-dup CLUSTERS: connected components over the n-gram Jaccard
 # pair graph (pairs → the clusters a curation pipeline actually consumes;
 # keep min(doc) per cluster, drop the rest). Spark side is iterative
-# min-label propagation with per-round localCheckpoints (ext.dedup.
+# min-label propagation with per-round eager pins (ext.dedup.
 # connected_components); the oracle computes the same fixpoint with a
 # recursive transitive-closure CTE.
 # --------------------------------------------------------------------------
@@ -1925,7 +1923,7 @@ def training_mix_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext.curation import temperature_shares_from_partials
     from ..functions.text_fns import md5_hash64
 
-    kept = corpus_curation(spark, sf_dir).localCheckpoint(eager=True)
+    kept = checkpoint_for_reuse(corpus_curation(spark, sf_dir))
     per = kept.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("n_tokens"),
@@ -2256,7 +2254,6 @@ def doc_lang_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained and scored on the corpus with exact scaled-integer scores."""
     from pyspark.sql import Window
     from ..functions.text_fns import tokens as _tokens
-    from ..operators.partitioning import checkpoint_for_reuse
 
     tokrows = checkpoint_for_reuse(
         table(spark, sf_dir, "documents")

@@ -702,14 +702,13 @@ def copurchase_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
     # eager checkpoint: edges AND seeds both read eset — without it the
     # pair fan-out (the expensive part) executes twice
-    eset = (
+    eset = checkpoint_for_reuse(
         a.join(b, "l_orderkey")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
         .select("u", "v")
-        .localCheckpoint(eager=True)
     )
     edges = eset.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         eset.select(F.col("v").alias("src"), F.col("u").alias("dst"))
@@ -1468,14 +1467,12 @@ def customer_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy(F.desc("dur")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    ev = (
+    ev = checkpoint_for_reuse(
         risk.select(
             "dur",
             F.sum("n_t").over(w).cast("long").alias("n_risk"),
             F.col("d_t").cast("long").alias("n_events"),
-        )
-        .filter(F.col("n_events") > 0)
-        .localCheckpoint(eager=True)
+        ).filter(F.col("n_events") > 0)
     )
     factor = F.lit(1.0) - F.col("n_events").cast("double") / F.col("n_risk")
     fl = ev.agg(
@@ -2049,7 +2046,7 @@ def _mk_oracle() -> str:
 def priority_revenue_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall S / tie-corrected z / Kendall tau per priority over
     daily revenue cents."""
-    daily = (
+    daily = checkpoint_for_reuse(
         table(spark, sf_dir, "orders")
         .groupBy(
             F.col("o_orderpriority").alias("priority"),
@@ -2060,7 +2057,6 @@ def priority_revenue_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        .localCheckpoint(eager=True)
     )
     a = daily.select("priority", F.col("day").alias("da"), F.col("cents").alias("ca"))
     b = daily.select("priority", F.col("day").alias("db"), F.col("cents").alias("cb"))
@@ -2480,8 +2476,6 @@ def flag_spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame, pinned, feeding the rank window, the broadcast join AND the
     # quantity-side moments (the first cut re-aggregated the 60M-row base
     # for each consumer — two extra fact scans per run; review finding)
-    from ..operators.partitioning import checkpoint_for_reuse
-
     qgrain = checkpoint_for_reuse(
         base.groupBy("flag", "q").agg(
             F.count(F.lit(1)).cast("long").alias("__c")

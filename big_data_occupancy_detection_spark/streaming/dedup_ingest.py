@@ -55,6 +55,7 @@ from ..ext.dedup import with_shingles
 from ..functions.rounding import portable_round
 from ..functions.text_fns import hash64
 from ..operators.generate import explode_fused
+from ..operators.partitioning import checkpoint_for_reuse
 
 
 def _committed_ids(index_dir: str) -> list[int]:
@@ -143,7 +144,7 @@ def apply_near_dedup_batch(
     spark = batch_df.sparkSession
     if batch_id in set(_committed_ids(index_dir)):
         return  # replay after a post-commit crash: already applied
-    sh = _shingled(batch_df, text_col, id_col, n).localCheckpoint(eager=True)
+    sh = checkpoint_for_reuse(_shingled(batch_df, text_col, id_col, n))
     inv_n = explode_fused(sh, "hs", "s", keep=["doc_id"]).select(
         F.col("doc_id").alias("ndoc"), "s"
     )
@@ -161,13 +162,11 @@ def apply_near_dedup_batch(
         )
     else:
         corpus_dups = None
-    survivors = (
-        sh.join(
-            corpus_dups, sh.doc_id == corpus_dups.ndoc, "left_anti"
-        )
+    survivors = checkpoint_for_reuse(
+        sh.join(corpus_dups, sh.doc_id == corpus_dups.ndoc, "left_anti")
         if corpus_dups is not None
         else sh
-    ).localCheckpoint(eager=True)
+    )
     # intra-batch: min-parent among corpus survivors (a < b on id)
     inv_s = explode_fused(survivors, "hs", "s", keep=["doc_id"])
     intra = _min_parent_dups(
@@ -182,13 +181,11 @@ def apply_near_dedup_batch(
     # corpus dup wins when both exist (min over both parents is the
     # corpus one only if smaller — take the overall min, deterministic)
     dups = dups.groupBy("ndoc").agg(F.min("dup_of").alias("dup_of"))
-    decisions = (
+    decisions = checkpoint_for_reuse(
         sh.select("doc_id")
         .join(dups, sh.doc_id == dups.ndoc, "left_outer")
-        .select(
-            "doc_id", "dup_of", F.col("dup_of").isNull().alias("keep")
-        )
-    ).localCheckpoint(eager=True)
+        .select("doc_id", "dup_of", F.col("dup_of").isNull().alias("keep"))
+    )
     accepted = sh.join(
         decisions.filter("keep").select("doc_id"), "doc_id"
     )

@@ -517,7 +517,7 @@ def test_frontier_accumulator_structured_streaming_e2e(spark, tmp_path):
         seen = DOM.frontier_updated_seen(seen, novel).localCheckpoint()
 
 
-def test_frontier_bucketed_seen_prunes_partitions(spark, tmp_path):
+def test_frontier_bucketed_seen_prunes_partitions(spark, tmp_path, monkeypatch):
     """Round-10 verdict item 3: with the seen set persisted in the
     frontier_seen_write bucket layout, the exact-rescue scan must carry
     a PartitionFilter over the CANDIDATES' buckets (pruning at
@@ -550,20 +550,13 @@ def test_frontier_bucketed_seen_prunes_partitions(spark, tmp_path):
     # plan pin on the seen leg: the bucket IN-filter must be a partition
     # filter on the parquet scan (build under PLAN_AUDIT so the
     # survivor checkpoint doesn't truncate the inspected lineage)
-    import os
-
-    os.environ["SPARK_GRAFT_PLAN_AUDIT"] = "1"
-    try:
-        plan = (
-            DOM.frontier_novel_urls(
-                batch, seen_b, seen_bucket_col="bucket", n_buckets=16
-            )
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    finally:
-        os.environ.pop("SPARK_GRAFT_PLAN_AUDIT", None)
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_AUDIT", "1")
+    plan = (
+        DOM.frontier_novel_urls(batch, seen_b, seen_bucket_col="bucket", n_buckets=16)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "bucket" in m.group(1) and "IN" in m.group(1), plan
 

@@ -11,6 +11,7 @@ Regenerate after an INTENTIONAL plan change:
 
 from __future__ import annotations
 
+import ast
 import json
 from pathlib import Path
 
@@ -59,6 +60,32 @@ EXTRA_PLAN_PINNED = [
     "doc_despanned_keep_first",  # keep-first span surgery, no extra shuffle (r9)
     "frontier_novel_urls_bucketed",  # bucket-pruned seen scan (r10)
 ]
+
+
+def test_one_pinning_primitive():
+    # every eager pin goes through operators.partitioning's
+    # checkpoint_for_reuse, the only reader of SPARK_GRAFT_PLAN_AUDIT: a
+    # raw localCheckpoint would ignore the flag and cut the pinned plans
+    # below short, and a second flag reader would be a second policy
+    pkg = Path(__file__).parent.parent / "big_data_occupancy_detection_spark"
+    home = pkg / "operators" / "partitioning.py"
+    stray = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == home:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            raw_pin = (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            )
+            flag = (
+                isinstance(node, ast.Constant)
+                and node.value == "SPARK_GRAFT_PLAN_AUDIT"
+            )
+            if raw_pin or flag:
+                stray.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not stray, f"pin outside checkpoint_for_reuse: {stray}"
 
 
 def test_baseline_covers_headline():

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from big_data_occupancy_detection_spark.operators.relational import (
     global_cumsum,
+    grouped_cumsum,
     grouped_exact_median,
 )
 
@@ -73,9 +74,15 @@ def test_bounds_are_read_from_the_pin(spark, monkeypatch):
     cum_df = spark.createDataFrame(
         [(i, rng.randint(-5, 50)) for i in range(4000)], "k long, v long"
     ).repartition(8)
+    # grouped_cumsum: (g, k) jointly unique, as its contract requires
+    gcum_df = spark.createDataFrame(
+        [(f"g{i % 3}", i, rng.randint(-5, 50)) for i in range(3000)],
+        "g string, k long, v long",
+    ).repartition(8)
     for out in (
         grouped_exact_median(med_df, "g", "v"),
         global_cumsum(cum_df, ["k"], "v", out_col="cs"),
+        grouped_cumsum(gcum_df, "g", "k", "v", out_col="cs"),
     ):
         plan = _final_plan(out)
         assert "percentile_approx" not in plan, (

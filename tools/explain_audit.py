@@ -13,11 +13,14 @@ scan, exchange counts that grew since the last audit.
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# show the FULL lineage: checkpoint_for_reuse skips its eager pin under
+# this flag, like the plan-pin baseline does
+os.environ["SPARK_GRAFT_PLAN_AUDIT"] = "1"
 
+from big_data_occupancy_detection_spark.planaudit import plan_metrics
 from big_data_occupancy_detection_spark.plans import REGISTRY
 from big_data_occupancy_detection_spark.session import get_session
 
@@ -32,31 +35,25 @@ def main() -> None:
     for name in names:
         try:
             df = REGISTRY[name].fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            if only:
+                print(df._jdf.queryExecution().executedPlan().toString())
+                break
+            m = plan_metrics(df)
         except Exception as e:  # streaming-only or env-gated entries
             print(f"{name:32s}  SKIP ({type(e).__name__})")
             continue
-        if only:
-            print(plan)
-            break
-        joins = re.findall(
-            r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-            r"BroadcastNestedLoopJoin|CartesianProduct)",
-            plan,
-        )
-        n_exch = plan.count("Exchange hashpartitioning")
-        pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
+        joins = m["joins"]
         flags = ""
-        if "CartesianProduct" in joins:
+        if m["cartesian"]:
             flags += " !CARTESIAN"
         if "BroadcastNestedLoopJoin" in joins:
             # deliberate broadcast crossJoins (tiny query side vs corpus)
             # also surface as BNLJ — only a red flag when BOTH sides are big
             flags += " BNLJ(check-broadcast-side)"
         print(
-            f"{name:32s} joins={len(joins):d} "
-            f"({','.join(sorted(set(j[0] for j in joins))) or '-'}) "
-            f"exch={n_exch} pushed={pushed}{flags}"
+            f"{name:32s} joins={sum(joins.values()):d} "
+            f"({','.join(joins) or '-'}) "
+            f"exch={m['exchanges']} pushed={m['pushed_filter_scans']}{flags}"
         )
     spark.stop()
 
