@@ -57,7 +57,7 @@ HEADLINE = [
     "lateral_top_orders",      # Spark 4 lateralJoin correlated subquery
     "bm25_search",             # BM25 posting-list retrieval, broadcast idf
     "user_value_ewma_sql",     # JVM-side EWMA fold (collect_list + aggregate)
-    "near_dup_clusters",       # iterative label propagation (checkpointed)
+    "near_dup_clusters",       # iterative star contraction (checkpointed)
     "quality_score_hashed",    # hashed-feature linear scorer (in-row fold)
     "benchmark_contamination", # shingle explode + hash join + agg
     "pack_training_sequences", # scalable global prefix sum (1 data shuffle)

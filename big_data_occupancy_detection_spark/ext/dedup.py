@@ -27,7 +27,7 @@ from __future__ import annotations
 
 
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round
@@ -307,150 +307,85 @@ def minhash_lsh_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "d1",
-    b_col: str = "d2",
-    max_iter: int = 20,
-    strict: bool = True,
-) -> DataFrame:
-    """(doc, cluster) — connected components of the near-dup pair graph.
+# Star contraction needs about log2(d) rounds on a diameter-d component
+# (15 on a 20 000-node path, PERF.md), so only a graph far beyond any
+# corpus reaches this bound; past it the loop raises instead of returning
+# partial labels.
+CC_MAX_ROUNDS = 40
+
+
+def _edge_rows(df: DataFrame, *ends) -> DataFrame:
+    """(u, v) — one row per ``(u, v)`` Column pair in ``ends`` for every
+    row of ``df``: an explode, so ``df`` is read once however many edges
+    each of its rows yields."""
+    rows = F.array(*[F.struct(a.alias("u"), b.alias("v")) for a, b in ends])
+    return df.select(F.explode(rows).alias("e")).select("e.u", "e.v")
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(doc, cluster) — connected components of the undirected graph whose
+    edges are the ``(d1, d2)`` rows of ``pairs``.
 
     Turns pairwise near-dup output into dedup CLUSTERS (the form a curation
     pipeline actually consumes: keep min doc per cluster, drop the rest).
     ``cluster`` is the minimum doc id in the component, so the labeling is
-    deterministic. Only docs that appear in at least one pair are returned.
+    deterministic. Only docs that appear in a pair of two distinct docs
+    are returned.
 
-    Algorithm: iterative min-label propagation over the undirected edge
-    list — label(n) ← min(label(n), min label of n's neighbors) until
-    fixpoint. Each round is one shuffle-join + aggregate, with an eager
-    ``checkpoint_for_reuse`` pin breaking the lineage so Catalyst's
-    analysis cost stays O(1) per round (the plan-depth blowup documented in PERF.md).
-    Near-dup components are overwhelmingly tiny cliques, so convergence is
-    1-2 rounds; ``max_iter`` bounds pathological chains (a path graph of
-    diameter d needs ~d rounds — at true web scale swap in
-    ``connected_components_star``, which converges in O(log d); measured:
-    a diameter-20k path converges under star contraction while 20 rounds
-    of propagation leave >99% of nodes mislabeled, PERF.md).
+    Algorithm: alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) over an edge
+    list in which every node points at a smaller one:
 
-    ``strict=True`` (default) raises if the fixpoint was NOT reached within
-    ``max_iter`` — a silently-wrong clustering poisons every downstream
-    keep/drop decision, which at corpus scale is unrecoverable. Pass
-    ``strict=False`` only if approximate labels are genuinely acceptable.
+    - large-star: point every neighbor v > u of node u at
+      m = min(N(u) ∪ {u});
+    - small-star: point u and each of its (smaller) neighbors at
+      m = min(N(u)).
+
+    Each round re-points whole subtrees at their local minimum, so a
+    diameter-d component converges in about log₂ d rounds, where min-label
+    propagation needs d. Each round reads its input frame once: it
+    symmetrizes by explode and takes the minima with windows, with no join
+    back. So the plan grows linearly in rounds even when the per-round
+    ``checkpoint_for_reuse`` pin is skipped (plan audit).
+
+    The loop stops when the edges form a forest of min-rooted stars: every
+    source has one out-edge and no target is also a source. Each star is
+    then a whole component, and its center is its minimum. Past
+    ``CC_MAX_ROUNDS`` rounds it raises: a silently wrong clustering
+    poisons every downstream keep/drop decision.
     """
-    e = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    edges = checkpoint_for_reuse(
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .dropDuplicates()
-    )
-    labels = checkpoint_for_reuse(
-        edges.groupBy(F.col("a").alias("node"))
-        .agg(F.min("b").alias("nb_min"))
-        .select("node", F.least("node", "nb_min").alias("lbl"))
-    )
-    for _ in range(max_iter):
-        prop = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("lbl").alias("nb_lbl"))
+    by_u = Window.partitionBy("u")
+    u, v, m = F.col("u"), F.col("v"), F.col("m")
+    edges = pairs.select(F.col("d1").alias("u"), F.col("d2").alias("v"))
+    for _ in range(CC_MAX_ROUNDS):
+        large = (
+            _edge_rows(edges, (u, v), (v, u))
+            .withColumn("m", F.least(u, F.min(v).over(by_u)))
+            .filter(v > u)
+            .select(v.alias("u"), m.alias("v"))
         )
-        newl = F.least("lbl", F.coalesce("nb_lbl", "lbl"))
-        # labels only decrease, so "changed" is newl < lbl — computed in
-        # the SAME update join (no separate new⋈old convergence join,
-        # which would cost one more full-|V| shuffle per round)
-        new_labels = checkpoint_for_reuse(
-            labels.join(prop, "node", "left_outer")
-            .select("node", newl.alias("lbl"), (newl < F.col("lbl")).alias("chg"))
+        small = large.withColumn("m", F.min(v).over(by_u))
+        edges = checkpoint_for_reuse(
+            _edge_rows(small, (v, m), (u, m)).filter(u != v).dropDuplicates()
         )
-        changed = new_labels.filter("chg").limit(1).count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
+        # a node breaks the star shape iff it is a source (points at a
+        # smaller node) and has any other edge
+        ends = _edge_rows(edges, (u, F.lit(True)), (v, F.lit(False)))
+        broken = (
+            ends.groupBy("u")
+            .agg(F.max(v).alias("src"), F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("src") & (F.col("deg") > 1))
+        )
+        if broken.limit(1).count() == 0:
             break
     else:
-        if strict:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds "
-                "(high-diameter component?) — use connected_components_star "
-                "(O(log d) rounds) or raise max_iter / pass strict=False."
-            )
-    return labels.select(F.col("node").alias("doc"), F.col("lbl").alias("cluster"))
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "d1",
-    b_col: str = "d2",
-    max_rounds: int = 12,
-) -> DataFrame:
-    """(doc, cluster) — connected components via alternating large-star /
-    small-star rounds (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14). Same contract as ``connected_components``:
-    ``cluster`` is the component's minimum doc id; only docs appearing in
-    at least one pair are returned.
-
-    Why a second algorithm: min-label propagation needs ~diameter rounds —
-    fine for near-dup cliques, quadratic pain on chain-shaped components
-    (transcript near-dups, sliding-window shingles). Star contraction
-    converges in O(log d) rounds because every round re-points whole
-    subtrees at their local minimum, halving component height. Each round
-    is two groupBy-min + join stages over a canonical (hi, lo) edge list
-    that monotonically contracts toward stars, with an eager
-    ``checkpoint_for_reuse`` pin per phase keeping Catalyst analysis O(1)
-    per round (PERF.md plan-depth note).
-
-    - large-star: for each node u, point every LARGER neighbor v at
-      m = min(N(u) ∪ {u})  (v > u ≥ m keeps edges canonical hi→lo);
-    - small-star: on the canonical list, point every smaller neighbor and
-      u itself at m = min(N(u)).
-
-    Fixpoints of the alternation are exactly min-rooted stars; the round
-    loop stops when a full round leaves the edge set unchanged.
-    """
-    edges = checkpoint_for_reuse(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        raise RuntimeError(
+            f"connected_components did not converge in {CC_MAX_ROUNDS} rounds"
         )
-        .dropDuplicates()
-    )
-    for _ in range(max_rounds):
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        large_min = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("u", "mn").alias("m"))
-        )
-        ls = checkpoint_for_reuse(
-            sym.join(large_min, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .dropDuplicates()
-        )
-        small_min = ls.groupBy("u").agg(F.min("v").alias("m"))
-        joined = ls.join(small_min, "u")
-        ss = checkpoint_for_reuse(
-            joined.filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(joined.select("u", F.col("m").alias("v")))
-            .dropDuplicates()
-        )
-        changed = (
-            ss.exceptAll(edges)
-            .unionByName(edges.exceptAll(ss))
-            .limit(1)
-            .count()
-        )
-        edges = ss
-        if changed == 0:
-            break
-    centers = edges.select(F.col("v").alias("doc"), F.col("v").alias("cluster"))
     return (
-        edges.select(F.col("u").alias("doc"), F.col("v").alias("cluster"))
-        .unionByName(centers)
+        _edge_rows(edges, (u, v), (v, v))
         .dropDuplicates()
+        .select(u.alias("doc"), v.alias("cluster"))
     )
 
 
@@ -465,8 +400,6 @@ def exact_tagged(
     (keep-set, rep-only pair generation, group attach), and checkpointing
     makes Spark compute the scan+shuffle once instead of per-branch.
     """
-    from pyspark.sql import Window
-
     from .text import fingerprint_md5
 
     grp_w = Window.partitionBy("fp")
@@ -487,16 +420,15 @@ def near_dup_clusters_staged(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    cc_fn=None,
 ) -> DataFrame:
     """(doc, cluster) — near-dup clusters with exact dedup staged FIRST:
     pair generation runs only over exact-dedup representatives, then every
     exact duplicate is attached through its representative.
 
-    Identical output to ``cc_fn(ngram_jaccard_pairs(docs))`` (property-
-    tested), because exact duplicates form cliques (Jaccard = 1 ≥ t) whose
-    minimum is the representative, and any cross-group pair is mirrored by
-    the representatives' pair. But the pair graph shrinks from quadratic
+    Identical output to ``connected_components(ngram_jaccard_pairs(docs))``
+    (property-tested), because exact duplicates form cliques (Jaccard =
+    1 ≥ t) whose minimum is the representative, and any cross-group pair
+    is mirrored by the representatives' pair. But the pair graph shrinks from quadratic
     in duplicate-group size to quadratic in REPRESENTATIVE near-dup group
     size — the 58× curation win measured on a 10×-replicated corpus
     (PERF.md) applies identically here.
@@ -505,7 +437,6 @@ def near_dup_clusters_staged(
     the full graph — i.e. its exact group has ≥2 docs, or its
     representative has a representative-level near-dup pair.
     """
-    cc = cc_fn if cc_fn is not None else connected_components
     tagged = exact_tagged(docs, text_col=text_col, id_col=id_col)
     doc_rep = tagged.select("doc", "rep", "gsz")
     reps = tagged.filter(F.col("doc") == F.col("rep")).select(
@@ -514,7 +445,7 @@ def near_dup_clusters_staged(
     rep_pairs = ngram_jaccard_pairs(
         reps, text_col=text_col, id_col=id_col, n=n, threshold=threshold
     )
-    rep_clusters = cc(rep_pairs).withColumnRenamed("doc", "rep")
+    rep_clusters = connected_components(rep_pairs).withColumnRenamed("doc", "rep")
     return (
         doc_rep.join(rep_clusters, "rep", "left_outer")
         .filter(F.col("cluster").isNotNull() | (F.col("gsz") >= 2))
@@ -899,8 +830,6 @@ def repeated_substring_spans(
     back in the existing join, no extra shuffle. At the petabyte tier,
     shard by content-defined chunks and run per shard.
     """
-    from pyspark.sql import Window
-
     from ..functions.text_fns import norm_text
 
     base = repartition_for_compute(docs).select(

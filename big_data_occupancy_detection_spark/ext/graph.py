@@ -1,7 +1,7 @@
 """Graph analytics over edge DataFrames: PageRank and frontier BFS.
 
-Complements the connected-components operators in ``ext.dedup`` (which
-cluster a similarity graph) with a centrality measure over the same kind
+Complements the connected-components operator in ``ext.dedup`` (which
+clusters a similarity graph) with a centrality measure over the same kind
 of graph — e.g. ranking documents inside a near-duplicate neighborhood
 to pick the canonical copy, or weighting a citation/link graph for
 curriculum sampling.
@@ -115,9 +115,10 @@ def bfs_levels(
     bounded at ``max_depth`` (unreached nodes are absent).
 
     The missing third distributed-graph primitive next to
-    :func:`pagerank` and ``ext.dedup.connected_components``: frontier
-    expansion. ``edges`` is directed (pass both orientations for an
-    undirected graph); ``seeds`` is a one-column frame of start nodes.
+    :func:`pagerank` and ``ext.dedup.connected_components`` (star
+    contraction): frontier expansion. ``edges`` is directed (pass both
+    orientations for an undirected graph); ``seeds`` is a one-column frame
+    of start nodes.
 
     Scale notes (100 TB): each round costs ONE hash join of the current
     frontier against the edge list plus an anti-join against the visited

@@ -43,7 +43,7 @@ def checkpoint_for_reuse(df: DataFrame) -> DataFrame:
     through here, this is the only module that reads the flag. Loop cuts
     are skipped too, so an audited loop's plan is every round inlined: a
     round that reads its predecessor r times grows the plan r-fold per
-    round (``connected_components_star`` is the known case).
+    round.
     """
     import os
 

@@ -669,8 +669,8 @@ def analyze_orders_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # chain-depth histogram. The SAME SQL text runs on Spark and DuckDB —
 # the recursion depth is log₂(max key), so the iterative executor does
 # O(log n) distributed rounds (the same bound as star-contraction
-# connected components; the iterative DataFrame twins live in
-# ext/dedup.py:connected_components*).
+# connected components; the iterative DataFrame twin is
+# ext/dedup.py:connected_components).
 # --------------------------------------------------------------------------
 _CHAIN_SQL = """
 WITH RECURSIVE walk(node, depth) AS (

@@ -1094,8 +1094,8 @@ def embedding_near_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q80 — near-dup CLUSTERS: connected components over the n-gram Jaccard
 # pair graph (pairs → the clusters a curation pipeline actually consumes;
-# keep min(doc) per cluster, drop the rest). Spark side is iterative
-# min-label propagation with per-round eager pins (ext.dedup.
+# keep min(doc) per cluster, drop the rest). Spark side is large-star/
+# small-star contraction with per-round eager pins (ext.dedup.
 # connected_components); the oracle computes the same fixpoint with a
 # recursive transitive-closure CTE.
 # --------------------------------------------------------------------------
@@ -1129,6 +1129,9 @@ GROUP BY a
 """
 
 
+# q82 — ``near_dup_clusters_star`` is a second registry name for the same
+# query, so callers that select it by that name keep working.
+@register("near_dup_clusters_star", oracle=_CLUSTERS_ORACLE)
 @register("near_dup_clusters", oracle=_CLUSTERS_ORACLE)
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-dedup-first staging: identical clusters, pair graph shrinks
@@ -1136,21 +1139,6 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PERF.md); oracle (full-graph recursive CTE) unchanged.
     return D.near_dup_clusters_staged(
         table(spark, sf_dir, "documents"), threshold=_JACCARD_T
-    )
-
-
-# --------------------------------------------------------------------------
-# q82 — same clusters via alternating large-star/small-star contraction
-# (O(log d) rounds vs ~d for label propagation — the variant that survives
-# chain-shaped components at web scale). Identical output contract, so it
-# shares the recursive-CTE oracle with near_dup_clusters.
-# --------------------------------------------------------------------------
-@register("near_dup_clusters_star", oracle=_CLUSTERS_ORACLE)
-def near_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.near_dup_clusters_staged(
-        table(spark, sf_dir, "documents"),
-        threshold=_JACCARD_T,
-        cc_fn=D.connected_components_star,
     )
 
 

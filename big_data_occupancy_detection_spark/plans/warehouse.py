@@ -590,11 +590,11 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Community structure of the co-purchase graph: connected components of
-# the support-≥2 edge set (ext.dedup.connected_components — min-label
-# propagation with per-round checkpoints; the O(log d) star-contraction
-# twin exists for high-diameter graphs). The oracle computes the same
-# fixpoint with a recursive transitive-closure CTE, then both sides
-# summarize to component sizes — the form a catalog analyst consumes.
+# the support-≥2 edge set (ext.dedup.connected_components — large-star/
+# small-star contraction with per-round checkpoints). The oracle computes
+# the same fixpoint with a recursive transitive-closure CTE, then both
+# sides summarize to component sizes — the form a catalog analyst
+# consumes.
 # --------------------------------------------------------------------------
 @register(
     "copurchase_components",
@@ -640,7 +640,7 @@ def copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 2)
         .select(F.col("u").alias("d1"), F.col("v").alias("d2"))
     )
-    labels = connected_components(edges, max_iter=30)
+    labels = connected_components(edges)
     return (
         labels.groupBy(F.col("cluster").alias("component"))
         .agg(

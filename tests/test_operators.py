@@ -222,8 +222,8 @@ def test_jsonl_sink_source_roundtrip(spark, tmp_path):
 
 
 def test_connected_components_known_graph(spark):
-    """Min-label propagation on a graph with a clique, a long path (forces
-    multiple propagation rounds), and an isolated pair."""
+    """Star contraction on a graph with a clique, a long path (forces
+    multiple contraction rounds), and an isolated pair."""
     from big_data_occupancy_detection_spark.ext.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -239,28 +239,27 @@ def test_connected_components_known_graph(spark):
     }
 
 
-def test_connected_components_star_matches_propagation(spark):
-    """Large-star/small-star contraction must produce identical labels to
-    min-label propagation — including on a diameter-16 path, where star
-    contraction converges in O(log d) rounds (max_rounds=6 < 16 proves it
-    is not silently doing per-hop propagation)."""
-    from big_data_occupancy_detection_spark.ext.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+def test_connected_components_path_clique_cycle(spark, monkeypatch):
+    """Large-star/small-star contraction labels a diameter-16 path, a
+    clique and a cycle with their minimum ids — the path within 6 < 16
+    rounds, which proves it is not silently doing per-hop propagation."""
+    from big_data_occupancy_detection_spark.ext import dedup
 
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 6)
     path = [(i, i + 1) for i in range(100, 116)]  # diameter-16 chain
     clique = [(1, 2), (2, 3), (1, 3)]
     cross = [(50, 60), (60, 55), (55, 70), (70, 50)]  # cycle
     pairs = spark.createDataFrame(path + clique + cross, ["d1", "d2"])
 
-    star = {
+    got = {
         r.doc: r.cluster
-        for r in connected_components_star(pairs, max_rounds=6).collect()
+        for r in dedup.connected_components(pairs).collect()
     }
-    prop = {r.doc: r.cluster for r in connected_components(pairs).collect()}
-    assert star == prop
-    assert star[115] == 100 and star[70] == 50 and star[3] == 1
+    assert got == {
+        **{i: 100 for i in range(100, 117)},
+        1: 1, 2: 1, 3: 1,
+        50: 50, 55: 50, 60: 50, 70: 50,
+    }
 
 
 def test_observed_metrics_piggyback(spark, sf_dir):
@@ -347,27 +346,29 @@ def test_range_sorted_parquet_files_are_disjoint(spark, sf_dir, tmp_path):
     assert back.count() == orders.count()
 
 
-def test_connected_components_strict_raises_on_nonconvergence(spark):
-    """A silently-wrong clustering is the worst failure mode — propagation
-    must raise when the fixpoint is out of reach, and star contraction must
-    solve the same graph (log-depth convergence)."""
+def test_connected_components_strict_raises_on_nonconvergence(
+    spark, monkeypatch
+):
+    """A silently-wrong clustering is the worst failure mode — contraction
+    must raise when the fixpoint is out of reach of its round bound, and
+    solve the same graph within the default bound (log-depth
+    convergence)."""
     import pytest as _pytest
 
-    from big_data_occupancy_detection_spark.ext.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from big_data_occupancy_detection_spark.ext import dedup
 
-    # diameter-40 path: > max_iter=3 propagation rounds by construction
+    # diameter-40 path: 6 contraction rounds, so a bound of 3 is too few
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(200, 240)], ["d1", "d2"]
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=3).collect()
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "CC_MAX_ROUNDS", 3)
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            dedup.connected_components(pairs).collect()
 
     star = {
         r.doc: r.cluster
-        for r in connected_components_star(pairs, max_rounds=10).collect()
+        for r in dedup.connected_components(pairs).collect()
     }
     assert set(star.values()) == {200} and len(star) == 41
 

@@ -1,6 +1,7 @@
 """Property-based checks for the dedup family: star-contraction CC must
-equal propagation CC on arbitrary graphs, and prefix-filtered Jaccard must
-equal the exhaustive inverted-index join on arbitrary corpora."""
+equal a naive DFS labeling on arbitrary graphs, and prefix-filtered
+Jaccard must equal the exhaustive inverted-index join on arbitrary
+corpora."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ from hypothesis import strategies as st
 
 from big_data_occupancy_detection_spark.ext.dedup import (
     connected_components,
-    connected_components_star,
     ngram_jaccard_pairs,
     ngram_jaccard_pairs_prefix,
 )
@@ -52,16 +52,10 @@ def _naive_components(pairs):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(pairs=edges)
-def test_cc_star_and_propagation_match_naive(spark, pairs):
-    expect = _naive_components(pairs)
+def test_cc_matches_naive(spark, pairs):
     df = spark.createDataFrame(pairs, ["d1", "d2"])
-    prop = {r.doc: r.cluster for r in connected_components(df, max_iter=40).collect()}
-    star = {
-        r.doc: r.cluster
-        for r in connected_components_star(df, max_rounds=15).collect()
-    }
-    assert prop == expect
-    assert star == expect
+    got = {r.doc: r.cluster for r in connected_components(df).collect()}
+    assert got == _naive_components(pairs)
 
 
 words = st.sampled_from(["alpha", "beta", "gamma", "delta", "eps"])
@@ -120,7 +114,7 @@ def test_staged_clusters_equal_direct(spark, texts, dup_factor):
     direct_pairs = ngram_jaccard_pairs(df, threshold=0.5)
     direct = {
         (r.doc, r.cluster)
-        for r in connected_components(direct_pairs, max_iter=40).collect()
+        for r in connected_components(direct_pairs).collect()
     }
     staged = {
         (r.doc, r.cluster)

@@ -6,8 +6,8 @@ the working path: UNION ALL recursion on an acyclic walk. This module
 pins the BOUNDARY: distinct-UNION recursion — the form DuckDB uses for
 transitive closure over cyclic (undirected) graphs, and the form our
 connected-components ORACLES are written in — is not yet supported by
-Spark, which is exactly why the iterative DataFrame operators
-(`ext/dedup.py:connected_components*`) remain the engine's graph-closure
+Spark, which is exactly why the iterative DataFrame operator
+(`ext/dedup.py:connected_components`) remains the engine's graph-closure
 path rather than a recursive-SQL one."""
 
 from __future__ import annotations
