@@ -36,7 +36,7 @@ HEADLINE = [
     "priority_semi_join",      # semi join
     "top_orders_per_customer", # ranking window
     "user_running_totals",     # analytic windows, full output
-    "parse_route_score_events",# JSON parse + branch + union
+    "parse_route_score_events",# JSON parse + validity routing
     "user_features",           # wide agg + countDistinct
     "text_stats",              # text expressions (codegen-heavy)
     "exact_dedup_groups",      # hash groupBy on md5

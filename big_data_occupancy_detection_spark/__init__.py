@@ -13,8 +13,8 @@ surveyed in SURVEY.md) as a composable, testable operator library:
 - ``operators``  — relational operator library (null census, describe,
                    percentiles, correlation, dedup+re-key, class weights).
 - ``plans``      — the query registry the driver verifies against DuckDB.
-- ``streaming``  — schema-enforced parse → validity routing → score →
-                   sentinel union inference plane (Kafka or file/memory).
+- ``streaming``  — schema-enforced parse → validity routing → score or
+                   sentinel, one pass (Kafka or file/memory inference plane).
 - ``ml``         — MLlib pipeline builders (class-weighted LR, oversampled
                    CV-tuned RF) and evaluation/report helpers.
 - ``ext``        — scale-oriented extension operators: dedup (exact, MinHash

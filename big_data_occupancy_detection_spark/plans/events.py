@@ -222,10 +222,10 @@ def event_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q22 — JSON envelope parse → validity routing → score → sentinel union:
+# q22 — JSON envelope parse → validity routing → score → sentinel:
 # the T3 semantics of infrastructure/stream_inference.py:62-129 as a pure
-# batch transform (the streaming plane applies this same function to a
-# stream — see streaming/inference.py). "Model" is a deterministic logistic
+# batch transform (the streaming plane routes the same way — see
+# streaming/inference.py). "Model" is a deterministic logistic
 # stand-in so the oracle can reproduce it.
 # --------------------------------------------------------------------------
 PROPS_SCHEMA = T.StructType(
@@ -234,28 +234,23 @@ PROPS_SCHEMA = T.StructType(
 
 
 def parse_route_score(ev: DataFrame) -> DataFrame:
-    """Shared batch/stream transform: from_json → validity split → score valid
-    branch, sentinel (-1 / -1.0) invalid branch → unionByName."""
+    """Shared batch/stream transform: from_json → score → sentinel (-1 /
+    -1.0) for invalid rows, in one projection over one scan (the routing of
+    ``streaming.inference.build_inference_pipeline``)."""
     parsed = ev.select(
         "event_id",
         F.from_json(F.col("props"), PROPS_SCHEMA).alias("req"),
     ).select("event_id", F.col("req.k").alias("k"))
-    valid = parsed.filter(F.col("k").isNotNull() & (F.col("k") <= 50))
-    invalid = parsed.filter(F.col("k").isNull() | (F.col("k") > 50))
+    valid = F.col("k").isNotNull() & (F.col("k") <= 50)
     probability = (2 * F.col("k") + 1) / F.lit(200.0)
-    scored = valid.select(
+    return parsed.select(
         "event_id",
         "k",
-        F.when(probability > 0.3, 1).otherwise(0).alias("prediction"),
-        F.round(probability, 6).alias("probability"),
+        F.when(valid, F.when(probability > 0.3, 1).otherwise(0))
+        .otherwise(-1)
+        .alias("prediction"),
+        F.when(valid, F.round(probability, 6)).otherwise(-1.0).alias("probability"),
     )
-    sentinel = invalid.select(
-        "event_id",
-        "k",
-        F.lit(-1).alias("prediction"),
-        F.lit(-1.0).alias("probability"),
-    )
-    return scored.unionByName(sentinel)
 
 
 @register(

@@ -14,6 +14,15 @@ Correlation is by request_id, exactly as the reference's per-request
 consumer loop — but files keyed by request_id make the match O(1) instead
 of a topic scan. Swap ``FileRpcBus`` for a Kafka-backed bus in production;
 the HTTP layer doesn't change.
+
+A micro-batch holds a few requests, so its fixed cost sets the CPU per
+request. The scoring query keeps that cost down: the request files of a
+micro-batch are read as one task (``coalesce(1)``), the pipeline scans and
+parses them once (``build_inference_pipeline``), and the checkpoint logs are
+written through the FileSystem API (``session.get_session``). A restart from
+the same checkpoint re-runs an uncommitted micro-batch; a re-written
+response whose requester already has its reply is an orphan that
+``gc_responses`` sweeps.
 """
 
 from __future__ import annotations
@@ -80,8 +89,9 @@ class FileRpcBus:
 
 
 def start_scoring_query(spark, model, bus: FileRpcBus, checkpoint_dir: str):
-    """The streaming plane: file requests → parse/route/score/sentinel →
-    one response file per request_id (foreachBatch sink)."""
+    """The streaming plane: file requests → parse/score/sentinel → one
+    response file per request_id (foreachBatch sink), one task and one job
+    per micro-batch of up to 100 request files."""
     from .streaming.inference import (
         build_inference_pipeline,
         file_source,
@@ -89,13 +99,15 @@ def start_scoring_query(spark, model, bus: FileRpcBus, checkpoint_dir: str):
         to_response_json,
     )
 
+    # one task per micro-batch: each request file would otherwise be its own
+    # scan partition, and a batch holds a few rows
     raw = file_source(
         spark, bus.requests_dir, max_files_per_trigger=100, clean_source="delete"
-    )
+    ).coalesce(1)
     responses = to_response_json(build_inference_pipeline(raw, model_score(model)))
 
     def write_batch(batch_df, _batch_id: int) -> None:
-        for row in batch_df.select("key", "value").collect():
+        for row in batch_df.collect():
             path = os.path.join(bus.responses_dir, f"{row.key}.json")
             tmp = path + ".tmp"
             with open(tmp, "w") as f:

@@ -14,6 +14,8 @@ driver verify — gets the same scale-aware defaults:
 - **shuffle.partitions ~= cores** locally; on a real cluster AQE's
   coalescing makes the initial number mostly irrelevant, and
   ``maxPartitionBytes`` keeps scan tasks memory-bounded.
+- **FileSystem-based streaming checkpoint manager**: fewer forks per
+  micro-batch than the FileContext default (see the conf comment).
 """
 
 from __future__ import annotations
@@ -60,6 +62,15 @@ def get_session(
         # Auto-broadcast small dimension tables (region/nation/supplier…).
         "spark.sql.autoBroadcastJoinThreshold": "64m",
         "spark.ui.enabled": "false",
+        # Streaming checkpoint logs (offsets/, commits/, sources/) written
+        # through the FileSystem API: rename is atomic on local disk and
+        # HDFS, and the default FileContext manager shells out to
+        # ``readlink`` on every atomic write where Hadoop has no native
+        # library, several forks per micro-batch.
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
         "spark.driver.extraJavaOptions": "-Duser.timezone=UTC",
     }
     if extra_conf:

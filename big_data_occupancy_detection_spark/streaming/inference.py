@@ -8,10 +8,14 @@ file stream (tests/CI need no broker), or a batch frame.
 Semantics preserved exactly:
 - schema-enforced ``from_json`` parse — wrong types/missing keys coerce to
   NULL, never throw (T3);
-- validity routing: all four features non-null → model branch; anything
-  else → sentinel branch (prediction −1, probability −1.0);
-- ``unionByName`` merges the branches into one append-only output whose
-  JSON envelope echoes request_id/timestamp (T1/T3);
+- validity routing: all four features non-null and not NaN → model
+  output; anything else → sentinel (prediction −1, probability −1.0). The
+  reference routes with two filtered branches and a union; here it is one
+  projection (``when(valid, model).otherwise(sentinel)``), so each input
+  row is scanned and parsed once and a micro-batch stays one task per
+  input partition;
+- one append-only output whose JSON envelope echoes request_id/timestamp
+  and the features as sent (T1/T3);
 - batch-trained MLlib PipelineModel applied to the stream (T5);
 - Kafka sink with checkpointing (T4), key = request_id.
 
@@ -96,7 +100,7 @@ def parse_requests(raw: DataFrame) -> DataFrame:
     )
 
 
-def logistic_score(features_valid: DataFrame) -> DataFrame:
+def logistic_score(features: DataFrame) -> DataFrame:
     """Deterministic logistic stand-in scorer (used where no trained model
     artifact is wanted — e.g. oracle-checkable batch parity runs)."""
     z = (
@@ -107,20 +111,37 @@ def logistic_score(features_valid: DataFrame) -> DataFrame:
         - 2.0
     )
     prob = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    return features_valid.withColumn("probability", prob).withColumn(
+    return features.withColumn("probability", prob).withColumn(
         "prediction", (F.col("probability") > 0.5).cast("int")
     )
 
 
 def model_score(model) -> ScoreFn:
     """Wrap a fitted PipelineModel (T5): transform, extract P(class=1) from
-    the probability vector, cast prediction to int."""
+    the probability vector, cast prediction to int.
+
+    ``build_inference_pipeline`` hands the model only non-null, non-NaN
+    features, so a ``VectorAssembler(handleInvalid="skip")`` stage could
+    drop nothing. It scores with ``handleInvalid="keep"`` instead: the skip
+    filter would otherwise be pushed below the JSON parse and repeat
+    ``from_json`` once per feature test.
+    """
+    from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.functions import vector_to_array
 
-    def score(features_valid: DataFrame) -> DataFrame:
-        scored = model.transform(features_valid)
+    stages = [
+        stage.copy({stage.handleInvalid: "keep"})
+        if isinstance(stage, VectorAssembler)
+        else stage
+        for stage in getattr(model, "stages", [model])
+    ]
+
+    def score(features: DataFrame) -> DataFrame:
+        scored = features
+        for stage in stages:
+            scored = stage.transform(scored)
         return scored.select(
-            *features_valid.columns,
+            *features.columns,
             vector_to_array(F.col("probability"))[1].alias("probability"),
             F.col("prediction").cast("int").alias("prediction"),
         )
@@ -129,34 +150,41 @@ def model_score(model) -> ScoreFn:
 
 
 def build_inference_pipeline(raw: DataFrame, score_fn: ScoreFn) -> DataFrame:
-    """The full parse → route → score → sentinel-union transform.
+    """The full parse → score → sentinel transform, as one projection.
+
+    A row is valid when all four features are non-null and not NaN. Every
+    row goes through ``score_fn`` once, with the features of an invalid row
+    replaced by ``0.0``; the parsed values ride alongside for the echo, and
+    an invalid row takes the sentinel in place of the model output. There
+    is no filter pair and no union, so the input is scanned and parsed once.
+    ``score_fn`` must keep every row.
 
     Works identically on streaming and batch DataFrames (tests exploit
     this; so can backfills).
     """
-    parsed = parse_requests(raw)
-    validity = [F.col(name).isNotNull() for name in FEATURE_NAMES]
-    is_valid = validity[0]
-    for v in validity[1:]:
-        is_valid = is_valid & v
-    valid = parsed.filter(is_valid)
-    invalid = parsed.filter(~F.coalesce(is_valid, F.lit(False)))
-
-    scored = score_fn(valid).select(
+    is_valid = F.lit(True)
+    for name in FEATURE_NAMES:
+        is_valid = is_valid & F.col(name).isNotNull() & ~F.isnan(name)
+    parsed = parse_requests(raw).withColumn("__valid", is_valid)
+    valid = F.col("__valid")
+    scorable = parsed.select(
         "request_id",
         "timestamp",
-        *FEATURE_NAMES,
-        F.col("prediction").cast("int").alias("prediction"),
-        F.col("probability").cast("double").alias("probability"),
+        "__valid",
+        *[F.col(name).alias(f"__echo_{name}") for name in FEATURE_NAMES],
+        *[F.when(valid, F.col(name)).otherwise(0.0).alias(name) for name in FEATURE_NAMES],
     )
-    sentinel = invalid.select(
+    return score_fn(scorable).select(
         "request_id",
         "timestamp",
-        *FEATURE_NAMES,
-        F.lit(SENTINEL_PREDICTION).cast("int").alias("prediction"),
-        F.lit(SENTINEL_PROBABILITY).cast("double").alias("probability"),
+        *[F.col(f"__echo_{name}").alias(name) for name in FEATURE_NAMES],
+        F.when(valid, F.col("prediction").cast("int"))
+        .otherwise(F.lit(SENTINEL_PREDICTION))
+        .alias("prediction"),
+        F.when(valid, F.col("probability").cast("double"))
+        .otherwise(F.lit(SENTINEL_PROBABILITY))
+        .alias("probability"),
     )
-    return scored.unionByName(sentinel)
 
 
 def to_response_json(responses: DataFrame) -> DataFrame:

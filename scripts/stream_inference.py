@@ -1,6 +1,6 @@
 """Streaming-inference entry point — the engine's equivalent of the
 reference's ``infrastructure/stream_inference.py``: request JSON →
-schema-enforced parse → validity routing → model scoring → sentinel union
+schema-enforced parse → validity routing → model scoring or sentinel
 → response JSON, against Kafka (production) or a file directory (local /
 CI, no broker needed).
 

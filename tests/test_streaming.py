@@ -6,6 +6,8 @@ PipelineModel applied on-stream, plus stream-survival and multi-sink fusion."""
 from __future__ import annotations
 
 import json
+import os
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -55,8 +57,15 @@ CASES = {
         "timestamp": "2026-01-01T00:00:04Z",
         "payload": {"foo": "bar", "something": 123},
     },
+    # JSON NaN parses (json.loads and from_json both accept it) and is not
+    # null, but the fitted assembler's handleInvalid="skip" would drop it
+    "nan_field": {
+        "request_id": "r-nan",
+        "timestamp": "2026-01-01T00:00:05Z",
+        "payload": {"Temperature": 23.1, "Humidity": float("nan"), "CO2": 700.0, "HumidityRatio": 0.0048},
+    },
 }
-SENTINEL_IDS = {"r-missing", "r-null", "r-wrongtype", "r-broken"}
+SENTINEL_IDS = {"r-missing", "r-null", "r-wrongtype", "r-broken", "r-nan"}
 
 
 @pytest.fixture(scope="module")
@@ -111,6 +120,9 @@ def test_taxonomy_with_model_on_stream(spark, tmp_path, trained_model):
         assert out[rid]["probability"] == SENTINEL_PROBABILITY, rid
     # wrong-type field was nulled by from_json, not coerced
     assert out["r-wrongtype"]["features"]["Temperature"] is None
+    # the NaN feature is echoed as sent, not as the 0.0 the model saw
+    assert out["r-nan"]["features"]["Humidity"] == "NaN"
+    assert out["r-nan"]["features"]["CO2"] == 700.0
     # envelope echoes the request timestamp
     assert out["r-valid"]["timestamp"] == "2026-01-01T00:00:00Z"
 
@@ -168,6 +180,67 @@ def test_batch_stream_transform_equivalence(spark, tmp_path):
     finally:
         query.stop()
     assert batch_out == stream_out
+
+
+@pytest.mark.parametrize("scorer", ["model", "logistic"])
+def test_inference_plan_is_one_pass(spark, tmp_path, trained_model, scorer):
+    """Routing is one projection: no Union, one scan of the requests and
+    one from_json, with either scorer (a filter pair would scan twice, and
+    a pushed-down validity filter repeats the parse)."""
+    src = tmp_path / "requests"
+    src.mkdir()
+    _write_requests(src, "b.json", list(CASES.values()))
+    raw = spark.read.text(str(src)).select(F.col("value").alias("json"))
+    score = model_score(trained_model) if scorer == "model" else logistic_score
+    out = build_inference_pipeline(raw, score)
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # operator name of each plan tree line, past the tree drawing and codegen ids
+    nodes = [re.sub(r"^[\s:+\-|*()0-9]*", "", line).split(" ")[0] for line in plan.splitlines()]
+    assert "Union" not in nodes, nodes
+    assert sum(n.endswith("Scan") for n in nodes) == 1, nodes
+    assert plan.count("from_json(") == 1, plan
+    got = {r["request_id"]: r["prediction"] for r in out.collect()}
+    assert set(got) == {c["request_id"] for c in CASES.values()}
+    assert {rid for rid, p in got.items() if p == SENTINEL_PREDICTION} == SENTINEL_IDS
+
+
+def test_scoring_micro_batch_is_one_task(spark, tmp_path, trained_model):
+    """A serving micro-batch of three request files runs as one job of one
+    task (read from the status store), and answers all three."""
+    from big_data_occupancy_detection_spark.serving import (
+        FileRpcBus,
+        start_scoring_query,
+    )
+
+    bus = FileRpcBus(str(tmp_path / "bus"))
+    names = ["valid", "null_field", "nan_field"]
+    for name in names:
+        bus.publish_request(CASES[name])
+    sc = spark.sparkContext._jsc.sc()
+    first_job = sc.dagScheduler().numTotalJobs()
+    query = start_scoring_query(spark, trained_model, bus, str(tmp_path / "ckpt"))
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    sc.listenerBus().waitUntilEmpty()
+
+    batches = [json.loads(p.json) if hasattr(p, "json") else p for p in query.recentProgress]
+    assert [b["numInputRows"] for b in batches if b["numInputRows"]] == [3]
+    last_job = sc.dagScheduler().numTotalJobs()
+    assert last_job - first_job == 1
+    store = sc.statusStore()
+    tasks = 0
+    for job in range(first_job, last_job):
+        stages = store.job(job).stageIds().iterator()
+        while stages.hasNext():
+            stage = store.lastStageAttempt(stages.next())
+            if stage.status().toString() != "SKIPPED":
+                tasks += stage.numCompleteTasks()
+    assert tasks == 1
+    answered = {name[: -len(".json")] for name in os.listdir(bus.responses_dir)}
+    assert answered == {CASES[name]["request_id"] for name in names}
 
 
 def test_foreach_batch_multi_sink(spark, tmp_path, trained_model):
