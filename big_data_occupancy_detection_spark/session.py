@@ -16,6 +16,13 @@ driver verify — gets the same scale-aware defaults:
   ``maxPartitionBytes`` keeps scan tasks memory-bounded.
 - **FileSystem-based streaming checkpoint manager**: fewer forks per
   micro-batch than the FileContext default (see the conf comment).
+- **Generated code stays warm**: the codegen cache holds 4096 classes
+  instead of 100, and whole-stage class names carry no AQE stage id, so a
+  repeated query reuses the classes it compiled before. At 100 entries
+  the nine-query perfbench ``batch_small`` mix (about 190 classes)
+  recompiled and re-JIT-compiled over 150 classes every pass. The cap
+  bounds the cache at about 200 MB of metaspace (see the conf comment).
+  A session built outside this factory keeps Spark's defaults.
 """
 
 from __future__ import annotations
@@ -71,6 +78,17 @@ def get_session(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager"
         ),
+        # Codegen cache entries (Spark default 100). A query mix larger
+        # than the cache recompiles and re-JITs its classes on every pass;
+        # 4096 holds a whole-registry pass (~2 900 classes at sf0.001)
+        # with room to spare, and bounds the cache at ~200 MB of metaspace
+        # (~50 KB per class). Static: read once, when the JVM first
+        # compiles generated code.
+        "spark.sql.codegen.cache.maxEntries": "4096",
+        # Whole-stage class names without the AQE codegen stage id: the id
+        # depends on the order AQE plans stages, so the same stage's code
+        # missed the cache whenever that order changed.
+        "spark.sql.codegen.useIdInClassName": "false",
         "spark.driver.extraJavaOptions": "-Duser.timezone=UTC",
     }
     if extra_conf:

@@ -91,6 +91,9 @@ def test_measure_on_scaled_dir(scaled_dir):
         for key in ("wall_s", "jobs", "stages", "shuffle_read_mb", "shuffle_write_mb"):
             assert key in rec, (key, rec)
         assert rec["jobs"] >= 1, rec
+        assert isinstance(rec["codegen_classes"], int) and rec["codegen_classes"] >= 0, rec
+    total = lines[-1]["total"]["codegen_classes"]
+    assert isinstance(total, int) and total >= 0, lines[-1]
     assert lines[-1]["queries"] == 2
     bad = _run("tools/measure.py", [scaled_dir, "no_such_query"])
     assert bad.returncode != 0

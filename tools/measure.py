@@ -6,10 +6,12 @@ Env:   SPARK_GRAFT_CPUS (core count), SPARK_GRAFT_BENCH_RUNS (best-of-N,
 
 The default query list is ``bench.HEADLINE``; the session, warm-up and
 timing (noop sink, best of N) are bench.py's. Prints one JSON line per
-query with ``wall_s``, ``jobs`` and ``stages`` (DAGScheduler id deltas)
-and ``shuffle_read_mb``/``shuffle_write_mb``/``input_mb`` (status store,
-so the UI stays off), then one totals line with the persisted-index
-hit/miss map. A larger scale comes from ``scripts/make_sf_scaled.py``:
+query with ``wall_s``, ``jobs`` and ``stages`` (DAGScheduler id deltas),
+``codegen_classes`` (Janino compilations during the reported run; 0 once
+the query's generated classes are cached) and
+``shuffle_read_mb``/``shuffle_write_mb``/``input_mb`` (status store, so
+the UI stays off), then one totals line with the persisted-index hit/miss
+map. A larger scale comes from ``scripts/make_sf_scaled.py``:
 
     python scripts/make_sf_scaled.py /tmp/sf1.0 10
     python tools/measure.py /tmp/sf1.0
@@ -50,17 +52,18 @@ def noop(df: DataFrame) -> None:
 
 
 def timed(spark: SparkSession, action: Callable[[], Any]) -> tuple[Any, dict]:
-    """Run ``action()`` and return its result with its wall time, job and
-    stage counts and summed stage bytes. The clock and the counters start
-    before ``action`` is called: some plans checkpoint eagerly while they
-    are being built."""
+    """Run ``action()`` and return its result with its wall time, job,
+    stage and codegen compilation counts and summed stage bytes. The clock
+    and the counters start before ``action`` is called: some plans
+    checkpoint eagerly while they are being built."""
     sc = spark.sparkContext._jsc.sc()
     dag = sc.dagScheduler()
-    job0, stage0 = dag.nextJobId(), dag.nextStageId()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    job0, stage0, classes0 = dag.nextJobId(), dag.nextStageId(), compiles.getCount()
     t0 = time.perf_counter()
     out = action()
     wall = time.perf_counter() - t0
-    job1, stage1 = dag.nextJobId(), dag.nextStageId()
+    job1, stage1, classes1 = dag.nextJobId(), dag.nextStageId(), compiles.getCount()
     sc.listenerBus().waitUntilEmpty()
     store = sc.statusStore()
     sums = dict.fromkeys(BYTES, 0)
@@ -71,7 +74,12 @@ def timed(spark: SparkSession, action: Callable[[], Any]) -> tuple[Any, dict]:
             continue
         for key, getter in BYTES.items():
             sums[key] += getattr(sd, getter)()
-    rec = {"wall_s": round(wall, 3), "jobs": job1 - job0, "stages": stage1 - stage0}
+    rec = {
+        "wall_s": round(wall, 3),
+        "jobs": job1 - job0,
+        "stages": stage1 - stage0,
+        "codegen_classes": classes1 - classes0,
+    }
     return out, {**rec, **{k: round(v / 1e6, 3) for k, v in sums.items()}}
 
 
@@ -86,7 +94,7 @@ def main() -> None:
     spark = bench_session("bdo-spark-measure")
     warm_up(spark, data_dir)
     cache = index_cache(data_dir)
-    totals = dict.fromkeys(("wall_s", "jobs", "stages", *BYTES), 0)
+    totals = dict.fromkeys(("wall_s", "jobs", "stages", "codegen_classes", *BYTES), 0)
     for name in names:
         best = None
         for _ in range(max(N_RUNS, 1)):
