@@ -3,8 +3,7 @@
 ``pq_topk`` re-fits its eight subspace codebooks on every invocation —
 right for a one-shot analytic, the antithesis of PQ's purpose at scale,
 where codebooks and codes are built ONCE and every query batch touches
-only the compressed code table. This module is the build/serve split,
-mirroring :mod:`ext.similarity_index`'s IVF layout:
+only the compressed code table. This module is the build/serve split:
 
 - ``build_pq_index`` fits the per-subspace codebooks (deterministic md5
   seed + one Lloyd round — the exact recipe ``pq_topk`` uses, via the
@@ -27,7 +26,7 @@ mirroring :mod:`ext.similarity_index`'s IVF layout:
 
 Result contract: identical rows to ``pq_topk`` on the same corpus
 (asserted in tests/test_similarity_index.py). Re-index on drift by
-building to a new path and swapping readers, like the IVF index.
+building to a new path and swapping readers.
 """
 
 from __future__ import annotations
@@ -453,8 +452,8 @@ def build_ivfpq_index(
     residual: bool = False,
 ) -> None:
     """Coarse IVF assignment + global PQ codes, codes partitioned by
-    coarse cluster (Hive dirs = the inverted file, like
-    ``similarity_index.build_ivf_index``).
+    coarse cluster (Hive dirs = the inverted file: a probe of p clusters
+    reads exactly p directories).
 
     The coarse stage uses the Arrow-vectorized fit/assign
     (similarity_vec) — the interpreted fold form measured 213 s vs the

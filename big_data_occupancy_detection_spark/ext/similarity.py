@@ -393,24 +393,6 @@ def _fit_centroids(
     return cent
 
 
-def ivf_centroids(
-    emb: DataFrame,
-    n_centroids: int = IVF_CENTROIDS,
-    n_iters: int = IVF_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Deterministic spherical-k-means centroids, collected to the driver
-    (k·dim doubles — constant in corpus size). For composing into a larger
-    plan without an action, use the lazy ``_fit_centroids``."""
-    normed = _normalized(emb, id_col, vec_col).persist()
-    try:
-        cent = _fit_centroids(normed, n_centroids, n_iters)
-        return sorted((r["cid"], list(r["__cent"])) for r in cent.collect())
-    finally:
-        normed.unpersist()
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -29,9 +29,14 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
 
 def test_ivf_centroids_deterministic(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
-    c1 = SIM.ivf_centroids(emb, n_centroids=4, n_iters=1)
-    c2 = SIM.ivf_centroids(emb, n_centroids=4, n_iters=1)
-    assert c1 == c2
+
+    def fit():
+        normed = SIM._normalized(emb, "vec_id", "embedding")
+        cent = SIM._fit_centroids(normed, 4, 1).collect()
+        return sorted((r["cid"], list(r["__cent"])) for r in cent)
+
+    c1, c2 = fit(), fit()
+    assert c1 and c1 == c2
 
 
 def test_lsh_recall_vs_brute_force(spark, sf_dir):

@@ -1,11 +1,14 @@
-"""Persisted IVF index: build once, serve batches with partition pruning."""
+"""Persisted vector indexes (ext.pq_index): the PQ index (build-once
+codebooks + codes, LUT-only serve scan, exact shortlist re-rank via a
+pushed id filter), the IVF-PQ composite (codes partitioned by coarse
+cluster, probes prune whole partition dirs) and the SQ8 index."""
 
 from __future__ import annotations
 
 import pytest
 
-from big_data_occupancy_detection_spark.ext import similarity_index as sidx
-from big_data_occupancy_detection_spark.ext import similarity_vec as simv
+from big_data_occupancy_detection_spark.ext import pq_index as pqx
+from big_data_occupancy_detection_spark.ext import similarity as sim
 
 
 @pytest.fixture(scope="module")
@@ -14,54 +17,6 @@ def emb(spark, sf_dir):
     df.persist().count()
     yield df
     df.unpersist()
-
-
-@pytest.fixture(scope="module")
-def index_path(emb, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("ivf") / "index")
-    sidx.build_ivf_index(emb, path, n_centroids=16, n_iters=1)
-    return path
-
-
-def test_index_serves_same_results_as_inline(spark, emb, index_path):
-    queries = emb.orderBy("vec_id").limit(8)
-    inline = simv.ivf_topk_vectorized(
-        emb, queries, k=5, n_centroids=16, n_iters=1
-    )
-    served = sidx.ivf_topk_from_index(spark, index_path, queries, k=5)
-    ipairs = {(r["qid"], r["vec_id"], r["rnk"]) for r in inline.collect()}
-    spairs = {(r["qid"], r["vec_id"], r["rnk"]) for r in served.collect()}
-    assert ipairs == spairs
-
-
-def test_index_probe_prunes_partitions(spark, emb, index_path):
-    """The probed-cluster predicate must reach the scan as a partition
-    filter — whole unprobed directories are skipped, not row-filtered."""
-    queries = emb.orderBy("vec_id").limit(2)
-    served = sidx.ivf_topk_from_index(spark, index_path, queries, k=3)
-    plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    # the filter names the partition column, so pruning (not post-scan
-    # filtering) applies
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "cluster" in m.group(1), m.group(0) if m else plan
-
-
-def test_centroid_roundtrip(spark, emb, index_path):
-    cent = sidx.load_centroids(spark, index_path)
-    assert len(cent) == 16
-    assert [c for c, _ in cent] == list(range(16))
-    assert all(len(v) == 64 for _, v in cent)
-
-
-# ---------------------------------------------------------------------------
-# Persisted PQ index (ext.pq_index): build-once codebooks+codes,
-# LUT-only serve scan, exact shortlist re-rank via pushed id filter.
-# ---------------------------------------------------------------------------
-from big_data_occupancy_detection_spark.ext import pq_index as pqx
-from big_data_occupancy_detection_spark.ext import similarity as sim
 
 
 @pytest.fixture(scope="module")

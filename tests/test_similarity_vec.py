@@ -1,18 +1,18 @@
-"""Parity of the Arrow-vectorized similarity paths vs the oracle-verified
-Catalyst-fold forms.
+"""The Arrow k-means behind the IVF-PQ build, checked against the
+oracle-verified Catalyst-fold forms, and the query-batch cap of the
+persisted-index serve paths.
 
 numpy matmul sums pairwise/SIMD while the fold sums left-to-right, so
-cosines can differ in the last ulps — assertions are therefore
-set-tolerant (near-total agreement + recall parity) rather than
-hash-exact. The fold forms keep the DuckDB oracles; these are the
-serving/index-build fast paths."""
+cosines can differ in the last ulps — the assignment assertion therefore
+tolerates last-ulp boundary flips rather than demanding hash equality.
+The fold forms keep the DuckDB oracles."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_occupancy_detection_spark.ext import pq_index as pqx
 from big_data_occupancy_detection_spark.ext import similarity as sim
 from big_data_occupancy_detection_spark.ext import similarity_vec as simv
 
@@ -23,15 +23,6 @@ def emb(spark, sf_dir):
     df.persist().count()
     yield df
     df.unpersist()
-
-
-@pytest.fixture(scope="module")
-def queries(emb):
-    return emb.orderBy("vec_id").limit(8)
-
-
-def _pairs(df):
-    return {(r["qid"], r["vec_id"]) for r in df.collect()}
 
 
 def test_assignment_parity(emb):
@@ -52,108 +43,13 @@ def test_assignment_parity(emb):
     assert len(disagree) <= max(1, len(fold_map) // 100), disagree[:5]
 
 
-def test_brute_force_vectorized_parity(emb, queries):
-    k = 5
-    fold = sim.brute_force_topk(emb, queries, k=k)
-    vec = simv.brute_force_topk_vectorized(emb, queries, k=k)
-    fp, vp = _pairs(fold), _pairs(vec)
-    assert fold.columns == vec.columns
-    # exact search: same neighbor sets up to last-ulp rank flips at k-boundary
-    inter = len(fp & vp)
-    assert inter >= 0.95 * len(fp), (fp - vp, vp - fp)
-    # cos values agree to 1e-6 on the common pairs
-    fv = {(r["qid"], r["vec_id"]): r["cos"] for r in fold.collect()}
-    vv = {(r["qid"], r["vec_id"]): r["cos"] for r in vec.collect()}
-    for key in fp & vp:
-        assert abs(fv[key] - vv[key]) <= 2e-6
-
-
-def test_ivf_vectorized_recall(emb, queries):
-    """Vectorized IVF reaches the recall of the fold IVF against the
-    exact ground truth (numpy means differ from SQL means in last ulps,
-    so cluster boundaries — hence candidate sets — may differ slightly;
-    recall vs ground truth is the meaningful contract)."""
-    k = 5
-    truth = _pairs(sim.brute_force_topk(emb, queries, k=k))
-    fold = _pairs(sim.ivf_topk(emb, queries, k=k))
-    vec = _pairs(simv.ivf_topk_vectorized(emb, queries, k=k))
-    recall_fold = len(fold & truth) / len(truth)
-    recall_vec = len(vec & truth) / len(truth)
-    assert recall_vec >= recall_fold - 0.05, (recall_vec, recall_fold)
-
-
-def test_semantic_dedup_vectorized_parity(emb):
-    thr = 0.8
-    fold = sim.semantic_dedup(emb, threshold=thr, max_cluster_size=100)
-    vec = simv.semantic_dedup_vectorized(emb, threshold=thr, max_cluster_size=100)
-    fk = {r["vid"] for r in fold.filter("keep").collect()}
-    vk = {r["vid"] for r in vec.filter("keep").collect()}
-    sym = len(fk ^ vk)
-    assert sym <= max(1, len(fk) // 50), (fk - vk, vk - fk)
-    # dup_of targets agree on the common dropped set
-    fd = {r["vid"]: r["dup_of"] for r in fold.filter("NOT keep").collect()}
-    vd = {r["vid"]: r["dup_of"] for r in vec.filter("NOT keep").collect()}
-    common = set(fd) & set(vd)
-    diff = [v for v in common if fd[v] != vd[v]]
-    assert len(diff) <= max(1, len(common) // 50), diff[:5]
-
-
-def test_query_batch_guard(emb, spark):
+def test_query_batch_guard(spark):
+    """The persisted-index serve paths (`pq_topk_from_index`,
+    `ivfpq_topk_from_index`, `sq8_topk_from_index`) pin their query batch
+    through `_capped_qn`, which refuses more than MAX_QUERY_BATCH rows."""
     big = spark.range(simv.MAX_QUERY_BATCH + 1).select(
         F.col("id").alias("vec_id"),
         F.array(*[F.lit(0.1)] * 4).alias("embedding"),
     )
     with pytest.raises(ValueError, match="MAX_QUERY_BATCH"):
-        simv.brute_force_topk_vectorized(emb, big)
-
-
-def test_vectorized_requires_cap(emb):
-    with pytest.raises(ValueError, match="max_cluster_size"):
-        simv.semantic_dedup_vectorized(emb, max_cluster_size=None)
-
-
-def test_round_half_up9_sign_aware():
-    """HALF_UP rounds AWAY from zero: negatives must mirror positives
-    exactly (the pre-round-4 floor form rounded negative half
-    boundaries toward +inf instead)."""
-    assert simv._round_half_up9(np.array([0.25, -0.25])).tolist() == [0.25, -0.25]
-    # mirror property on a dense random sample: r(-x) == -r(x)
-    rng = np.random.default_rng(7)
-    s = rng.uniform(-1, 1, 10_000)
-    assert np.array_equal(simv._round_half_up9(-s), -simv._round_half_up9(s))
-
-
-def test_local_topk_tie_break_is_batch_invariant(spark):
-    """k-boundary ties (equal cosine at 9 decimals) must resolve to the
-    SMALLEST vec_id regardless of candidate order inside a batch — the
-    contract the global (cos desc, vec_id asc) rank uses."""
-    dim = 4
-    base = [1.0, 0.0, 0.0, 0.0]
-    # 6 identical candidates (exact ties), ids descending in insert order
-    rows = [(int(i), base) for i in (50, 40, 30, 20, 10, 5)]
-    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"]).coalesce(1)
-    queries = spark.createDataFrame([(999, base)], ["vec_id", "embedding"])
-    out = simv.brute_force_topk_vectorized(corpus, queries, k=3)
-    got = [(r.vec_id, r.rnk) for r in out.orderBy("rnk").collect()]
-    assert got == [(5, 1), (10, 2), (20, 3)]
-
-
-def test_cluster_outliers_vectorized_parity(emb):
-    out_fold = sim.cluster_outliers(emb, flag_per_cluster=2)
-    out_vec = simv.cluster_outliers_vectorized(emb, flag_per_cluster=2)
-    assert out_fold.columns == out_vec.columns
-    f = {r["vid"]: r for r in out_fold.collect()}
-    v = {r["vid"]: r for r in out_vec.collect()}
-    assert set(f) == set(v)
-    # same cluster for all but last-ulp boundary flips
-    moved = [k for k in f if f[k]["cluster"] != v[k]["cluster"]]
-    assert len(moved) <= max(1, len(f) // 100), moved[:5]
-    # cosines agree on the stable vectors
-    for k in f:
-        if k in moved:
-            continue
-        assert abs(f[k]["centroid_cos"] - v[k]["centroid_cos"]) <= 2e-6, k
-    # flagged outlier sets agree up to the same boundary tolerance
-    ff = {k for k in f if f[k]["is_outlier"]}
-    vf = {k for k in v if v[k]["is_outlier"]}
-    assert len(ff ^ vf) <= max(1, len(ff) // 10), (ff - vf, vf - ff)
+        pqx._capped_qn(big, "vec_id", "embedding")
