@@ -85,7 +85,7 @@ HEADLINE = [
     "customer_rfm_segments",   # stacked global_row_number RFM quartiles
     "part_abc_classes",        # global_cumsum Pareto classes (integer cents)
     "embedding_pq_index_topk", # persisted-PQ ADC serve (build cached once;
-                               #   ← embedding_pq_topk, the fit-per-call twin)
+                               #   embedding_pq_topk is a second name for it)
     "als_part_recommendations",# ALS implicit matrix factorization + topk serve
     "part_negative_samples",   # hash-drawn negatives + exact anti-join
     "copurchase_triangles",    # degree-ordered wedge join triangle count

@@ -718,16 +718,10 @@ def temperature_shares_from_partials(
 def datacard_from_docs(docs: DataFrame) -> DataFrame:
     """Datasheet census over a (lang, source, n_tok, n_chars)-bearing
     frame: ROLLUP to (lang × source / lang / grand) with doc/token/char
-    totals, mean doc length and token share. Shared by the batch
-    ``corpus_datacard`` plan and the streaming census's merge-on-read
-    (``streaming.census.read_census_datacard``) so batch and incremental
-    paths are equal by construction.
-
-    Input grain may be raw docs (one row per doc) OR pre-aggregated
-    partials carrying ``n_docs`` — sums of sums equal sums.
+    totals, mean doc length and token share, one input row per doc.
+    Backs the ``corpus_datacard`` plan.
     """
-    if "n_docs" not in docs.columns:
-        docs = docs.withColumn("n_docs", F.lit(1))
+    docs = docs.withColumn("n_docs", F.lit(1))
     rolled = checkpoint_for_reuse(
         docs.rollup("lang", "source").agg(
             F.grouping_id().alias("gid"),

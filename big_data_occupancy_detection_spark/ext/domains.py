@@ -1,6 +1,7 @@
 """URL/domain-grain curation operators: host parsing, registrable-domain
 extraction, suffix-aware blocklist filtering, per-domain dedup stats and
-domain-balanced sampling.
+domain-balanced sampling, and crawl-frontier URL dedup against a persisted
+seen set.
 
 The one curation grain web-corpus tooling pivots on that the engine
 lacked (round-8 brief): crawl pipelines attribute duplication, apply
@@ -216,8 +217,7 @@ def domain_dedup_stats(
     NULL texts and NULL domains carry no duplication evidence and are
     EXCLUDED (round 9 — previously groupBy collapsed every NULL-text doc
     of a domain into one "unique text", manufacturing duplicate evidence
-    out of missing data; same contract as :func:`domain_mirror_pairs`
-    and :class:`DomainDedupAccumulator`).
+    out of missing data; same contract as :func:`domain_mirror_pairs`).
     """
     from ..functions.rounding import portable_round
 
@@ -355,121 +355,10 @@ def domain_balanced_sample(
     return out.drop("__h")
 
 
-class DomainDedupAccumulator:
-    """Streaming twin of :func:`domain_dedup_stats`: an ingest-time
-    per-domain duplication monitor maintained over micro-batches — the
-    signal a crawl pipeline watches LIVE ("site X started serving the
-    same page under every URL") rather than recomputing batch censuses.
-
-    State composition (the sketch-accumulator contract): EXACT per-domain
-    doc counts (one long per domain) plus a
-    :class:`~..ext.sketches.KmvAccumulator` of normalized-text
-    fingerprints per domain (bottom-k hash set, ≤ k longs per domain) —
-    so ``dedup_rate = 1 − distinct_estimate/n_docs`` is EXACT while a
-    domain has seen ≤ k distinct texts (the KMV exact regime, asserted
-    equal to the batch census in tests) and a bounded-error estimate
-    past it. The VALUE side is bounded by construction (≤ k longs per
-    domain); the KEY side is bounded by ``max_keys`` (round 9 — on the
-    workload this operator is FOR, a web crawl, registrable domains
-    number in the hundreds of millions, so an uncapped per-domain dict
-    is a slow driver OOM: past the cap the merge fails loudly with the
-    batch UNAPPLIED, same contract as ``KsDriftAccumulator``; monitor a
-    curated domain subset or shard the accumulator instead). NULL texts
-    and NULL domains are excluded on ingest, same contract as the batch
-    operator. Each merge aggregates executor-side; only (domain, hash)
-    rows touched by the batch reach the driver.
-
-    ``foreach_batch`` is replay-guarded like every accumulator
-    (redelivered fully-applied batches are no-ops); within one merge the
-    state commit is staged — the count deltas apply only AFTER the KMV
-    merge (which runs Spark jobs and can raise) succeeds, so a failed
-    batch never leaves half-applied state for the retry to double-count.
-    """
-
-    def __init__(self, k: int | None = None, max_keys: int = 100_000):
-        from .sketches import KMV_K, KmvAccumulator
-
-        self.kmv = KmvAccumulator(
-            k=KMV_K if k is None else k, max_keys=max_keys
-        )
-        self.counts: dict[object, int] = {}
-        self.max_keys = int(max_keys)
-
-    def _fp_frame(self, df: DataFrame, domain_col: str, text_col: str):
-        return df.select(
-            F.col(domain_col).alias("__dom"),
-            F.md5(norm_text(text_col)).alias("__fp"),
-        ).filter(F.col("__fp").isNotNull() & F.col("__dom").isNotNull())
-
-    def merge_batch(
-        self, batch_df: DataFrame, domain_col: str, text_col: str
-    ) -> None:
-        # stage → validate → KMV merge → commit counts LAST: the KMV
-        # merge runs Spark jobs and can raise; mutating counts before it
-        # (the pre-r9 order) left half-applied state that a foreachBatch
-        # retry would double-count, since replay_guarded only skips
-        # batches whose merge RETURNED (r8 advice). The fp lineage is
-        # materialized ONCE (r9 advice): the staged counts collect and
-        # the KMV merge are two separate Spark jobs, and a
-        # non-deterministic batch source re-read between them would
-        # leave counts and KMV state computed over DIFFERENT data,
-        # breaking the exact-regime parity this class asserts.
-        from ..operators.partitioning import checkpoint_for_reuse
-
-        fp = checkpoint_for_reuse(
-            self._fp_frame(batch_df, domain_col, text_col)
-        )
-        staged = {
-            r["__dom"]: r["__c"]
-            for r in fp.groupBy("__dom")
-            .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-            .collect()
-        }
-        grown = len(self.counts.keys() | staged.keys())
-        if grown > self.max_keys:
-            raise ValueError(
-                f"DomainDedupAccumulator would track {grown} domains, over "
-                f"max_keys={self.max_keys} — driver-side per-domain state "
-                f"cannot hold an open crawl's domain universe; monitor a "
-                f"curated domain subset, shard the accumulator, or raise "
-                f"the cap (state unchanged: the batch was NOT applied)"
-            )
-        self.kmv.merge_batch(fp, "__fp", "__dom")
-        for dom, c in staged.items():
-            self.counts[dom] = self.counts.get(dom, 0) + c
-
-    def foreach_batch(self, domain_col: str, text_col: str):
-        """A ``foreachBatch`` function maintaining this accumulator
-        (replay-guarded — doc counts are additive)."""
-        from ..operators.temporal import replay_guarded
-
-        return replay_guarded(
-            lambda batch_df, _bid: self.merge_batch(
-                batch_df, domain_col, text_col
-            )
-        )
-
-    def n_docs(self, domain) -> int:
-        return self.counts.get(domain, 0)
-
-    def distinct_estimate(self, domain) -> float:
-        return self.kmv.estimate(domain)
-
-    def dedup_rate(self, domain) -> float | None:
-        """1 − distinct/n for ``domain`` (None until it has data); exact
-        in the KMV exact regime, clamped to [0, 1] in the estimate
-        regime (the estimator can overshoot n slightly)."""
-        n = self.counts.get(domain)
-        if not n:
-            return None
-        est = self.kmv.estimate(domain)
-        return min(1.0, max(0.0, 1.0 - est / float(n)))
-
-
 # --------------------------------------------------------------------------
-# Crawl-frontier incremental URL dedup (round 9): the batch/streaming
-# pair that ties canonical_url into the incremental plane — "of this
-# batch of discovered URLs, which resources have we NEVER fetched?"
+# Crawl-frontier incremental URL dedup (round 9): ties canonical_url
+# into the incremental plane — "of this batch of discovered URLs, which
+# resources have we NEVER fetched?"
 # --------------------------------------------------------------------------
 
 
@@ -669,8 +558,8 @@ def _novel_canonicals(
     seen_bucket_col: str | None = None,
     n_buckets: int = FRONTIER_SEEN_BUCKETS,
 ) -> DataFrame:
-    """The bloom-prescreened exact anti-join core shared by the batch
-    face and the streaming twin's exact-rescue path: ``reps`` (small,
+    """The bloom-prescreened exact anti-join core of
+    :func:`frontier_novel_urls`: ``reps`` (small,
     one row per canonical, already checkpointed by callers when
     multi-consumed) vs ``seen`` (huge; scanned with a MAP-ONLY literal
     Bloom of ``reps``, never shuffled or joined in full — only the
@@ -753,126 +642,3 @@ def frontier_updated_seen(seen: DataFrame, novel: DataFrame,
     return seen.select(F.col(seen_col).alias("canonical_url")).unionByName(
         novel.select("canonical_url")
     )
-
-
-FRONTIER_BLOOM_WORDS = 1 << 16
-"""Default accumulated-filter size for the frontier twin: 65536 words =
-2²¹ bits ≈ 290 k URLs at the 50% fill ceiling (n ≈ 0.1386·m), ~0.5 MB of
-driver state / plan literal. The generic 1024-word ``BLOOM_WORDS``
-default (≈ 4.5 k-URL capacity) is sized for per-batch prescreens, not an
-accumulating crawl membership set (round-10 fix of the r9 verdict's
-saturation finding)."""
-
-
-class FrontierDedupAccumulator:
-    """Streaming twin of :func:`frontier_novel_urls`: an accumulated
-    Bloom filter over every canonical URL each micro-batch has carried —
-    the crawl-frontier membership monitor. Fixed-size driver state
-    (``n_words`` words regardless of URL count — the
-    ``BloomAccumulator`` contract, no key axis to cap) and fill-GUARDED
-    (round 10): accumulating past ~50% set bits would silently starve
-    the crawl in bloom-only mode (fpr → 1 ⇒ every novel URL classified
-    duplicate) or degenerate exact-rescue to a full seen scan per batch,
-    so ``BloomAccumulator.merge_batch`` warns at 25% fill and fails
-    loudly at the ceiling with the batch unapplied — resize ``n_words``
-    (capacity ≈ 4.4·n_words URLs; the :data:`FRONTIER_BLOOM_WORDS`
-    default holds ~290 k) or shard the frontier by domain before then.
-
-    Exactness contract, same as the batch face: a bloom MISS is
-    definitely novel (no false negatives); a bloom HIT is a candidate —
-    pass ``exact_seen`` (the persisted seen-set frame) to
-    :meth:`novel_in_batch` and candidates are anti-joined against it,
-    making the split EXACT with the join restricted to the (tiny)
-    candidate set. Without ``exact_seen`` the candidates are treated as
-    duplicates: false-positive-rate-bounded recall loss, never a
-    re-fetch. ``foreach_batch`` probes THEN merges, so a batch is
-    deduped against prior batches only (within-batch spellings collapse
-    via the rep step); merge is replay-guarded AND idempotent (bit OR),
-    so redelivery is harmless twice over.
-    """
-
-    def __init__(self, n_words: int | None = None, k: int | None = None):
-        from .sketches import BLOOM_HASHES, BloomAccumulator
-
-        self.n_words = FRONTIER_BLOOM_WORDS if n_words is None else n_words
-        self.k = BLOOM_HASHES if k is None else k
-        self.bloom = BloomAccumulator(n_words=self.n_words, k=self.k)
-
-    def _canon(self, batch_df: DataFrame, url_col: str, id_col: str):
-        return frontier_batch_reps(batch_df, url_col, id_col)
-
-    def novel_in_batch(
-        self,
-        batch_df: DataFrame,
-        url_col: str = "url",
-        id_col: str = "doc_id",
-        exact_seen: DataFrame | None = None,
-        seen_bucket_col: str | None = None,
-        n_buckets: int = FRONTIER_SEEN_BUCKETS,
-    ) -> DataFrame:
-        """(id, canonical_url) novel vs all PRIOR batches. Pure probe —
-        no state mutation (call :meth:`merge_batch` after, or use
-        :meth:`foreach_batch` which sequences both). When ``exact_seen``
-        is the bucket-partitioned layout of :func:`frontier_seen_write`,
-        pass ``seen_bucket_col="bucket"`` so the rescue scan prunes to
-        the candidates' buckets instead of reading the whole seen set
-        per micro-batch."""
-        from .sketches import bloom_filter_expr
-
-        from ..operators.partitioning import checkpoint_for_reuse
-
-        reps = self._canon(batch_df, url_col, id_col)
-        probe = bloom_filter_expr(
-            self.bloom.words, "canonical_url", self.n_words, self.k
-        )
-        if exact_seen is None:
-            return reps.filter(~probe).select(id_col, "canonical_url")
-        # exact rescue through the shared prescreen core: exact_seen is
-        # the PERSISTED seen set (huge at crawl scale) — it must ride a
-        # map-only bloom of the candidates, never a broadcast of itself
-        # (candidates are consumed twice inside: checkpoint)
-        reps = checkpoint_for_reuse(reps)
-        candidates = checkpoint_for_reuse(reps.filter(probe))
-        # the rescue prescreen filter is built from THIS batch's
-        # candidates (hundreds of keys), not the crawl history — size it
-        # to them (keys/3 words ≈ 1% FP at k=5), never to the
-        # accumulator's capacity: inheriting FRONTIER_BLOOM_WORDS would
-        # ship a ~0.5 MB dense literal down the seen scan every
-        # micro-batch for a ~400× oversized filter (r10 review). The
-        # count is a cheap job over the already-checkpointed frame.
-        n_rescue_words = max(64, (candidates.count() + 2) // 3)
-        rescued = _novel_canonicals(
-            candidates, exact_seen, id_col,
-            n_words=n_rescue_words, k=self.k,
-            seen_bucket_col=seen_bucket_col, n_buckets=n_buckets,
-        )
-        return reps.filter(~probe).unionByName(rescued).select(
-            id_col, "canonical_url"
-        )
-
-    def merge_batch(
-        self, batch_df: DataFrame, url_col: str = "url",
-        id_col: str = "doc_id",
-    ) -> None:
-        self.bloom.merge_batch(
-            self._canon(batch_df, url_col, id_col), "canonical_url"
-        )
-
-    def foreach_batch(
-        self, url_col: str, id_col: str, sink
-    ):
-        """A ``foreachBatch`` function: probe (novel rows → ``sink``, a
-        callable taking the novel DataFrame) then merge. Replay-guarded:
-        a redelivered FULLY-applied batch neither re-sinks nor
-        re-merges. Emission is at-least-once within a failed batch: if
-        ``sink`` succeeded but the merge raised, the retry re-probes
-        (state unchanged — probe mutates nothing) and re-emits the same
-        novel rows, so the sink must be idempotent per (batch, row) —
-        the standard foreachBatch contract."""
-        from ..operators.temporal import replay_guarded
-
-        def _fn(batch_df: DataFrame, _bid: int) -> None:
-            sink(self.novel_in_batch(batch_df, url_col, id_col))
-            self.merge_batch(batch_df, url_col, id_col)
-
-        return replay_guarded(_fn)

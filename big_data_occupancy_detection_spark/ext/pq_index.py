@@ -633,8 +633,7 @@ def append_to_pq_index(
     re-rank's pushed filter) though the dataset is no longer globally
     range-partitioned; run ``compact_parquet`` periodically if file
     counts grow. Run as a single maintenance job per delta (same
-    single-writer contract as compaction); for the exactly-once
-    streaming wrapper see ``streaming/ann_serve.py``.
+    single-writer contract as compaction).
     """
     spark = new_emb.sparkSession
     with open(os.path.join(path, "meta.json")) as f:

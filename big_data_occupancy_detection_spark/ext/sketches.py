@@ -1,4 +1,4 @@
-"""Mergeable frequency sketches as plain DataFrames: count-min.
+"""Mergeable sketches as plain DataFrames: count-min, Bloom and KMV.
 
 A count-min sketch is a depth×width counter grid; every key increments
 one bucket per hash row, and a key's estimate is the MIN of its buckets
@@ -9,7 +9,10 @@ map-side fan-out (no shuffle grows with key cardinality — the shuffle
 carries at most d·w·partitions partial rows), and the result is tiny,
 mergeable (union + re-sum) and broadcastable. That is the 100 TB point:
 frequency estimation over an unbounded key domain in O(d·w) memory,
-where an exact groupBy(key) would shuffle every distinct key.
+where an exact groupBy(key) would shuffle every distinct key. The Bloom
+filter (membership pre-screen) and the per-group KMV sketch (distinct
+counts under set algebra) are built the same way: one bounded,
+map-side-combined aggregation whose result merges by union.
 
 Hashing is the portable md5-60bit family so a DuckDB oracle rebuilds the
 identical grid (Spark's xxhash64 would never hash-match an oracle).
@@ -17,15 +20,12 @@ identical grid (Spark's xxhash64 would never hash-match an oracle).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text_fns import md5_hash64
 from ..operators.partitioning import checkpoint_for_reuse
 from ..operators.generate import explode_fused
-from ..operators.temporal import replay_guarded
 
 CMS_DEPTH = 4
 CMS_WIDTH = 256
@@ -47,8 +47,7 @@ def cms_build(
     """(seed, bucket, cnt) — the count-min grid for ``df[key_col]``.
 
     Map-side ×depth fan-out, then one combined aggregation into d·w rows.
-    Grids over disjoint data merge by union + groupBy-sum (used by the
-    streaming twin and by partition-parallel builds).
+    Grids over disjoint data merge by union + groupBy-sum.
     """
     keyed = df.select(F.col(key_col).cast("string").alias("__key"))
     fanned = explode_fused(
@@ -123,60 +122,6 @@ def cms_heavy_hitters(
         .select("key", F.col("est").cast("long").alias("est"),
                 F.col("exact").cast("long").alias("exact"))
     )
-
-
-class CmsAccumulator:
-    """Streaming count-min state: a bounded d×w counter dict fed by
-    DISTRIBUTED per-batch grids (``cms_build`` runs on the cluster; only
-    the d·w aggregated rows reach the driver — bounded state is the whole
-    point of a sketch, so this is not a driver-side-loop anti-pattern).
-    Use with ``foreachBatch``: grids over disjoint batches merge by
-    addition, so the accumulated grid after N batches is identical to
-    ``cms_build`` over the union of all batches (test-asserted).
-
-    Fixed-size by construction: state is ≤ depth·width cells regardless
-    of key cardinality, so no ``max_keys`` cap is needed (unlike the
-    per-group ``KmvAccumulator``, whose group axis must be capped).
-    """
-
-    def __init__(self, depth: int = CMS_DEPTH, width: int = CMS_WIDTH):
-        self.depth, self.width = depth, width
-        self.grid: dict[tuple[int, int], int] = {}
-
-    def merge_batch(self, batch_df: DataFrame, key_col: str) -> None:
-        for r in cms_build(batch_df, key_col, self.depth, self.width).collect():
-            k = (r["seed"], r["bucket"])
-            self.grid[k] = self.grid.get(k, 0) + r["cnt"]
-
-    def foreach_batch(self, key_col: str):
-        """A ``foreachBatch`` function maintaining this accumulator
-        (replay-guarded — grid counts are additive, so a batch
-        redelivered after a full apply would double-count)."""
-
-        return replay_guarded(
-            lambda batch_df, _bid: self.merge_batch(batch_df, key_col)
-        )
-
-    def estimate(self, key: str) -> int:
-        """Driver-side point estimate — the same md5-60bit bucketing the
-        distributed build uses, so estimates agree with ``cms_estimate``.
-        Takes the key AS A STRING (same contract, and reason, as
-        ``BloomAccumulator.might_contain``)."""
-        import hashlib
-
-        if not isinstance(key, str):
-            raise TypeError(
-                "estimate takes the key as a string — cast it the way "
-                "the built key column was cast"
-            )
-        est = None
-        for seed in range(self.depth):
-            h = int(
-                hashlib.md5(f"{seed}|{key}".encode()).hexdigest()[:15], 16
-            ) % self.width
-            c = self.grid.get((seed, h), 0)
-            est = c if est is None else min(est, c)
-        return est or 0
 
 
 # ------------------------------------------------------------------ bloom
@@ -348,140 +293,6 @@ def bloom_filter_expr(
     return hit & key.isNotNull()
 
 
-class BloomAccumulator:
-    """Streaming Bloom state: the bounded word dict fed by DISTRIBUTED
-    per-batch filters (``bloom_build`` runs on the cluster; only the
-    ≤ ``n_words`` aggregated words reach the driver). Use with
-    ``foreachBatch`` on a dedup-ingest stream: filters over disjoint
-    batches merge by OR, so the accumulated filter after N batches is
-    identical to ``bloom_build`` over the union of all batches
-    (test-asserted) — the streaming twin of the batch pre-screen, like
-    ``CmsAccumulator`` is for count-min.
-
-    Fixed-size by construction: state is ≤ ``n_words`` 64-bit words
-    regardless of key cardinality, so no ``max_keys`` cap is needed
-    (unlike the per-group ``KmvAccumulator``). The failure axis is
-    instead SATURATION (round 10): as keys accumulate, the set-bit fill
-    ratio f rises, the false-positive rate ≈ f^k tends to 1, and a
-    bloom-prescreened consumer silently degrades — in the crawl-frontier
-    bloom-only mode every novel URL would classify duplicate (the crawl
-    starves); in exact-rescue mode every row becomes a candidate (every
-    batch degenerates to a full seen-set scan). So merges are fill-
-    guarded, the same loud-fail contract as ``max_keys``: past
-    ``warn_fill`` (default 25% ⇒ fpr ≈ 0.1% at k=5) each merge warns;
-    a merge that would push fill past ``max_fill`` (default 50% ⇒ the
-    classic optimally-sized-filter operating point, fpr ≈ 3% at k=5)
-    raises with the batch NOT applied. Capacity sizing: a filter of
-    m = n_words·32 bits holds n keys at fill f ≈ 1 − e^(−k·n/m), i.e.
-    n ≈ −(m/k)·ln(1−f); at the 50% ceiling n ≈ 0.14·m ≈ 4.4·n_words —
-    size ``n_words`` to ~distinct keys / 4 for headroom.
-    """
-
-    def __init__(
-        self,
-        n_words: int = BLOOM_WORDS,
-        k: int = BLOOM_HASHES,
-        warn_fill: float = 0.25,
-        max_fill: float = 0.5,
-    ):
-        self.n_words, self.k = n_words, k
-        self.warn_fill, self.max_fill = float(warn_fill), float(max_fill)
-        self.words: dict[int, int] = {}
-        self._set_bits = 0
-
-    def merge_batch(self, batch_df: DataFrame, key_col: str) -> None:
-        # stage → guard → commit (the max_keys contract on the bit
-        # axis): the prospective fill is computed BEFORE any mutation,
-        # so a rejected batch leaves state untouched for the caller to
-        # resize/shard and retry.
-        staged = {
-            int(r["word_idx"]): int(r["word"])
-            for r in bloom_build(
-                batch_df, key_col, self.n_words, self.k
-            ).collect()
-        }
-        new_bits = self._set_bits + sum(
-            ((self.words.get(i, 0) | w) ^ self.words.get(i, 0)).bit_count()
-            for i, w in staged.items()
-        )
-        fill = new_bits / float(self.n_words * 32)
-        if fill > self.max_fill:
-            raise ValueError(
-                f"BloomAccumulator merge would set {new_bits} of "
-                f"{self.n_words * 32} bits (fill {fill:.1%} > max_fill "
-                f"{self.max_fill:.0%}; fpr ≈ fill^k = {fill ** self.k:.2%}"
-                f" and rising) — the filter is saturating and a "
-                f"prescreen built from it silently degrades. Resize: "
-                f"capacity ≈ −(m/k)·ln(1−max_fill) ≈ "
-                f"{int(-self.n_words * 32 / self.k * math.log(1 - self.max_fill))} "
-                f"keys at n_words={self.n_words}; grow n_words with the "
-                f"accumulated key count (state unchanged: the batch was "
-                f"NOT applied)"
-            )
-        if fill > self.warn_fill:
-            import warnings
-
-            warnings.warn(
-                f"BloomAccumulator fill {fill:.1%} past warn_fill "
-                f"{self.warn_fill:.0%} (fpr ≈ {fill ** self.k:.3%}); "
-                f"merges fail loudly at {self.max_fill:.0%} — resize "
-                f"n_words before then",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        for i, w in staged.items():
-            self.words[i] = self.words.get(i, 0) | w
-        self._set_bits = new_bits
-
-    def fill_ratio(self) -> float:
-        """Fraction of the m = n_words·32 filter bits currently set."""
-        return self._set_bits / float(self.n_words * 32)
-
-    def estimated_fpr(self) -> float:
-        """≈ fill^k — the probability an unseen key answers true."""
-        return self.fill_ratio() ** self.k
-
-    def foreach_batch(self, key_col: str):
-        """A ``foreachBatch`` function maintaining this accumulator
-        (replay-guarded for uniformity — OR-ing words is idempotent, so
-        redelivery was already harmless here, but every accumulator
-        shares one contract)."""
-
-        return replay_guarded(
-            lambda batch_df, _bid: self.merge_batch(batch_df, key_col)
-        )
-
-    def as_dataframe(self, spark) -> DataFrame:
-        """The accumulated filter as the same (word_idx, word) table
-        ``bloom_build`` emits — feed it straight to ``bloom_contains``."""
-        return spark.createDataFrame(
-            sorted(self.words.items()), schema="word_idx int, word long"
-        )
-
-    def might_contain(self, key: str) -> bool:
-        """Driver-side probe — the same md5-60bit "i|key" positions the
-        distributed build sets, so verdicts agree with ``bloom_contains``.
-        Takes the key AS A STRING: Python formatting of other types
-        diverges from Spark's CAST (``True`` vs ``true``), which would
-        probe the wrong bits and fabricate a driver-side false
-        negative."""
-        import hashlib
-
-        if not isinstance(key, str):
-            raise TypeError(
-                "might_contain takes the key as a string — cast it the "
-                "way the built key column was cast"
-            )
-        m = self.n_words * 32
-        for i in range(self.k):
-            p = int(
-                hashlib.md5(f"{i}|{key}".encode()).hexdigest()[:15], 16
-            ) % m
-            if not (self.words.get(p // 32, 0) >> (p % 32)) & 1:
-                return False
-        return True
-
-
 # ------------------------------------------------------------------ KMV
 
 KMV_K = 256
@@ -578,108 +389,3 @@ def kmv_distinct_estimate(
         .otherwise(F.lit(c) / F.col("hk").cast("double"))
         .alias("est"),
     )
-
-
-class KmvAccumulator:
-    """Streaming KMV state: per-group bottom-k hash sets fed by
-    DISTRIBUTED per-batch sketches (``kmv_sketch`` runs on the cluster;
-    only ≤ groups·k rows reach the driver — the same bounded-state
-    contract as ``CmsAccumulator``/``BloomAccumulator``). Merge is the k
-    smallest of the set union, so after N batches the state is identical
-    to ``kmv_sketch`` over the union of all batches (test-asserted) —
-    bottom-k sketches are mergeable by construction, which is what makes
-    them the streaming/set-algebra distinct counter.
-
-    Estimates come from the sketch alone: a group whose set is still
-    smaller than k is EXACT (the sketch holds every distinct hash seen);
-    past k it is the (k-1)·M/h_k estimator.
-
-    Boundedness: the VALUE side is ≤ k longs per group by construction,
-    but the GROUP axis grows one entry per distinct group ever seen —
-    ``max_keys`` caps it with a loud failure (round 9, same contract as
-    ``KsDriftAccumulator``; the batch is NOT applied), because on
-    unbounded group domains (URLs, user ids fed as the group by mistake)
-    the driver dict is a slow OOM. (``CmsAccumulator``/``BloomAccumulator``
-    need no such cap: their state is a fixed depth×width / n_words table
-    regardless of key cardinality.)
-    """
-
-    def __init__(self, k: int = KMV_K, max_keys: int = 100_000):
-        self.k = k
-        self.max_keys = int(max_keys)
-        self.state: dict[object, list[int]] = {}
-        # groups whose merged hash set EVER exceeded k: only these lost
-        # information, so only these may use the biased (k-1)·M/h_k
-        # estimator — a group with exactly k true distincts stays exact,
-        # matching kmv_distinct_estimate's n_distinct<=k branch
-        # (round-6 advice: the twins diverged at the len==k boundary)
-        self.truncated: set[object] = set()
-
-    def merge_batch(
-        self, batch_df: DataFrame, key_col: str, group_col: str
-    ) -> None:
-        sk, counts = kmv_sketch(batch_df, key_col, group_col, k=self.k)
-        # batch-level truncation happens INSIDE kmv_sketch (a group with
-        # >k distincts arrives already trimmed to k rows), so the merged
-        # length below can never reveal it — the counts frame's exact
-        # per-group n_distinct does (round-7 review). Both collects run
-        # BEFORE any state mutation (stage-then-commit): a raise mid-merge
-        # must leave state untouched so a foreachBatch retry of the failed
-        # batch can't double-apply (round-9, KsDrift contract).
-        batch_trunc = {
-            r["g"] for r in counts.collect() if r["n_distinct"] > self.k
-        }
-        sk_rows = sk.collect()
-        grown = len(self.state.keys() | {r["g"] for r in sk_rows})
-        if grown > self.max_keys:
-            raise ValueError(
-                f"KmvAccumulator would track {grown} groups, over "
-                f"max_keys={self.max_keys} — the group column's "
-                f"cardinality is not bounded enough for driver-side "
-                f"state; group coarser or raise the cap (state "
-                f"unchanged: the batch was NOT applied)"
-            )
-        self.truncated |= batch_trunc
-        touched: set[object] = set()
-        for r in sk_rows:
-            cur = self.state.setdefault(r["g"], [])
-            cur.append(r["h"])
-            touched.add(r["g"])
-        # re-sort ONLY the groups this batch touched — a full-state sweep
-        # is O(total_groups·k log k) per micro-batch (round-6 advice)
-        for g in touched:
-            merged = sorted(set(self.state[g]))
-            if len(merged) > self.k:
-                self.truncated.add(g)
-            self.state[g] = merged[: self.k]
-
-    def foreach_batch(self, key_col: str, group_col: str):
-        """A ``foreachBatch`` function maintaining this accumulator
-        (replay-guarded for uniformity — bottom-k set union is
-        idempotent, so redelivery was already harmless here, but every
-        accumulator shares one contract)."""
-
-        return replay_guarded(
-            lambda batch_df, _bid: self.merge_batch(batch_df, key_col, group_col)
-        )
-
-    def as_dataframe(self, spark) -> DataFrame:
-        """The accumulated state as the same (g, h, r) table
-        ``kmv_sketch`` emits."""
-        rows = [
-            (g, h, i + 1)
-            for g, hs in sorted(self.state.items(), key=lambda kv: str(kv[0]))
-            for i, h in enumerate(hs)
-        ]
-        return spark.createDataFrame(rows, schema="g string, h long, r int")
-
-    def estimate(self, group) -> float:
-        """Distinct-count estimate for one group: exact while the sketch
-        is exhaustive (never truncated — including EXACTLY k distincts),
-        the (k-1)·M/h_k estimator once information was lost."""
-        hs = self.state.get(group)
-        if hs is None:
-            return 0.0
-        if group not in self.truncated:
-            return float(len(hs))
-        return (self.k - 1) * KMV_SPACE / hs[-1]

@@ -18,7 +18,7 @@ from ..functions.rounding import portable_round
 from ..operators.generate import explode_fused
 from ..operators.partitioning import repartition_for_compute
 
-from ..functions.text_fns import char_ngrams, hash64, md5_hash64, norm_text, tokens
+from ..functions.text_fns import char_ngrams, hash64, norm_text, tokens
 
 # Marker vocabularies for the language-ID heuristic. A deterministic
 # marker-token scoring (argmax of per-language marker hits with a fixed

@@ -763,263 +763,3 @@ def grouped_cusum_jvm(
         F.col("__h")["dp"].alias("peak_pos_at"),
         F.col("__h")["dn"].alias("peak_neg_at"),
     )
-
-
-def replay_guarded(merge_fn):
-    """Wrap a ``foreachBatch`` callable so a REDELIVERED batch is a no-op.
-
-    Spark's foreachBatch contract is at-least-once: if the stream dies
-    after ``fn`` fully applied batch N but BEFORE the offset commit,
-    restart redelivers batch N and a stateful accumulator double-counts
-    it (round-8 advice — the transactional stage-then-commit inside the
-    merges only covers raise-mid-merge, not full-apply-then-redeliver).
-    ``batch_id`` is monotonically increasing per query, so tracking the
-    last APPLIED id and skipping ``batch_id <= last`` makes the closure
-    idempotent. The id is recorded only after ``merge_fn`` returns, so a
-    retry of a merge that RAISED (state unchanged — the stores are
-    transactional per batch) still re-applies.
-
-    Scope: one guard per closure = per query. batch_ids restart at 0
-    with a FRESH checkpoint, so feed a restarted-from-scratch query a
-    fresh ``foreach_batch(...)`` closure (each call builds a new guard);
-    the same closure across a SAME-checkpoint restart is the supported
-    redelivery case."""
-    last = -1
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal last
-        if batch_id <= last:
-            return
-        merge_fn(batch_df, batch_id)
-        last = batch_id
-
-    return fn
-
-
-class CusumAccumulator:
-    """Streaming one-sided CUSUM state per key (round 7): the drift
-    monitor twin of the batch ``user_value_cusum`` fold, and a NEW
-    accumulator class beside the mergeable CMS/Bloom/KMV sketches —
-    CUSUM's ``max(0, ·)`` clamp is NOT mergeable, but any left fold
-    composes over ordered concatenation (``fold(fold(s0, b1), b2) ==
-    fold(s0, b1 ++ b2)``), so sequential per-batch application equals
-    the one-shot batch fold EXACTLY (bit-identical doubles;
-    test-asserted) under the append-only ingest contract: batches
-    arrive in event-time order across batches, rows sort by
-    ``order_cols`` within a batch.
-
-    Scale/bounded-state contract (same as the sketch accumulators): the
-    fold itself runs distributed — per-key batch sequences fold in the
-    JVM seeded by the broadcast prior state — and only one (key, value,
-    n) row per key TOUCHED BY THE BATCH reaches the driver.
-    """
-
-    def __init__(self, k: float):
-        self.k = float(k)
-        self.state: dict[object, float] = {}
-        self.counts: dict[object, int] = {}
-
-    def merge_batch(
-        self,
-        batch_df: DataFrame,
-        key_col: str,
-        order_cols: list[str],
-        value_col: str,
-    ) -> None:
-        spark = batch_df.sparkSession
-        clean = batch_df.filter(
-            F.col(value_col).isNotNull() & F.col(order_cols[0]).isNotNull()
-        )
-        seq = F.array_sort(
-            F.collect_list(
-                F.struct(*order_cols, F.col(value_col).alias("__v"))
-            )
-        )
-        grouped = clean.groupBy(F.col(key_col).alias("__key")).agg(
-            F.count(F.lit(1)).alias("__n"), seq.alias("__seq")
-        )
-        if self.state:
-            key_type = dict(grouped.dtypes)["__key"]
-            seeds = spark.createDataFrame(
-                list(self.state.items()), f"__seed_key {key_type}, __s0 double"
-            )
-            # eqNullSafe: a NULL key is a legitimate group (the batch twin
-            # emits one via groupBy) and a plain equality join would seed
-            # it at 0.0 every batch — silently restarting its fold while
-            # counts kept accumulating (round-7 review)
-            grouped = grouped.join(
-                F.broadcast(seeds),
-                grouped["__key"].eqNullSafe(seeds["__seed_key"]),
-                "left",
-            ).drop("__seed_key")
-        else:
-            grouped = grouped.withColumn("__s0", F.lit(None).cast("double"))
-        fold = F.aggregate(
-            "__seq",
-            F.coalesce(F.col("__s0"), F.lit(0.0)),
-            lambda acc, x: F.greatest(
-                F.lit(0.0), acc + x["__v"] - F.lit(self.k)
-            ),
-        )
-        for r in grouped.select("__key", "__n", fold.alias("__c")).collect():
-            self.state[r["__key"]] = r["__c"]
-            self.counts[r["__key"]] = self.counts.get(r["__key"], 0) + r["__n"]
-
-    def foreach_batch(
-        self, key_col: str, order_cols: list[str], value_col: str
-    ):
-        """A ``foreachBatch`` function maintaining this accumulator
-        (replay-guarded: a batch redelivered after a full apply is
-        skipped — see :func:`replay_guarded`)."""
-
-        return replay_guarded(
-            lambda batch_df, _bid: self.merge_batch(
-                batch_df, key_col, order_cols, value_col
-            )
-        )
-
-    def value(self, key) -> float:
-        """Current CUSUM statistic for ``key`` (0.0 if never seen)."""
-        return self.state.get(key, 0.0)
-
-    def drifted(self, key, h: float) -> bool:
-        """Decision at threshold ``h``."""
-        return self.value(key) > float(h)
-
-
-class KsDriftAccumulator:
-    """Streaming two-sample Kolmogorov-Smirnov drift monitor per key
-    (round 7): a FIXED reference distribution versus the LIVE
-    distribution accumulated from micro-batches — the distribution-
-    shift member of the streaming drift plane (CusumAccumulator = mean
-    shift over time; this = full-shape divergence from a frozen
-    baseline, e.g. "has this priority's price distribution drifted
-    from last quarter's?").
-
-    Unlike CUSUM's ordered fold, histogram COUNTS merge exactly and
-    order-independently, so any batch arrival order yields the same
-    state, and the statistic at any point is the exact integer
-    arithmetic of the batch twin ``order_price_ks_drift``:
-    ``d_num = max |cum_live*n_ref - cum_ref*n_live|`` over the union
-    value grid, ``ks = d_num / (n_live * n_ref)`` as the identical
-    one-double-division (test-asserted bit-identical to an
-    independent fold and to a one-shot merge).
-
-    Bounded-state contract (the sketch-accumulator shape): per-key
-    state is VALUE-grain — values must come from a bounded domain
-    (integer cents of a bounded price range, bucketed readings, enum
-    codes). ``max_distinct`` guards runaway value domains and
-    ``max_keys`` the key axis (round 8 — BOTH axes now fail loudly
-    instead of growing driver state silently). Each merge groups
-    executor-side first and collects only the (key, value, count)
-    rows TOUCHED by the batch (delta-proportional). NULL keys/values
-    are excluded on ingest — the same contract as the batch twin
-    (NULL has no ECDF position).
-    """
-
-    def __init__(self, max_distinct: int = 100_000, max_keys: int = 100_000):
-        self.ref: dict[object, dict[object, int]] = {}
-        self.live: dict[object, dict[object, int]] = {}
-        self.max_distinct = int(max_distinct)
-        # round-8 advice: max_distinct bounds VALUES per key but the KEY
-        # axis was unbounded — a runaway key column (e.g. a uuid fed as
-        # the key by mistake) grew driver state silently. Same loud-error
-        # contract, per store (ref and live are independently capped).
-        self.max_keys = int(max_keys)
-
-    def _hist_rows(self, df: DataFrame, key_col: str, value_col: str):
-        clean = df.filter(
-            F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        return (
-            clean.groupBy(
-                F.col(key_col).alias("__k"), F.col(value_col).alias("__v")
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-            .collect()
-        )
-
-    def _merge_into(
-        self,
-        store: dict[object, dict[object, int]],
-        df: DataFrame,
-        key_col: str,
-        value_col: str,
-    ) -> None:
-        # stage, validate, THEN commit: raising mid-iteration would leave
-        # the store half-merged, and a foreachBatch retry of the FAILED
-        # batch would double-count the already-applied rows. This covers
-        # the raise-mid-merge case only; redelivery of a FULLY-applied
-        # batch (at-least-once foreachBatch) is handled one level up by
-        # the replay_guarded closure in foreach_batch (round-8 advice).
-        staged: dict[object, dict[object, int]] = {}
-        for r in self._hist_rows(df, key_col, value_col):
-            h = staged.setdefault(r["__k"], {})
-            h[r["__v"]] = h.get(r["__v"], 0) + r["__c"]
-        grown_keys = len(store.keys() | staged.keys())
-        if grown_keys > self.max_keys:
-            raise ValueError(
-                f"KsDriftAccumulator would track {grown_keys} keys, over "
-                f"max_keys={self.max_keys} — the key column's cardinality "
-                f"is not bounded enough for driver-side state; group "
-                f"coarser or raise the cap (state unchanged: the batch "
-                f"was NOT applied)"
-            )
-        for k, delta in staged.items():
-            have = store.get(k, {})
-            grown = len(have.keys() | delta.keys())
-            if grown > self.max_distinct:
-                raise ValueError(
-                    f"KsDriftAccumulator key {k!r} would exceed "
-                    f"max_distinct={self.max_distinct} tracked values — the "
-                    f"value domain is not bounded enough for value-grain "
-                    f"state; bucket/quantize upstream or raise the cap "
-                    f"(state unchanged: the batch was NOT applied)"
-                )
-        for k, delta in staged.items():
-            h = store.setdefault(k, {})
-            for v, c in delta.items():
-                h[v] = h.get(v, 0) + c
-
-    def set_reference(
-        self, df: DataFrame, key_col: str, value_col: str
-    ) -> None:
-        """Freeze the baseline histogram (callable more than once to
-        extend it; typically once from a batch frame)."""
-        self._merge_into(self.ref, df, key_col, value_col)
-
-    def merge_batch(
-        self, batch_df: DataFrame, key_col: str, value_col: str
-    ) -> None:
-        self._merge_into(self.live, batch_df, key_col, value_col)
-
-    def foreach_batch(self, key_col: str, value_col: str):
-        """A ``foreachBatch`` function maintaining this accumulator
-        (replay-guarded: a batch redelivered after a full apply is
-        skipped — see :func:`replay_guarded`)."""
-
-        return replay_guarded(
-            lambda batch_df, _bid: self.merge_batch(batch_df, key_col, value_col)
-        )
-
-    def ks(self, key) -> float | None:
-        """Exact two-sample KS statistic for ``key``, or None until both
-        the reference and the live side have data for it."""
-        a, b = self.live.get(key), self.ref.get(key)
-        if not a or not b:
-            return None
-        n_a, n_b = sum(a.values()), sum(b.values())
-        cum_a = cum_b = 0
-        d_num = 0
-        for v in sorted(set(a) | set(b)):
-            cum_a += a.get(v, 0)
-            cum_b += b.get(v, 0)
-            d_num = max(d_num, abs(cum_a * n_b - cum_b * n_a))
-        # the batch twin's exact form: integer numerator, ONE double
-        # division by the exact double product of the two counts
-        return float(d_num) / (float(n_a) * float(n_b))
-
-    def drifted(self, key, threshold: float) -> bool:
-        """Decision at ``threshold`` (False until computable)."""
-        d = self.ks(key)
-        return d is not None and d > float(threshold)

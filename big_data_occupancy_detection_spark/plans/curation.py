@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..ext import curation as C
-from ..functions.rounding import portable_round, portable_round_sql
+from ..functions.rounding import portable_round_sql
 from ..sources.readers import table
 from .registry import register
 from .textops import NORM_SQL, TOKENS_SQL, SHINGLES_SQL, hash64_sql

@@ -14,7 +14,6 @@ from ..ml.pipelines import build_weighted_lr_pipeline, strip_training_summary
 from ..operators.relational import class_weights
 from ..operators.partitioning import checkpoint_for_reuse
 from ..sources.readers import table
-from ..functions.rounding import portable_round
 from .registry import register
 
 

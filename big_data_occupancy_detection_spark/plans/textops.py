@@ -1526,36 +1526,13 @@ def _pq_topk_oracle() -> str:
     """
 
 
-@register("embedding_pq_topk", oracle=_pq_topk_oracle())
-def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 8: serve from the fingerprint-cached persisted index instead
-    # of the fit-per-call ``SIM.pq_topk`` — the per-invocation 8-subspace
-    # k-means fit dominated this face (~26-31 s at every SF in the r8
-    # within-session A/B, vs ~2.5 s for a warm serve), and re-fitting
-    # codebooks per query batch is the antithesis of PQ at 100 TB where
-    # codebooks are built once and serve touches only the code table.
-    # Results are bit-identical to the fit-per-call path (the shared
-    # ``_pq_fit_subspaces`` recipe + the parity gate in
-    # tests/test_similarity_index.py keeps SIM.pq_topk itself pinned).
-    # This face lands SECOND in the driver's sorted sweep, so it pins
-    # the warm serve-from-cache shape; ``embedding_pq_index_topk`` (the
-    # alphabetically earlier twin) pins cold build+serve.
-    from ..ext import pq_index as PQX
-
-    emb = table(spark, sf_dir, "embeddings")
-    path = _pq_index_for(spark, sf_dir)
-    return PQX.pq_topk_from_index(
-        spark, path, emb.filter(F.col("vec_id") < 10), k=5
-    )
-
-
 # --------------------------------------------------------------------------
-# Persisted-PQ serve path (ext.pq_index): identical results to
-# embedding_pq_topk (same oracle), but the expensive codebook fit + code
-# assignment runs ONCE per corpus — the index is cached on disk keyed by
-# a fingerprint of the embeddings parquet (path+size+mtime+params), so a
-# regenerated corpus rebuilds and a repeat call serves from the code
-# table alone. The build is crash-safe: staged to a tmp dir and renamed
+# Persisted-PQ serve path (ext.pq_index): identical results to the
+# fit-per-call ``SIM.pq_topk`` (same oracle; tests pin the two equal), but
+# the expensive codebook fit + code assignment runs ONCE per corpus — the
+# index is cached on disk keyed by a fingerprint of the embeddings
+# parquet (path+size+mtime+params), so a regenerated corpus rebuilds and
+# a repeat call serves from the code table alone. The build is crash-safe: staged to a tmp dir and renamed
 # into the fingerprint path atomically.
 # --------------------------------------------------------------------------
 def _pq_index_for(spark: SparkSession, sf_dir: str) -> str:
@@ -1585,7 +1562,13 @@ def _pq_index_for(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
+# ``embedding_pq_topk`` is a second registry name for the same query.
+# The driver's sweep runs queries in sorted name order, so
+# ``embedding_pq_index_topk`` runs first and pins the cold build+serve
+# shape, and ``embedding_pq_topk`` runs second and pins the warm
+# serve-from-cache shape.
 @register("embedding_pq_index_topk", oracle=_pq_topk_oracle())
+@register("embedding_pq_topk", oracle=_pq_topk_oracle())
 def embedding_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext import pq_index as PQX
 

@@ -22,9 +22,7 @@ Semantics preserved exactly:
 Scale: the pipeline is stateless (no watermarks/state stores needed), so
 throughput scales with source partitions — on a real cluster, match Kafka
 topic partitions to executor cores and the micro-batch parallelizes for
-free. A ``foreachBatch`` fusion is provided for multi-sink delivery so the
-source is consumed ONCE (the reference ran two independent queries re-
-reading the topic, ``stream_inference.py:159-181``).
+free.
 """
 
 from __future__ import annotations
@@ -239,27 +237,6 @@ def memory_sink(responses: DataFrame, query_name: str, checkpoint_dir: str | Non
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     return writer.start()
-
-
-def foreach_batch_multi_sink(responses: DataFrame, sinks: list[Callable[[DataFrame, int], None]], checkpoint_dir: str):
-    """Fuse N sinks into ONE streaming query via foreachBatch — the source
-    is consumed once per micro-batch (the reference's two parallel queries
-    each re-read the topic)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for sink in sinks:
-                sink(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return (
-        responses.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
 
 
 def console_sink(responses: DataFrame, truncate: bool = False):

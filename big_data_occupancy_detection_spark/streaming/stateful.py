@@ -66,124 +66,3 @@ def running_user_stats(events: DataFrame, alpha: float = EMA_ALPHA) -> DataFrame
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4): the successor API to
-# applyInPandasWithState — typed state handles (value/list/map), timers,
-# and RocksDB-only state storage. Same running-stats semantics as
-# running_user_stats so the two APIs are comparable side by side.
-# ---------------------------------------------------------------------------
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum) via ``transformWithStateInPandas``.
-
-    State is a typed ValueState carried by the RocksDB state store
-    (``spark.sql.streaming.stateStore.providerClass`` must point at the
-    RocksDB provider — transformWithState does not support the HDFS-backed
-    store). Emits one row per touched user per micro-batch.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", "n LONG, total DOUBLE")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, total = (
-                tuple(self._state.get()) if self._state.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += int(len(pdf))
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 6)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming training-pair generation: the stateful twin of
-# plans/events.py:next_event_training_pairs. State is the per-user tail
-# of the last 3 event types; each arriving event emits one
-# (context, label) example when the tail is complete, then shifts into
-# it. Append-mode output — one row per event, not per key — so the
-# emitted example set is EXACTLY the batch operator's output when events
-# arrive in (ts, event_id) order across micro-batches (rows within a
-# batch are sorted with nulls FIRST, matching Spark's window order;
-# cross-batch order is the ingest contract, as with any changelog — a
-# null-ts event globally sorts to its user's timeline head, so in-order
-# ingest delivers it in that user's first batch). A null event type
-# shifts into the tail and poisons the
-# next 3 contexts on both paths (the batch twin's lag() carries the null
-# into the all-non-null filter).
-# ---------------------------------------------------------------------------
-
-PAIRS_STATE_SCHEMA = "t3 STRING, t2 STRING, t1 STRING"
-PAIRS_OUTPUT_SCHEMA = (
-    "user_id LONG, event_id LONG, context STRING, label STRING"
-)
-
-
-def streaming_training_pairs(events: DataFrame) -> DataFrame:
-    """(user_id, event_id, context, label) examples from an event stream,
-    context = previous 3 event types per user, carried across batches."""
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        (user_id,) = key
-        t3, t2, t1 = state.get if state.exists else (None, None, None)
-        out = []
-        chunks = [pdf for pdf in pdfs]
-        if chunks:
-            # na_position='first': Spark's Window.orderBy sorts nulls
-            # FIRST (asc), pandas defaults NaT LAST — a null-ts event
-            # must fold in the same position as the batch twin's lag()
-            batch = pd.concat(chunks).sort_values(
-                ["ts", "event_id"], na_position="first"
-            )
-            for ev_id, ev_type in zip(batch["event_id"], batch["event_type"]):
-                label = None if pd.isna(ev_type) else ev_type
-                if t3 is not None and t2 is not None and t1 is not None:
-                    out.append(
-                        {
-                            "user_id": user_id,
-                            "event_id": int(ev_id),
-                            "context": f"{t3}|{t2}|{t1}",
-                            "label": label,
-                        }
-                    )
-                t3, t2, t1 = t2, t1, label
-        state.update((t3, t2, t1))
-        yield pd.DataFrame(
-            out, columns=["user_id", "event_id", "context", "label"]
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=PAIRS_OUTPUT_SCHEMA,
-        stateStructType=PAIRS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -84,60 +84,6 @@ def test_registry_query_contract_on_real_documents(spark):
     assert any(not r.bloom_candidate for r in rows)
 
 
-def test_streaming_bloom_merge_equals_batch_build(spark, tmp_path):
-    """Mergeability across micro-batches: a Bloom accumulated via
-    foreachBatch must equal the filter built over all keys at once, and
-    its driver-side probes must agree with the distributed
-    bloom_contains verdicts."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from big_data_occupancy_detection_spark.ext.sketches import (
-        BloomAccumulator,
-    )
-
-    keys = [f"key-{i}" for i in range(400)]
-    src = tmp_path / "src"
-    src.mkdir()
-    for i in range(3):
-        pq.write_table(
-            pa.table({"k": keys[i * 140 : (i + 1) * 140]}),
-            src / f"b{i}.parquet",
-        )
-    # 400 keys deliberately saturate a 2048-bit filter (~62% fill) to
-    # exercise merge equality — lift the r10 saturation ceiling for it
-    acc = BloomAccumulator(n_words=64, max_fill=1.0)
-    q = (
-        spark.readStream.schema("k string")
-        .parquet(str(src))
-        .writeStream.foreachBatch(acc.foreach_batch("k"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    all_keys = spark.createDataFrame([(k,) for k in keys], ["k"])
-    batch_words = {
-        r.word_idx: r.word
-        for r in bloom_build(all_keys, "k", n_words=64).collect()
-    }
-    assert acc.words == batch_words
-
-    probe = spark.createDataFrame(
-        [(k,) for k in keys[:20] + [f"unseen-{i}" for i in range(20)]], ["k"]
-    )
-    dist = {
-        r.k: r.might_contain
-        for r in bloom_contains(
-            acc.as_dataframe(spark), probe, "k", n_words=64
-        ).collect()
-    }
-    for k, want in dist.items():
-        assert acc.might_contain(k) == want
-    assert all(dist[k] for k in keys[:20])  # no false negatives
-
-
 def test_contains_preserves_row_multiplicity(spark):
     """A raw ingest batch carries duplicates; the probe must return one
     output row per input row, not collapse them."""
@@ -173,45 +119,3 @@ def test_bloom_null_keys_definitely_absent(spark):
     assert got[None] is False  # definitely absent, never a bare-seed hit
     # row-preservation with nulls intact
     assert len(got) == 3
-
-
-def test_bloom_accumulator_saturation_guard(spark):
-    """Round-10 verdict item 2: the accumulated filter must fail LOUDLY
-    as it saturates (fpr -> 1 silently starves a bloom-prescreened
-    crawl), with the rejected batch NOT applied — the max_keys contract
-    on the bit axis — and warn past warn_fill."""
-    import warnings
-
-    import pytest
-
-    from big_data_occupancy_detection_spark.ext.sketches import (
-        BloomAccumulator,
-    )
-
-    # 2 words = 64 bits: a handful of keys saturates it
-    acc = BloomAccumulator(n_words=2, k=5)
-    b1 = spark.createDataFrame([("a",), ("b",)], "k string")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # under-threshold merge is silent
-        # pyspark leaves collect sockets for the GC to close; a
-        # ResourceWarning from that is not the accumulator's
-        warnings.simplefilter("ignore", ResourceWarning)
-        acc.merge_batch(b1, "k")
-    words_before = dict(acc.words)
-    fill_before = acc.fill_ratio()
-    assert 0 < fill_before <= 0.25
-    big = spark.createDataFrame([(f"k{i}",) for i in range(50)], "k string")
-    with pytest.raises(ValueError, match="fill"):
-        acc.merge_batch(big, "k")
-    # state unchanged: the batch was NOT applied
-    assert acc.words == words_before
-    assert acc.fill_ratio() == fill_before
-    # warn band: a merge that lands between warn_fill and max_fill warns
-    warner = BloomAccumulator(n_words=2, k=5, warn_fill=0.01, max_fill=1.0)
-    with pytest.warns(RuntimeWarning, match="fill"):
-        warner.merge_batch(b1, "k")
-    # fill accounting matches the popcount of the committed words
-    assert warner.fill_ratio() == sum(
-        w.bit_count() for w in warner.words.values()
-    ) / (2 * 32)
-    assert warner.estimated_fpr() == warner.fill_ratio() ** 5

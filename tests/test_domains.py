@@ -207,93 +207,6 @@ def test_canonical_url_edges(spark):
     assert out[10] == "https://example.com/x"
 
 
-def test_domain_dedup_accumulator_matches_batch_census(spark):
-    """Streaming twin contract: after any batch split, the accumulator's
-    per-domain (n_docs, distinct, dedup_rate) equals the one-shot batch
-    census domain_dedup_stats EXACTLY while domains are in the KMV exact
-    regime (distinct <= k); redelivered batches are no-ops; NULL texts
-    are excluded like the batch operator."""
-    rows = (
-        [("a.com", f"t{i % 4}", i) for i in range(12)]        # 4 distinct
-        + [("b.com", f"u{i}", 100 + i) for i in range(5)]     # all unique
-        + [("a.com", None, 990), (None, "x", 991)]            # excluded
-    )
-    df = spark.createDataFrame(rows, "domain string, text string, i long")
-    acc = DOM.DomainDedupAccumulator(k=64)
-    fn = acc.foreach_batch("domain", "text")
-    for bid, (lo, hi) in enumerate(((0, 6), (6, 103), (103, 1000))):
-        fn(df.filter((F.col("i") >= lo) & (F.col("i") < hi)), bid)
-    fn(df.filter(F.col("i") < 6), 0)  # redelivery: must be a no-op
-
-    # no pre-filter: the batch operator itself must exclude NULL texts
-    # and NULL domains (r9 advice — the parity only held before because
-    # this test filtered them out on the batch side)
-    batch = {
-        r["domain"]: (r["n_docs"], r["n_unique_texts"], r["dup_rate"])
-        for r in DOM.domain_dedup_stats(df, "domain", "text").collect()
-    }
-    assert set(batch) == {"a.com", "b.com"}  # no NULL-domain row either
-    for dom in ("a.com", "b.com"):
-        n, uniq, rate = batch[dom]
-        assert acc.n_docs(dom) == n
-        assert acc.distinct_estimate(dom) == float(uniq)  # exact regime
-        # batch census rounds to 6 digits (portable_round); the live
-        # monitor reports the raw double — compare at that precision
-        assert abs(acc.dedup_rate(dom) - rate) < 1e-6
-    assert acc.dedup_rate("never-seen") is None
-
-    # estimate regime: k smaller than the distinct count -> bounded, not
-    # exact; rate stays clamped to [0, 1]
-    small = DOM.DomainDedupAccumulator(k=8)
-    small.merge_batch(df.filter(F.col("text").isNotNull()), "domain", "text")
-    est = small.distinct_estimate("b.com")
-    assert est > 0
-    assert 0.0 <= small.dedup_rate("b.com") <= 1.0
-
-
-def test_domain_dedup_accumulator_max_keys_trips_loudly(spark):
-    """Round-9 verdict item 2: the KEY axis is capped like KsDrift's —
-    over-cap batches fail loudly and leave state UNAPPLIED (no partial
-    counts for a foreachBatch retry to double-apply)."""
-    import pytest
-
-    acc = DOM.DomainDedupAccumulator(k=8, max_keys=3)
-    df1 = spark.createDataFrame(
-        [("a.com", "x"), ("b.com", "y")], "domain string, text string"
-    )
-    acc.merge_batch(df1, "domain", "text")
-    assert acc.n_docs("a.com") == 1
-    df2 = spark.createDataFrame(
-        [("c.com", "z"), ("d.com", "w")], "domain string, text string"
-    )
-    with pytest.raises(ValueError, match="max_keys"):
-        acc.merge_batch(df2, "domain", "text")
-    # state unchanged: neither counts nor KMV saw the failed batch
-    assert acc.n_docs("c.com") == 0
-    assert sorted(acc.counts) == ["a.com", "b.com"]
-    assert sorted(acc.kmv.state) == ["a.com", "b.com"]
-    # a retry under a raised cap applies cleanly, no double count
-    acc.max_keys = acc.kmv.max_keys = 10
-    acc.merge_batch(df2, "domain", "text")
-    assert acc.n_docs("c.com") == 1
-
-
-def test_kmv_accumulator_max_keys_trips_loudly(spark):
-    import pytest
-
-    from big_data_occupancy_detection_spark.ext.sketches import KmvAccumulator
-
-    acc = KmvAccumulator(k=8, max_keys=2)
-    df1 = spark.createDataFrame([("g1", "a"), ("g2", "b")], "g string, v string")
-    acc.merge_batch(df1, "v", "g")
-    assert sorted(acc.state) == ["g1", "g2"]
-    df2 = spark.createDataFrame([("g3", "c")], "g string, v string")
-    with pytest.raises(ValueError, match="max_keys"):
-        acc.merge_batch(df2, "v", "g")
-    assert sorted(acc.state) == ["g1", "g2"]  # batch NOT applied
-    assert "g3" not in acc.truncated
-
-
 def test_canonical_url_is_idempotent(spark):
     """Canonicalization must be a projection: applying it to its own
     output changes nothing (otherwise two dedup passes could disagree).
@@ -416,105 +329,6 @@ def test_frontier_seen_scan_plan_is_map_only(spark):
     # (broadcast exchanges excluded - they're the point)
     shuffles = re.findall(r"Exchange (?!SinglePartition)hashpartitioning", plan)
     assert len(shuffles) <= 1, plan
-
-
-def test_frontier_dedup_accumulator_stream_twin(spark):
-    """Bloom-only mode: misses are emitted (definitely novel), hits are
-    suppressed; with exact_seen the split is exact; replay is a no-op."""
-    acc = DOM.FrontierDedupAccumulator(n_words=64)
-    emitted = []
-    sink = lambda df: emitted.append(
-        sorted((r["doc_id"], r["canonical_url"]) for r in df.collect())
-    )
-    fn = acc.foreach_batch("url", "doc_id", sink)
-    b1 = spark.createDataFrame(
-        [(1, "https://a.com/x"), (2, "https://A.com:443/x/")],
-        "doc_id long, url string",
-    )
-    b2 = spark.createDataFrame(
-        [(3, "https://a.com/x?utm_source=f"),   # dup of batch-1's resource
-         (4, "https://b.com/y")],               # novel
-        "doc_id long, url string",
-    )
-    fn(b1, 0)
-    fn(b2, 1)
-    fn(b2, 1)  # redelivery: no re-sink, no re-merge
-    assert emitted == [
-        [(1, "https://a.com/x")],
-        [(4, "https://b.com/y")],
-    ]
-    # exact_seen mode rescues bloom false positives: an empty seen frame
-    # means EVERYTHING bloom-positive is re-checked and kept
-    fresh = DOM.FrontierDedupAccumulator(n_words=64)
-    fresh.merge_batch(b1, "url", "doc_id")
-    empty_seen = spark.createDataFrame([], "canonical_url string")
-    got = sorted(
-        (r["doc_id"], r["canonical_url"])
-        for r in fresh.novel_in_batch(
-            b2, "url", "doc_id", exact_seen=empty_seen
-        ).collect()
-    )
-    assert got == [(3, "https://a.com/x"), (4, "https://b.com/y")]
-
-
-def test_frontier_accumulator_structured_streaming_e2e(spark, tmp_path):
-    """Real readStream drive (not hand-called foreachBatch): a JSON file
-    stream of discovered URLs through FrontierDedupAccumulator.
-    foreach_batch — novel emissions per micro-batch must match the
-    batch-face replay over the same batch sequence."""
-    import json as _json
-
-    src = tmp_path / "urls_src"
-    src.mkdir()
-    ckpt = tmp_path / "ckpt"
-    acc = DOM.FrontierDedupAccumulator(n_words=128)
-    emitted = []
-    fn = acc.foreach_batch(
-        "url", "doc_id",
-        lambda df: emitted.append(
-            sorted((r["doc_id"], r["canonical_url"]) for r in df.collect())
-        ),
-    )
-    stream = (
-        spark.readStream.format("json")
-        .schema("doc_id long, url string")
-        .load(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", str(ckpt))
-        .start()
-    )
-    batches = [
-        [(1, "https://a.com/x"), (2, "HTTPS://A.com:443/x/")],
-        [(3, "https://a.com/x?utm_source=f"), (4, "https://b.com/y")],
-        [(5, "https://b.com/y#frag"), (6, "https://c.com/z")],
-    ]
-    try:
-        for i, rows in enumerate(batches):
-            with open(src / f"b{i}.json", "w") as f:
-                f.write("\n".join(
-                    _json.dumps({"doc_id": d, "url": u}) for d, u in rows
-                ))
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    assert emitted == [
-        [(1, "https://a.com/x")],
-        [(4, "https://b.com/y")],
-        [(6, "https://c.com/z")],
-    ]
-    # batch-face replay agrees: running frontier_novel_urls with the
-    # accumulated seen set at each step yields the same novel rows
-    seen = spark.createDataFrame([], "canonical_url string")
-    for rows, expect in zip(batches, emitted):
-        b = spark.createDataFrame(rows, "doc_id long, url string")
-        novel = DOM.frontier_novel_urls(b, seen, n_words=128)
-        got = sorted(
-            (r["doc_id"], r["canonical_url"]) for r in novel.collect()
-        )
-        assert got == expect
-        seen = DOM.frontier_updated_seen(seen, novel).localCheckpoint()
 
 
 def test_frontier_bucketed_seen_prunes_partitions(spark, tmp_path, monkeypatch):

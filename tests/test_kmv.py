@@ -94,113 +94,6 @@ def test_kmv_estimator_envelope_and_union(spark):
     assert abs(inter_est - 1000) / 1000 < 0.5  # intersection noisier
 
 
-def test_kmv_accumulator_equals_batch_sketch(spark):
-    """Streaming twin: per-batch KMV sketches merged by bottom-k union
-    must equal the one-shot sketch over the union of all batches — the
-    mergeability contract that makes KMV the streaming distinct counter."""
-    from big_data_occupancy_detection_spark.ext.sketches import (
-        KmvAccumulator,
-        kmv_sketch,
-    )
-
-    batches = [
-        [("A", f"a{i}") for i in range(400)],
-        [("A", f"a{i}") for i in range(200, 700)] + [("B", f"b{i}") for i in range(50)],
-        [("B", f"b{i}") for i in range(30, 90)] + [("A", f"x{i}") for i in range(100)],
-    ]
-    k = 64
-    acc = KmvAccumulator(k=k)
-    for rows in batches:
-        acc.merge_batch(spark.createDataFrame(rows, "g string, k string"), "k", "g")
-
-    union = spark.createDataFrame(
-        [r for rows in batches for r in rows], "g string, k string"
-    )
-    want_sk, _ = kmv_sketch(union, "k", "g", k=k)
-    want = {(r["g"], r["h"], r["r"]) for r in want_sk.collect()}
-    got = {(r["g"], r["h"], r["r"]) for r in acc.as_dataframe(spark).collect()}
-    assert got == want
-
-    # estimates: A has 800 distinct (> k, estimator), B has 90 (> k at 64)
-    assert abs(acc.estimate("A") - 800) / 800 < 0.35
-    assert acc.estimate("missing") == 0.0
-
-
-def test_kmv_accumulator_exact_at_k_boundary(spark):
-    """r6 advice: a group with EXACTLY k true distincts never truncated,
-    so its estimate must be the exact count (len(hs)==k), matching
-    kmv_distinct_estimate's n_distinct<=k branch — not the biased
-    (k-1)·M/h_k estimator the old len(hs)<k check fell through to.
-    One distinct past k flips the group to the estimator."""
-    from big_data_occupancy_detection_spark.ext.sketches import KmvAccumulator
-
-    k = 16
-    acc = KmvAccumulator(k=k)
-    # batch 1: group E gets exactly k distincts (split over 2 batches to
-    # prove the flag survives merges that stay exhaustive)
-    acc.merge_batch(
-        spark.createDataFrame(
-            [("E", f"e{i}") for i in range(10)], "g string, k string"
-        ),
-        "k",
-        "g",
-    )
-    acc.merge_batch(
-        spark.createDataFrame(
-            # overlap e5..e9 + new e10..e15 → union is exactly k=16
-            [("E", f"e{i}") for i in range(5, 16)],
-            "g string, k string",
-        ),
-        "k",
-        "g",
-    )
-    assert len(acc.state["E"]) == k
-    assert "E" not in acc.truncated
-    assert acc.estimate("E") == float(k)  # exact, even at len==k
-
-    # one more distinct → truncation → estimator takes over
-    acc.merge_batch(
-        spark.createDataFrame([("E", "e16")], "g string, k string"), "k", "g"
-    )
-    assert "E" in acc.truncated
-    est = acc.estimate("E")
-    assert est != float(k) and est > 0.0
-
-
-def test_kmv_accumulator_merge_touches_only_batch_groups(spark):
-    """r6 advice: merge_batch must not re-sort the whole state — a batch
-    touching only group B leaves group A's list object identical."""
-    from big_data_occupancy_detection_spark.ext.sketches import KmvAccumulator
-
-    acc = KmvAccumulator(k=8)
-    acc.merge_batch(
-        spark.createDataFrame(
-            [("A", f"a{i}") for i in range(20)], "g string, k string"
-        ),
-        "k",
-        "g",
-    )
-    a_before = list(acc.state["A"])
-    a_id = id(acc.state["A"])
-    acc.merge_batch(
-        spark.createDataFrame(
-            [("B", f"b{i}") for i in range(3)], "g string, k string"
-        ),
-        "k",
-        "g",
-    )
-    assert acc.state["A"] == a_before
-    assert id(acc.state["A"]) == a_id  # untouched, not rebuilt
-    assert acc.estimate("B") == 3.0
-    # A had 20 distincts in ONE batch at k=8: kmv_sketch trims it to k
-    # rows BEFORE merge_batch sees it, so truncation must come from the
-    # counts frame (round-7 review) — estimate uses the estimator, never
-    # a claimed-exact 8.0
-    assert "A" in acc.truncated
-    est = acc.estimate("A")
-    assert est != 8.0 and abs(est - 20) / 20 < 0.8
-
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 

@@ -105,52 +105,6 @@ def test_fuzzy_pairs_edit1_known_cases(spark):
     assert (5, 3) not in pairs and (3, 5) not in pairs
 
 
-def test_streaming_cms_merge_equals_batch_build(spark, tmp_path, sf_dir):
-    """Mergeability: a CMS accumulated over stream micro-batches must
-    equal the grid built over all the data at once, and its estimates
-    must match the distributed cms_estimate path."""
-    import pyarrow.parquet as pq
-    import pyarrow as pa
-
-    ev = table(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("key")
-    )
-    pdf = ev.toPandas()
-    src = tmp_path / "src"
-    src.mkdir()
-    third = len(pdf) // 3 + 1
-    for i in range(3):
-        pq.write_table(
-            pa.Table.from_pandas(pdf[i * third : (i + 1) * third]),
-            src / f"b{i}.parquet",
-        )
-    acc = SK.CmsAccumulator()
-    stream = (
-        spark.readStream.schema("key string").parquet(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(acc.foreach_batch("key"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    batch_grid = {
-        (r.seed, r.bucket): r.cnt for r in SK.cms_build(ev, "key").collect()
-    }
-    assert acc.grid == batch_grid
-    some_keys = [r.key for r in ev.distinct().limit(20).collect()]
-    dist_est = {
-        r.key: r.est
-        for r in SK.cms_estimate(
-            SK.cms_build(ev, "key"),
-            spark.createDataFrame([(k,) for k in some_keys], ["key"]),
-        ).collect()
-    }
-    for k in some_keys:
-        assert acc.estimate(k) == dist_est[k]
-
-
 def test_repetition_features_discriminate_boilerplate(spark):
     """Gopher-style within-doc repetition: crafted docs must separate
     cleanly (the synthetic corpus is single-line and non-repetitive, so

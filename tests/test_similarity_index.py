@@ -225,58 +225,6 @@ def test_append_to_pq_index_frozen_codebooks(spark, emb, tmp_path):
     assert served[0]["vec_id"] == clone_id and served[0]["rnk"] == 1
 
 
-def test_streaming_ann_serve_matches_batch(spark, emb, pq_path, tmp_path):
-    """Query batches served over the stream equal the batch serve, and a
-    replayed batch is idempotent (same dir, same rows)."""
-    import json as _json
-
-    from big_data_occupancy_detection_spark.streaming.ann_serve import (
-        ann_serve_sink,
-        read_served_results,
-    )
-
-    src = tmp_path / "q_src"
-    src.mkdir()
-    out = tmp_path / "ann_out"
-    qsets = [[0, 1, 2], [3, 4]]
-    rows = {r["vec_id"]: list(r["embedding"]) for r in emb.filter(
-        "vec_id < 5").collect()}
-    import time as _t
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("vec_id long, embedding array<float>")
-        .load(str(src))
-    )
-    q = ann_serve_sink(
-        stream, pq_path, str(out), str(tmp_path / "ann_ckpt"), k=3
-    )
-    try:
-        for i, ids in enumerate(qsets):
-            with open(src / f"b{i}.json", "w") as f:
-                f.write(
-                    "\n".join(
-                        _json.dumps({"vec_id": v, "embedding": rows[v]})
-                        for v in ids
-                    )
-                )
-            _t.sleep(0.1)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r.qid, r.vec_id, r.rnk)
-        for r in read_served_results(spark, str(out)).collect()
-    }
-    want = {
-        (r.qid, r.vec_id, r.rnk)
-        for r in pqx.pq_topk_from_index(
-            spark, pq_path, emb.filter("vec_id < 5"), k=3
-        ).collect()
-    }
-    assert got == want
-
-
 def test_pq_serve_tolerates_empty_cluster_cid_gaps(spark, tmp_path):
     """Duplicate-heavy corpora collapse seed centroids: the assignment
     tie-break sends every point to the SMALLEST of two identical seeds,

@@ -243,56 +243,6 @@ def test_scoring_micro_batch_is_one_task(spark, tmp_path, trained_model):
     assert answered == {CASES[name]["request_id"] for name in names}
 
 
-def test_foreach_batch_multi_sink(spark, tmp_path, trained_model):
-    """foreachBatch fusion: two sinks, ONE source consumption — including
-    the single-EXECUTION guarantee: an accumulator tagged onto every
-    upstream row must end at exactly the row count, proving the batch plan
-    materialized once (the persist inside the handler) and both sinks read
-    the cache rather than re-executing the pipeline the way the
-    reference's two independent queries re-read the topic."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType
-
-    from big_data_occupancy_detection_spark.streaming.inference import (
-        foreach_batch_multi_sink,
-        to_response_json,
-    )
-
-    src = tmp_path / "requests"
-    src.mkdir()
-    _write_requests(src, "b.json", [CASES["valid"], CASES["null_field"]])
-
-    executions = spark.sparkContext.accumulator(0)
-
-    @F.udf(StringType())
-    def tag(v):  # test-only instrumentation, not engine code
-        executions.add(1)
-        return v
-
-    sink_a: list[int] = []
-    sink_b: list[int] = []
-
-    def a(df, batch_id):
-        sink_a.append(df.count())
-
-    def b(df, batch_id):
-        sink_b.append(df.count())
-
-    raw = file_source(spark, str(src))
-    responses = to_response_json(
-        build_inference_pipeline(raw, model_score(trained_model))
-    ).withColumn("value", tag(F.col("value")))
-    query = foreach_batch_multi_sink(responses, [a, b], str(tmp_path / "ckpt"))
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    assert sum(sink_a) == 2
-    assert sum(sink_b) == 2
-    # 2 rows, 2 sinks: a re-executing plan would tag 4+ rows
-    assert executions.value == 2
-
-
 def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     """T4 hardened: stop a checkpointed file->file query, restart it from
     the SAME checkpoint with old + new input present, and assert the output

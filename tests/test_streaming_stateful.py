@@ -63,169 +63,3 @@ def test_running_user_stats_across_batches(spark, tmp_path):
         )
     finally:
         q.stop()
-
-
-def test_transform_with_state_across_batches(spark, tmp_path):
-    """transformWithStateInPandas: typed ValueState carries across
-    micro-batches on the RocksDB state store.
-
-    The state protocol between the JVM and the Python driver worker is
-    protobuf-based; without the google.protobuf package the worker dies at
-    handshake (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE), so this
-    skips where the dependency is absent — full attempt log in PERF.md."""
-    import pytest
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from big_data_occupancy_detection_spark.streaming.stateful import (
-        running_user_totals_tws,
-    )
-
-    prior = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = tmp_path / "ev"
-        src.mkdir()
-        (src / "b1.json").write_text("\n".join(json.dumps(e) for e in BATCH1))
-        stream = (
-            spark.readStream.format("json")
-            .schema("ts timestamp, user_id long, value double")
-            .option("maxFilesPerTrigger", "1")
-            .load(str(src))
-        )
-        q = (
-            running_user_totals_tws(stream)
-            .writeStream.format("memory")
-            .queryName("user_totals_tws")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            first = {r.user_id: r for r in spark.table("user_totals_tws").collect()}
-            assert (first[1].n_events, first[1].total_value) == (2, 30.0)
-            assert (first[2].n_events, first[2].total_value) == (1, 5.0)
-
-            (src / "b2.json").write_text("\n".join(json.dumps(e) for e in BATCH2))
-            q.processAllAvailable()
-            rows = spark.table("user_totals_tws").collect()
-            latest = max(
-                (r for r in rows if r.user_id == 1), key=lambda r: r.n_events
-            )
-            assert (latest.n_events, latest.total_value) == (3, 60.0)
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-
-
-def test_streaming_training_pairs_equals_batch_across_restart(spark, tmp_path):
-    """The stateful training-pair stream must emit EXACTLY the batch
-    operator's rows — across micro-batches AND across a checkpointed
-    stop/restart (no dupes, no misses, tail state recovered)."""
-    import json as _json
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from big_data_occupancy_detection_spark.streaming.stateful import (
-        streaming_training_pairs,
-    )
-
-    def ev(m, u, i, t):
-        return {
-            "ts": f"2026-01-01T09:{m:02d}:00",
-            "user_id": u,
-            "event_id": i,
-            "event_type": t,
-        }
-
-    b1 = [ev(0, 1, 10, "view"), ev(1, 1, 11, "cart"), ev(2, 2, 20, "view")]
-    b2 = [ev(3, 1, 12, "view"), ev(4, 1, 13, "purchase"), ev(5, 2, 21, "cart")]
-    b3 = [ev(6, 1, 14, "view"), ev(7, 2, 22, "view"), ev(8, 2, 23, "purchase")]
-    # null-ts event: Spark windows sort nulls FIRST, pandas NaT defaults
-    # LAST — the divergence under test. It globally sorts to the head of
-    # user 2's timeline, so the in-order ingest contract puts it in the
-    # user's FIRST batch; na_position='first' must fold it before event
-    # 20 within that batch.
-    b1.append({"ts": None, "user_id": 2, "event_id": 24, "event_type": "error"})
-
-    src = tmp_path / "ev"
-    src.mkdir()
-    schema = "ts timestamp, user_id long, event_id long, event_type string"
-
-    def start():
-        stream = (
-            spark.readStream.format("json")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(str(src))
-        )
-        return (
-            streaming_training_pairs(stream)
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / "out"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .outputMode("append")
-            .start()
-        )
-
-    (src / "b1.json").write_text("\n".join(_json.dumps(e) for e in b1))
-    (src / "b2.json").write_text("\n".join(_json.dumps(e) for e in b2))
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # restart from the checkpoint, then feed batch 3
-    (src / "b3.json").write_text("\n".join(_json.dumps(e) for e in b3))
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        (r.user_id, r.event_id, r.context, r.label)
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
-    }
-
-    # batch twin over the full event set (same construction as
-    # plans/events.py:next_event_training_pairs)
-    all_ev = spark.createDataFrame(
-        [tuple(e.values()) for e in b1 + b2 + b3],
-        "ts string, user_id long, event_id long, event_type string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    expect = {
-        (r.user_id, r.event_id, r.context, r.label)
-        for r in all_ev.select(
-            "user_id",
-            "event_id",
-            F.col("event_type").alias("label"),
-            F.lag("event_type", 3).over(w).alias("t3"),
-            F.lag("event_type", 2).over(w).alias("t2"),
-            F.lag("event_type", 1).over(w).alias("t1"),
-        )
-        .filter(
-            F.col("t3").isNotNull()
-            & F.col("t2").isNotNull()
-            & F.col("t1").isNotNull()
-        )
-        .select(
-            "user_id",
-            "event_id",
-            F.concat_ws("|", "t3", "t2", "t1").alias("context"),
-            "label",
-        )
-        .collect()
-    }
-    assert expect, "test data must produce at least one example"
-    assert got == expect

@@ -302,238 +302,3 @@ def test_asof_registry_queries_not_vacuous(spark):
     assert nn > 0 and n - nn > 0, (n, nn)  # matches AND out-of-tolerance nulls
     n, nn = counts("user_features_point_in_time", "n_events_before")
     assert n > 0 and nn > 0, (n, nn)
-
-
-def test_cusum_accumulator_equals_one_shot_fold(spark):
-    """Streaming CUSUM twin (round 7): sequential per-batch application
-    over time-ordered batches is BIT-IDENTICAL to the one-shot fold —
-    left folds compose over ordered concatenation even though max(0,·)
-    is not mergeable. Null ts/value rows are excluded like the batch
-    query; unseen keys read 0.0."""
-    from big_data_occupancy_detection_spark.operators.temporal import (
-        CusumAccumulator,
-    )
-
-    K = 50.0
-    rows = []
-    vals = {}
-    for i in range(90):
-        u = i % 3
-        v = float((i * 37) % 113)
-        rows.append((u, i, v))
-        vals.setdefault(u, []).append(v)
-    # a null value and a null order key must be ignored
-    rows.append((1, None, 999.0))
-    rows.append((2, 91, None))
-
-    df = spark.createDataFrame(rows, "user_id long, ts long, value double")
-    acc = CusumAccumulator(k=K)
-    # three time-ordered batches (append-only ingest contract)
-    for lo, hi in ((0, 30), (30, 60), (60, 95)):
-        acc.merge_batch(
-            df.filter(
-                (F.col("ts") >= lo) & (F.col("ts") < hi)
-                | F.col("ts").isNull()
-            ),
-            "user_id",
-            ["ts"],
-            "value",
-        )
-
-    for u, ys in vals.items():
-        s = 0.0
-        for y in ys:
-            s = max(0.0, s + y - K)
-        assert acc.value(u) == s, u  # bit-identical, not approx
-        assert acc.counts[u] == len(ys)
-        assert acc.drifted(u, h=0.0) == (s > 0.0)
-    assert acc.value("never-seen") == 0.0 and not acc.drifted("never-seen", 5)
-
-
-def test_cusum_accumulator_null_key_state_survives_batches(spark):
-    """r7 review: a NULL key is a real group (the batch twin's groupBy
-    emits one) — the seed join must be null-safe, or the NULL group's
-    fold silently restarts at 0.0 every batch while counts accumulate."""
-    from big_data_occupancy_detection_spark.operators.temporal import (
-        CusumAccumulator,
-    )
-
-    K = 10.0
-    ys = [30.0, 5.0, 40.0, 2.0, 25.0, 33.0]
-    acc = CusumAccumulator(k=K)
-    df = spark.createDataFrame(
-        [(None, i, y) for i, y in enumerate(ys)],
-        "user_id long, ts long, value double",
-    )
-    for lo, hi in ((0, 2), (2, 4), (4, 6)):
-        acc.merge_batch(
-            df.filter((F.col("ts") >= lo) & (F.col("ts") < hi)),
-            "user_id",
-            ["ts"],
-            "value",
-        )
-    s = 0.0
-    for y in ys:
-        s = max(0.0, s + y - K)
-    assert acc.value(None) == s
-    assert acc.counts[None] == len(ys)
-
-
-def test_ks_drift_accumulator_exact_and_order_independent(spark):
-    """The streaming KS must (1) equal an independent integer-arithmetic
-    fold over the raw values, (2) be identical for ANY batch split of
-    the same rows (counts merge, unlike CUSUM's ordered fold), and (3)
-    exclude null keys/values like the batch twin."""
-    from big_data_occupancy_detection_spark.operators.temporal import (
-        KsDriftAccumulator,
-    )
-
-    # reference: triangular-ish integer cents; live: shifted version
-    ref_rows = [("a", (i * 13) % 40) for i in range(200)] + [
-        ("b", (i * 7) % 25) for i in range(120)
-    ]
-    live_rows = [("a", ((i * 11) % 40) + 5) for i in range(150)] + [
-        ("b", (i * 7) % 25) for i in range(90)  # same shape -> small D
-    ]
-    live_rows += [(None, 3), ("a", None)]  # must be ignored
-
-    ref_df = spark.createDataFrame(ref_rows, "k string, v long")
-    acc = KsDriftAccumulator()
-    acc.set_reference(ref_df, "k", "v")
-
-    live_df = spark.createDataFrame(
-        [(k, v, i) for i, (k, v) in enumerate(live_rows)],
-        "k string, v long, i long",
-    )
-    # three arbitrary batch splits
-    for lo, hi in ((0, 100), (100, 200), (200, 400)):
-        acc.merge_batch(
-            live_df.filter((F.col("i") >= lo) & (F.col("i") < hi)), "k", "v"
-        )
-
-    # one-shot twin + reversed batch order must produce identical state
-    acc2 = KsDriftAccumulator()
-    acc2.set_reference(ref_df, "k", "v")
-    for lo, hi in ((200, 400), (100, 200), (0, 100)):
-        acc2.merge_batch(
-            live_df.filter((F.col("i") >= lo) & (F.col("i") < hi)), "k", "v"
-        )
-    assert acc.live == acc2.live and acc.ref == acc2.ref
-
-    # independent exact fold over raw python values
-    for key in ("a", "b"):
-        ref_v = sorted(v for k, v in ref_rows if k == key)
-        live_v = sorted(
-            v for k, v in live_rows if k == key and v is not None and k is not None
-        )
-        n_a, n_b = len(live_v), len(ref_v)
-        d_num = 0
-        for x in sorted(set(ref_v) | set(live_v)):
-            ca = sum(1 for v in live_v if v <= x)
-            cb = sum(1 for v in ref_v if v <= x)
-            d_num = max(d_num, abs(ca * n_b - cb * n_a))
-        expect = float(d_num) / (float(n_a) * float(n_b))
-        assert acc.ks(key) == expect  # bit-identical, not approx
-
-    # the shifted key drifts, the same-shape key doesn't
-    assert acc.ks("a") > acc.ks("b")
-    assert acc.drifted("a", 0.1)
-    assert acc.ks("never-seen") is None
-    assert not acc.drifted("never-seen", 0.0)
-
-
-def test_ks_drift_accumulator_max_distinct_guard(spark):
-    from big_data_occupancy_detection_spark.operators.temporal import (
-        KsDriftAccumulator,
-    )
-
-    acc = KsDriftAccumulator(max_distinct=10)
-    df = spark.createDataFrame(
-        [("a", i) for i in range(25)], "k string, v long"
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_distinct"):
-        acc.merge_batch(df, "k", "v")
-
-
-def test_ks_drift_accumulator_max_keys_guard(spark):
-    """Round-8 advice: the KEY axis is capped like the value axis —
-    driver state must fail loudly, transactionally (batch NOT applied),
-    instead of growing silently under a runaway key column."""
-    from big_data_occupancy_detection_spark.operators.temporal import (
-        KsDriftAccumulator,
-    )
-
-    acc = KsDriftAccumulator(max_keys=5)
-    ok = spark.createDataFrame(
-        [(f"k{i:02d}", i % 3) for i in range(15)], "k string, v long"
-    )
-    acc.merge_batch(ok.filter(F.col("k") < "k05"), "k", "v")
-    before = {k: dict(v) for k, v in acc.live.items()}
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_keys"):
-        acc.merge_batch(ok, "k", "v")
-    assert acc.live == before  # transactional: nothing half-applied
-
-
-def test_accumulator_foreach_batch_replay_is_idempotent(spark):
-    """Round-8 advice: foreachBatch is at-least-once — a batch that was
-    FULLY applied before the offsets committed is redelivered on
-    restart. Every accumulator's foreach_batch closure must skip a
-    batch_id it has already applied (additive CMS/KS/CUSUM state would
-    otherwise double-count), while a HIGHER batch_id still applies."""
-    from big_data_occupancy_detection_spark.ext.sketches import (
-        CmsAccumulator,
-        KmvAccumulator,
-    )
-    from big_data_occupancy_detection_spark.operators.temporal import (
-        CusumAccumulator,
-        KsDriftAccumulator,
-    )
-
-    df1 = spark.createDataFrame(
-        [("a", 1, 5.0), ("a", 2, 7.0), ("b", 1, 3.0)],
-        "k string, t long, v double",
-    )
-    df2 = spark.createDataFrame([("a", 3, 9.0)], "k string, t long, v double")
-
-    cms = CmsAccumulator()
-    fn = cms.foreach_batch("k")
-    fn(df1, 0)
-    g0 = dict(cms.grid)
-    fn(df1, 0)  # redelivery: full-apply-then-redeliver must be a no-op
-    assert cms.grid == g0
-    fn(df2, 1)
-    assert cms.estimate("a") == 3  # 2 from batch 0 + 1 from batch 1
-
-    cus = CusumAccumulator(k=1.0)
-    fn = cus.foreach_batch("k", ["t"], "v")
-    fn(df1, 0)
-    s0, c0 = dict(cus.state), dict(cus.counts)
-    fn(df1, 0)
-    assert cus.state == s0 and cus.counts == c0
-    fn(df2, 1)
-    assert cus.counts["a"] == 3
-
-    ks = KsDriftAccumulator()
-    ks.set_reference(df1, "k", "v")
-    fn = ks.foreach_batch("k", "v")
-    fn(df1, 0)
-    l0 = {k: dict(v) for k, v in ks.live.items()}
-    fn(df1, 0)
-    assert ks.live == l0
-    fn(df2, 1)
-    assert sum(ks.live["a"].values()) == 3
-
-    kmv = KmvAccumulator(k=4)
-    fn = kmv.foreach_batch("v", "k")
-    fn(df1, 0)
-    st0 = {g: list(h) for g, h in kmv.state.items()}
-    fn(df1, 0)
-    assert kmv.state == st0
-    # a FRESH closure is a fresh guard (new query, ids restart at 0)
-    fn2 = kmv.foreach_batch("v", "k")
-    fn2(df2, 0)
-    assert kmv.estimate("a") == 3.0
