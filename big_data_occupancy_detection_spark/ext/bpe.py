@@ -233,22 +233,3 @@ def apply_bpe(
     )
     return per_doc
 
-
-def save_bpe_model(spark, merges: list[tuple[str, str]], path: str) -> None:
-    """Persist a learned merge table as a tiny one-file parquet
-    (rank, left, right) — the tokenizer's build/serve split: induction
-    (``learn_bpe_merges``) is a one-off corpus job; every later
-    tokenization run loads the frozen table instead of re-learning.
-    Rank order IS the merge priority, so the round-trip must preserve
-    it exactly (asserted in tests)."""
-    spark.createDataFrame(
-        [(i, l, r) for i, (l, r) in enumerate(merges)],
-        schema="rank int, left string, right string",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_bpe_model(spark, path: str) -> list[tuple[str, str]]:
-    """The frozen merge table, rank-ordered — feed straight to
-    ``apply_bpe``."""
-    rows = spark.read.parquet(path).orderBy("rank").collect()
-    return [(r["left"], r["right"]) for r in rows]

@@ -397,7 +397,6 @@ def frontier_seen_write(
     path: str,
     n_buckets: int = FRONTIER_SEEN_BUCKETS,
     seen_col: str = "canonical_url",
-    mode: str = "overwrite",
 ) -> None:
     """Persist the seen set PARTITIONED by a hash bucket of the URL, so
     per-batch exact rescues prune to the candidate buckets instead of
@@ -413,11 +412,12 @@ def frontier_seen_write(
     seen.select(
         F.col(seen_col).alias("canonical_url"),
         frontier_seen_bucket(seen_col, n_buckets).alias("bucket"),
-    ).write.partitionBy("bucket").mode(mode).parquet(path)
+    ).write.partitionBy("bucket").mode("overwrite").parquet(path)
     # sidecar metadata: the bucket count is part of the layout's
     # identity — a reader probing with a DIFFERENT modulus silently
     # prunes away valid seen rows and re-crawls duplicates (r10 review).
-    # frontier_seen_read/append verify against it; loud-fail contract.
+    # frontier_seen_read stamps it on the frame and the bucket prune
+    # in _novel_canonicals checks it; loud-fail contract.
     import json as _json
     import os as _os
 
@@ -452,42 +452,6 @@ def frontier_seen_read(spark, path: str) -> DataFrame:
     if nb is not None:
         df._frontier_n_buckets = nb
     return df
-
-
-def frontier_seen_append(
-    novel: DataFrame,
-    path: str,
-    n_buckets: int = FRONTIER_SEEN_BUCKETS,
-    seen_col: str = "canonical_url",
-) -> None:
-    """Absorb a batch's NOVEL canonicals into the bucketed seen layout —
-    the increment that completes the per-batch loop (novel →
-    :func:`frontier_seen_append` → next batch prunes against the grown
-    set). A partitioned APPEND: only the novel rows' buckets gain a
-    file, nothing is rewritten — per-batch write cost is |novel|, not
-    |seen| (the dynamic-partition-overwrite trap this deliberately
-    avoids). Uniqueness is preserved without any distinct pass for the
-    same reason as :func:`frontier_updated_seen`: novel is
-    per-canonical-unique and disjoint from the persisted set by
-    construction. ``n_buckets`` must match the original
-    :func:`frontier_seen_write` (same hash, same dirs) — verified
-    against the layout's sidecar metadata, raising on mismatch (a row
-    modded differently lands in the wrong dir and is then invisibly
-    pruned away by every subsequent read). Small appended files are
-    expected — compact by rewriting with :func:`frontier_seen_write` on
-    a maintenance cadence, not per batch."""
-    layout_nb = frontier_seen_layout_buckets(path)
-    if layout_nb is not None and int(layout_nb) != int(n_buckets):
-        raise ValueError(
-            f"frontier_seen_append with n_buckets={n_buckets} onto a "
-            f"layout written with n_buckets={layout_nb} — the appended "
-            f"rows would land in wrongly-modded bucket dirs and be "
-            f"invisibly pruned by subsequent reads"
-        )
-    novel.select(
-        F.col(seen_col).alias("canonical_url"),
-        frontier_seen_bucket(seen_col, n_buckets).alias("bucket"),
-    ).write.partitionBy("bucket").mode("append").parquet(path)
 
 
 def frontier_novel_urls(
@@ -629,16 +593,4 @@ def _novel_canonicals(
         right = survivors.hint("shuffle_hash")
     return reps.join(right, "canonical_url", "left_anti").select(
         id_col, "canonical_url"
-    )
-
-
-def frontier_updated_seen(seen: DataFrame, novel: DataFrame,
-                          seen_col: str = "canonical_url") -> DataFrame:
-    """The seen set after absorbing a batch's novel URLs — write this
-    back to the seen-set parquet to complete the increment. A plain
-    union, NO distinct pass: ``novel`` is per-canonical-unique
-    (:func:`frontier_novel_urls` output) and disjoint from ``seen`` by
-    construction, so uniqueness is preserved without a shuffle."""
-    return seen.select(F.col(seen_col).alias("canonical_url")).unionByName(
-        novel.select("canonical_url")
     )

@@ -1,15 +1,11 @@
 """Multimodal column support: image/audio/video as opaque binary columns
 with typed metadata, processed batch-wise via Arrow (mapInPandas).
 
-Two codec tiers share one Spark plumbing layer (schema, binary columns,
-Arrow batch shape, partition-parallel UDF signature, chunking math):
-
-- ``real_codec=False`` (default): a deterministic md5-derived fake decode,
-  kept because it is oracle-verifiable in SQL end to end;
-- ``real_codec=True``: a REAL stdlib-only PNG codec (ext/png_codec.py —
-  parse, unfilter, pixel math, re-encode). Native-lib formats (JPEG,
-  audio, mp4) still need codecs absent from this container; they slot in
-  beside the PNG functions without touching the Spark plan.
+The decode is a deterministic md5-derived stand-in (``_fake_decode``),
+kept because it is oracle-verifiable in SQL end to end. A real codec
+(PIL/librosa/ffmpeg) replaces only the per-payload function; the schema,
+binary columns, Arrow batch shape and partition-parallel UDF signature
+stay as they are.
 
 At 100 TB the pattern is: binary payloads live in parquet alongside typed
 metadata columns; filters/pruning run on metadata (never deserializing
@@ -62,37 +58,16 @@ def _fake_decode(payload: bytes) -> list[float]:
     return [b / 255.0 for b in h[:FEATURE_DIM]]
 
 
-def _png_decode_features(payload: bytes) -> list[float]:
-    """REAL codec path: parse → unfilter → grayscale → tile-mean features.
-
-    Stdlib-only PNG decode (ext/png_codec.py), so the multimodal pipeline
-    exercises a genuine codec in this container. Same contract as
-    ``_fake_decode``: bytes in, FEATURE_DIM floats out.
-    """
-    from .png_codec import decode_png, grayscale, tile_means
-
-    _w, _h, channels, pixels = decode_png(bytes(payload))
-    return tile_means(grayscale(pixels, channels), FEATURE_DIM)
-
-
 def decode_features(
     media: DataFrame,
     payload_col: str = "payload",
-    real_codec: bool = False,
 ) -> DataFrame:
     """Partition-parallel feature extraction over binary payloads.
 
     ``mapInPandas`` streams bounded Arrow batches through Python — the only
     non-JVM hop in the multimodal path, vectorized per batch rather than
     per row.
-
-    ``real_codec=True`` runs the stdlib PNG decoder (payloads must be
-    PNGs; gray/RGB/alpha, any scanline filter). Other formats (JPEG,
-    audio, video containers) still need native libs absent from this
-    container — plug them in beside ``_png_decode_features``; the Spark
-    plan, schema and batch shape do not change.
     """
-    decode = _png_decode_features if real_codec else _fake_decode
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -100,7 +75,7 @@ def decode_features(
                 {
                     "doc_id": pdf["doc_id"],
                     "n_bytes": pdf[payload_col].map(len).astype("int64"),
-                    "features": pdf[payload_col].map(decode),
+                    "features": pdf[payload_col].map(_fake_decode),
                 }
             )
 
@@ -121,35 +96,17 @@ def sample_frames(
     media: DataFrame,
     every_n: int = 4,
     payload_col: str = "payload",
-    real_codec: bool = False,
 ) -> DataFrame:
     """Frame sampling for video-like payloads: one output row per sampled
     frame, via ``mapInPandas`` (a 1→N exploding Arrow transform).
 
-    The default "video" is modeled as fixed-size chunks of the payload.
-    ``real_codec=True`` instead treats the payload as a concatenated-PNG
-    frame stream (the motion-PNG shape) and splits on PNG signatures —
-    each sampled frame is a complete decodable PNG. Container formats
-    (mp4/mkv) still need ffmpeg, absent here; only ``_frames`` changes,
-    never the Spark contract (bytes in, (index, frame bytes) rows out).
-    Sampling every ``every_n``-th frame bounds the output; the transform
-    is scan-parallel, stateless, and never holds more than one Arrow
-    batch of frames in memory.
+    The "video" is modeled as fixed-size chunks of the payload; a
+    container demuxer (mp4/mkv via ffmpeg) would replace only
+    ``_chunk_frames``, never the Spark contract (bytes in, (index, frame
+    bytes) rows out). Sampling every ``every_n``-th frame bounds the
+    output; the transform is scan-parallel, stateless, and never holds
+    more than one Arrow batch of frames in memory.
     """
-
-    def _png_frames(payload: bytes) -> list[tuple[int, bytes]]:
-        from .png_codec import PNG_SIGNATURE
-
-        starts = []
-        pos = payload.find(PNG_SIGNATURE)
-        while pos != -1:
-            starts.append(pos)
-            pos = payload.find(PNG_SIGNATURE, pos + 1)
-        if not starts:
-            raise ValueError("real_codec=True expects concatenated PNG frames")
-        bounds = starts + [len(payload)]
-        frames = [payload[bounds[i] : bounds[i + 1]] for i in range(len(starts))]
-        return [(i, f) for i, f in enumerate(frames) if i % every_n == 0]
 
     def _chunk_frames(payload: bytes) -> list[tuple[int, bytes]]:
         chunks = [
@@ -157,8 +114,6 @@ def sample_frames(
             for i in range(0, max(len(payload), 1), CHUNK_BYTES)
         ]
         return [(i, c) for i, c in enumerate(chunks) if i % every_n == 0]
-
-    _frames = _png_frames if real_codec else _chunk_frames
 
     def explode_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -169,7 +124,7 @@ def sample_frames(
                 "frame_hash": [],
             }
             for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for idx, frame in _frames(bytes(payload)):
+                for idx, frame in _chunk_frames(bytes(payload)):
                     out["doc_id"].append(doc_id)
                     out["frame_index"].append(idx)
                     out["frame_bytes"].append(frame)
@@ -184,66 +139,3 @@ def sample_frames(
         explode_frames, FRAME_SAMPLE_SCHEMA
     )
 
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("resized", T.BinaryType()),
-        T.StructField("n_bytes_out", T.LongType()),
-    ]
-)
-
-
-def resize_media(
-    media: DataFrame,
-    width: int = 64,
-    height: int = 64,
-    bytes_per_pixel: int = 1,
-    payload_col: str = "payload",
-    real_codec: bool = False,
-) -> DataFrame:
-    """Resize plumbing for image-like payloads via ``mapInPandas``.
-
-    By default the "resize" deterministically resamples the raw payload
-    bytes to exactly width·height·bytes_per_pixel output bytes by 1-D
-    nearest-neighbor index mapping. ``real_codec=True`` runs the full
-    stdlib PNG path instead: decode → true 2-D nearest-neighbor resize →
-    re-encode, emitting a valid width×height PNG per row. Either way the
-    Spark plan, schema, and batch shape are identical.
-    """
-    out_len = width * height * bytes_per_pixel
-
-    def _resample_png(payload: bytes) -> bytes:
-        from .png_codec import decode_png, encode_png, resize_nn
-
-        w, h, channels, pixels = decode_png(bytes(payload))
-        resized = resize_nn(pixels, w, h, channels, width, height)
-        return encode_png(resized, width, height, channels)
-
-    def _resample_raw(payload: bytes) -> bytes:
-        if not payload:
-            return bytes(out_len)
-        n = len(payload)
-        # nearest-neighbor index map, the 1-D analogue of NN image scaling
-        return bytes(payload[(i * n) // out_len] for i in range(out_len))
-
-    _resample = _resample_png if real_codec else _resample_raw
-
-    def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [_resample(bytes(p)) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": width,
-                    "height": height,
-                    "resized": resized,
-                    "n_bytes_out": [len(r) for r in resized],
-                }
-            )
-
-    from ..operators.partitioning import repartition_for_compute
-
-    return repartition_for_compute(media).mapInPandas(do_resize, RESIZE_SCHEMA)

@@ -1,16 +1,12 @@
-"""Pure-stdlib PNG codec (zlib + struct) — a REAL codec for the multimodal
-plumbing, no native image libraries required.
+"""Pure-stdlib PNG codec (zlib + struct), no native image libraries
+required.
 
 Scope: non-interlaced, 8-bit-per-sample PNGs, color types 0 (gray),
 2 (RGB), 4 (gray+alpha) and 6 (RGBA); all five scanline filters (None,
 Sub, Up, Average, Paeth) on decode; encode emits filter 0 scanlines.
-That covers everything a synthetic-image pipeline produces and gives the
-``mapInPandas`` decode path (ext/multimodal.py) a genuine parse →
-unfilter → pixel-buffer workload instead of a deterministic fake.
-
-Reference parity note: the reference pipeline has no media decode at all —
-this exists for the LLM-data-pipeline extension surface (multimodal binary
-columns), where the judge grades the decode step as real-or-stub.
+``encode_png`` renders the classifier-report charts (ml/plotting.py, the
+PNG report sink); ``decode_png`` parses them back, which is how the
+tests validate those charts.
 """
 
 from __future__ import annotations
@@ -137,45 +133,3 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
         prev_start = ostart
     return width, height, channels, bytes(out)
 
-
-def grayscale(pixels: bytes, channels: int) -> bytes:
-    """Integer-mean grayscale reduction of a raw pixel buffer (alpha is a
-    color channel for this purpose — deterministic, not colorimetric)."""
-    if channels == 1:
-        return pixels
-    n = len(pixels) // channels
-    return bytes(
-        sum(pixels[i * channels : (i + 1) * channels]) // channels for i in range(n)
-    )
-
-
-def tile_means(gray: bytes, n_tiles: int) -> list[float]:
-    """Mean intensity (0..1) over ``n_tiles`` contiguous equal slices of a
-    grayscale buffer — the fixed-dim feature summary for decode_features."""
-    n = len(gray)
-    if n == 0:
-        return [0.0] * n_tiles
-    feats = []
-    for t in range(n_tiles):
-        lo = (t * n) // n_tiles
-        hi = max(((t + 1) * n) // n_tiles, lo + 1) if lo < n else n
-        seg = gray[lo:hi] if lo < n else b"\x00"
-        feats.append(sum(seg) / len(seg) / 255.0)
-    return feats
-
-
-def resize_nn(
-    pixels: bytes, width: int, height: int, channels: int, out_w: int, out_h: int
-) -> bytes:
-    """2-D nearest-neighbor resize of a raw pixel buffer."""
-    out = bytearray(out_w * out_h * channels)
-    for oy in range(out_h):
-        sy = (oy * height) // out_h
-        src_row = sy * width * channels
-        dst_row = oy * out_w * channels
-        for ox in range(out_w):
-            sx = (ox * width) // out_w
-            s = src_row + sx * channels
-            d = dst_row + ox * channels
-            out[d : d + channels] = pixels[s : s + channels]
-    return bytes(out)

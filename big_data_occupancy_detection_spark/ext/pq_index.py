@@ -61,12 +61,12 @@ _MAX_IN_FILTER_IDS = 20_000
 
 
 def _normalized_long_ids(emb, id_col: str, vec_col: str):
-    """``_normalized`` with the id pinned to BIGINT. The persisted
-    datasets are append-targets: a later ``append_to_pq_index`` whose
-    caller passes int32 ids (e.g. a literal-built delta frame) would
-    otherwise write parquet files whose physical id type differs from
-    the built files', and the mixed-type directory fails schema
-    inference order-dependently in the vectorized reader."""
+    """``_normalized`` with the id pinned to BIGINT, so every persisted
+    dataset of an index stores ``vec_id`` as BIGINT whatever id type the
+    caller's frame uses: the on-disk schema matches the BIGINT cluster
+    assignment ``build_ivfpq_index`` writes, and does not depend on how
+    the caller built its frame. A no-op on the ``embeddings`` table,
+    whose ids are already BIGINT."""
     return _normalized(emb, id_col, vec_col).withColumn(
         "vid", F.col("vid").cast("long")
     )
@@ -613,52 +613,6 @@ def ivfpq_shortlist_from_index(
     return ivfpq_topk_from_index(
         spark, path, queries, k=0, n_probes=n_probes, shortlist=shortlist,
         id_col=id_col, vec_col=vec_col, shortlist_only=True,
-    )
-
-
-def append_to_pq_index(
-    new_emb: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Index maintenance without refit: encode NEW vectors with the
-    FROZEN persisted codebooks (the same ``_pq_assign_l2`` argmin-L2
-    rule the build used) and append their codes + unit vectors.
-
-    This is the production ingest shape — codebooks are fit once and
-    only drift-triggered rebuilds refit; a daily delta costs
-    |delta|-proportional assignment work. Appended vector files are
-    individually id-sorted (per-file footer stats stay tight for the
-    re-rank's pushed filter) though the dataset is no longer globally
-    range-partitioned; run ``compact_parquet`` periodically if file
-    counts grow. Run as a single maintenance job per delta (same
-    single-writer contract as compaction).
-    """
-    spark = new_emb.sparkSession
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
-    n_sub, d_sub = meta["n_sub"], meta["d_sub"]
-    from .similarity import _assign_codes
-
-    cents = load_codebooks(spark, path, n_sub)
-    cent_dfs = [
-        spark.createDataFrame(
-            [(cid, v) for cid, v in sorted(cents[s].items())],
-            schema="cid int, __cent array<double>",
-        )
-        for s in range(n_sub)
-    ]
-    normed = checkpoint_for_reuse(_normalized_long_ids(new_emb, id_col, vec_col))
-    codes = _assign_codes(normed, cent_dfs, n_sub, d_sub)
-    codes.select(
-        "vec_id", *[F.col(f"c{s}").cast("tinyint") for s in range(n_sub)]
-    ).write.mode("append").parquet(f"{path}/codes")
-    (
-        normed.select(F.col("vid").alias("vec_id"), "nvec")
-        .sortWithinPartitions("vec_id")
-        .write.mode("append")
-        .parquet(f"{path}/vectors")
     )
 
 

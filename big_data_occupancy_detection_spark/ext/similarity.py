@@ -746,9 +746,7 @@ def _assign_codes(
     frames (the prior shape paid both: 8 groupBy exchanges + 7 vec_id
     joins at corpus grain for the default 8 subspaces). Per-subspace
     math is ``_pq_assign_l2``'s objective verbatim, so codes are
-    bit-identical. Shared by the fit path and by
-    ``ext.pq_index.append_to_pq_index`` (frozen-codebook delta ingest)
-    so both assign bit-identically."""
+    bit-identical."""
     j = normed
     for s in range(n_sub):
         j = j.crossJoin(F.broadcast(_cent_array(cents[s], f"__cents{s}")))

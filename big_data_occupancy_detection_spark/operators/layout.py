@@ -9,17 +9,17 @@ curve. ``zvalue16`` interleaves the low 16 bits of two dimensions into a
 whole-stage-codegen'd, no UDF) so the same expression is reproducible in
 any engine for verification.
 
-At 100 TB: write once ordered by the z-key (sampled range exchange keeps
-files balanced), and every parquet footer carries tight min/max on BOTH
-raw dimensions — a 2-D predicate prunes most files at planning time
-instead of scanning the corpus. 16 bits per dimension (65k cells/axis) is
-enough to make row-group stats selective; beyond two dimensions, interleave
-more columns at fewer bits each.
+Files written in z-key order (``write_range_sorted_parquet`` on the key
+column) carry tight min/max on BOTH raw dimensions, so a 2-D predicate
+prunes most files at planning time instead of scanning the corpus. 16 bits
+per dimension (65k cells/axis) is enough to make row-group stats
+selective; beyond two dimensions, interleave more columns at fewer bits
+each.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Magic-number bit spread: x16 → bits of x at even positions of a 32-bit
@@ -59,26 +59,3 @@ def zvalue16_sql(x_expr: str, y_expr: str) -> str:
 
     return f"({spread(x_expr)} | ({spread(y_expr)} << 1))"
 
-
-def write_zorder_parquet(
-    df: DataFrame,
-    out_path: str,
-    x: Column | str,
-    y: Column | str,
-    num_files: int | None = None,
-) -> None:
-    """Z-order-clustered parquet sink: order the data by the interleaved
-    key of two dimensions so parquet min/max stats stay tight on BOTH.
-
-    Same shuffle budget as a linear sort (one sampled range exchange);
-    only the sort key changes. The helper column is dropped before write.
-    """
-    keyed = df.withColumn("__z", zvalue16(x, y))
-    parted = (
-        keyed.repartitionByRange(num_files, "__z")
-        if num_files
-        else keyed.repartitionByRange("__z")
-    )
-    parted.sortWithinPartitions("__z").drop("__z").write.mode(
-        "overwrite"
-    ).parquet(out_path)

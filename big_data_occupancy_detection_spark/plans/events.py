@@ -679,10 +679,11 @@ def event_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q — Z-order layout key: Morton interleave of (user_id, value) low bits,
-# the clustering key write_zorder_parquet sorts by so parquet min/max stats
-# stay tight on BOTH dimensions. Pure Catalyst bit arithmetic; the oracle
-# runs the byte-identical interleave built by zvalue16_sql, so the layout
-# key itself is hash-verified, not just the plumbing.
+# a clustering key that keeps parquet min/max stats tight on BOTH
+# dimensions when files are written in its order. Pure Catalyst bit
+# arithmetic; the oracle runs the byte-identical interleave built by
+# zvalue16_sql, so the layout key itself is hash-verified, not just the
+# plumbing.
 # --------------------------------------------------------------------------
 from ..operators.layout import zvalue16, zvalue16_sql  # noqa: E402
 

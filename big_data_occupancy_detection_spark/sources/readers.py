@@ -167,9 +167,3 @@ def read_parquet_stats_only(spark: SparkSession, path: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.sources.useV1SourceList", prior)
 
-
-def read_xml(spark: SparkSession, path: str, row_tag: str = "row") -> DataFrame:
-    """XML source (built into Spark 4): one DataFrame row per ``row_tag``
-    element. Same pushdown caveats as JSON — a text format, so treat as an
-    interchange edge; parquet remains the scale path."""
-    return spark.read.format("xml").option("rowTag", row_tag).load(path)

@@ -123,457 +123,3 @@ def write_range_sorted_parquet(
         out_path
     )
 
-
-def write_xml(df: DataFrame, out_path: str, row_tag: str = "row") -> None:
-    """XML sink (Spark 4 built-in) — interchange edge only."""
-    (
-        df.write.format("xml")
-        .option("rowTag", row_tag)
-        .mode("overwrite")
-        .save(out_path)
-    )
-
-
-def write_training_shards(
-    df: DataFrame,
-    out_path: str,
-    id_col: str,
-    n_shards: int,
-    seed: int = 0,
-) -> dict:
-    """Deterministic sharded training export with a verification manifest.
-
-    Rows land in ``shard=K`` directories by the portable md5 draw
-    ``md5(seed|id) % n_shards`` — reproducible across runs/engines (no
-    RNG state), uniformly sized, and independent of input partitioning.
-    Alongside the data, ``manifest.json`` records per-shard row counts
-    and an order-independent content hash (sum of per-row md5-derived
-    60-bit values, accumulated in DECIMAL(38,0) so no shard size can
-    overflow, reduced mod 2^61 — computed DISTRIBUTED in the same pass
-    grain), so a consumer — or a re-run — can verify shard integrity
-    without rescanning payloads byte-by-byte.
-
-    Scale shape: one hash shuffle on the shard key (the write), one
-    map-side-combined aggregate for the manifest (n_shards rows).
-    Returns the manifest dict.
-    """
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from ..functions.text_fns import md5_hash64
-
-    draw = md5_hash64(
-        F.concat_ws("|", F.lit(str(seed)), F.col(id_col).cast("string"))
-    )
-    sharded = df.withColumn("shard", F.pmod(draw, F.lit(n_shards)).cast("int"))
-    sharded.write.mode("overwrite").partitionBy("shard").parquet(out_path)
-    stats = (
-        sharded.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.pmod(
-                F.sum(
-                    md5_hash64(F.col(id_col).cast("string")).cast("decimal(38,0)")
-                ),
-                F.lit(2**61).cast("decimal(38,0)"),
-            )
-            .cast("long")
-            .alias("content_hash"),
-        )
-        .orderBy("shard")
-        .collect()
-    )
-    manifest = {
-        "seed": seed,
-        "n_shards": n_shards,
-        "shards": {
-            int(r["shard"]): {
-                "rows": int(r["rows"]),
-                "content_hash": int(r["content_hash"]),
-            }
-            for r in stats
-        },
-    }
-    with open(os.path.join(out_path, "manifest.json"), "w") as f:
-        _json.dump(manifest, f, indent=1, sort_keys=True)
-    return manifest
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Small-file compaction (the OPTIMIZE/VACUUM table-maintenance job).
-
-    Streaming sinks and fine-grained batch appends leave datasets as
-    thousands of KB-scale files; at 100 TB that is a planning and
-    NameNode/listing disaster (a task per tiny file, footer reads
-    dominating). This rewrites the dataset into
-    ``ceil(total_bytes / target_file_bytes)`` files and swaps the
-    directory via write-to-``<path>.__compact__`` → rename-aside →
-    rename-in. POSIX has no two-directory atomic exchange, so there IS
-    a crash window between the two renames where ``path`` is briefly
-    absent; the swap is therefore CRASH-RECOVERABLE rather than atomic:
-    on entry this function (and any rerun) detects a stranded
-    ``<path>.__old__`` with ``path`` missing and restores it before
-    proceeding, so no crash point loses data or leaves a rerun unable
-    to run. Single-maintainer-job semantics (the OPTIMIZE model):
-    concurrent readers during the window should retry, not error-out
-    permanently. Returns ``{files_before, files_after, bytes}``.
-
-    At real scale run this per PARTITION directory (compaction is
-    embarrassingly parallel across partitions and per-partition swaps
-    bound the blast radius); the whole-dataset form here is the unit
-    the partition loop applies.
-    """
-    staging = path.rstrip("/") + ".__compact__"
-    old = path.rstrip("/") + ".__old__"
-    # crash recovery from a previous run, covering every crash point:
-    #  - old present, path missing  -> died between the two renames:
-    #    the old layout is the committed one; restore it.
-    #  - old present, path present  -> died after rename-in, before
-    #    cleanup: the new layout is committed; drop the old copy.
-    #  - stale staging              -> incomplete rewrite; rebuild it.
-    if os.path.exists(old) and not os.path.exists(path):
-        os.rename(old, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    files = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total // target_file_bytes))
-    (
-        spark.read.parquet(path)
-        .repartition(int(n_out))
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-    after = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    return {
-        "files_before": len(files),
-        "files_after": len(after),
-        "bytes": total,
-    }
-
-
-def delete_keys_parquet(
-    spark,
-    path: str,
-    key_col: str,
-    keys: list,
-) -> dict:
-    """Targeted row deletion (the GDPR / right-to-be-forgotten job):
-    physically remove every row whose ``key_col`` is in ``keys``,
-    rewriting ONLY the files whose parquet footer ``[min, max]`` range
-    can contain one of the keys.
-
-    On a range-sorted or z-ordered layout (``write_range_sorted_parquet``)
-    a key set touches a handful of files out of millions — every other
-    file keeps its exact bytes, so replica checksums, page caches, and
-    downstream incremental consumers stay valid. Rewriting the whole
-    dataset to delete a few users is the anti-pattern this avoids at
-    100 TB.
-
-    Both phases run ON EXECUTORS over a DataFrame of file paths (an
-    Arrow-batched ``mapInPandas``) — the driver never reads a footer:
-
-    1. *Prune*: read each file's row-group stats; files whose ranges
-       intersect no key (and have stats) are skipped untouched. Files
-       lacking stats for ``key_col`` are conservatively rewritten.
-    2. *Rewrite*: each candidate is filtered and replaced via
-       write-temp + same-directory ``os.rename`` — atomic PER FILE, so
-       a crash mid-job leaves every file either old or fully rewritten,
-       and a rerun with the same keys is a cheap idempotent no-op (the
-       rewritten files no longer match the prune ranges). A file whose
-       rows are all deleted is removed entirely.
-
-    ``keys`` is a driver-side list (the deletion-request batch — 10³–10⁶
-    ids, small next to the data). For subscription-scale key sets, flow
-    them through a broadcast anti-join rewrite instead.
-
-    Returns ``{files_total, files_rewritten, files_deleted, rows_deleted}``.
-    """
-    import pandas as pd
-
-    # Scrub temps stranded by a crash between write_table and rename.
-    # They are dot-prefixed so Spark's listing never reads them as data;
-    # the original file is intact at that crash point, so dropping the
-    # temp rolls the file cleanly back to "old".
-    for tmp in glob.glob(os.path.join(path, "**", ".*.__del__"),
-                         recursive=True):
-        os.remove(tmp)
-
-    files = sorted(
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    )
-    if not files or not keys:
-        return {
-            "files_total": len(files),
-            "files_rewritten": 0,
-            "files_deleted": 0,
-            "rows_deleted": 0,
-        }
-    key_set = set(keys)
-    sorted_keys = sorted(key_set)
-    lo, hi = sorted_keys[0], sorted_keys[-1]
-
-    def surgeon(batches):
-        import bisect
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        def drop_crc_sidecar(fname):
-            # Hadoop's ChecksumFileSystem keeps a `.name.crc` sidecar for
-            # files IT wrote; after this out-of-band rewrite the stale
-            # checksum would fail every later Spark read of the file.
-            crc = os.path.join(
-                os.path.dirname(fname), "." + os.path.basename(fname) + ".crc"
-            )
-            if os.path.exists(crc):
-                os.remove(crc)
-
-        for pdf in batches:
-            out = []
-            for fname in pdf["file"]:
-                md = pq.ParquetFile(fname).metadata
-                # row-group statistics are ordered by PHYSICAL LEAF column
-                # (nested maps/structs flatten to several leaves), so the
-                # key column must be resolved by leaf path — indexing by
-                # arrow's top-level field position would read a different
-                # column's stats whenever a nested field precedes the key.
-                leaf_paths = [
-                    md.schema.column(i).path for i in range(md.num_columns)
-                ]
-                try:
-                    ci = leaf_paths.index(key_col)
-                except ValueError:
-                    raise ValueError(
-                        f"{key_col!r} is not a top-level primitive column "
-                        f"of {fname} (leaves: {leaf_paths})"
-                    )
-                touched = False
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is None or not st.has_min_max:
-                        touched = True  # no stats: cannot prune, rewrite
-                        break
-                    if st.max < lo or st.min > hi:
-                        continue
-                    # any key inside [min, max]?
-                    i = bisect.bisect_left(sorted_keys, st.min)
-                    if i < len(sorted_keys) and sorted_keys[i] <= st.max:
-                        touched = True
-                        break
-                if not touched:
-                    out.append((fname, 0, False, False))
-                    continue
-                tbl = pq.read_table(fname)
-                mask = pc.is_in(tbl.column(key_col), pa.array(sorted_keys))
-                n_del = pc.sum(mask).as_py() or 0
-                if n_del == 0:
-                    # range overlapped but no actual key present
-                    out.append((fname, 0, False, False))
-                    continue
-                kept = tbl.filter(pc.invert(mask))
-                if kept.num_rows == 0:
-                    os.remove(fname)
-                    drop_crc_sidecar(fname)
-                    out.append((fname, n_del, False, True))
-                    continue
-                # Dot-prefixed temp: hidden from Spark's file listing, so
-                # a crash before the rename can never double-count rows.
-                tmp = os.path.join(
-                    os.path.dirname(fname),
-                    "." + os.path.basename(fname) + ".__del__",
-                )
-                pq.write_table(kept, tmp)
-                os.rename(tmp, fname)  # same-dir rename: atomic per file
-                drop_crc_sidecar(fname)
-                out.append((fname, n_del, True, False))
-            yield pd.DataFrame(
-                out, columns=["file", "rows_deleted", "rewritten", "removed"]
-            )
-
-    report = (
-        spark.createDataFrame([(f,) for f in files], "file string")
-        .repartition(min(len(files), 64))
-        .mapInPandas(
-            surgeon,
-            "file string, rows_deleted long, rewritten boolean, removed boolean",
-        )
-        .collect()
-    )
-    return {
-        "files_total": len(files),
-        "files_rewritten": sum(1 for r in report if r.rewritten),
-        "files_deleted": sum(1 for r in report if r.removed),
-        "rows_deleted": sum(r.rows_deleted for r in report),
-    }
-
-
-def compact_small_files(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    small_ratio: float = 0.5,
-) -> dict:
-    """Surgical small-file compaction: bin-pack runs of ADJACENT small
-    files into target-size files and leave every adequately-sized file
-    byte-untouched — the incremental OPTIMIZE that runs after each
-    streaming/append ingest, where :func:`compact_parquet` (full
-    rewrite) is the occasional deep maintenance pass.
-
-    Files smaller than ``small_ratio * target_file_bytes`` are packed
-    greedily, but only CONSECUTIVE files (in name order) share a bin:
-    range-sorted and z-ordered layouts name files in key order, so
-    merging neighbours keeps each output file's footer ``[min, max]``
-    tight — merging scattered smalls would produce wide-range footers
-    and quietly destroy the data skipping the layout was built for.
-
-    Each bin commits through a marker protocol that makes ANY crash
-    point recoverable and the job rerunnable:
-
-    1. write the merged file under a temp name,
-    2. write ``<final>.__commit__`` (JSON: final + originals) via
-       write-temp + rename (atomic),
-    3. rename merged temp → final (atomic),
-    4. delete the originals, 5. delete the marker.
-
-    Recovery on entry: a marker whose final file EXISTS is rolled
-    forward (delete surviving originals + marker); a marker whose final
-    is missing is rolled back (delete marker + temp; originals intact).
-    Stray ``.__bin__`` temps are scrubbed. As with ``compact_parquet``,
-    this is a single-maintainer job: readers racing step 3–4 can see a
-    bin's rows twice and should retry, not error permanently.
-
-    Bins run ON EXECUTORS (Arrow ``mapInPandas`` over the bin list —
-    pyarrow concat preserves row order within and across the adjacent
-    inputs). Returns ``{files_before, files_after, bins, bytes_compacted}``.
-    """
-    import json as _json
-
-    import pandas as pd
-
-    # ---- crash recovery from a previous interrupted run ----
-    for marker in glob.glob(os.path.join(path, "**", "*.__commit__"),
-                            recursive=True):
-        with open(marker) as fh:
-            rec = _json.load(fh)
-        if os.path.exists(rec["final"]):
-            for f in rec["originals"]:          # roll forward
-                if os.path.exists(f):
-                    os.remove(f)
-        os.remove(marker)
-    for tmp in glob.glob(os.path.join(path, "**", "*.__bin__"),
-                         recursive=True):
-        os.remove(tmp)
-
-    files = sorted(
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f) and not f.endswith(".__bin__")
-    )
-    small_cut = int(target_file_bytes * small_ratio)
-    sizes = {f: os.path.getsize(f) for f in files}
-
-    bins: list[list[str]] = []
-    run: list[str] = []
-    run_bytes = 0
-    run_dir: str | None = None
-    for f in files:
-        # A bin must never span directories: on a hive-partitioned layout
-        # the partition value lives in the DIRECTORY name, not the file,
-        # so a cross-dir merge would silently re-label rows.
-        f_dir = os.path.dirname(f)
-        if sizes[f] < small_cut:
-            if run and (run_bytes + sizes[f] > target_file_bytes
-                        or f_dir != run_dir):
-                bins.append(run)
-                run, run_bytes = [], 0
-            run.append(f)
-            run_bytes += sizes[f]
-            run_dir = f_dir
-        else:
-            if run:
-                bins.append(run)
-            run, run_bytes = [], 0
-    if run:
-        bins.append(run)
-    bins = [b for b in bins if len(b) >= 2]
-    if not bins:
-        return {
-            "files_before": len(files),
-            "files_after": len(files),
-            "bins": 0,
-            "bytes_compacted": 0,
-        }
-
-    def packer(batches):
-        import hashlib
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            out = []
-            for spec in pdf["bin"]:
-                originals = _json.loads(spec)
-                tag = hashlib.md5("|".join(
-                    os.path.basename(f) for f in originals
-                ).encode()).hexdigest()[:16]
-                final = os.path.join(
-                    os.path.dirname(originals[0]), f"compact-{tag}.parquet"
-                )
-                merged = pa.concat_tables(pq.read_table(f) for f in originals)
-                tmp = final + ".__bin__"
-                pq.write_table(merged, tmp)
-                marker = final + ".__commit__"
-                mtmp = marker + ".__bin__"
-                with open(mtmp, "w") as fh:
-                    _json.dump({"final": final, "originals": originals}, fh)
-                os.rename(mtmp, marker)
-                os.rename(tmp, final)
-                for f in originals:
-                    os.remove(f)
-                    crc = os.path.join(
-                        os.path.dirname(f), "." + os.path.basename(f) + ".crc"
-                    )
-                    if os.path.exists(crc):
-                        os.remove(crc)
-                os.remove(marker)
-                out.append((final, len(originals)))
-            yield pd.DataFrame(out, columns=["final", "n_in"])
-
-    stats = (
-        spark.createDataFrame(
-            [(_json.dumps(b),) for b in bins], "bin string"
-        )
-        .repartition(min(len(bins), 64))
-        .mapInPandas(packer, "final string, n_in int")
-        .collect()
-    )
-    compacted = sum(sizes[f] for b in bins for f in b)
-    return {
-        "files_before": len(files),
-        "files_after": len(files) - sum(r.n_in for r in stats) + len(stats),
-        "bins": len(stats),
-        "bytes_compacted": compacted,
-    }

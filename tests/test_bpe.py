@@ -142,25 +142,3 @@ def test_doc_bpe_tokens_gate_passes_with_empty_docs(spark, tmp_path):
     assert [r.doc_id for r in rows] == [1, 2, 3, 4]
     assert rows[1].n_tokens == 0 and rows[2].n_tokens == 0
 
-
-def test_bpe_model_roundtrips_through_parquet(spark, tmp_path):
-    """Build-once/serve-many: a saved+loaded merge table tokenizes
-    byte-identically to the in-memory one (rank order preserved)."""
-    docs = spark.createDataFrame(
-        [(1, "low lower lowest new newer newest"), (2, "low new low new")],
-        "doc_id long, text string",
-    )
-    merges = bpe.learn_bpe_merges(docs, n_merges=16)
-    path = str(tmp_path / "bpe_model")
-    bpe.save_bpe_model(spark, merges, path)
-    loaded = bpe.load_bpe_model(spark, path)
-    assert loaded == merges
-    want = sorted(
-        (r.doc_id, tuple(r.bpe_tokens))
-        for r in bpe.apply_bpe(docs, merges).collect()
-    )
-    got = sorted(
-        (r.doc_id, tuple(r.bpe_tokens))
-        for r in bpe.apply_bpe(docs, loaded).collect()
-    )
-    assert got == want

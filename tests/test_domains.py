@@ -260,13 +260,6 @@ def test_frontier_batch_reps_and_novel(spark):
         for r in DOM.frontier_novel_urls(batch, seen).collect()
     )
     assert novel == [(10, "https://a.com/x"), (13, "https://c.com/z?a=1&b=2")]
-    # updated seen set keeps uniqueness without a distinct pass
-    upd = DOM.frontier_updated_seen(
-        seen, DOM.frontier_novel_urls(batch, seen)
-    )
-    vals = sorted(r["canonical_url"] for r in upd.collect())
-    assert vals == sorted(set(vals))
-    assert len(vals) == 3
 
 
 def test_bloom_filter_expr_matches_bloom_contains(spark):
@@ -402,57 +395,10 @@ def test_frontier_survivor_broadcast_budget_fallback(spark):
     )
 
 
-def test_frontier_seen_append_increment_loop(spark, tmp_path):
-    """The bucketed increment loop (r10): write seen → probe batch →
-    append novel → the NEXT batch's pruned rescue sees the grown set.
-    Appends must preserve uniqueness (no distinct pass) and land only in
-    the novel rows' buckets."""
-    path = str(tmp_path / "seen")
-    seen0 = spark.createDataFrame(
-        [("https://a.com/1",), ("https://a.com/2",)],
-        "canonical_url string",
-    )
-    DOM.frontier_seen_write(seen0, path, n_buckets=8)
-    b1 = spark.createDataFrame(
-        [(1, "https://a.com/1"), (2, "https://b.com/x")],
-        "doc_id long, url string",
-    )
-    novel1 = DOM.frontier_novel_urls(
-        b1, DOM.frontier_seen_read(spark, path),
-        seen_bucket_col="bucket", n_buckets=8,
-    )
-    assert [(r["doc_id"], r["canonical_url"]) for r in novel1.collect()] == [
-        (2, "https://b.com/x")
-    ]
-    DOM.frontier_seen_append(novel1, path, n_buckets=8)
-    # the grown set: batch 2 re-offers b.com/x (now seen) + one new URL
-    b2 = spark.createDataFrame(
-        [(3, "https://b.com/x?utm_source=f"), (4, "https://c.com/y")],
-        "doc_id long, url string",
-    )
-    novel2 = DOM.frontier_novel_urls(
-        b2, DOM.frontier_seen_read(spark, path),
-        seen_bucket_col="bucket", n_buckets=8,
-    )
-    assert [(r["doc_id"], r["canonical_url"]) for r in novel2.collect()] == [
-        (4, "https://c.com/y")
-    ]
-    # uniqueness held with zero distinct passes
-    rows = DOM.frontier_seen_read(spark, path).collect()
-    urls = sorted(r["canonical_url"] for r in rows)
-    assert urls == sorted(set(urls)) and len(urls) == 3
-    # bucket column agrees with the portable hash for every row
-    for r in rows:
-        want = spark.range(1).select(
-            DOM.frontier_seen_bucket(F.lit(r["canonical_url"]), 8).alias("b")
-        ).collect()[0]["b"]
-        assert r["bucket"] == want
-
-
 def test_frontier_bucket_modulus_mismatch_raises(spark, tmp_path):
     """r10 review: a caller modulus differing from the layout's must
     fail LOUDLY — a silent mismatch prunes valid seen rows and
-    re-crawls duplicates; appends would land in wrongly-modded dirs."""
+    re-crawls duplicates."""
     import pytest
 
     path = str(tmp_path / "seen")
@@ -470,10 +416,6 @@ def test_frontier_bucket_modulus_mismatch_raises(spark, tmp_path):
         DOM.frontier_novel_urls(
             batch, seen_b, seen_bucket_col="bucket", n_buckets=8
         ).collect()
-    with pytest.raises(ValueError, match="n_buckets"):
-        DOM.frontier_seen_append(batch.select(
-            F.lit("https://x.com/1").alias("canonical_url")
-        ), path, n_buckets=8)
     # omitting n_buckets defaults to the layout's own modulus
     got = DOM.frontier_novel_urls(
         batch, seen_b, seen_bucket_col="bucket"

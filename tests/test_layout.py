@@ -8,9 +8,9 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_occupancy_detection_spark.operators.layout import (
-    write_zorder_parquet,
-    zvalue16,
+from big_data_occupancy_detection_spark.operators.layout import zvalue16
+from big_data_occupancy_detection_spark.sources.sinks import (
+    write_range_sorted_parquet,
 )
 
 
@@ -62,13 +62,11 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path, n_files):
     )
     zpath = str(tmp_path / "zorder")
     lpath = str(tmp_path / "linear")
-    write_zorder_parquet(df, zpath, "x", "y", num_files=n_files)
-    (
-        df.repartitionByRange(n_files, "x")
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(lpath)
+    # the same range-sorted writer, keyed by the Morton value vs by x
+    write_range_sorted_parquet(
+        df.withColumn("z", zvalue16("x", "y")), zpath, ["z"], n_files
     )
+    write_range_sorted_parquet(df, lpath, ["x"], n_files)
     # one narrow probe per dimension (~12% of each axis)
     probe_x = ({"x": 100}, {"x": 130})
     probe_y = ({"y": 100}, {"y": 130})

@@ -168,28 +168,6 @@ def test_partitioned_parquet_prunes_partitions(spark, sf_dir, tmp_path):
     assert n_types > 1  # pruning actually skipped something
 
 
-def test_resize_media_shape_contract(spark):
-    """Multimodal resize stub: fixed-size output bytes, deterministic."""
-    from big_data_occupancy_detection_spark.ext.multimodal import (
-        resize_media,
-        with_binary_payload,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "hello world " * 40), (2, "x"), (3, "")], ["doc_id", "text"]
-    )
-    out = {r.doc_id: r for r in resize_media(
-        with_binary_payload(docs), width=8, height=4
-    ).collect()}
-    assert all(r.n_bytes_out == 32 for r in out.values())
-    assert all(len(bytes(r.resized)) == 32 for r in out.values())
-    assert bytes(out[3].resized) == bytes(32)      # empty payload → zero frame
-    assert bytes(out[2].resized) == b"x" * 32      # 1-byte payload replicates
-    again = {r.doc_id: bytes(r.resized) for r in resize_media(
-        with_binary_payload(docs), width=8, height=4
-    ).collect()}
-    assert {k: bytes(v.resized) for k, v in out.items()} == again
-
 def test_jsonl_sink_source_roundtrip(spark, tmp_path):
     """JSONL write → declared-schema read: values and types survive, and a
     type-mismatched field degrades to null instead of killing the read —
@@ -485,24 +463,6 @@ def test_global_row_number_preserves_rows_across_layouts(spark, n_rows, n_parts)
     assert keys == sorted(keys)
 
 
-def test_xml_roundtrip(spark, tmp_path):
-    from big_data_occupancy_detection_spark.sources.readers import read_xml
-    from big_data_occupancy_detection_spark.sources.sinks import write_xml
-
-    df = spark.createDataFrame(
-        [(1, "alpha", 1.5), (2, "beta", -2.0), (3, None, 0.25)],
-        ["id", "name", "score"],
-    )
-    out = str(tmp_path / "xml_out")
-    write_xml(df, out, row_tag="rec")
-    back = read_xml(spark, out, row_tag="rec")
-    assert sorted((r.id, r.name, float(r.score)) for r in back.collect()) == [
-        (1, "alpha", 1.5),
-        (2, "beta", -2.0),
-        (3, None, 0.25),
-    ]
-
-
 def test_zstd_parquet_roundtrip_with_pushdown(spark, tmp_path, sf_dir):
     """zstd is the scale-default codec (better ratio than snappy at similar
     decode speed); the write path must keep footer stats + pushdown intact."""
@@ -639,62 +599,6 @@ def test_session_windows_auto_forms_agree(spark):
     l = sorted(laggap.collect(), key=k)
     assert [tuple(r) for r in n] == [tuple(r) for r in l]
     assert len(n) > 5  # gaps actually split sessions
-
-
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    """Compaction: many tiny files -> few files, identical data, atomic
-    directory swap (no staging/old leftovers)."""
-    import os
-
-    from big_data_occupancy_detection_spark.sources.sinks import compact_parquet
-
-    path = str(tmp_path / "frag")
-    spark.range(10_000).selectExpr("id", "id % 97 AS k").repartition(
-        64
-    ).write.parquet(path)
-    before = {tuple(r) for r in spark.read.parquet(path).collect()}
-    stats = compact_parquet(spark, path, target_file_bytes=10**9)
-    assert stats["files_before"] >= 64
-    assert stats["files_after"] == 1
-    after = {tuple(r) for r in spark.read.parquet(path).collect()}
-    assert after == before
-    assert not os.path.exists(path + ".__compact__")
-    assert not os.path.exists(path + ".__old__")
-
-
-def test_compact_parquet_crash_recovery(spark, tmp_path):
-    """Every crash point of the two-rename swap is recoverable by a
-    rerun: (a) died between the renames (path missing, __old__ holds
-    the committed layout) and (b) died after rename-in before cleanup
-    (__old__ is stale). Round-4 ADVICE finding."""
-    import os
-    import shutil
-
-    from big_data_occupancy_detection_spark.sources.sinks import compact_parquet
-
-    path = str(tmp_path / "crashy")
-    spark.range(5_000).selectExpr("id", "id % 13 AS k").repartition(
-        16
-    ).write.parquet(path)
-    before = {tuple(r) for r in spark.read.parquet(path).collect()}
-
-    # (a) crash between rename-aside and rename-in: path is missing
-    os.rename(path, path + ".__old__")
-    stats = compact_parquet(spark, path, target_file_bytes=10**9)
-    assert stats["files_after"] == 1
-    assert {tuple(r) for r in spark.read.parquet(path).collect()} == before
-    assert not os.path.exists(path + ".__old__")
-    assert not os.path.exists(path + ".__compact__")
-
-    # (b) crash after rename-in, before old-dir cleanup: stale __old__
-    # (holding SUPERSEDED data) plus a stale staging dir must both be
-    # swept, and the committed layout at `path` kept
-    shutil.copytree(path, path + ".__old__")
-    os.makedirs(path + ".__compact__/partial", exist_ok=True)
-    stats = compact_parquet(spark, path, target_file_bytes=10**9)
-    assert {tuple(r) for r in spark.read.parquet(path).collect()} == before
-    assert not os.path.exists(path + ".__old__")
-    assert not os.path.exists(path + ".__compact__")
 
 
 def test_sessionize_gap_exact_boundary_sub_second(spark):

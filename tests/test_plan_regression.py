@@ -102,6 +102,85 @@ def test_one_pinning_primitive():
     }, f"lazy pin sites changed: {sorted(lazy)}"
 
 
+def test_every_public_def_has_a_caller():
+    # a public top-level def or class stays only if it is @register'ed
+    # or referenced outside its own body by the package, scripts/,
+    # tools/, perfbench/, bench.py or __spark_entry__.py — tests do not
+    # count. References are the identifiers of the AST (names,
+    # attributes, imports), so strings and comments never count and
+    # f-string expressions do. Anything kept without a caller is listed
+    # here on purpose, with the SURVEY §2 row (COVERAGE.md) it backs.
+    root = Path(__file__).parent.parent
+    pkg = root / "big_data_occupancy_detection_spark"
+    files = sorted(pkg.rglob("*.py"))
+    for sub in ("scripts", "tools", "perfbench"):
+        files += sorted((root / sub).rglob("*.py"))
+    files += [root / "bench.py", root / "__spark_entry__.py"]
+    refs = {}
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name.rpartition(".")[2]
+            else:
+                continue
+            refs.setdefault(name, []).append((path, node.lineno))
+    kept = {
+        # §2.1 "+" rows: IO surface beyond the reference
+        "sources/readers.py:read_jsonl_declared",
+        "sources/readers.py:read_orc",
+        "sources/readers.py:read_parquet_evolved",
+        "sources/sinks.py:write_bucketed",
+        "sources/sinks.py:write_jsonl",
+        "sources/sinks.py:write_orc",
+        "sources/sinks.py:write_parquet",
+        "sources/sinks.py:write_range_sorted_parquet",
+        # §2.9 T4 (checkpointed sink) and "+" (upsert snapshot sink)
+        "streaming/inference.py:memory_sink",
+        "streaming/upsert.py:upsert_sink",
+        "streaming/upsert.py:read_snapshot",
+        # §2.9 T2→+ (watermarked windows, stream dedup and joins)
+        "streaming/windows.py:tumbling_counts",
+        "streaming/windows.py:session_counts",
+        "streaming/windows.py:dedup_stream",
+        "streaming/windows.py:interval_join_streams",
+        "streaming/windows.py:enrich_stream_static",
+        "streaming/windows.py:sliding_distinct_counts",
+        # §2.8 (pipeline observability, Python UDTF surface)
+        "operators/relational.py:observed",
+        "functions/udtf_fns.py:register_udtfs",
+        # test references: the twin or decoder a live path is checked by
+        "ext/similarity.py:pq_topk",  # fit-per-call twin of the PQ index
+        "ext/text_vec.py:bigram_pairs_jvm",  # twin of hashed_bigram_pairs
+        "ext/png_codec.py:decode_png",  # decodes the §2.1 S7 report PNGs
+    }
+    orphans = set()
+    for path in sorted(pkg.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            if not isinstance(
+                top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or top.name.startswith("_"):
+                continue
+            if any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register"
+                for d in top.decorator_list
+            ):
+                continue
+            body = range(top.lineno, top.end_lineno + 1)
+            if not any(
+                p != path or line not in body
+                for p, line in refs.get(top.name, [])
+            ):
+                orphans.add(f"{path.relative_to(pkg).as_posix()}:{top.name}")
+    assert orphans == kept, (
+        f"no caller: {sorted(orphans - kept)}; "
+        f"caller found, drop from the kept set: {sorted(kept - orphans)}"
+    )
+
+
 def test_baseline_covers_headline():
     assert sorted(set(HEADLINE) | set(EXTRA_PLAN_PINNED)) == sorted(
         BASELINE

@@ -192,39 +192,6 @@ def test_ivfpq_probe_select_runs_executor_side(spark, emb, ivfpq_path):
     assert "aggregate(" in plan and "array_sort" in plan
 
 
-def test_append_to_pq_index_frozen_codebooks(spark, emb, tmp_path):
-    """Index maintenance without refit: build on half the corpus, append
-    the other half — codebooks unchanged, codes cover everything, and a
-    query finds its appended true neighbors (the exact re-rank makes
-    top-1 of an appended near-duplicate exact)."""
-    from pyspark.sql import functions as F
-
-    half_a = emb.filter("vec_id % 2 = 0")
-    half_b = emb.filter("vec_id % 2 = 1")
-    path = str(tmp_path / "pq_append")
-    pqx.build_pq_index(half_a, path)
-    books_before = spark.read.parquet(f"{path}/codebooks").collect()
-    pqx.append_to_pq_index(half_b, path)
-    books_after = spark.read.parquet(f"{path}/codebooks").collect()
-    assert sorted(map(tuple, books_before)) == sorted(map(tuple, books_after))
-    codes = spark.read.parquet(f"{path}/codes")
-    assert codes.count() == emb.count()
-    assert codes.select("vec_id").distinct().count() == emb.count()
-    # plant: a near-clone of query vector 0 with an APPENDED (odd) id
-    clone_id = 999_999_999
-    clone = emb.filter("vec_id = 0").select(
-        F.lit(clone_id).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: x + F.lit(0.0001)
-        ).alias("embedding"),
-    )
-    pqx.append_to_pq_index(clone, path)
-    served = pqx.pq_topk_from_index(
-        spark, path, emb.filter("vec_id = 0"), k=1
-    ).collect()
-    assert served[0]["vec_id"] == clone_id and served[0]["rnk"] == 1
-
-
 def test_pq_serve_tolerates_empty_cluster_cid_gaps(spark, tmp_path):
     """Duplicate-heavy corpora collapse seed centroids: the assignment
     tie-break sends every point to the SMALLEST of two identical seeds,

@@ -387,20 +387,15 @@ def test_event_time_pipeline_capstone_restart(spark, tmp_path):
     """Round-6 capstone: the production event-time shape composed from
     the individually-proven pieces — file source → exact re-delivery
     dedup (dropDuplicatesWithinWatermark) → watermarked session windows
-    (append) → keyed upsert snapshot, with the SAME deduped doc stream
-    feeding the incremental near-dedup corpus index. Three stateful
-    planes (dedup state, session state, on-disk corpus/snapshot), both
-    queries KILLED mid-stream and restarted from their checkpoints;
-    final state must equal the batch twins."""
+    (append) → keyed upsert snapshot. Three stateful planes (dedup
+    state, session state, on-disk snapshot), the query KILLED
+    mid-stream and restarted from its checkpoint; final state must
+    equal the batch twin."""
     import json as _json
     import os as _os
 
     from pyspark.sql import functions as F
 
-    from big_data_occupancy_detection_spark.streaming.dedup_ingest import (
-        near_dedup_ingest_sink,
-        read_decisions,
-    )
     from big_data_occupancy_detection_spark.streaming.upsert import (
         read_snapshot,
         upsert_sink,
@@ -453,11 +448,9 @@ def test_event_time_pipeline_capstone_restart(spark, tmp_path):
                        (4, 1, "10:30", NEAR)])
 
     target = str(tmp_path / "sessions_snapshot")
-    index_dir = str(tmp_path / "dedup_index")
-    ckpt1, ckpt2 = str(tmp_path / "ck_sess"), str(tmp_path / "ck_dedup")
-    _os.makedirs(index_dir)
+    ckpt = str(tmp_path / "ck_sess")
 
-    def _start_queries():
+    def _start_query():
         raw = (
             spark.readStream.format("json")
             .schema(schema)
@@ -470,35 +463,29 @@ def test_event_time_pipeline_capstone_restart(spark, tmp_path):
         sessions = session_counts(
             deduped, ts_col="ts", gap="30 minutes", watermark=None
         )
-        q1 = upsert_sink(
+        return upsert_sink(
             sessions,
             target,
             ["user_id", "session_start"],
             "session_end",
-            ckpt1,
+            ckpt,
             output_mode="append",
         )
-        q2 = near_dedup_ingest_sink(deduped, index_dir, ckpt2)
-        return q1, q2
 
-    q1, q2 = _start_queries()
-    q1.processAllAvailable()
-    q2.processAllAvailable()
-    q1.stop()  # the kill: both stateful queries die mid-stream
-    q2.stop()
+    q = _start_query()
+    q.processAllAvailable()
+    q.stop()  # the kill: the stateful query dies mid-stream
 
-    # phase 2: doc 6 is an exact near-dup (same text) of corpus doc 2 and
-    # merges into u1's open 10:30 session across the restart; the two
-    # flush docs push the watermark past every real session end
+    # phase 2: doc 6 merges into u1's open 10:30 session across the
+    # restart; the two flush docs push the watermark past every real
+    # session end
     _write("b2.json", [(6, 1, "10:32", OTHER)])
     _write("b3.json", [(99, 99, "23:00", "flush marker one unique words")])
     _write("b4.json", [(100, 99, "23:30", "flush marker two other tokens")])
 
-    q1, q2 = _start_queries()
-    q1.processAllAvailable()
-    q2.processAllAvailable()
-    q1.stop()
-    q2.stop()
+    q = _start_query()
+    q.processAllAvailable()
+    q.stop()
 
     # --- session/upsert plane vs the batch twin ---
     got = {
@@ -527,18 +514,3 @@ def test_event_time_pipeline_capstone_restart(spark, tmp_path):
         (2, "2026-01-01 09:45:00", "2026-01-01 10:30:00", 2),
     }
 
-    # --- near-dedup plane vs hand-computed truth ---
-    decisions = {
-        r.doc_id: (r.keep, r.dup_of)
-        for r in read_decisions(spark, index_dir).collect()
-    }
-    assert decisions == {
-        1: (True, None),
-        2: (True, None),
-        3: (True, None),     # re-delivery was dropped BEFORE ingest
-        4: (False, 1),       # near-dup of corpus doc 1
-        5: (True, None),
-        6: (False, 2),       # exact dup of corpus doc 2, found after restart
-        99: (True, None),
-        100: (True, None),
-    }

@@ -1,60 +1,41 @@
-"""End-to-end training-data export: BPE tokenize -> pack -> shard -> read back.
+"""End-to-end training-data export: BPE tokenize -> pack.
 
-Composes the three production stages a pretraining exporter runs —
-distributed BPE encoding (``ext.bpe``), fixed-budget sequence packing
-(``ext.curation.pack_sequences``), and the deterministic sharded sink
-with its verification manifest (``sources.sinks.write_training_shards``)
-— and asserts the chain's invariants hold end to end, not just per
-stage: token counts flow unchanged into the packer, bin boundaries are
-the exact exclusive prefix sums, every doc survives into exactly one
-shard, and the manifest's distributed content hash replays identically
-on a rerun (determinism is what makes a 100 TB export resumable and
-auditable).
+Composes two production stages a pretraining exporter runs —
+distributed BPE encoding (``ext.bpe``) and fixed-budget sequence packing
+(``ext.curation.pack_sequences``) — and asserts the chain's invariants
+hold end to end, not just per stage: token counts flow unchanged into
+the packer, and bin boundaries are the exact exclusive prefix sums.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from big_data_occupancy_detection_spark.ext import bpe as BPE
 from big_data_occupancy_detection_spark.ext.curation import pack_sequences
 from big_data_occupancy_detection_spark.sources.readers import table
-from big_data_occupancy_detection_spark.sources.sinks import write_training_shards
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 BUDGET = 256
-N_SHARDS = 4
 
 
 @pytest.fixture(scope="module")
-def exported(spark, tmp_path_factory):
+def exported(spark):
     docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
     merges = BPE.learn_bpe_merges(docs, n_merges=32)
     toks = BPE.apply_bpe(docs, merges)  # (doc_id, bpe_tokens, n_tokens)
-    packed = pack_sequences(
+    export = pack_sequences(
         toks, BUDGET, token_count_col="n_tokens", id_col="doc_id"
-    )  # (doc, n_tok, start_offset, bin_start, bin_end)
-    export = (
-        packed.withColumnRenamed("doc", "doc_id")
-        .join(toks, "doc_id")
-        .select(
-            "doc_id", "n_tok", "start_offset", "bin_start", "bin_end",
-            F.array_join("bpe_tokens", "").alias("token_stream"),
-        )
-    )
-    out = str(tmp_path_factory.mktemp("shards") / "train")
-    manifest = write_training_shards(export, out, "doc_id", N_SHARDS, seed=7)
-    return docs, toks, export, out, manifest
+    ).withColumnRenamed("doc", "doc_id")
+    # (doc_id, n_tok, start_offset, bin_start, bin_end)
+    return docs, toks, export
 
 
 def test_token_counts_flow_into_packer_unchanged(spark, exported):
-    docs, toks, export, _, _ = exported
+    docs, toks, export = exported
     n_docs = docs.count()
     assert export.count() == n_docs
     # the packer received the BPE counts, not a recount of its own
@@ -75,7 +56,7 @@ def test_token_counts_flow_into_packer_unchanged(spark, exported):
 
 
 def test_offsets_are_exact_exclusive_prefix_sums(exported):
-    _, _, export, _, _ = exported
+    _, _, export = exported
     rows = (
         export.select("doc_id", "n_tok", "start_offset")
         .orderBy("doc_id")
@@ -86,41 +67,3 @@ def test_offsets_are_exact_exclusive_prefix_sums(exported):
         assert r.start_offset == running, r
         running += r.n_tok
 
-
-def test_every_doc_lands_in_exactly_one_shard(spark, exported):
-    docs, _, _, out, manifest = exported
-    back = spark.read.option("basePath", out).parquet(
-        os.path.join(out, "shard=*")
-    )
-    assert back.count() == docs.count()
-    assert back.select("doc_id").distinct().count() == docs.count()
-    per_shard = {
-        r["shard"]: r["n"]
-        for r in back.groupBy("shard").agg(F.count("*").alias("n")).collect()
-    }
-    assert per_shard == {
-        s: meta["rows"] for s, meta in manifest["shards"].items()
-    }
-    # the portable md5 draw spreads 500 docs over every shard
-    assert len(per_shard) == N_SHARDS
-
-
-def test_manifest_hash_is_deterministic_across_reruns(
-    spark, exported, tmp_path
-):
-    _, _, export, out, manifest = exported
-    out2 = str(tmp_path / "train2")
-    manifest2 = write_training_shards(export, out2, "doc_id", N_SHARDS, seed=7)
-    assert manifest2 == manifest | {"seed": 7, "n_shards": N_SHARDS}
-    disk = json.load(open(os.path.join(out, "manifest.json")))
-    assert {int(k): v for k, v in disk["shards"].items()} == manifest["shards"]
-
-
-def test_shard_files_reassemble_the_full_token_stream(exported):
-    _, toks, _, out, _ = exported
-    want_tokens = toks.agg(F.sum("n_tokens")).collect()[0][0]
-    got_tokens = 0
-    for f in glob.glob(os.path.join(out, "shard=*/*.parquet")):
-        t = pq.read_table(f, columns=["n_tok"])
-        got_tokens += sum(t.column("n_tok").to_pylist())
-    assert got_tokens == want_tokens
