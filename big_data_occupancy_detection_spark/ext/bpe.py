@@ -50,10 +50,8 @@ END = "</w>"
 MAX_WORDS = 100_000
 
 
-def word_freqs(
-    docs: DataFrame, text_col: str = "text", max_words: int = MAX_WORDS
-) -> DataFrame:
-    """(word, freq): the ``max_words`` most frequent pre-tokens (ties by
+def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(word, freq): the ``MAX_WORDS`` most frequent pre-tokens (ties by
     word asc), computed with one map-side-combined hash aggregation over
     the corpus — the only corpus-proportional stage of BPE learning."""
     pre = F.regexp_extract_all(norm_text(text_col), F.lit(BPE_REGEX), 0)
@@ -62,7 +60,7 @@ def word_freqs(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.desc("freq"), "word")
-        .limit(max_words)
+        .limit(MAX_WORDS)
     )
 
 
@@ -91,7 +89,6 @@ def _pairs_of(sym: tuple[str, ...]) -> Counter:
 def learn_merges_from_freqs(
     freq_rows: Iterable[tuple[str, int]],
     n_merges: int = 200,
-    min_freq: int = 2,
 ) -> list[tuple[str, str]]:
     """Sequential BPE merge learning over a (word, freq) inventory with
     incremental pair-count maintenance: per round only the words
@@ -113,7 +110,7 @@ def learn_merges_from_freqs(
             break
         # deterministic argmax: highest weighted count, then smallest pair
         best = min(pair_counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        if pair_counts[best] < min_freq:
+        if pair_counts[best] < 2:  # a pair seen once is never merged
             break
         merges.append(best)
         for wid in list(pair_words[best]):
@@ -161,15 +158,11 @@ def learn_bpe_merges(
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int = 200,
-    min_freq: int = 2,
-    max_words: int = MAX_WORDS,
 ) -> list[tuple[str, str]]:
     """Distributed corpus pass + sequential merge learning (see module
     docstring for the scale split)."""
-    rows = word_freqs(docs, text_col, max_words).collect()  # bounded: cap
-    return learn_merges_from_freqs(
-        [(r["word"], r["freq"]) for r in rows], n_merges, min_freq
-    )
+    rows = word_freqs(docs, text_col).collect()  # bounded: cap
+    return learn_merges_from_freqs([(r["word"], r["freq"]) for r in rows], n_merges)
 
 
 def apply_bpe(

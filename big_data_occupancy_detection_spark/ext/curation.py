@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round
-from ..functions.text_fns import hash64, md5_hash64, norm_text, tokens
+from ..functions.text_fns import md5_hash64, norm_text, seeded_hash64, tokens
 from ..operators.generate import explode_fused
 from ..operators.partitioning import checkpoint_for_reuse, repartition_for_compute
 from ..operators.relational import global_cumsum, global_row_number
@@ -38,6 +38,13 @@ PII_PATTERNS: dict[str, str] = {
     "phone": r"\+[0-9]{1,3}-[0-9]{3}-[0-9]{4}",
     "ipv4": r"([0-9]{1,3}\.){3}[0-9]{1,3}",
 }
+
+# Keep-rule thresholds; the repetition_filter and c4_quality_filter
+# oracles read the same values.
+GOPHER_MAX_TOP_TOKEN_FRAC, GOPHER_MAX_DUP_BIGRAM_FRAC = 0.12, 0.55
+C4_WORDS = (10, 100_000)
+C4_MEAN_WORD_LEN = (3.0, 10.0)
+C4_MIN_ALPHA_RATIO = 0.6
 
 
 def pii_counts(text_col: Column | str) -> dict[str, Column]:
@@ -125,13 +132,11 @@ def repetition_stats(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_top_token_frac: float = 0.12,
-    max_dup_bigram_frac: float = 0.55,
 ) -> DataFrame:
     """(doc, n_tok, top_token_frac, dup_bigram_frac, keep) — Gopher-style
     within-document repetition signals (Rae et al. 2021 §A1.1: fraction
     of the document made of the most frequent token / of duplicated
-    n-grams), with a keep flag under the given thresholds.
+    n-grams), with a keep flag under the ``GOPHER_*`` thresholds.
 
     top-token counting goes explode → (doc, token) count → doc max: two
     map-side-combinable aggregations rather than any per-doc loop, so the
@@ -173,8 +178,8 @@ def repetition_stats(
             portable_round(F.col("__top") / F.col("n_tok"), 6).alias("top_token_frac"),
             "dup_bigram_frac",
             (
-                (F.col("__top") / F.col("n_tok") <= max_top_token_frac)
-                & (F.col("dup_bigram_frac") <= max_dup_bigram_frac)
+                (F.col("__top") / F.col("n_tok") <= GOPHER_MAX_TOP_TOKEN_FRAC)
+                & (F.col("dup_bigram_frac") <= GOPHER_MAX_DUP_BIGRAM_FRAC)
             ).alias("keep"),
         )
     )
@@ -263,11 +268,6 @@ def c4_quality_flags(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_words: int = 10,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_alpha_ratio: float = 0.6,
 ) -> DataFrame:
     """(doc, n_words, mean_word_len, alpha_ratio, has_curly, has_boilerplate,
     keep) — C4-style heuristic quality battery (Raffel et al. 2020 §2.2,
@@ -300,9 +300,9 @@ def c4_quality_flags(
         has_curly.alias("has_curly"),
         has_boiler.alias("has_boilerplate"),
         (
-            n_words.between(min_words, max_words)
-            & mean_wl.between(min_mean_word_len, max_mean_word_len)
-            & (alpha >= min_alpha_ratio)
+            n_words.between(*C4_WORDS)
+            & mean_wl.between(*C4_MEAN_WORD_LEN)
+            & (alpha >= C4_MIN_ALPHA_RATIO)
             & ~has_curly
             & ~has_boiler
         ).alias("keep"),
@@ -316,8 +316,8 @@ def hashed_token_weight(tok: Column, dim: int = 1024, seed: int = 11) -> Column:
     engines can replay (the shape of a fasttext-style quality scorer with
     hashed features; the weights here are synthetic stand-ins for a
     trained vector)."""
-    bucket = hash64(tok, seed) % dim
-    return (hash64(bucket.cast("string"), seed + 1) % 1001) / 1000.0 - 0.5
+    bucket = seeded_hash64(tok, seed) % dim
+    return (seeded_hash64(bucket.cast("string"), seed + 1) % 1001) / 1000.0 - 0.5
 
 
 def hashed_quality_score(
@@ -523,14 +523,12 @@ def mixture_resample(
     Expected copy count per doc equals exactly ``w`` (stochastic rounding),
     so the output token mixture converges to the target share per stratum.
 
-    All randomness is ``hash64('mix|' || id) / 2^60`` — reproducible
+    All randomness is ``md5_hash64('mix|' || id) / 2^60`` — reproducible
     across engines and runs, which is what makes a 100 TB resample both
     restartable (no RNG state) and oracle-verifiable.
     """
     mix = domain_mixture(docs, strata_cols, text_col=text_col)
     w = F.col("sampling_weight")
-    # md5 unconditionally: the fast-hash swap may only change bucket/band
-    # assignments, never which rows a sampler emits (see hash64 docstring)
     u = md5_hash64(
         F.concat(F.lit("mix|"), F.col(id_col).cast("string"))
     ) / F.lit(float(1 << 60))
@@ -599,14 +597,11 @@ def dsir_log_weights(
         "tok",
         keep=[id_col, "__is_target"],
     ).filter(F.col("tok") != "")
-    # pmod, not %: the portable md5 hash is non-negative (identical
-    # either way) but the SPARK_GRAFT_FAST_HASH xxhash64 swap is signed —
-    # a sign-preserving % would spread mass over (−dim, dim) while the
-    # add-one smoothing still assumes dim buckets
+    # the md5 hash is non-negative, so pmod equals the oracle's %
     bucketed = toks.select(
         F.col(id_col),
         "__is_target",
-        F.pmod(hash64(F.col("tok"), seed), F.lit(dim)).alias("bucket"),
+        F.pmod(seeded_hash64(F.col("tok"), seed), F.lit(dim)).alias("bucket"),
     )
     # ONE pass over the token stream; everything below reads this
     # compact (≤ dim rows per doc, all longs) frame.

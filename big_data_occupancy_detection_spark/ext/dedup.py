@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round
-from ..functions.text_fns import hash64, tokens, word_ngrams
+from ..functions.text_fns import md5_hash64, seeded_hash64, tokens, word_ngrams
 from ..operators.generate import explode_fused
 from ..operators.partitioning import checkpoint_for_reuse, repartition_for_compute
 
@@ -82,12 +82,10 @@ def first_owner_encode(df: DataFrame, id_col: str, pos_col: str):
     ).otherwise(doc * F.lit(1 << 32) + F.col(pos_col))
 
 
-def with_shingles(
-    df: DataFrame, text_col: str = "text", n: int = 3, out: str = "shingles"
-) -> DataFrame:
-    """Distinct n-word shingles per document."""
+def with_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
+    """Distinct n-word shingles per document, in column ``shingles``."""
     return repartition_for_compute(df).withColumn(
-        out, F.array_distinct(word_ngrams(text_col, n))
+        "shingles", F.array_distinct(word_ngrams(text_col, n))
     )
 
 
@@ -109,7 +107,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
@@ -119,7 +116,7 @@ def ngram_jaccard_pairs(
     at corpus scale a stop-shingle appearing in 10^6 docs would otherwise
     create 10^12 candidate pairs (classic skew bomb).
     """
-    sh = with_shingles(df, text_col, n).select(
+    sh = with_shingles(df, text_col).select(
         F.col(id_col).alias("doc"), "shingles"
     )
     sizes = sh.select("doc", F.size("shingles").alias("n_sh"))
@@ -128,7 +125,7 @@ def ngram_jaccard_pairs(
     # need two different shingles with equal md5-60bit prefixes in the same
     # doc pair — ~2^-60 per pair; the oracle hashes identically)
     inv = explode_fused(
-        sh, F.transform("shingles", lambda s: hash64(s)), "s", keep=["doc"]
+        sh, F.transform("shingles", md5_hash64), "s", keep=["doc"]
     )
     if max_shingle_df is not None:
         hot = (
@@ -161,7 +158,6 @@ def ngram_jaccard_pairs_prefix(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Same contract as :func:`ngram_jaccard_pairs` via PREFIX FILTERING
@@ -179,10 +175,10 @@ def ngram_jaccard_pairs_prefix(
     sorted shingle arrays and intersect JVM-side (``array_intersect``),
     so output is identical to the exhaustive form (shared oracle).
     """
-    sh = with_shingles(df, text_col, n).select(
+    sh = with_shingles(df, text_col).select(
         F.col(id_col).alias("doc"),
         F.array_sort(
-            F.array_distinct(F.transform("shingles", lambda s: hash64(s)))
+            F.array_distinct(F.transform("shingles", md5_hash64))
         ).alias("hs"),
     )
     sh = checkpoint_for_reuse(sh.withColumn("n_sh", F.size("hs")))
@@ -224,16 +220,15 @@ def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
     num_hashes: int = DEFAULT_NUM_HASHES,
 ) -> DataFrame:
     """(doc, shingles, sig: array<bigint>[num_hashes]) — sig_i = min seeded hash."""
-    sh = with_shingles(df, text_col, n).select(F.col(id_col).alias("doc"), "shingles")
+    sh = with_shingles(df, text_col).select(F.col(id_col).alias("doc"), "shingles")
 
     def _hasher(seed: int):
         # closure helper: a seed=seed default arg would make PySpark treat the
         # lambda as the 2-arg (element, index) transform variant
-        return lambda s: hash64(s, seed)
+        return lambda s: seeded_hash64(s, seed)
 
     sig = F.array(
         *[
@@ -248,19 +243,17 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH + exact-Jaccard verification.
 
-    With r = num_hashes/bands rows per band, a pair with Jaccard j collides
-    with probability 1-(1-j^r)^bands (r=3, bands=4: j=0.5 → 66%, j=0.9 → ~100%).
-    Verification is exact Jaccard on the shingle arrays of candidates only.
+    With r = DEFAULT_NUM_HASHES/DEFAULT_BANDS rows per band, a pair with
+    Jaccard j collides with probability 1-(1-j^r)^bands (r=3, bands=4:
+    j=0.5 → 66%, j=0.9 → ~100%). Verification is exact Jaccard on the
+    shingle arrays of candidates only.
     """
-    r = num_hashes // bands
-    signed = minhash_signatures(df, text_col, id_col, n, num_hashes)
+    r = DEFAULT_NUM_HASHES // DEFAULT_BANDS
+    signed = minhash_signatures(df, text_col, id_col)
     # one band-struct array + explode: the signature (12 md5s per shingle)
     # is computed ONCE per doc, not once per band
     band_structs = F.array(
@@ -271,7 +264,7 @@ def minhash_lsh_pairs(
                     F.concat_ws("-", *[F.col("sig")[bi * r + j] for j in range(r)])
                 ).alias("bkey"),
             )
-            for bi in range(bands)
+            for bi in range(DEFAULT_BANDS)
         ]
     )
     banded = signed.select(
@@ -293,7 +286,7 @@ def minhash_lsh_pairs(
     )
     # re-attach shingle arrays from a signature-free plan — reusing `signed`
     # here would recompute the 12-hash signatures two more times
-    sh = with_shingles(df, text_col, n).select(F.col(id_col).alias("doc"), "shingles")
+    sh = with_shingles(df, text_col).select(F.col(id_col).alias("doc"), "shingles")
     cands = (
         cands.join(sh.select(F.col("doc").alias("d1"), F.col("shingles").alias("sh1")), "d1")
         .join(sh.select(F.col("doc").alias("d2"), F.col("shingles").alias("sh2")), "d2")
@@ -419,7 +412,6 @@ def near_dup_clusters_staged(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """(doc, cluster) — near-dup clusters with exact dedup staged FIRST:
     pair generation runs only over exact-dedup representatives, then every
@@ -443,7 +435,7 @@ def near_dup_clusters_staged(
         F.col("doc").alias(id_col), F.col("__text").alias(text_col)
     )
     rep_pairs = ngram_jaccard_pairs(
-        reps, text_col=text_col, id_col=id_col, n=n, threshold=threshold
+        reps, text_col=text_col, id_col=id_col, threshold=threshold
     )
     rep_clusters = connected_components(rep_pairs).withColumnRenamed("doc", "rep")
     return (
@@ -469,7 +461,7 @@ def simhash32(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     one = F.lit(1).cast("long")
     tok_bits = explode_fused(
         repartition_for_compute(df).select(F.col(id_col).alias("doc"), text_col),
-        F.transform(tokens(text_col), lambda t: hash64(t)),
+        F.transform(tokens(text_col), md5_hash64),
         "h",
         keep=["doc"],
     ).select(
@@ -613,7 +605,6 @@ def minhash_lsh_pairs_staged(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    **kwargs,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs with exact dedup staged first — identical
     output to :func:`minhash_lsh_pairs` (identical docs have identical
@@ -626,7 +617,7 @@ def minhash_lsh_pairs_staged(
         F.col("doc").alias(id_col), F.col("__text").alias(text_col)
     )
     rep_pairs = minhash_lsh_pairs(
-        reps, text_col=text_col, id_col=id_col, threshold=threshold, **kwargs
+        reps, text_col=text_col, id_col=id_col, threshold=threshold
     )
     return expand_pairs_over_exact_groups(rep_pairs, tagged)
 
@@ -635,7 +626,6 @@ def ngram_jaccard_pairs_staged(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact-dedup-first twin of :func:`ngram_jaccard_pairs` — inverted
@@ -647,7 +637,7 @@ def ngram_jaccard_pairs_staged(
         F.col("doc").alias(id_col), F.col("__text").alias(text_col)
     )
     rep_pairs = ngram_jaccard_pairs(
-        reps, text_col=text_col, id_col=id_col, n=n, threshold=threshold
+        reps, text_col=text_col, id_col=id_col, threshold=threshold
     )
     return expand_pairs_over_exact_groups(rep_pairs, tagged)
 
@@ -657,7 +647,6 @@ def cross_corpus_near_dups(
     new: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """(doc_id, dup_of, keep) for every NEW doc: the incremental-ingest
@@ -672,19 +661,19 @@ def cross_corpus_near_dups(
     the corpus side of the index is written once (bucketed by shingle
     hash) and each ingest batch joins against it.
     """
-    shc = with_shingles(corpus, text_col, n).select(
+    shc = with_shingles(corpus, text_col).select(
         F.col(id_col).alias("cdoc"), "shingles"
     )
-    shn = with_shingles(new, text_col, n).select(
+    shn = with_shingles(new, text_col).select(
         F.col(id_col).alias("ndoc"), "shingles"
     )
     sc = shc.select("cdoc", F.size("shingles").alias("n_c"))
     sn = shn.select("ndoc", F.size("shingles").alias("n_n"))
     invc = explode_fused(
-        shc, F.transform("shingles", lambda s: hash64(s)), "s", keep=["cdoc"]
+        shc, F.transform("shingles", md5_hash64), "s", keep=["cdoc"]
     )
     invn = explode_fused(
-        shn, F.transform("shingles", lambda s: hash64(s)), "s", keep=["ndoc"]
+        shn, F.transform("shingles", md5_hash64), "s", keep=["ndoc"]
     )
     inter = (
         invc.join(invn, "s")
@@ -758,7 +747,7 @@ def fuzzy_pairs_edit1(
     )
     inv = explode_fused(
         base,
-        F.transform(variants, lambda v: hash64(v)),
+        F.transform(variants, md5_hash64),
         "__v",
         keep=["__id", "__name"],
     )
@@ -842,7 +831,7 @@ def repeated_substring_spans(
                 F.sequence(
                     F.lit(1), F.length("__t") - F.lit(min_len - 1)
                 ),
-                lambda i: hash64(F.col("__t").substr(i, F.lit(min_len))),
+                lambda i: md5_hash64(F.col("__t").substr(i, F.lit(min_len))),
             )
         ).alias("__p0", "h"),
     ).select("doc_id", (F.col("__p0") + 1).alias("pos"), "h")
@@ -990,10 +979,7 @@ def remove_repeated_spans(
 
 
 def shingle_novelty(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc, n_shingles, n_novel, novelty) — per-document fraction of its
     DISTINCT n-word shingles that occur in no other document: the
@@ -1017,14 +1003,13 @@ def shingle_novelty(
     collisions merge shingles identically in the oracle (same portable
     hash family); distinctness is taken on the shingle STRINGS before
     hashing on both engines, so a cross-doc collision undercounts
-    novelty by the same rule either way (and SPARK_GRAFT_FAST_HASH
-    keeps the census semantics, just a different collision set).
+    novelty by the same rule either way.
     """
-    sh = with_shingles(df, text_col, n).select(
+    sh = with_shingles(df, text_col).select(
         F.col(id_col).alias("doc"), "shingles"
     )
     hashed = checkpoint_for_reuse(
-        sh.select("doc", F.transform("shingles", lambda s: hash64(s)).alias("hs"))
+        sh.select("doc", F.transform("shingles", md5_hash64).alias("hs"))
     )
     sizes = hashed.select("doc", F.size("hs").cast("long").alias("n_shingles"))
     e = explode_fused(hashed, "hs", "h", keep=["doc"])

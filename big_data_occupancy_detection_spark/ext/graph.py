@@ -24,6 +24,12 @@ from pyspark.sql import functions as F
 from ..functions.rounding import portable_round
 from ..operators.partitioning import checkpoint_for_reuse
 
+# PageRank rounds every iteration's ranks to this many decimals; the
+# doc_pagerank oracle rounds the same way.
+PAGERANK_DIGITS = 12
+# kcore's runaway backstop on peeling rounds.
+KCORE_MAX_ROUNDS = 100
+
 
 def pagerank(
     edges: DataFrame,
@@ -31,13 +37,12 @@ def pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    round_to: int = 12,
 ) -> DataFrame:
     """(node, pagerank) after ``n_iters`` synchronous power iterations.
 
     ``edges`` is a directed edge list; for an undirected graph pass both
     orientations. Nodes = every id appearing as a source or destination.
-    Per-iteration ranks are rounded to ``round_to`` decimals so two
+    Per-iteration ranks are rounded to ``PAGERANK_DIGITS`` decimals so two
     engines summing contributions in different orders stay byte-identical
     (float addition is not associative; 1e-12 is far below any rank gap
     of interest and far above double ulp drift).
@@ -72,7 +77,7 @@ def pagerank(
     ranks = base.select(
         "node",
         "outdeg",
-        portable_round(F.lit(1.0) / F.lit(float(n)), round_to).alias("pr"),
+        portable_round(F.lit(1.0) / F.lit(float(n)), PAGERANK_DIGITS).alias("pr"),
     )
     for i in range(n_iters):
         contrib = (
@@ -93,7 +98,7 @@ def pagerank(
                     (1.0 - damping) / n
                     + damping
                     * (F.coalesce(F.col("inflow"), F.lit(0.0)) + F.col("dmass") / n),
-                    round_to,
+                    PAGERANK_DIGITS,
                 ).alias("pr"),
             )
         )
@@ -159,7 +164,6 @@ def kcore(
     k: int,
     src_col: str = "u",
     dst_col: str = "v",
-    max_iters: int = 100,
 ) -> DataFrame:
     """(node, core_degree): the k-core of an undirected graph — the
     maximal subgraph in which every node has degree ≥ k — by iterative
@@ -179,7 +183,7 @@ def kcore(
     is eagerly checkpointed per round so Catalyst analysis stays
     constant-depth (the ``pagerank`` pattern). Rounds are bounded by
     the graph's degeneracy ordering depth — small for real co-purchase
-    / similarity graphs; ``max_iters`` is a runaway backstop.
+    / similarity graphs; ``KCORE_MAX_ROUNDS`` is a runaway backstop.
 
     Iterative, but SQL-expressible after all: DuckDB 1.0 evaluates
     aggregates over the recursive reference (each step sees the previous
@@ -191,7 +195,7 @@ def kcore(
     cur = checkpoint_for_reuse(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
     )
-    for _ in range(max_iters):
+    for _ in range(KCORE_MAX_ROUNDS):
         deg = (
             cur.select(F.col("u").alias("node"))
             .unionAll(cur.select(F.col("v").alias("node")))
@@ -208,5 +212,6 @@ def kcore(
             .join(F.broadcast(low), F.col("v") == low.node, "left_anti")
         )
     raise RuntimeError(
-        f"kcore did not converge in {max_iters} rounds — raise max_iters"
+        f"kcore did not converge in {KCORE_MAX_ROUNDS} rounds — raise "
+        "KCORE_MAX_ROUNDS"
     )

@@ -174,7 +174,6 @@ def pq_topk_from_index(
     path: str,
     queries: DataFrame,
     k: int = 5,
-    shortlist: int = PQ_SHORTLIST,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -203,7 +202,7 @@ def pq_topk_from_index(
     cents = load_codebooks(spark, path, n_sub)
     codes = spark.read.parquet(f"{path}/codes")
     return _serve_codes(
-        spark, path, codes, cents, n_sub, d_sub, queries, k, shortlist,
+        spark, path, codes, cents, n_sub, d_sub, queries, k, PQ_SHORTLIST,
         id_col, vec_col,
     )
 
@@ -445,8 +444,6 @@ def build_ivfpq_index(
     emb: DataFrame,
     path: str,
     n_coarse: int | None = None,
-    n_sub: int = PQ_SUBSPACES,
-    codebook: int = PQ_CODEBOOK,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     residual: bool = False,
@@ -478,6 +475,7 @@ def build_ivfpq_index(
     n_coarse = IVF_CENTROIDS if n_coarse is None else n_coarse
     spark = emb.sparkSession
     dim = len(emb.select(vec_col).first()[0])
+    n_sub = PQ_SUBSPACES
     d_sub = dim // n_sub
     normed = checkpoint_for_reuse(_normalized_long_ids(emb, id_col, vec_col))
     coarse_rows = fit_centroids_vectorized(
@@ -509,7 +507,7 @@ def build_ivfpq_index(
         )
     else:
         fit_input = normed
-    cents, codes = _pq_fit_subspaces(fit_input, n_sub, codebook, d_sub)
+    cents, codes = _pq_fit_subspaces(fit_input, n_sub, PQ_CODEBOOK, d_sub)
     _write_codebooks(spark, cents, path)
     (
         codes.join(assigned, "vec_id")
@@ -531,7 +529,7 @@ def build_ivfpq_index(
                 "n_sub": n_sub,
                 "d_sub": d_sub,
                 "dim": dim,
-                "codebook": codebook,
+                "codebook": PQ_CODEBOOK,
                 "n_coarse": n_coarse,
                 "residual": residual,
             },
@@ -599,7 +597,6 @@ def ivfpq_shortlist_from_index(
     path: str,
     queries: DataFrame,
     n_probes: int = 4,
-    shortlist: int = PQ_SHORTLIST,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -611,8 +608,8 @@ def ivfpq_shortlist_from_index(
     candidate generation. Same serve plan up to (and excluding) the
     re-rank — deterministic for a given persisted index + query set."""
     return ivfpq_topk_from_index(
-        spark, path, queries, k=0, n_probes=n_probes, shortlist=shortlist,
-        id_col=id_col, vec_col=vec_col, shortlist_only=True,
+        spark, path, queries, k=0, n_probes=n_probes, id_col=id_col,
+        vec_col=vec_col, shortlist_only=True,
     )
 
 

@@ -206,19 +206,17 @@ def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    planes: int = LSH_PLANES,
-    probe_hamming: int = LSH_PROBE_HAMMING,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     plane_dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k with multiprobe: each query searches its own LSH
-    bucket plus every bucket within ``probe_hamming`` sign flips.
+    bucket plus every bucket within ``LSH_PROBE_HAMMING`` sign flips.
 
     At scale the corpus is hash-partitioned by bucket, so each query is a
-    (1 + planes·probe_hamming)-partition probe instead of a full scan.
-    Recall is tuned by ``planes`` (fewer → bigger buckets) and
-    ``probe_hamming`` (more → more buckets searched) — multiprobe buys
+    (1 + LSH_PLANES·LSH_PROBE_HAMMING)-partition probe instead of a full scan.
+    Recall is tuned by ``LSH_PLANES`` (fewer → bigger buckets) and
+    ``LSH_PROBE_HAMMING`` (more → more buckets searched) — multiprobe buys
     recall without shrinking the bucket count, the standard trade for
     moderate-similarity neighbors (a cos≈0.4 neighbor agrees with a random
     hyperplane with p≈0.63, so exact-bucket match decays as 0.63^planes).
@@ -227,21 +225,21 @@ def lsh_bucketed_topk(
         repartition_for_compute(
             corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec"))
         ),
-        planes,
+        LSH_PLANES,
         "cvec",
         plane_dim,
     )
     q = with_lsh_bucket(
         queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")),
-        planes,
+        LSH_PLANES,
         "qvec",
         plane_dim,
     )
-    if probe_hamming >= 1:
+    if LSH_PROBE_HAMMING >= 1:
         # explode each query to its bucket + all single-bit-flip buckets
-        # (probe_hamming > 1 would extend the same expansion recursively)
+        # (a Hamming bound > 1 would extend the same expansion recursively)
         q = explode_fused(q.withColumnRenamed("bucket", "__b0"),
-                          _flips_of("__b0", planes), "bucket").drop("__b0")
+                          _flips_of("__b0", LSH_PLANES), "bucket").drop("__b0")
     cos = F.round(cosine_similarity("qvec", "cvec"), 9)
     pairs = (
         c.join(F.broadcast(q), "bucket")
@@ -397,13 +395,11 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_centroids: int = IVF_CENTROIDS,
-    n_probes: int = IVF_PROBES,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF approximate top-k: corpus partitioned into ``n_centroids``
-    inverted lists; each query probes its ``n_probes`` closest lists and
+    """IVF approximate top-k: corpus partitioned into ``IVF_CENTROIDS``
+    inverted lists; each query probes its ``IVF_PROBES`` closest lists and
     ranks only those candidates.
 
     Fully lazy — centroid fitting, corpus assignment, probing and ranking
@@ -411,13 +407,13 @@ def ivf_topk(
     shape: assignment is a broadcast ×k fan-out plus one hash shuffle on
     the vector id; the probe is an equi-join on cluster id — in production
     the assigned corpus is persisted bucketed by cluster so repeated query
-    batches skip both. Search cost drops ~``n_centroids / n_probes`` vs
-    brute force; recall is tuned by ``n_probes``.
+    batches skip both. Search cost drops ~``IVF_CENTROIDS / IVF_PROBES``
+    vs brute force; recall is tuned by ``IVF_PROBES``.
     """
     from ..functions.vector_fns import dot
 
     normed = _normalized(corpus, id_col, vec_col)
-    cent = _fit_centroids(normed, n_centroids, IVF_ITERS).persist()
+    cent = _fit_centroids(normed, IVF_CENTROIDS, IVF_ITERS).persist()
 
     c = _assign_nearest(
         repartition_for_compute(
@@ -428,14 +424,14 @@ def ivf_topk(
         "cvec",
     )
 
-    # each query probes its n_probes closest inverted lists
+    # each query probes its IVF_PROBES closest inverted lists
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
     probe_w = Window.partitionBy("qid").orderBy(F.desc("__dot"), F.asc("cid"))
     q = (
         q.crossJoin(F.broadcast(cent))
         .withColumn("__dot", dot("qvec", "__cent"))
         .withColumn("__pr", F.row_number().over(probe_w))
-        .filter(F.col("__pr") <= n_probes)
+        .filter(F.col("__pr") <= IVF_PROBES)
         .select("qid", "qvec", F.col("cid").alias("cluster"))
     )
 
@@ -456,7 +452,6 @@ def ivf_topk(
 def cluster_balanced_sample(
     emb: DataFrame,
     n_per_cluster: int = 8,
-    n_centroids: int = IVF_CENTROIDS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -477,7 +472,7 @@ def cluster_balanced_sample(
     from ..functions.text_fns import md5_hash64
 
     normed = _normalized(emb, id_col, vec_col)
-    cent = _fit_centroids(normed, n_centroids, IVF_ITERS)
+    cent = _fit_centroids(normed, IVF_CENTROIDS, IVF_ITERS)
     assigned = _assign_nearest(
         repartition_for_compute(
             emb.select(
@@ -502,8 +497,6 @@ def cluster_balanced_sample(
 def lsh_near_pairs(
     emb: DataFrame,
     threshold: float = 0.4,
-    planes: int = LSH_PLANES,
-    probe_hamming: int = LSH_PROBE_HAMMING,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     plane_dim: int | None = None,
@@ -512,26 +505,26 @@ def lsh_near_pairs(
     ``near_pairs_threshold``'s O(n²) cross join.
 
     Candidates are pairs whose sign-buckets differ in at most
-    ``probe_hamming`` bits (one side pre-exploded to its flip set, so the
+    ``LSH_PROBE_HAMMING`` bits (one side pre-exploded to its flip set, so the
     pair generation is an equi-join on bucket); cosine is verified exactly
     on candidates only. Recall follows the multiprobe collision bound; at
-    the default (4 planes, Hamming ≤ 1) a cos-θ pair collides with
+    4 planes and Hamming ≤ 1 a cos-θ pair collides with
     probability Σ_{i≤1} C(4,i) p^(4-i)(1-p)^i for p = 1 − θ/π.
     """
     a = with_lsh_bucket(
         repartition_for_compute(
             emb.select(F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"))
         ),
-        planes,
+        LSH_PLANES,
         "a_vec",
         plane_dim,
     )
-    if probe_hamming >= 1:
+    if LSH_PROBE_HAMMING >= 1:
         a = explode_fused(a.withColumnRenamed("bucket", "__b0"),
-                          _flips_of("__b0", planes), "bucket").drop("__b0")
+                          _flips_of("__b0", LSH_PLANES), "bucket").drop("__b0")
     b = with_lsh_bucket(
         emb.select(F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec")),
-        planes,
+        LSH_PLANES,
         "b_vec",
         plane_dim,
     )
@@ -571,12 +564,10 @@ SEMDEDUP_SPLIT_PLANES = 4
 def semantic_dedup(
     emb: DataFrame,
     threshold: float = 0.95,
-    n_centroids: int = None,
-    n_iters: int = None,
+    n_centroids: int = IVF_CENTROIDS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster_size: int | None = None,
-    split_planes: int = SEMDEDUP_SPLIT_PLANES,
     plane_dim: int | None = None,
 ) -> DataFrame:
     """(vid, cluster, dup_of, keep) — SemDeDup-style semantic deduplication
@@ -599,7 +590,7 @@ def semantic_dedup(
     whole job. When set, every cluster larger than the cap is split by the
     sign bits of b deterministic md5-derived hyperplanes (the
     ``with_lsh_bucket`` family), with b = the smallest integer such that
-    size ≤ cap·2^b (capped at ``split_planes``) — so pair work per refined
+    size ≤ cap·2^b (capped at ``SEMDEDUP_SPLIT_PLANES``) — so pair work per refined
     cell is ~cap² and total extra cost is one vector scan + one hash
     shuffle. Near-duplicates at threshold t land in the same sub-bucket
     with probability ≥ (1 − arccos(t)/π)^b per pair (t=0.95 → 0.9^b):
@@ -609,12 +600,8 @@ def semantic_dedup(
     ``keep`` becomes a superset of the unguarded keeps (pairs crossing a
     sub-bucket boundary are not examined). Guarded and unguarded forms are
     identical whenever no cluster exceeds the cap (test-asserted)."""
-    if n_centroids is None:
-        n_centroids = IVF_CENTROIDS
-    if n_iters is None:
-        n_iters = IVF_ITERS
     normed = _normalized(emb, id_col, vec_col)
-    cent = _fit_centroids(normed, n_centroids, n_iters)
+    cent = _fit_centroids(normed, n_centroids, IVF_ITERS)
     # The assignment feeds both self-join sides AND the final keep join.
     # Checkpoint only the slim (vid, cluster) map — ids + ints, tiny even
     # at corpus scale — so the k-means fit and argmax assignment execute
@@ -633,11 +620,13 @@ def semantic_dedup(
         sizes = assigned.groupBy("cluster").agg(F.count("*").alias("__csz"))
         depths = sizes.select(
             "cluster",
-            _split_bits(F.col("__csz"), max_cluster_size, split_planes).alias("__b"),
+            _split_bits(
+                F.col("__csz"), max_cluster_size, SEMDEDUP_SPLIT_PLANES
+            ).alias("__b"),
         )
         sub = with_lsh_bucket(
             emb.select(F.col(id_col).alias("vid"), vec_col),
-            split_planes,
+            SEMDEDUP_SPLIT_PLANES,
             vec_col,
             plane_dim,
         ).select("vid", F.col("bucket").alias("__sub"))
@@ -648,7 +637,7 @@ def semantic_dedup(
                 "vid",
                 "cluster",
                 (
-                    F.col("cluster") * F.lit(1 << split_planes)
+                    F.col("cluster") * F.lit(1 << SEMDEDUP_SPLIT_PLANES)
                     # F.shiftleft takes only a literal bit count; the SQL
                     # form accepts the per-cluster depth column
                     + F.col("__sub").bitwiseAND(
@@ -854,7 +843,6 @@ def pq_topk(
     k: int = 5,
     n_sub: int = PQ_SUBSPACES,
     codebook: int = PQ_CODEBOOK,
-    shortlist: int = PQ_SHORTLIST,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -879,7 +867,7 @@ def pq_topk(
         F.col("vid").alias("qid"), F.col("nvec").alias("qnv")
     )
     cents, codes = _pq_fit_subspaces(normed, n_sub, codebook, d_sub)
-    short = _pq_shortlist(qn, cents, codes, n_sub, d_sub, shortlist)
+    short = _pq_shortlist(qn, cents, codes, n_sub, d_sub, PQ_SHORTLIST)
     cvec = normed.select(
         F.col("vid").alias("vec_id"), F.col("nvec").alias("cn")
     )

@@ -38,12 +38,7 @@ def _bucket(key_col, seed_col, width: int):
     )
 
 
-def cms_build(
-    df: DataFrame,
-    key_col: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def cms_build(df: DataFrame, key_col: str, width: int = CMS_WIDTH) -> DataFrame:
     """(seed, bucket, cnt) — the count-min grid for ``df[key_col]``.
 
     Map-side ×depth fan-out, then one combined aggregation into d·w rows.
@@ -52,7 +47,7 @@ def cms_build(
     keyed = df.select(F.col(key_col).cast("string").alias("__key"))
     fanned = explode_fused(
         keyed,
-        F.sequence(F.lit(0), F.lit(depth - 1)),
+        F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1)),
         "seed",
         keep=["__key"],
     )
@@ -69,7 +64,6 @@ def cms_estimate(
     cms: DataFrame,
     keys: DataFrame,
     key_col: str = "key",
-    depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
 ) -> DataFrame:
     """(key, est) — min-over-rows estimate for each candidate key.
@@ -82,7 +76,7 @@ def cms_estimate(
     """
     fanned = explode_fused(
         keys.select(F.col(key_col).cast("string").alias("key")),
-        F.sequence(F.lit(0), F.lit(depth - 1)),
+        F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1)),
         "seed",
         keep=["key"],
     ).select("key", "seed", _bucket(F.col("key"), F.col("seed"), width).alias("bucket"))
@@ -97,7 +91,6 @@ def cms_heavy_hitters(
     df: DataFrame,
     key_col: str,
     k: int = 20,
-    depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
 ) -> DataFrame:
     """(key, est, exact) — top-``k`` keys by count-min estimate, with the
@@ -107,9 +100,9 @@ def cms_heavy_hitters(
     bound oracle-checkable; production callers at unbounded cardinality
     drop it and feed candidates from a sample instead of ``distinct()``.
     """
-    cms = cms_build(df, key_col, depth, width)
+    cms = cms_build(df, key_col, width)
     cands = df.select(F.col(key_col).cast("string").alias("key")).distinct()
-    est = cms_estimate(cms, cands, "key", depth, width)
+    est = cms_estimate(cms, cands, "key", width)
     exact = (
         df.select(F.col(key_col).cast("string").alias("key"))
         .groupBy("key")
@@ -304,7 +297,6 @@ def kmv_sketch(
     key_col: str,
     group_col: str,
     k: int = KMV_K,
-    bucket_shift: int = 50,
 ) -> tuple[DataFrame, DataFrame]:
     """Per-group KMV (k-minimum-values / bottom-k theta) sketch: the ``k``
     smallest distinct 60-bit key hashes per group, the sketch family whose
@@ -318,7 +310,7 @@ def kmv_sketch(
 
     100 TB shape: one map-side-combined distinct on (group, hash) — the
     only fact-sized exchange — then a DETERMINISTIC two-level prune before
-    the rank window: bucket = h div 2^bucket_shift (1024 buckets), per-group
+    the rank window: bucket = h div 2^50 (1024 buckets), per-group
     cumulative bucket counts find the first bucket where the running count
     reaches k, and only rows at-or-below that cutoff bucket (≈ k + one
     bucket's worth, NOT the group's millions of distincts) enter the sort.
@@ -340,7 +332,7 @@ def kmv_sketch(
     # the distinct pass feeds BOTH the bucket-count table and the survivor
     # filter — materialize it once (the standing two-consumer rule)
     b = checkpoint_for_reuse(
-        d.withColumn("b", F.expr(f"h div {1 << bucket_shift}"))
+        d.withColumn("b", F.expr(f"h div {1 << 50}"))
     )
     bc = b.groupBy("g", "b").agg(F.count(F.lit(1)).alias("n"))
     wcum = (

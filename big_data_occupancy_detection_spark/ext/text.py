@@ -18,7 +18,7 @@ from ..functions.rounding import portable_round
 from ..operators.generate import explode_fused
 from ..operators.partitioning import repartition_for_compute
 
-from ..functions.text_fns import char_ngrams, hash64, norm_text, tokens
+from ..functions.text_fns import char_ngrams, md5_hash64, norm_text, tokens
 
 # Marker vocabularies for the language-ID heuristic. A deterministic
 # marker-token scoring (argmax of per-language marker hits with a fixed
@@ -109,19 +109,10 @@ def fingerprint_rolling_min(text_col: Column | str, n: int = 5) -> Column:
     """Winnowing-style content fingerprint: minimum 60-bit hash over all
     character n-grams — stable under local edits elsewhere in the document.
 
-    Hashes through the ``hash64`` dispatcher (round-11): default stays the
-    portable md5 family (oracle parity, results unchanged), and
-    ``SPARK_GRAFT_FAST_HASH=1`` now covers the per-gram hashing that
-    dominates every fingerprint consumer (measured ~85% of
-    bloom_delta_prescreen's wall at the 10× evidence scale) — same
-    semantics class as the other hash64 operators: equal texts keep equal
-    fingerprints, only the sampled min-gram (and oracle parity) changes.
+    The per-gram hash is the portable md5 family, so the DuckDB oracle
+    replays the same fingerprint.
     """
-    grams = char_ngrams(text_col, n)
-    # explicit 1-arg lambda: F.transform would otherwise pass the element
-    # INDEX into hash64's seed parameter, silently position-seeding every
-    # gram
-    return F.array_min(F.transform(grams, lambda g: hash64(g)))
+    return F.array_min(F.transform(char_ngrams(text_col, n), md5_hash64))
 
 
 def bm25_rank(

@@ -1,10 +1,11 @@
 """Text column helpers — pure Catalyst expressions (no Python UDFs).
 
 Shared by the extension operators (ext.text, ext.dedup): normalization,
-whitespace tokenization, word/char shingling, and a portable 64-bit-ish
-hash built from md5 so the same value is computable in ANSI SQL engines
-(the DuckDB oracle) — Spark's ``hash``/``xxhash64`` are Spark-specific
-and would never hash-match an oracle.
+whitespace tokenization, word/char shingling, and the portable 60-bit
+hash family built from md5 (``md5_hash64``, ``seeded_hash64``) so the
+same value is computable in ANSI SQL engines (the DuckDB oracle) —
+Spark's ``hash``/``xxhash64`` are Spark-specific and would never
+hash-match an oracle.
 
 Everything here is an expression over columns: it runs inside whole-stage
 codegen, scales linearly with partitions, and never touches the driver.
@@ -67,35 +68,3 @@ def md5_hash64(col: Column) -> Column:
 def seeded_hash64(col: Column, seed: int) -> Column:
     """Family of independent portable hashes h_seed(x) = md5_hash64(seed || x)."""
     return md5_hash64(F.concat(F.lit(f"{seed}|"), col))
-
-
-def fast_hash64(col: Column, seed: int = 0) -> Column:
-    """JVM xxhash64 — the production fast path (~3-5× md5 throughput).
-
-    NOT oracle-portable: xxhash64 is Spark-specific, so signatures computed
-    with it can never hash-match a DuckDB oracle. Use via ``hash64``.
-    """
-    return F.xxhash64(F.lit(seed), col)
-
-
-def hash64(col: Column, seed: int | None = None) -> Column:
-    """Hash-family dispatcher for the dedup/similarity operators.
-
-    Default is the portable md5 60-bit family (oracle-verifiable — the
-    engine's correctness story). Set ``SPARK_GRAFT_FAST_HASH=1`` to swap in
-    xxhash64 at production scale: every operator built on ``hash64`` (n-gram
-    inverted index, MinHash signatures, SimHash bit-majority) keeps its
-    semantics — bucket/band assignments change but candidate verification
-    is exact, so output precision is unchanged; only oracle hash parity is
-    lost. Read per plan construction, so tests can toggle via monkeypatch.
-
-    ``seed`` uses ``is not None`` semantics: ``hash64(c, 0)`` is the seeded
-    hash of ``'0|' || c`` (matching the DuckDB oracle's term-0 MinHash hash),
-    while ``hash64(c)`` is the unseeded portable hash. Seed 0 previously fell
-    through to the unseeded form, diverging from the oracle's band-0 keys.
-    """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_FAST_HASH") == "1":
-        return fast_hash64(col, seed if seed is not None else 0)
-    return seeded_hash64(col, seed) if seed is not None else md5_hash64(col)

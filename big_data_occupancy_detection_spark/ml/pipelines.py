@@ -34,9 +34,6 @@ def build_weighted_lr_pipeline(
     feature_cols: list[str],
     label_col: str = "label",
     weight_col: str = "class_weight",
-    max_iter: int = 50,
-    reg_param: float = 0.01,
-    elastic_net: float = 0.0,
 ) -> Pipeline:
     assembler = VectorAssembler(
         inputCols=feature_cols, outputCol="features_raw", handleInvalid="skip"
@@ -48,9 +45,9 @@ def build_weighted_lr_pipeline(
         featuresCol="features",
         labelCol=label_col,
         weightCol=weight_col,
-        maxIter=max_iter,
-        regParam=reg_param,
-        elasticNetParam=elastic_net,
+        maxIter=50,
+        regParam=0.01,
+        elasticNetParam=0.0,
     )
     return Pipeline(stages=[assembler, scaler, lr])
 
@@ -125,9 +122,9 @@ def strip_training_summary(model):
     ``BinaryLogisticRegressionTrainingSummaryImpl``) hold a NON-transient
     ``SparkSession`` reference, and ``SparkSession.observationManager`` is a
     lazily-initialized, non-serializable field. The moment any
-    ``DataFrame.observe`` runs in the session (our ``operators.relational.
-    observed`` quality-metric wrapper — standard practice on every production
-    write), that lazy field materializes, and every subsequent
+    ``DataFrame.observe`` runs in the session (quality-metric counters
+    piggybacked on a write — standard practice in production pipelines),
+    that lazy field materializes, and every subsequent
     ``model.transform`` whose prediction UDF captures a summary-bearing model
     dies with ``NotSerializableException: ObservationManager`` at task
     serialization. The summary is a training-time diagnostic that lives on

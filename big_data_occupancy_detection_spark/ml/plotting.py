@@ -114,16 +114,13 @@ def confusion_matrix_png(cells: dict[tuple[int, int], int]) -> bytes:
 
 
 def line_chart_png(
-    points: list[tuple[float, float]],
-    width: int = 360,
-    height: int = 360,
-    diagonal: bool = False,
+    points: list[tuple[float, float]], diagonal: bool = False
 ) -> bytes:
-    """Polyline over unit-square data (ROC/PR curves): axes, 0/1 tick
-    labels, optional chance diagonal."""
-    m = 30  # margin
-    cv = Canvas(width, height)
-    x0, y0, x1, y1 = m, height - m, width - m, m
+    """360×360 polyline over unit-square data (ROC/PR curves): axes, 0/1
+    tick labels, optional chance diagonal."""
+    side, m = 360, 30  # size, margin
+    cv = Canvas(side, side)
+    x0, y0, x1, y1 = m, side - m, side - m, m
     axis = (40, 40, 40)
     cv.line(x0, y0, x1, y0, axis)
     cv.line(x0, y0, x0, y1, axis)

@@ -444,7 +444,6 @@ def grouped_cumsum(
     order_col: str,
     value_col: str,
     out_col: str = "cumsum",
-    n_buckets: int = 32,
 ) -> DataFrame:
     """INCLUSIVE running per-group sum of ``value_col`` in ``order_col``
     order WITHOUT the per-group single-task window — the grouped sibling
@@ -454,7 +453,7 @@ def grouped_cumsum(
     value-grain rows through 3 tasks).
 
     Mechanics: per-group ``percentile_approx`` bounds split the order
-    key into ``n_buckets`` ordered ranges (:func:`_route_by_bounds` —
+    key into 32 ordered ranges (:func:`_route_by_bounds` —
     the bounds affect ROUTING only); the prefix window partitions by
     (group, bucket), so its own hashpartitioning exchange is the ONLY
     full-data shuffle and every bucket prefix-sums in parallel; each
@@ -480,7 +479,7 @@ def grouped_cumsum(
     input is read twice (bounds sample, bucketed window): callers with
     an expensive lineage pin it first.
     """
-    bucketed = _route_by_bounds(df, [group_col], order_col, n_buckets)
+    bucketed = _route_by_bounds(df, [group_col], order_col, 32)
     out = _prefix_sums(bucketed, [group_col], "__bkt", [order_col], F.col(value_col))
     return out.withColumnRenamed("__pre", out_col).drop("__n")
 
@@ -550,7 +549,6 @@ def weighted_percentiles(
     value_col: str,
     weight_col: str,
     pct_points: list[int],
-    out_value: str = "value",
 ) -> DataFrame:
     """Weighted lower quantiles: for each integer percent ``k`` in
     ``pct_points``, the smallest value whose cumulative weight reaches
@@ -618,7 +616,7 @@ def weighted_percentiles(
             >= F.col("pct").cast(dec) * F.col("__tot").cast(dec)
         )
         .groupBy("pct")
-        .agg(F.min(value_col).alias(out_value))
+        .agg(F.min(value_col).alias("value"))
     )
 
 
@@ -626,10 +624,9 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     on: list[str],
-    how: str = "inner",
     salt_buckets: int = 8,
 ) -> DataFrame:
-    """Skew-safe equi-join: manual salting for when one join key is hot.
+    """Skew-safe inner equi-join: manual salting for when one join key is hot.
 
     The big side gets a uniform random salt in [0, salt_buckets); the small
     side is replicated once per salt value; the join runs on
@@ -647,27 +644,7 @@ def salted_join(
     salted_small = small.withColumn(
         "__salt_arr", F.sequence(F.lit(0), F.lit(salt_buckets - 1))
     ).withColumn("__salt", F.explode("__salt_arr")).drop("__salt_arr")
-    return salted_big.join(salted_small, on=[*on, "__salt"], how=how).drop("__salt")
-
-
-def observed(
-    df: DataFrame, name: str, metric_cols: dict[str, Column]
-) -> tuple[DataFrame, "Observation"]:
-    """Attach accumulator-style data-quality metrics to a plan via
-    ``DataFrame.observe`` — metrics are collected DURING the action that
-    consumes ``df`` (zero extra scans, zero extra jobs), unlike a separate
-    ``count()``/``agg()`` which re-reads the input.
-
-    Returns ``(df_with_observation, observation)``; read
-    ``observation.get`` AFTER an action has run. The production use is
-    row-count / null-count / domain-violation counters piggybacked on every
-    pipeline write at 100 TB, where a second validation pass is unaffordable.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    exprs = [expr.alias(alias) for alias, expr in metric_cols.items()]
-    return df.observe(obs, *exprs), obs
+    return salted_big.join(salted_small, on=[*on, "__salt"]).drop("__salt")
 
 
 def quality_checks(df: DataFrame, checks: dict[str, Column]) -> DataFrame:

@@ -39,6 +39,7 @@ def PR6(e: str) -> str:
 # order totals and per-part support), on BOTH engines, so the cap is
 # part of the operator's semantics rather than a silent truncation.
 MAX_BASKET_ITEMS = 1000
+LIFT_TOP_K = 25
 
 
 def copurchase_lift(
@@ -47,9 +48,8 @@ def copurchase_lift(
     item_col: str = "l_partkey",
     min_support: int = 3,
     max_basket_items: int | None = MAX_BASKET_ITEMS,
-    top_k: int = 25,
 ) -> DataFrame:
-    """Top item pairs by lift over a distinct (order, item) frame.
+    """Top ``LIFT_TOP_K`` item pairs by lift over a distinct (order, item) frame.
 
     Pair fan-out is the per-order self-join (bounded by the basket-size
     guard); support and the order count are broadcast back onto the
@@ -99,7 +99,7 @@ def copurchase_lift(
             ).alias("lift"),
         )
         .orderBy(F.desc("lift"), "p1", "p2")
-        .limit(top_k)
+        .limit(LIFT_TOP_K)
     )
 
 
@@ -127,7 +127,7 @@ def copurchase_lift(
              AS lift
     FROM pairs JOIN supp sa ON sa.l_partkey = p1
                JOIN supp sb ON sb.l_partkey = p2, n
-    ORDER BY lift DESC, p1, p2 LIMIT 25
+    ORDER BY lift DESC, p1, p2 LIMIT {LIFT_TOP_K}
     """,
 )
 def part_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -151,8 +151,8 @@ SELECT b.doc_id AS doc,
        CAST(b.n_tok AS BIGINT) AS n_tok,
        (floor(CAST((top.top / CAST(b.n_tok AS DOUBLE)) AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0) AS top_token_frac,
        b.dup_bigram_frac,
-       (top.top / CAST(b.n_tok AS DOUBLE) <= 0.12
-        AND b.dup_bigram_frac <= 0.55) AS keep
+       (top.top / CAST(b.n_tok AS DOUBLE) <= {C.GOPHER_MAX_TOP_TOKEN_FRAC}
+        AND b.dup_bigram_frac <= {C.GOPHER_MAX_DUP_BIGRAM_FRAC}) AS keep
 FROM big b JOIN top USING (doc_id)
 """
 
@@ -260,9 +260,9 @@ SELECT doc_id AS doc,
        {PR6(_C4_ALPHA)} AS alpha_ratio,
        {_C4_CURLY} AS has_curly,
        {_C4_BOILER} AS has_boilerplate,
-       (len(t) BETWEEN 10 AND 100000
-        AND {_C4_MWL} BETWEEN 3.0 AND 10.0
-        AND {_C4_ALPHA} >= 0.6
+       (len(t) BETWEEN {C.C4_WORDS[0]} AND {C.C4_WORDS[1]}
+        AND {_C4_MWL} BETWEEN {C.C4_MEAN_WORD_LEN[0]} AND {C.C4_MEAN_WORD_LEN[1]}
+        AND {_C4_ALPHA} >= {C.C4_MIN_ALPHA_RATIO}
         AND NOT {_C4_CURLY}
         AND NOT {_C4_BOILER}) AS keep
 FROM base
@@ -476,8 +476,8 @@ def semantic_dedup_capped_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # PageRank over the document near-duplicate similarity graph (Jaccard
 # >= 0.5 pairs, undirected) — centrality for canonical-copy selection.
-# 3 synchronous power iterations, damping 0.85, per-iteration round-12 so
-# both engines' float summation stays byte-identical.
+# 3 synchronous power iterations, damping 0.85, per-iteration rounding to
+# PAGERANK_DIGITS so both engines' float summation stays byte-identical.
 # --------------------------------------------------------------------------
 
 _PR_ITERS, _PR_DAMP = 3, 0.85
@@ -490,8 +490,10 @@ def _pagerank_oracle() -> str:
     # iteration count (~25 s warm in the r8 sweep). Materializing the
     # graph legs and each iteration frame makes every leg evaluate once;
     # arithmetic unchanged (verified identical fetchall).
+    from ..ext.graph import PAGERANK_DIGITS
     from .textops import _SH_CTE, _JACCARD_T
 
+    r0 = portable_round_sql("1.0 / (SELECT n FROM nn)", PAGERANK_DIGITS)
     head = f"""
     WITH {_TOKS_CTE},
     {_SH_CTE},
@@ -516,10 +518,16 @@ def _pagerank_oracle() -> str:
         (SELECT src, count(*) AS outdeg FROM e GROUP BY 1) o
         ON o.src = n.node),
     nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM base),
-    r0 AS MATERIALIZED (SELECT node, (floor(CAST((1.0 / (SELECT n FROM nn)) AS DOUBLE) * 1000000000000.0 + 0.5) / 1000000000000.0) AS pr FROM base)"""
+    r0 AS MATERIALIZED (SELECT node, {r0} AS pr FROM base)"""
     iters = []
     for i in range(1, _PR_ITERS + 1):
         p = i - 1
+        pr = portable_round_sql(
+            f"""(1.0 - {_PR_DAMP}) / (SELECT n FROM nn)
+                   + {_PR_DAMP} * (coalesce(c{i}.inflow, 0.0)
+                       + (SELECT dmass FROM d{i}) / (SELECT n FROM nn))""",
+            PAGERANK_DIGITS,
+        )
         iters.append(f"""
     c{i} AS MATERIALIZED (
       SELECT e.dst AS node, sum(r.pr / b.outdeg) AS inflow
@@ -530,9 +538,7 @@ def _pagerank_oracle() -> str:
       FROM r{p} JOIN base USING (node) WHERE outdeg = 0),
     r{i} AS MATERIALIZED (
       SELECT b.node,
-             (floor(CAST(((1.0 - {_PR_DAMP}) / (SELECT n FROM nn)
-                   + {_PR_DAMP} * (coalesce(c{i}.inflow, 0.0)
-                       + (SELECT dmass FROM d{i}) / (SELECT n FROM nn))) AS DOUBLE) * 1000000000000.0 + 0.5) / 1000000000000.0) AS pr
+             {pr} AS pr
       FROM base b LEFT JOIN c{i} ON c{i}.node = b.node)""")
     return (
         head
@@ -691,10 +697,10 @@ WHERE rk <= {_WS_K}
 def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..functions.text_fns import hash64
+    from ..functions.text_fns import md5_hash64
 
     docs = table(spark, sf_dir, "documents")
-    u = hash64(
+    u = md5_hash64(
         F.concat(F.lit("samp|"), F.col("doc_id").cast("string"))
     ) / F.lit(float(1 << 60))
     # zero-weight (empty) docs: NULL priority on both engines — DuckDB's
@@ -723,8 +729,7 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fold over per-bucket terms is sorted-order deterministic on both
 # engines (F.aggregate vs list_reduce over the bucket-ordered list), so
 # the float sum is bit-identical. The seeded portable hash keeps the
-# bucket assignment oracle-replayable; SPARK_GRAFT_FAST_HASH swaps in
-# xxhash64 at production scale with identical operator semantics.
+# bucket assignment oracle-replayable.
 # --------------------------------------------------------------------------
 
 _DSIR_DIM, _DSIR_SEED = 1024, 17

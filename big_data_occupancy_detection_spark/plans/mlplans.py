@@ -305,18 +305,18 @@ def negative_samples_by_user(
     draws as rows, LEFT ANTI join against their own (user_id, item)
     positives — O(K·|items|) rows hash-partitioned on (user_id, neg),
     so one power user spreads across the cluster instead of stalling a
-    task. Draw keys ('user:item:i' through hash64) are identical in
+    task. Draw keys ('user:item:i' through md5_hash64) are identical in
     both branches, so the routing is invisible to results and to the
     _NEG_CTES oracle; on TPC-H-shaped data the heavy branch is empty
     and costs only its (empty) exchanges."""
-    from ..functions.text_fns import hash64
+    from ..functions.text_fns import md5_hash64
 
     def _draws_of(item):
         return F.transform(
             F.sequence(F.lit(0), F.lit(_NEG_K - 1)),
             lambda i: F.lit(1)
             + F.pmod(
-                hash64(
+                md5_hash64(
                     F.concat(
                         F.col("user_id").cast("string"),
                         F.lit(":"),

@@ -8,7 +8,7 @@ compute byte-identical signatures.
 DuckDB building blocks mirrored against Spark:
   norm      trim(regexp_replace(lower(text),'\\s+',' ','g'))   ⇔ functions.text_fns.norm_text
   tokens    regexp_split_to_array(norm, ' ')                   ⇔ tokens
-  hash64(e) CAST(('0x'||substr(md5(e),1,15)) AS BIGINT)        ⇔ md5_hash64 (60-bit, portable)
+  hash64_sql(e) CAST(('0x'||substr(md5(e),1,15)) AS BIGINT)    ⇔ md5_hash64 (60-bit, portable)
   shingles  list_distinct(list_transform(range...))            ⇔ with_shingles
 """
 

@@ -31,25 +31,17 @@ TABLE_NAMES = (
 )
 
 
-def read_csv_inferred(spark: SparkSession, path: str, sep: str = ",") -> DataFrame:
+def read_csv_inferred(spark: SparkSession, path: str) -> DataFrame:
     """Ad-hoc CSV ingestion with schema inference (two scans — small data only)."""
-    return (
-        spark.read.option("header", "true")
-        .option("inferSchema", "true")
-        .option("sep", sep)
-        .csv(path)
-    )
+    return spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
 
-def read_csv_declared(
-    spark: SparkSession, path: str, schema: StructType, sep: str = ","
-) -> DataFrame:
+def read_csv_declared(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Production CSV path: single scan, declared schema, malformed rows → nulls
     (PERMISSIVE), mirroring the reference's nullable-by-default contract
     (``infrastructure/stream_inference.py:28-42``)."""
     return (
         spark.read.option("header", "true")
-        .option("sep", sep)
         .option("mode", "PERMISSIVE")
         .schema(schema)
         .csv(path)

@@ -44,7 +44,7 @@ def write_parquet(df: DataFrame, out_path: str, partition_by: list[str] | None =
     writer.parquet(out_path)
 
 
-def write_jsonl(df: DataFrame, out_path: str, compression: str | None = None) -> None:
+def write_jsonl(df: DataFrame, out_path: str) -> None:
     """Newline-delimited JSON sink (the batch twin of the streaming
     ``to_json`` wire format, ``stream_inference.py:132-148``).
 
@@ -52,10 +52,7 @@ def write_jsonl(df: DataFrame, out_path: str, compression: str | None = None) ->
     re-read — treat it as an interchange edge, not a storage format;
     partitioned parquet remains the scale path.
     """
-    writer = df.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(out_path)
+    df.write.mode("overwrite").json(out_path)
 
 
 def write_bucketed(
@@ -86,15 +83,12 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def write_orc(df: DataFrame, out_path: str, partition_by: list[str] | None = None) -> None:
+def write_orc(df: DataFrame, out_path: str) -> None:
     """ORC sink (zlib, Spark-native writer). Interop surface for
     Hive/Trino-resident warehouses; same pushdown/pruning contract as
     parquet on re-read (predicate pushdown + column projection reach the
     ORC reader, asserted in tests)."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(out_path)
+    df.write.mode("overwrite").orc(out_path)
 
 
 def write_range_sorted_parquet(

@@ -45,18 +45,15 @@ ScoreFn = Callable[[DataFrame], DataFrame]
 # ---------------------------------------------------------------- sources
 
 def kafka_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
+    spark: SparkSession, bootstrap_servers: str, topic: str
 ) -> DataFrame:
-    """Kafka request stream → raw JSON strings (S2). Requires the
-    spark-sql-kafka package on the classpath."""
+    """Kafka request stream → raw JSON strings (S2), from the latest
+    offsets. Requires the spark-sql-kafka package on the classpath."""
     raw = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
+        .option("startingOffsets", "latest")
         .load()
     )
     return raw.select(F.col("value").cast("string").alias("json"))
@@ -239,7 +236,7 @@ def memory_sink(responses: DataFrame, query_name: str, checkpoint_dir: str | Non
     return writer.start()
 
 
-def console_sink(responses: DataFrame, truncate: bool = False):
+def console_sink(responses: DataFrame):
     """Debug sink (SURVEY §2.1 S4): print each micro-batch to stdout.
 
     No checkpoint — a second console query re-executes the plan
@@ -248,7 +245,7 @@ def console_sink(responses: DataFrame, truncate: bool = False):
     """
     return (
         responses.writeStream.format("console")
-        .option("truncate", str(truncate).lower())
+        .option("truncate", "false")
         .outputMode("append")
         .start()
     )

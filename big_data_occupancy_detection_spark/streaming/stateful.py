@@ -26,7 +26,7 @@ OUTPUT_SCHEMA = (
 EMA_ALPHA = 0.3
 
 
-def running_user_stats(events: DataFrame, alpha: float = EMA_ALPHA) -> DataFrame:
+def running_user_stats(events: DataFrame) -> DataFrame:
     """Per-user running (count, sum, EMA) over an event stream.
 
     Emits one row per user per micro-batch that touched that user
@@ -46,7 +46,7 @@ def running_user_stats(events: DataFrame, alpha: float = EMA_ALPHA) -> DataFrame
                 v = float(v)
                 n += 1
                 total += v
-                ema = v if ema is None else alpha * v + (1.0 - alpha) * ema
+                ema = v if ema is None else EMA_ALPHA * v + (1.0 - EMA_ALPHA) * ema
         state.update((n, total, ema))
         yield pd.DataFrame(
             [

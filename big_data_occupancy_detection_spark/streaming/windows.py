@@ -18,14 +18,13 @@ from pyspark.sql import functions as F
 def tumbling_counts(
     events: DataFrame,
     ts_col: str = "ts",
-    window_size: str = "1 hour",
-    watermark: str = "2 hours",
     group_col: str = "event_type",
 ) -> DataFrame:
-    """Per-window, per-group counts + value sums with bounded state."""
+    """Per-hour, per-group counts + value sums with state bounded by a
+    2-hour watermark."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window_size).alias("win"), F.col(group_col))
+        events.withWatermark(ts_col, "2 hours")
+        .groupBy(F.window(ts_col, "1 hour").alias("win"), F.col(group_col))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("sum_value"),
@@ -92,32 +91,28 @@ def interval_join_streams(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "l_ts",
-    right_ts: str = "r_ts",
-    max_delay: str = "1 hour",
-    watermark: str = "2 hours",
     how: str = "inner",
 ) -> DataFrame:
-    """Watermarked stream-stream join: right rows within
-    [left_ts, left_ts + max_delay] of a same-key left row.
+    """Watermarked stream-stream join: right rows whose ``r_ts`` lies within
+    [l_ts, l_ts + 1 hour] of a same-key left row's ``l_ts``.
 
-    Both sides carry watermarks and the join condition bounds the time
+    Both sides carry 2-hour watermarks and the join condition bounds the time
     skew, so Spark can expire buffered state for either side once the
     watermark passes — the only stream-stream join formulation whose state
     does not grow without bound.
 
     ``how="left_outer"`` additionally emits each unmatched left row
     (right columns NULL) — but only once the global watermark (the MIN
-    across both sources) passes ``left_ts + max_delay``, because until
+    across both sources) passes ``l_ts + 1 hour``, because until
     then a matching right row could still arrive. Tests must advance
     BOTH sources' event time to see outer results.
     """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
+    lw = left.withWatermark("l_ts", "2 hours")
+    rw = right.withWatermark("r_ts", "2 hours")
     cond = (
         (lw[key] == rw[key])
-        & (rw[right_ts] >= lw[left_ts])
-        & (rw[right_ts] <= F.expr(f"{left_ts} + INTERVAL {max_delay}"))
+        & (rw["r_ts"] >= lw["l_ts"])
+        & (rw["r_ts"] <= F.expr("l_ts + INTERVAL 1 hour"))
     )
     return lw.join(rw, cond, how)
 
@@ -126,9 +121,8 @@ def enrich_stream_static(
     stream: DataFrame,
     dim: DataFrame,
     on: list[str],
-    how: str = "left",
 ) -> DataFrame:
-    """Stream-static enrichment join: each micro-batch joins against the
+    """Stream-static left enrichment join: each micro-batch joins against the
     (batch) dimension — stateless, no watermark needed, and with a small
     dim the planner broadcasts it so the stream side never shuffles.
 
@@ -137,19 +131,17 @@ def enrich_stream_static(
     micro-batch, so a dim backed by a refreshable source (parquet dir)
     picks up slowly-changing updates without restarting the query.
     """
-    return stream.join(F.broadcast(dim), on=on, how=how)
+    return stream.join(F.broadcast(dim), on=on, how="left")
 
 
 def sliding_distinct_counts(
     events: DataFrame,
     ts_col: str = "ts",
     key_col: str = "user_id",
-    window_size: str = "2 hours",
-    slide: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Distinct ``key_col`` per sliding window on a stream, bounded
-    state — the streaming twin of ``plans/events.py:
+    """Distinct ``key_col`` per 2-hour window sliding by 1 hour on a
+    stream, bounded state — the streaming twin of ``plans/events.py:
     sliding_distinct_users``.
 
     COUNT(DISTINCT) is not a mergeable streaming aggregate, so the plan
@@ -163,7 +155,7 @@ def sliding_distinct_counts(
         events.filter(F.col(ts_col).isNotNull() & F.col(key_col).isNotNull())
         .withWatermark(ts_col, watermark)
         .select(
-            F.window(ts_col, window_size, slide).alias("win"), F.col(key_col)
+            F.window(ts_col, "2 hours", "1 hour").alias("win"), F.col(key_col)
         )
         .dropDuplicates(["win", key_col])
     )

@@ -1,12 +1,11 @@
-"""Production fast-hash path (SPARK_GRAFT_FAST_HASH=1 → xxhash64).
-
-The dedup operators' correctness contract under ANY hash family:
-- candidate verification is exact, so emitted pairs are always a subset of
-  the exact-Jaccard ground truth (precision 1.0 by construction);
-- banding probability only moves RECALL, which must stay useful.
-
-These tests swap the hash family and assert both properties against the
-exact inverted-index ground truth, plus that SimHash stays total.
+"""Operator properties of the portable md5 hash family (``md5_hash64`` /
+``seeded_hash64``), the one hash of the oracle-verified dedup, sketch and
+sampling operators:
+- candidate verification is exact, so emitted LSH pairs are always a
+  subset of the exact-Jaccard ground truth (precision 1.0 by construction);
+- banding probability only moves RECALL, which must stay useful;
+- SimHash is total, MinHash signatures match the DuckDB oracle term by
+  term, and hash-keyed negative draws stay in range.
 """
 
 from __future__ import annotations
@@ -29,25 +28,23 @@ def _pairs(df) -> set[tuple]:
     return {(r["d1"], r["d2"]) for r in df.select("d1", "d2").collect()}
 
 
-def test_fast_hash_lsh_precision_and_recall(spark, monkeypatch):
+def test_fast_hash_lsh_precision_and_recall(spark):
     docs = table(spark, SF_DIR, "documents")
     exact = _pairs(ngram_jaccard_pairs(docs, threshold=THRESHOLD))
     assert exact, "corpus should contain near-dup pairs at this threshold"
 
-    monkeypatch.setenv("SPARK_GRAFT_FAST_HASH", "1")
-    fast = _pairs(minhash_lsh_pairs(docs, threshold=THRESHOLD))
+    lsh = _pairs(minhash_lsh_pairs(docs, threshold=THRESHOLD))
 
     # exact verification ⇒ every emitted pair is a true near-dup pair
-    assert fast <= exact, f"false positives under fast hash: {fast - exact}"
-    # banding with xxhash64 must still find most true pairs
-    recall = len(fast) / len(exact)
-    assert recall >= 0.5, f"fast-hash LSH recall {recall:.2f} < 0.5"
+    assert lsh <= exact, f"false positives from LSH: {lsh - exact}"
+    # banding must still find most true pairs
+    recall = len(lsh) / len(exact)
+    assert recall >= 0.5, f"LSH recall {recall:.2f} < 0.5"
 
 
-def test_fast_hash_simhash_total(spark, monkeypatch):
+def test_fast_hash_simhash_total(spark):
     docs = table(spark, SF_DIR, "documents")
     n_docs = docs.count()
-    monkeypatch.setenv("SPARK_GRAFT_FAST_HASH", "1")
     sh = simhash32(docs)
     assert sh.count() == n_docs
     # signatures are real 32-bit values, not degenerate zeros
@@ -58,9 +55,9 @@ def test_fast_hash_simhash_total(spark, monkeypatch):
 def test_minhash_signature_lockstep_with_oracle(spark):
     """Byte-identical MinHash signatures, Spark vs DuckDB, term by term.
 
-    Locks in the seed-0 fix: hash64(c, 0) must hash '0|'||c exactly like the
-    oracle's term 0, not fall through to the unseeded hash (which silently
-    diverged band-0 LSH keys before exact verification masked it).
+    Term 0 is seeded too: it must hash '0|'||c exactly like the oracle's
+    term 0, not the unseeded hash (which once silently diverged band-0 LSH
+    keys before exact verification masked it).
     """
     import duckdb
 
@@ -101,43 +98,10 @@ def test_minhash_signature_lockstep_with_oracle(spark):
         assert spark_sig[doc] == oracle_sig[doc], f"signature diverges for {doc}"
 
 
-def test_fast_hash_dsir_and_novelty_invariants(spark, monkeypatch):
-    """Hash-independent columns survive the fast-hash swap untouched:
-    DSIR's n_tok (token counts) and novelty's n_shingles (distinctness
-    is taken on the shingle STRINGS before hashing). The hash-dependent
-    scores may move; the row sets may not."""
-    from big_data_occupancy_detection_spark.ext.curation import dsir_log_weights
-    from big_data_occupancy_detection_spark.ext.dedup import shingle_novelty
-
-    docs = table(spark, SF_DIR, "documents")
-    pred = F.col("source").isin("src0", "src1", "src2")
-
-    slow_d = {r.doc_id: r.n_tok for r in dsir_log_weights(docs, pred).collect()}
-    slow_n = {
-        r.doc: r.n_shingles for r in shingle_novelty(docs).collect()
-    }
-
-    monkeypatch.setenv("SPARK_GRAFT_FAST_HASH", "1")
-    fast_d = {r.doc_id: r.n_tok for r in dsir_log_weights(docs, pred).collect()}
-    fast_n = {
-        r.doc: r.n_shingles for r in shingle_novelty(docs).collect()
-    }
-
-    assert fast_d == slow_d
-    assert fast_n == slow_n
-
-
-def test_fast_hash_negative_samples_valid(spark, monkeypatch):
-    """Under the xxhash64 production path the negative draws CHANGE
-    (documented — oracle parity is the md5 path's contract) but the
-    pipeline invariants must hold: draws stay in the 1..max-part range
-    (the signed hash must flow through pmod, never %), no kept negative
-    collides with a positive, and counts are consistent. Regression for
-    the round-5 lesson: a signed hash fed to % doubles the bucket range."""
-    monkeypatch.setenv("SPARK_GRAFT_FAST_HASH", "1")
-
-    from pyspark.sql import functions as F
-
+def test_fast_hash_negative_samples_valid(spark):
+    """Hash-keyed negative draws keep the pipeline invariants: draws stay
+    in the 1..max-part range, no kept negative collides with a positive,
+    and counts are consistent."""
     from big_data_occupancy_detection_spark.plans.mlplans import (
         _NEG_K,
         _implicit_examples,

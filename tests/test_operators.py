@@ -243,20 +243,19 @@ def test_connected_components_path_clique_cycle(spark, monkeypatch):
 def test_observed_metrics_piggyback(spark, sf_dir):
     """observe(): quality counters ride the consuming action — no second
     scan — and match an independently computed ground truth."""
-    from big_data_occupancy_detection_spark.operators.relational import observed
+    from pyspark.sql import Observation
+
     from big_data_occupancy_detection_spark.sources.readers import table
 
     li = table(spark, sf_dir, "lineitem")
-    df, obs = observed(
-        li,
-        "quality",
-        {
-            "n_rows": F.count(F.lit(1)),
-            "n_null_qty": F.sum(F.col("l_quantity").isNull().cast("long")),
-            "n_bad_discount": F.sum(
-                (~F.col("l_discount").between(0.0, 1.0)).cast("long")
-            ),
-        },
+    obs = Observation("quality")
+    df = li.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.col("l_quantity").isNull().cast("long")).alias("n_null_qty"),
+        F.sum((~F.col("l_discount").between(0.0, 1.0)).cast("long")).alias(
+            "n_bad_discount"
+        ),
     )
     out = df.filter(F.col("l_quantity") > 0).count()  # the consuming action
     got = obs.get

@@ -24,6 +24,8 @@ from big_data_occupancy_detection_spark.plans import REGISTRY
 BASELINE = json.loads(
     (Path(__file__).parent / "plan_baseline.json").read_text()
 )
+ROOT = Path(__file__).parent.parent
+PKG = ROOT / "big_data_occupancy_detection_spark"
 
 # Heavy shapes pinned BEYOND the bench headline (round-4 VERDICT item 4):
 # the warehouse/BI/events batch-2 queries whose plan regressions would
@@ -102,31 +104,49 @@ def test_one_pinning_primitive():
     }, f"lazy pin sites changed: {sorted(lazy)}"
 
 
+def _caller_nodes(tests: bool):
+    """(path, node) for every AST node of the package, scripts/, tools/,
+    perfbench/, bench.py and __spark_entry__.py, plus tests/ if asked."""
+    files = sorted(PKG.rglob("*.py"))
+    for sub in ("scripts", "tools", "perfbench") + (("tests",) if tests else ()):
+        files += sorted((ROOT / sub).rglob("*.py"))
+    files += [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            yield path, node
+
+
+def _ref_name(node):
+    """The identifier an AST node refers to (a name, an attribute or an
+    import), or None: strings and comments never count, f-string
+    expressions do."""
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.alias):
+        return node.name.rpartition(".")[2]
+    return None
+
+
+def _public_defs(kinds):
+    """(path, node) for every public top-level def of the package."""
+    for path in sorted(PKG.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            if isinstance(top, kinds) and not top.name.startswith("_"):
+                yield path, top
+
+
 def test_every_public_def_has_a_caller():
     # a public top-level def or class stays only if it is @register'ed
     # or referenced outside its own body by the package, scripts/,
     # tools/, perfbench/, bench.py or __spark_entry__.py — tests do not
-    # count. References are the identifiers of the AST (names,
-    # attributes, imports), so strings and comments never count and
-    # f-string expressions do. Anything kept without a caller is listed
-    # here on purpose, with the SURVEY §2 row (COVERAGE.md) it backs.
-    root = Path(__file__).parent.parent
-    pkg = root / "big_data_occupancy_detection_spark"
-    files = sorted(pkg.rglob("*.py"))
-    for sub in ("scripts", "tools", "perfbench"):
-        files += sorted((root / sub).rglob("*.py"))
-    files += [root / "bench.py", root / "__spark_entry__.py"]
+    # count. Anything kept without a caller is listed here on purpose,
+    # with the SURVEY §2 row (COVERAGE.md) it backs.
     refs = {}
-    for path in files:
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Name):
-                name = node.id
-            elif isinstance(node, ast.Attribute):
-                name = node.attr
-            elif isinstance(node, ast.alias):
-                name = node.name.rpartition(".")[2]
-            else:
-                continue
+    for path, node in _caller_nodes(tests=False):
+        name = _ref_name(node)
+        if name is not None:
             refs.setdefault(name, []).append((path, node.lineno))
     kept = {
         # §2.1 "+" rows: IO surface beyond the reference
@@ -149,8 +169,7 @@ def test_every_public_def_has_a_caller():
         "streaming/windows.py:interval_join_streams",
         "streaming/windows.py:enrich_stream_static",
         "streaming/windows.py:sliding_distinct_counts",
-        # §2.8 (pipeline observability, Python UDTF surface)
-        "operators/relational.py:observed",
+        # §2.8 (Python UDTF surface)
         "functions/udtf_fns.py:register_udtfs",
         # test references: the twin or decoder a live path is checked by
         "ext/similarity.py:pq_topk",  # fit-per-call twin of the PQ index
@@ -158,27 +177,65 @@ def test_every_public_def_has_a_caller():
         "ext/png_codec.py:decode_png",  # decodes the §2.1 S7 report PNGs
     }
     orphans = set()
-    for path in sorted(pkg.rglob("*.py")):
-        for top in ast.parse(path.read_text()).body:
-            if not isinstance(
-                top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) or top.name.startswith("_"):
-                continue
-            if any(
-                isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register"
-                for d in top.decorator_list
-            ):
-                continue
-            body = range(top.lineno, top.end_lineno + 1)
-            if not any(
-                p != path or line not in body
-                for p, line in refs.get(top.name, [])
-            ):
-                orphans.add(f"{path.relative_to(pkg).as_posix()}:{top.name}")
+    kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    for path, top in _public_defs(kinds):
+        if any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register"
+            for d in top.decorator_list
+        ):
+            continue
+        body = range(top.lineno, top.end_lineno + 1)
+        if not any(
+            p != path or line not in body for p, line in refs.get(top.name, [])
+        ):
+            orphans.add(f"{path.relative_to(PKG).as_posix()}:{top.name}")
     assert orphans == kept, (
         f"no caller: {sorted(orphans - kept)}; "
         f"caller found, drop from the kept set: {sorted(kept - orphans)}"
     )
+
+
+def test_every_option_has_a_caller():
+    # a defaulted parameter of a public top-level def is an option: it
+    # stays only if some call in the package, scripts/, tools/,
+    # perfbench/, bench.py, __spark_entry__.py or tests/ passes it, by
+    # keyword or by position. Tests count here: small keyword values
+    # reach multi-bucket and guard paths at tiny scale. A ** splat sets
+    # every parameter and a * splat every positional one. *_col/*_cols
+    # parameters bind the caller's schema and are exempt.
+    calls = {}
+    for _, node in _caller_nodes(tests=True):
+        if isinstance(node, ast.Call):
+            name = _ref_name(node.func)
+            if name is not None:
+                calls.setdefault(name, []).append(node)
+    unset = []
+    for path, top in _public_defs((ast.FunctionDef, ast.AsyncFunctionDef)):
+        a = top.args
+        pos = a.posonlyargs + a.args
+        options = [
+            (i, p.arg) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)
+        ] + [
+            (None, p.arg)
+            for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None
+        ]
+        for i, arg in options:
+            if arg.endswith(("_col", "_cols")):
+                continue
+            if not any(
+                any(k.arg in (None, arg) for k in c.keywords)
+                or (
+                    i is not None
+                    and (
+                        len(c.args) > i
+                        or any(isinstance(x, ast.Starred) for x in c.args)
+                    )
+                )
+                for c in calls.get(top.name, [])
+            ):
+                unset.append(f"{path.relative_to(PKG).as_posix()}:{top.name}:{arg}")
+    assert not unset, f"options no call sets: {unset}"
 
 
 def test_baseline_covers_headline():

@@ -3,7 +3,7 @@ way the round driver does (fresh module load, stock SparkSession) and
 hash-compare each against its DuckDB oracle, timing both sides.
 
 Usage: python tools/driver_sim.py [sf_dir] [name1,name2,...]
-(default /root/testdata/sf0.01, all queries; SPARK_GRAFT_ONLY also filters)
+(defaults: the sf0.01 test data, every query)
 
 This is the pre-flight for CORRECTNESS_r{N}: if this prints 0 failures,
 the driver's own sweep will too."""
@@ -34,7 +34,7 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
 qs, osql = m.queries(), m.oracle_sql()
-only = sys.argv[2] if len(sys.argv) > 2 else os.environ.get("SPARK_GRAFT_ONLY", "")
+only = sys.argv[2] if len(sys.argv) > 2 else ""
 if only:
     wanted = {w.strip() for w in only.split(",") if w.strip()}
     missing = wanted - qs.keys()
