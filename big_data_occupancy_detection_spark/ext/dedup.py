@@ -5,11 +5,13 @@ Five family members, each shuffle-architected for 100 TB:
 - **exact**: md5-of-normalized-text fingerprint → groupBy fingerprint.
   One shuffle on a short hash key; representative = min(doc_id) so the
   result is deterministic (``dropDuplicates`` would keep an arbitrary row).
-- **n-gram Jaccard**: inverted index (explode distinct shingles) →
-  self-join on shingle → pair intersection counts → Jaccard filter.
-  The join key is the shingle, so only docs sharing a shingle ever meet —
-  no O(n²) cross join. Hot shingles should be df-filtered at real scale
-  (drop shingles appearing in >X docs — see ``max_shingle_df``).
+- **n-gram Jaccard**: one prefix-filtered join (``_prefix_jaccard``,
+  Bayardo et al. AllPairs) under the self-join and the corpus×new form:
+  explode each doc's shortest sufficient prefix of sorted shingle hashes
+  → join on the hash with a size filter → exact ``array_intersect``
+  verify. Only docs sharing a prefix hash ever meet — no O(n²) cross
+  join. Hot shingles should be df-filtered at real scale (drop shingles
+  appearing in >X docs — see ``max_shingle_df``).
 - **MinHash + LSH**: k seeded portable hashes → per-band signature →
   self-join on (band, band-signature) → exact-Jaccard verification of
   candidates only. Candidate generation cost is bands × docs; verification
@@ -27,7 +29,7 @@ from __future__ import annotations
 
 
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import portable_round
@@ -103,108 +105,65 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    max_shingle_df: int | None = None,
+def _hashed_shingles(
+    df: DataFrame, text_col: str, id_col: str, keep: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Near-dup pairs (d1 < d2, jaccard >= threshold) via inverted index.
-
-    ``max_shingle_df`` drops ultra-common shingles before the self-join —
-    at corpus scale a stop-shingle appearing in 10^6 docs would otherwise
-    create 10^12 candidate pairs (classic skew bomb).
-    """
-    sh = with_shingles(df, text_col).select(
-        F.col(id_col).alias("doc"), "shingles"
-    )
-    sizes = sh.select("doc", F.size("shingles").alias("n_sh"))
-    # join on the 60-bit hash of the shingle, not the string: the self-join
-    # shuffles 8-byte keys instead of ~20-byte text (hash collisions would
-    # need two different shingles with equal md5-60bit prefixes in the same
-    # doc pair — ~2^-60 per pair; the oracle hashes identically)
-    inv = explode_fused(
-        sh, F.transform("shingles", md5_hash64), "s", keep=["doc"]
-    )
-    if max_shingle_df is not None:
-        hot = (
-            inv.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("s")
-        )
-        inv = inv.join(F.broadcast(hot), "s", "left_anti")
-    a = inv.alias("a")
-    b = inv.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc").alias("d1"), F.col("n_sh").alias("n1"))
-    sb = sizes.select(F.col("doc").alias("d2"), F.col("n_sh").alias("n2"))
-    jac = F.col("inter").cast("double") / (F.col("n1") + F.col("n2") - F.col("inter"))
-    return (
-        inter.join(sa, "d1")
-        .join(sb, "d2")
-        .withColumn("jaccard", portable_round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Same contract as :func:`ngram_jaccard_pairs` via PREFIX FILTERING
-    (Bayardo et al. "Scaling Up All Pairs Similarity Search", WWW'07).
-
-    Jaccard ≥ t implies |x∩y| ≥ t·max(|x|,|y|), so two matching docs MUST
-    share a shingle inside each one's first ``|x| − ⌈t·|x|⌉ + 1`` shingles
-    under any fixed global ordering (here: the 60-bit hash value). The
-    inverted index therefore only explodes the prefix — for t=0.5 that
-    halves index rows, and more importantly the candidate join degree
-    drops from "any shared shingle" to "shared PREFIX shingle", which is
-    what collapses the quadratic candidate blow-up on medium-similarity
-    corpora at 100 TB. A size filter (t·|x| ≤ |y|) prunes further before
-    the verify step. Verification is exact: candidates re-join their full
-    sorted shingle arrays and intersect JVM-side (``array_intersect``),
-    so output is identical to the exhaustive form (shared oracle).
-    """
+    """(doc, *keep, hs, n_sh): each doc's sorted, distinct 60-bit shingle
+    hashes and their count. The joins key on the 8-byte hash, not the ~20-byte
+    shingle text; a false match needs two different shingles with equal
+    md5-60bit prefixes in the same doc pair (~2^-60 per pair; the oracle
+    compares the text)."""
     sh = with_shingles(df, text_col).select(
         F.col(id_col).alias("doc"),
+        *keep,
         F.array_sort(
             F.array_distinct(F.transform("shingles", md5_hash64))
         ).alias("hs"),
     )
-    sh = checkpoint_for_reuse(sh.withColumn("n_sh", F.size("hs")))
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    inv = sh.select(
-        "doc",
-        "n_sh",
-        F.explode(F.slice("hs", F.lit(1), prefix_len)).alias("s"),
-    )
-    a, b = inv.alias("a"), inv.alias("b")
+    return sh.withColumn("n_sh", F.size("hs"))
+
+
+def _prefix_jaccard(
+    left: DataFrame, right: DataFrame, threshold: float, pair: Column
+) -> DataFrame:
+    """(d1, d2, jaccard ≥ threshold) over two ``(doc, hs, n_sh)`` frames,
+    d1 from ``left`` and d2 from ``right``, by PREFIX FILTERING (Bayardo
+    et al., "Scaling Up All Pairs Similarity Search", WWW'07).
+    ``pair`` restricts candidates over ``a.doc``/``b.doc`` (the left and
+    right sides); ``hs`` may be a subset of the doc's shingles as long as
+    ``n_sh`` is its full count, and the intersection counts ``hs`` only.
+
+    Jaccard ≥ t implies |x∩y| ≥ t·max(|x|,|y|), so two matching docs
+    share a hash inside each one's first ``|hs| − ⌈t·n_sh⌉ + 1`` sorted
+    hashes, and t·|larger| ≤ |smaller| prunes before the verify. Only
+    the prefixes are exploded, and docs meet only on a shared PREFIX
+    hash. The verify is exact: candidates re-join their full sorted
+    arrays and intersect JVM-side (``array_intersect``). The bounds use
+    t − 10⁻⁶: a verify that keeps the 6-digit rounded ratio keeps ratios
+    down to t − 5·10⁻⁷, and the double t·n can land just above an
+    integer (0.55·100 = 55.00000000000001), which would drop a pair.
+    """
+    tc = F.lit(threshold - 1e-6)
+
+    def index(sh: DataFrame) -> DataFrame:
+        size = F.greatest(F.size("hs") - F.ceil(tc * F.col("n_sh")) + 1, F.lit(0))
+        return sh.select(
+            "doc", "n_sh", F.explode(F.slice("hs", F.lit(1), size)).alias("s")
+        )
+
+    a, b = index(left).alias("a"), index(right).alias("b")
     cands = (
         a.join(
             b,
             (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc") < F.col("b.doc"))
-            # size filter: Jaccard >= t forces t·|larger| <= |smaller|
-            & (
-                F.least("a.n_sh", "b.n_sh")
-                >= F.lit(threshold) * F.greatest("a.n_sh", "b.n_sh")
-            ),
+            & pair
+            & (F.least("a.n_sh", "b.n_sh") >= tc * F.greatest("a.n_sh", "b.n_sh")),
         )
         .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
         .dropDuplicates()
     )
-    sa = sh.select(F.col("doc").alias("d1"), F.col("hs").alias("hs1"), F.col("n_sh").alias("n1"))
-    sb = sh.select(F.col("doc").alias("d2"), F.col("hs").alias("hs2"), F.col("n_sh").alias("n2"))
+    sa = left.select(F.col("doc").alias("d1"), F.col("hs").alias("hs1"), F.col("n_sh").alias("n1"))
+    sb = right.select(F.col("doc").alias("d2"), F.col("hs").alias("hs2"), F.col("n_sh").alias("n2"))
     inter = F.size(F.array_intersect("hs1", "hs2"))
     jac = inter.cast("double") / (F.col("n1") + F.col("n2") - inter)
     return (
@@ -214,6 +173,40 @@ def ngram_jaccard_pairs_prefix(
         .filter(F.col("jaccard") >= threshold)
         .select("d1", "d2", "jaccard")
     )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    threshold: float = 0.5,
+    max_shingle_df: int | None = None,
+) -> DataFrame:
+    """Near-dup pairs (d1 < d2, jaccard >= threshold), see
+    :func:`_prefix_jaccard`.
+
+    ``max_shingle_df`` drops ultra-common shingles before the self-join —
+    at corpus scale a stop-shingle appearing in 10^6 docs would otherwise
+    create 10^12 candidate pairs (classic skew bomb). The intersection
+    then counts only the kept shingles while ``n_sh`` stays the full
+    count, so the Jaccard is a lower bound and the prefix bound still
+    holds.
+    """
+    sh = checkpoint_for_reuse(_hashed_shingles(df, text_col, id_col))
+    if max_shingle_df is not None:
+        inv = sh.select("doc", "n_sh", F.explode("hs").alias("s"))
+        hot = (
+            inv.groupBy("s")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") > max_shingle_df)
+            .select("s")
+        )
+        sh = (
+            inv.join(F.broadcast(hot), "s", "left_anti")
+            .groupBy("doc", "n_sh")
+            .agg(F.array_sort(F.collect_list("s")).alias("hs"))
+        )
+    return _prefix_jaccard(sh, sh, threshold, F.col("a.doc") < F.col("b.doc"))
 
 
 def minhash_signatures(
@@ -628,8 +621,8 @@ def ngram_jaccard_pairs_staged(
     id_col: str = "doc_id",
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact-dedup-first twin of :func:`ngram_jaccard_pairs` — inverted
-    index + verification over representatives only, then output-linear
+    """Exact-dedup-first twin of :func:`ngram_jaccard_pairs` — the
+    prefix-filtered join over representatives only, then output-linear
     expansion across exact groups (see :func:`expand_pairs_over_exact_groups`
     for the equivalence argument). Shared oracle with the direct form."""
     tagged = exact_tagged(df, text_col=text_col, id_col=id_col)
@@ -654,41 +647,35 @@ def cross_corpus_near_dups(
     with ANY existing corpus document reaches ``threshold`` (``dup_of`` =
     smallest such corpus id; survivors carry NULL/keep=true).
 
-    Same inverted-shingle-index shape as :func:`ngram_jaccard_pairs` but
-    bipartite: candidates come from corpus×new shingle matches only, so a
-    daily delta costs |delta|-proportional work against a pre-sharded
-    corpus index instead of re-deduplicating the whole corpus. At 100 TB
-    the corpus side of the index is written once (bucketed by shingle
-    hash) and each ingest batch joins against it.
+    The same prefix-filtered join as :func:`ngram_jaccard_pairs` but
+    bipartite: candidates come from corpus×new prefix-hash matches only,
+    so a daily delta costs |delta|-proportional work against a
+    pre-sharded corpus index instead of re-deduplicating the whole
+    corpus. At 100 TB the corpus side of the index is written once
+    (bucketed by shingle hash) and each ingest batch joins against it.
     """
-    shc = with_shingles(corpus, text_col).select(
-        F.col(id_col).alias("cdoc"), "shingles"
-    )
-    shn = with_shingles(new, text_col).select(
-        F.col(id_col).alias("ndoc"), "shingles"
-    )
-    sc = shc.select("cdoc", F.size("shingles").alias("n_c"))
-    sn = shn.select("ndoc", F.size("shingles").alias("n_n"))
-    invc = explode_fused(
-        shc, F.transform("shingles", md5_hash64), "s", keep=["cdoc"]
-    )
-    invn = explode_fused(
-        shn, F.transform("shingles", md5_hash64), "s", keep=["ndoc"]
-    )
-    inter = (
-        invc.join(invn, "s")
-        .groupBy("cdoc", "ndoc")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    jac = portable_round(
-        F.col("inter") / (F.col("n_c") + F.col("n_n") - F.col("inter")), 6
+    # each side is read twice (prefix index, verify): hash both sides in
+    # one pass and pin them once
+    side = "__new"
+    both = checkpoint_for_reuse(
+        _hashed_shingles(
+            corpus.select(id_col, text_col, F.lit(False).alias(side)).unionByName(
+                new.select(id_col, text_col, F.lit(True).alias(side))
+            ),
+            text_col,
+            id_col,
+            keep=(side,),
+        )
     )
     dups = (
-        inter.join(sc, "cdoc")
-        .join(sn, "ndoc")
-        .filter(jac >= threshold)
-        .groupBy("ndoc")
-        .agg(F.min("cdoc").alias("dup_of"))
+        _prefix_jaccard(
+            both.filter(~F.col(side)).drop(side),
+            both.filter(F.col(side)).drop(side),
+            threshold,
+            F.lit(True),
+        )
+        .groupBy(F.col("d2").alias("ndoc"))
+        .agg(F.min("d1").alias("dup_of"))
     )
     return (
         new.select(F.col(id_col).alias("doc_id"))

@@ -254,8 +254,7 @@ def domain_mirror_pairs(
     overlap = shared / min(|A|, |B|) — the containment coefficient, 1.0
     when one site is a full mirror of the other.
 
-    Scale shape (the inverted-index pair join, same machinery as the
-    n-gram Jaccard near-dup): pair candidates are generated PER
+    Scale shape (an inverted-index pair join): pair candidates are generated PER
     FINGERPRINT, so the fan-out is Σ_fp C(d_fp, 2) with d_fp capped by
     ``max_fp_domains`` — a fingerprint present on more than that many
     domains is universal boilerplate (cookie banners, empty pages) that

@@ -558,20 +558,18 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.partitioning import checkpoint_for_reuse
     from .textops import _JACCARD_T
 
-    # prefix-filtered candidate generation (round-11): output-identical
-    # to the exhaustive inverted-index form — same shared oracle, exact
-    # verify on the full shingle arrays — but the index explodes only
-    # each doc's |x|−⌈t·|x|⌉+1 smallest-hash shingles, which collapsed
-    # the pair join 49.1 → 17.2 s at the 10× evidence scale (identical
-    # 250,600 pairs). The edge list feeds 3 power iterations, so this
-    # is the whole query's dominant cost.
+    # the prefix-filtered pair join (ext/dedup._prefix_jaccard): the
+    # index explodes only each doc's |x|−⌈t·|x|⌉+1 smallest-hash
+    # shingles, half the shuffle of the exhaustive count at sf0.1
+    # (JACCARD_r16.json). The edge list feeds 3 power iterations, so
+    # this is the whole query's dominant cost.
     # pairs is consumed TWICE by the orientation union below, and the
     # candidate verify (full-array intersect) is the expensive part of
     # its lineage — pin it once (standing two-consumer rule; measured at
     # the 10× evidence scale: the un-pinned union re-ran the verify per
     # branch, 78 s end-to-end vs ~25 s pinned+prefix).
     pairs = checkpoint_for_reuse(
-        D.ngram_jaccard_pairs_prefix(
+        D.ngram_jaccard_pairs(
             table(spark, sf_dir, "documents"), threshold=_JACCARD_T
         ).select("d1", "d2")
     )

@@ -330,7 +330,12 @@ def bloom_delta_prescreen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q27 — n-gram Jaccard near-dup pairs via inverted shingle index.
+# q27 — n-gram Jaccard near-dup pairs via the prefix-filtered join
+# (AllPairs, WWW'07; ext/dedup._prefix_jaccard). The oracle is the
+# exhaustive inverted-index count. ``ngram_jaccard_pairs_prefix`` is a
+# second registry name for the same query: the prefix join is the only
+# exact n-gram Jaccard implementation (JACCARD_r16.json: half the shuffle
+# of the exhaustive count at sf0.1, wall time within run-to-run spread).
 # --------------------------------------------------------------------------
 _JACCARD_T = 0.5
 
@@ -352,6 +357,7 @@ WHERE (floor(CAST((CAST(inter AS DOUBLE) / (sa.n_sh + sb.n_sh - inter)) AS DOUBL
 """
 
 
+@register("ngram_jaccard_pairs_prefix", oracle=_NGRAM_ORACLE)
 @register("ngram_jaccard_pairs", oracle=_NGRAM_ORACLE)
 def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.ngram_jaccard_pairs(
@@ -833,7 +839,7 @@ def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quality gate → near-dup removal) as ONE declarative plan. This is the
 # shape a 100 TB pretraining-data job takes: every stage is a shuffle-
 # bounded DataFrame op (hash agg on fingerprint, scan-parallel quality
-# expressions, inverted-index near-dup join + anti-join), so the whole
+# expressions, prefix-filtered near-dup join + anti-join), so the whole
 # pipeline scales as its worst stage and Catalyst pipelines the rest.
 # --------------------------------------------------------------------------
 _CURATION_MIN_QUALITY = 0.5
@@ -896,11 +902,10 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = rep_rows.select(
         F.col("doc").alias("doc_id"), F.col("__text").alias("text")
     )
-    # prefix-filtered form (round-11): output-identical (shared oracle,
-    # exact full-array verify) with a ~3× cheaper candidate join at the
-    # 10× evidence scale — see doc_pagerank's note.
+    # the prefix-filtered pair join (the only exact n-gram Jaccard path):
+    # half the shuffle of the exhaustive count at sf0.1 (JACCARD_r16.json)
     near_dup = (
-        D.ngram_jaccard_pairs_prefix(reps, threshold=_JACCARD_T)
+        D.ngram_jaccard_pairs(reps, threshold=_JACCARD_T)
         .select(F.col("d2").alias("doc_id"))
         .distinct()
     )
@@ -1000,7 +1005,7 @@ def simhash_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q50 — skew-guarded n-gram Jaccard: identical to q27 but ultra-common
 # shingles (document frequency > threshold) are dropped before the
-# inverted-index self-join. At corpus scale this is mandatory — one
+# prefix-filtered self-join. At corpus scale this is mandatory — one
 # boilerplate shingle in 10^6 docs makes 10^12 candidate pairs. The
 # computed Jaccard is then a lower bound (intersection counts only
 # non-hot shingles); the oracle applies the identical guard.
@@ -1229,22 +1234,6 @@ def cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Prefix-filtered Jaccard pairs (AllPairs, WWW'07) — identical output to
-# ngram_jaccard_pairs (shared oracle). Scale path: the inverted index only
-# explodes each doc's first |x|-⌈t|x|⌉+1 sorted shingles and a size filter
-# prunes before exact array_intersect verification. Measured at sf0.1:
-# candidate pairs 1.13M → 431k (2.6×); wall-clock still favors the
-# exhaustive form there because docs are ~50 shingles (verify is nearly
-# free) — the crossover is long documents / rarer matches (PERF.md).
-# --------------------------------------------------------------------------
-@register("ngram_jaccard_pairs_prefix", oracle=_NGRAM_ORACLE)
-def ngram_jaccard_pairs_prefix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.ngram_jaccard_pairs_prefix(
-        table(spark, sf_dir, "documents"), threshold=_JACCARD_T
-    )
-
-
-# --------------------------------------------------------------------------
 # Staged MinHash-LSH pairs: banding + verification over exact-dedup
 # representatives only, then output-linear expansion across exact groups
 # (identical docs have identical signatures, so collisions respect
@@ -1271,7 +1260,7 @@ def ngram_jaccard_pairs_staged_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q — incremental-ingest near-dedup: treat five sources as the incoming
 # batch and the rest as the existing corpus; a new doc survives iff no
-# corpus doc reaches Jaccard 0.5 against it. The bipartite inverted-index
+# corpus doc reaches Jaccard 0.5 against it. The bipartite prefix-filtered
 # join makes each ingest delta cost |delta|-proportional work — the 100 TB
 # alternative to re-running corpus-wide dedup per batch.
 # --------------------------------------------------------------------------

@@ -1,17 +1,21 @@
 """Property-based checks for the dedup family: star-contraction CC must
-equal a naive DFS labeling on arbitrary graphs, and prefix-filtered
-Jaccard must equal the exhaustive inverted-index join on arbitrary
-corpora."""
+equal a naive DFS labeling on arbitrary graphs, and the prefix-filtered
+n-gram Jaccard operators must equal a brute-force all-pairs Jaccard over
+the same shingle sets on arbitrary corpora."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+import math
+from collections import Counter
+
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from big_data_occupancy_detection_spark.ext.dedup import (
     connected_components,
+    cross_corpus_near_dups,
     ngram_jaccard_pairs,
-    ngram_jaccard_pairs_prefix,
+    with_shingles,
 )
 
 nodes = st.integers(min_value=0, max_value=30)
@@ -66,27 +70,105 @@ docs_strategy = st.lists(
 )
 
 
+def _round6(x: float) -> float:
+    return math.floor(x * 1e6 + 0.5) / 1e6
+
+
+def _brute_jaccard(sh: dict, left, right, t: float, max_df=None) -> set:
+    """(d1, d2, jaccard) for every (d1, d2) in ``left`` × ``right`` whose
+    6-digit rounded Jaccard reaches ``t``; with ``max_df``, shingles in
+    more than ``max_df`` docs leave the intersection but not the sizes."""
+    dfreq = Counter(s for ss in sh.values() for s in ss)
+    hot = {s for s, c in dfreq.items() if max_df is not None and c > max_df}
+    out = set()
+    for d1, d2 in ((a, b) for a in left for b in right):
+        inter = len((sh[d1] & sh[d2]) - hot)
+        if inter:
+            j = _round6(inter / (len(sh[d1]) + len(sh[d2]) - inter))
+            if j >= t:
+                out.add((d1, d2, j))
+    return out
+
+
+# a 3-word vocabulary makes shared shingles, near-dups and hot shingles
+# common, so every threshold and guard level sees pairs on both sides
+near_dup_docs = st.lists(
+    st.lists(
+        st.sampled_from(["alpha", "beta", "gamma"]), min_size=1, max_size=12
+    ).map(" ".join),
+    min_size=2,
+    max_size=16,
+)
+
+
 @settings(
-    max_examples=6,
+    max_examples=2,
     deadline=None,
     derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(texts=docs_strategy)
-def test_prefix_jaccard_equals_exhaustive(spark, texts):
+@given(texts=near_dup_docs, cross_t=st.sampled_from([0.3, 0.5, 0.8]))
+@example(
+    # docs 0 and 1 share one shingle that no other doc has; each also has
+    # a shingle in two more docs. At max_shingle_df=2 their Jaccard is
+    # 1/3 with full sizes, and 1.0 if the sizes counted kept shingles only
+    texts=[
+        "alpha beta gamma delta",
+        "alpha beta gamma eps",
+        "beta gamma delta",
+        "beta gamma delta beta",
+        "beta gamma eps",
+        "beta gamma eps beta",
+    ],
+    cross_t=0.3,
+)
+def test_ngram_jaccard_matches_brute_force(spark, texts, cross_t):
+    """Both exact Jaccard operators against brute force over the
+    ``with_shingles`` sets: the self-join at every threshold and guard
+    level, and the corpus (even ids) × new (odd ids) form at one drawn
+    threshold (the two share one kernel)."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
-    for threshold in (0.3, 0.5, 0.8):
-        base = {
-            (r.d1, r.d2, r.jaccard)
-            for r in ngram_jaccard_pairs(df, threshold=threshold).collect()
-        }
-        pref = {
-            (r.d1, r.d2, r.jaccard)
-            for r in ngram_jaccard_pairs_prefix(df, threshold=threshold).collect()
-        }
-        assert pref == base
+    sh = {r.doc_id: set(r.shingles) for r in with_shingles(df).collect()}
+    ids = sorted(sh)
+    for t in (0.3, 0.5, 0.8):
+        for max_df in (None, 1, 2):
+            got = {
+                tuple(r)
+                for r in ngram_jaccard_pairs(
+                    df, threshold=t, max_shingle_df=max_df
+                ).collect()
+            }
+            want = {
+                p for p in _brute_jaccard(sh, ids, ids, t, max_df) if p[0] < p[1]
+            }
+            assert got == want, (t, max_df)
+    corpus, new = ids[::2], ids[1::2]
+    dups = {}
+    for c, n, _ in _brute_jaccard(sh, corpus, new, cross_t):
+        dups[n] = min(c, dups.get(n, c))
+    got = {
+        tuple(r)
+        for r in cross_corpus_near_dups(
+            df.filter(df.doc_id % 2 == 0),
+            df.filter(df.doc_id % 2 == 1),
+            threshold=cross_t,
+        ).collect()
+    }
+    assert got == {(n, dups.get(n), n not in dups) for n in new}
+
+
+def test_ngram_jaccard_keeps_pairs_at_float_edges(spark):
+    """0.55 * 100 is 55.00000000000001 in doubles, so bounds computed at
+    t = 0.55 exactly would drop a pair whose Jaccard is exactly 0.55
+    (the shared kernel; :func:`cross_corpus_near_dups` runs the same)."""
+    words = [f"w{i}" for i in range(102)]
+    df = spark.createDataFrame(
+        [(0, " ".join(words)), (1, " ".join(words[:57]))], ["doc_id", "text"]
+    )
+    got = [tuple(r) for r in ngram_jaccard_pairs(df, threshold=0.55).collect()]
+    assert got == [(0, 1, 0.55)]
 
 
 @settings(

@@ -16,7 +16,14 @@ import time
 import duckdb
 from pyspark.sql import SparkSession
 
-spec = importlib.util.spec_from_file_location("e", "/root/repo/__spark_entry__.py")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from big_data_occupancy_detection_spark.sources.readers import TABLE_NAMES
+
+spec = importlib.util.spec_from_file_location(
+    "e", os.path.join(REPO, "__spark_entry__.py")
+)
 m = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(m)
 
@@ -29,8 +36,7 @@ sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf
 
 con = duckdb.connect()
-for t in ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]:
+for t in TABLE_NAMES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
 qs, osql = m.queries(), m.oracle_sql()

@@ -41,10 +41,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from big_data_occupancy_detection_spark.sources.readers import TABLE_NAMES
 
 REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -239,7 +239,7 @@ def generate(
 
 
 def driver_subset() -> list[str]:
-    files = sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))
+    files = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
     if not files:
         return []
     return sorted(json.load(open(files[-1])).keys())
@@ -263,7 +263,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     spec = importlib.util.spec_from_file_location(
-        "e", "/root/repo/__spark_entry__.py"
+        "e", os.path.join(REPO, "__spark_entry__.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
@@ -301,7 +301,7 @@ def main() -> None:
         os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = out
         osql = m.oracle_sql()
         con = duckdb.connect()
-        for t in TABLES:
+        for t in TABLE_NAMES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{out}/{t}.parquet'")
         fails, t0 = [], time.perf_counter()
         for name in names:

@@ -23,10 +23,9 @@ import sys
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from big_data_occupancy_detection_spark.sources.readers import TABLE_NAMES
 
 
 def main() -> None:
@@ -47,7 +46,7 @@ def main() -> None:
     # driver's generator writes it
     pq.write_table(ev, f"{out}/events.parquet", store_schema=False)
 
-    for t in TABLES:
+    for t in TABLE_NAMES:
         if t == "events":
             continue
         dst = f"{out}/{t}.parquet"
@@ -56,7 +55,7 @@ def main() -> None:
 
     print(
         f"wrote {out}: events ts {ts_type} -> timestamp[{target_unit}] "
-        f"(other {len(TABLES) - 1} tables copied)"
+        f"(other {len(TABLE_NAMES) - 1} tables copied)"
     )
     print(f"now run: python tools/driver_sim.py {out}")
 
